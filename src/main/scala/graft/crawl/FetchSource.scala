@@ -155,7 +155,7 @@ final class FetchSource(
           .agg(max_by(struct((cols.map(col) :+ col("html")): _*),
             struct(col("warc_ts"), xxhash64(col("html")))).as("r"))
           .select((col("urlHash") +: cols.map(c => col(s"r.$c")) :+ col("r.html")): _*)
-    if (small) out.withColumn("host", graft.plans.HostOf.host_of(col("url")))
+    if (small) out.withColumn("host", graft.plans.Kernels.host_of(col("url")))
     else out
   }
 

@@ -145,8 +145,10 @@ final class WaveRunner(
     r
   }
 
-  // codegen'd scalar functions used in hot projections (idempotent)
-  graft.plans.HostOf.register(spark)
+  // the Column APIs register kernels into the ACTIVE session only; a
+  // runner may run on another one (e.g. spark.newSession()), so its
+  // own session gets the table here (idempotent)
+  graft.plans.Kernels.register(spark)
 
   private val fetchSource = new FetchSource(spark, pagesInput, stateRoot, config)
 
@@ -729,10 +731,10 @@ final class WaveRunner(
     val newEntries = unseen
       .select(
         col("urlHash"), col("url"),
-        // native expression (plans.HostOf): the expand projection stays
+        // generated kernel (plans.UrlKernels): the expand projection stays
         // inside whole-stage codegen — no Scala-UDF encoder round trip
         // in the hottest per-wave stage
-        graft.plans.HostOf.host_of(col("url")).as("host"),
+        graft.plans.Kernels.host_of(col("url")).as("host"),
         (col("pdepth") + 1).as("depth"),
         col("priority"),
         // optional link-mass feedback: floor(log2(inlinks)) as an exact

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.core.{BoilerplateExtractor, KeywordFilter, UrlNormalizer}
+import graft.core.{BoilerplateExtractor, KeywordFilter}
 
 /** Column-level wrappers over the deterministic core functions.
   *
@@ -16,32 +16,9 @@ import graft.core.{BoilerplateExtractor, KeywordFilter, UrlNormalizer}
   */
 object GraftFunctions {
 
-  /** Canonical URL (normalize + tracking strip); null when the URL
-    * cannot be canonicalized (e.g. javascript: with no site).
-    */
-  val canonicalizeUdf = udf { (url: String) =>
-    if (url == null) null
-    else UrlNormalizer.canonicalize(url).orNull
-  }
-
-  val canonicalizeWithSiteUdf = udf { (url: String, site: String) =>
-    if (url == null) null
-    else UrlNormalizer.canonicalize(url, Option(site)).orNull
-  }
-
-  val hostOfUdf = udf { (url: String) =>
-    if (url == null) null else UrlNormalizer.hostOf(url)
-  }
-
   /** Deterministic boilerplate removal over html bytes. */
   val extractTextUdf = udf { (html: Array[Byte]) =>
     if (html == null) "" else BoilerplateExtractor.extractText(html)
-  }
-
-  val extractTitleUdf = udf { (html: Array[Byte]) =>
-    if (html == null) null
-    else BoilerplateExtractor.extractTitle(
-      new String(html, java.nio.charset.StandardCharsets.UTF_8)).orNull
   }
 
   /** Keyword predicate factory: compile once on the driver, ship the

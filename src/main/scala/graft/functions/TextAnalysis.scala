@@ -71,7 +71,7 @@ object TextAnalysis {
     // re-evaluated once PER REFERENCE (CaseWhen branches are excluded
     // from whole-stage subexpression elimination). The coalesce
     // supplies the original null-text "es" fallthrough.
-    coalesce(graft.plans.LangPick.lang_pick(
+    coalesce(graft.plans.Kernels.lang_pick(
       split(lower(text), "[^a-zA-Zäöüßáéíóúñ']+"),
       array(Seq(EnStop, DeStop, EsStop)
         .map(s => array(s.map(lit): _*)): _*)), lit("es"))
@@ -206,7 +206,7 @@ object TextAnalysis {
     // two doc-keyed window passes plus an aggregate for three per-row
     // numbers. Null-text docs yield a null struct and are dropped,
     // exactly like the relational size filters.
-    val g = graft.plans.WinnowStats.winnow_stats(
+    val g = graft.plans.Kernels.winnow_stats(
       split(lower(col(textCol)), "[^a-z0-9_]+"), lit(k), lit(w))
     df.select(col(idCol), g.as("g"))
       .filter(col("g").isNotNull)
@@ -487,14 +487,14 @@ object TextAnalysis {
     * Returns the named signal columns; callers select what they need.
     */
   def gopherRules(text: Column): Seq[Column] = {
-    // native codegen'd kernel ([[graft.plans.GopherSignals]]): ONE
+    // generated kernel ([[graft.plans.GopherSignals]]): ONE
     // generated pass over the text computes every signal; the HOF
     // formulation below ([[gopherRulesHof]]) remains the executable
     // statement of the semantics (equivalence test-pinned). The HOF
     // form ran ~six interpreted CodegenFallback subtrees per row, each
     // re-running the tokenizing split (no CSE across fallback
     // subtrees) — same rationale as [[hashClassifierScore]]'s kernel.
-    val g = graft.plans.GopherSignals.gopher_signals(text)
+    val g = graft.plans.Kernels.gopher_signals(text)
     Seq("n_words", "mean_word_len", "symbol_ratio", "bullet_frac",
       "ellipsis_frac", "alpha_word_frac", "n_stop_hits", "gopher_pass")
       .map(f => g.getField(f).as(f))
@@ -559,14 +559,14 @@ object TextAnalysis {
     portableHash(feature) % buckets - lit(buckets / 2)
 
   def hashClassifierScore(text: Column, buckets: Int = 1001): Column = {
-    // native codegen'd kernel ([[graft.plans.ClassifierScore]]): the
+    // generated kernel ([[graft.plans.ClassifierScore]]): the
     // HOF formulation below remains the executable statement of the
     // semantics (equivalence is test-pinned); the kernel replaces
     // per-feature interpreted lambda dispatch + an interpreted
     // md5/conv/substring subtree per feature with one generated call
-    // into a tight loop — same VectorFold rationale.
+    // into a tight loop — same rationale as [[graft.plans.VectorExprs]].
     val tk = filter(split(lower(text), "[^a-z0-9_']+"), t => length(t) > 0)
-    graft.plans.ClassifierScore.classifier_score(tk, lit(buckets))
+    graft.plans.Kernels.classifier_score(tk, lit(buckets))
   }
 
   /** The original HOF fold form of [[hashClassifierScore]], kept as
@@ -614,7 +614,7 @@ object TextAnalysis {
     // corpus-sized shuffle for per-row-computable values (guide §2.4).
     // Relational statement kept as [[chunkTokensRelational]],
     // equivalence test-pinned.
-    val ch = graft.plans.ChunkHashes.chunk_hashes(
+    val ch = graft.plans.Kernels.chunk_hashes(
       split(lower(col(textCol)), "[^a-z0-9_']+"),
       lit(window), lit(stride), lit(minTokens))
     df.select(col(idCol), explode(ch).as("c"))

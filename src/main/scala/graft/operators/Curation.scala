@@ -423,7 +423,7 @@ object Curation {
     // the native kernel existed.)
     val feats = df.select(col(idCol).as("doc_id_"),
       targetPred.as("is_target"),
-      explode(graft.plans.FeatureHashes.feature_hashes(
+      explode(graft.plans.Kernels.feature_hashes(
         split(lower(col(textCol)), "[^a-z0-9_']+"), lit(buckets))).as("f"))
     // BOTH count distributions from ONE aggregate pass over the
     // feature stream (guide §2.4): the former separate `tgt` branch
@@ -512,7 +512,7 @@ object Curation {
     // SLOWER than the window in round 6, the generated kernel is not).
     // The word-keyed count aggregate — the one fundamental exchange —
     // is unchanged, and pair equivalence is test-pinned.
-    df.select(explode(graft.plans.AdjacentPairs.adjacent_pairs(
+    df.select(explode(graft.plans.Kernels.adjacent_pairs(
         split(lower(col(textCol)), "[^a-z0-9_]+"))).as("p"))
       .groupBy(col("p.w").as("word"))
       .agg(count(lit(1)).as("c_total"),

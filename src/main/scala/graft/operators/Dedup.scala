@@ -382,6 +382,14 @@ object Dedup {
     * Same banding semantics as [[minhashPairs]]; every step is a
     * built-in expression a DuckDB oracle states identically. The
     * xxhash permutation variant remains the raw-throughput path.
+    *
+    * Precondition: `idCol` is unique. The est_jaccard threshold runs
+    * below the pair dedup, and filter∘dedup ≡ dedup∘filter only while
+    * the id pair determines the estimate: with a repeated id, one
+    * (id_a, id_b) key carries several estimates, and the pair survives
+    * if ANY of them passes rather than the one copy a dedup-first plan
+    * would keep. Not checked at run time — the check would add a Spark
+    * job to every call.
     */
   def minhashPairsPortable(df: DataFrame, idCol: String, textCol: String,
                            shingleK: Int = 3, numHashes: Int = 24,
@@ -401,7 +409,7 @@ object Dedup {
     // only fundamental exchange). Null-text docs yield a null
     // signature and are dropped, exactly like the old size filters.
     val sigs = df.select(col(idCol).as("doc_id_"),
-        graft.plans.MinhashSig.minhash_sig(
+        graft.plans.Kernels.minhash_sig(
           split(lower(col(textCol)), "\\W+"),
           lit(shingleK), lit(numHashes)).as("sig"))
       .filter(col("sig").isNotNull)
@@ -564,7 +572,7 @@ object Dedup {
     * every catalog table guarantees.
     */
   private def tokenGramKeyArr(textCol: String, k: Int): Column =
-    graft.plans.GramKeys.gram_keys(
+    graft.plans.Kernels.gram_keys(
       split(lower(col(textCol)), "[^a-z0-9_]+"), lit(k), lit(false))
 
   /** Distinct (doc, md5(token k-gram)) pairs via [[tokenGramKeyArr]]. */
@@ -630,7 +638,7 @@ object Dedup {
     // per-row long. Token-less and null-text docs sketch to 0, the
     // explode_outer behavior.
     df.select(col(idCol).as("doc_id_"),
-      graft.plans.PortableSimhash.portable_simhash(
+      graft.plans.Kernels.portable_simhash(
         split(lower(col(textCol)), "\\W+"), lit(bits)).as("sketch"))
 
   /** The original relational statement of [[portableSketches]] — kept
@@ -737,7 +745,7 @@ object Dedup {
     // paid a doc-keyed window shuffle, a corpus-wide distinct AND a
     // counting aggregate for what one projection now computes.
     val docsK = docs.select(col(idCol).as("cid"),
-        graft.plans.GramKeys.gram_keys(
+        graft.plans.Kernels.gram_keys(
           split(lower(col(textCol)), "\\W+"), lit(k), lit(true)).as("gs"))
       .filter(col("gs").isNotNull) // null-text docs carry no grams
     val grams = docsK.select(col("cid"), explode(col("gs")).as("g"))
@@ -911,7 +919,7 @@ object Dedup {
     val docsK = df.select(col(idCol).cast("long").as("doc_id"),
       rawToks.as("rtk"))
     val grams = docsK.select(col("doc_id"),
-      posexplode(graft.plans.GramKeySeq.gram_key_seq(col("rtk"), lit(k)))
+      posexplode(graft.plans.Kernels.gram_key_seq(col("rtk"), lit(k)))
         .as(Seq("pos", "h")))
     val dup = grams.groupBy("h")
       .agg(count_distinct(col("doc_id")).as("docf"))
@@ -921,7 +929,7 @@ object Dedup {
       .groupBy("doc_id").agg(collect_list(col("pos")).as("fpos"))
     docsK.join(flaggedPos, Seq("doc_id"), "left")
       .select(col("doc_id"),
-        graft.plans.SpanCoverage.span_coverage(col("rtk"), col("fpos"),
+        graft.plans.Kernels.span_coverage(col("rtk"), col("fpos"),
           lit(k)).as("g"))
       .select(col("doc_id"),
         col("g.n_tokens").as("n_tokens"), col("g.n_spans").as("n_spans"),

@@ -112,11 +112,11 @@ object IvfIndex {
 
   /** Exact integer L2² between a quantized column and a literal
     * centroid (overflow-safe: |q| ≤ ~10⁵ ⇒ Σ diff² ≤ 2.6·10¹² « 2⁶³).
-    * Codegen'd expression ([[graft.plans.LongSqDist]]) — the HOF fold
+    * Generated kernel ([[graft.plans.VectorExprs.longSqDist]]) — the HOF fold
     * form is CodegenFallback, and k of these run per row.
     */
   private def qDist(qv: Column, cent: Array[Long]): Column =
-    graft.plans.VectorExprs.long_sqdist(qv, typedLit(cent.toSeq))
+    graft.plans.Kernels.long_sqdist(qv, typedLit(cent.toSeq))
 
   /** argmin over literal centroids, ties to the smallest cluster id
     * (lexicographic array_min over (dist, cid) structs — one codegen'd

@@ -60,7 +60,7 @@ object RobotsLoader {
   def sitemapUrls(pagesInput: DataFrame): DataFrame =
     pagesInput
       .filter(col("url").endsWith("/robots.txt"))
-      .select(graft.functions.GraftFunctions.hostOfUdf(col("url")).as("host"),
+      .select(graft.plans.Kernels.host_of(col("url")).as("host"),
         explode(split(decode(col("html"), "UTF-8"), "\r?\n")).as("line"))
       .filter(col("line").rlike("(?i)^\\s*sitemap\\s*:"))
       .select(col("host"),

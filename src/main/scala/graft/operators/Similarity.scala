@@ -20,14 +20,14 @@ import graft.core.Hashing
   */
 object Similarity {
 
-  /** dot(a,b) over two array<float> cols — a native codegen'd
-    * expression ([[graft.plans.FloatDot]]) that replicates the
+  /** dot(a,b) over two array<float> cols — a generated kernel
+    * ([[graft.plans.VectorExprs.floatDot]]) that replicates the
     * `aggregate(zip_with(a,b,_*_), 0.0d, _+_)` fold BIT-EXACTLY
     * (float multiply, double accumulate, element order): the HOF form
     * is CodegenFallback and its interpreted lambdas made pair scoring
     * ~100× slower than the generated loop.
     */
-  def dot(a: Column, b: Column): Column = graft.plans.VectorExprs.float_dot(a, b)
+  def dot(a: Column, b: Column): Column = graft.plans.Kernels.float_dot(a, b)
 
   /** The original fold form, kept as the executable statement of the
     * semantics [[dot]] must match (equivalence is test-pinned).
@@ -144,7 +144,7 @@ object Similarity {
       // float element widens, DOUBLE multiply, DOUBLE accumulate —
       // exactly zip_with(vec, plane, _*_) folded with +, but codegen'd
       // (bits × tables HOF aggregates per row were all interpreted)
-      val proj = graft.plans.VectorExprs.float_double_dot(vec, plane)
+      val proj = graft.plans.Kernels.float_double_dot(vec, plane)
       when(proj >= 0.0, lit(1L << p)).otherwise(lit(0L))
     }.reduce(_ + _)
 
@@ -157,7 +157,7 @@ object Similarity {
     * stages of `bits` dot products each (guide §2.4; the dominant cost
     * of a cold run was that compilation). Row set and bucket values
     * are identical: same [[portablePlaneComponent]] literals through
-    * the same [[graft.plans.FloatDoubleDot]] fold.
+    * the same [[graft.plans.VectorExprs.floatDoubleDot]] fold.
     */
   private def bucketedPortable(df: DataFrame, idName: String, vecName: String,
                                dim: Int, bits: Int, tables: Int): DataFrame = {
@@ -166,7 +166,7 @@ object Similarity {
         (0 until dim).map(j => portablePlaneComponent(t, p, j)).toSeq))
     val planesLit = typedLit(planes)
     val sig = (0 until bits).map { p =>
-      val proj = graft.plans.VectorExprs.float_double_dot(col(vecName),
+      val proj = graft.plans.Kernels.float_double_dot(col(vecName),
         element_at(planesLit, col("table") * bits + p + 1))
       when(proj >= 0.0, lit(1L << p)).otherwise(lit(0L))
     }.reduce(_ + _)
@@ -212,7 +212,9 @@ object Similarity {
       .select("query_id", "neighbor_id", "cosine", "rank")
   }
 
-  /** [[cosineDupPairs]] over the portable signatures. */
+  /** [[cosineDupPairs]] over the portable signatures (same unique-id
+    * precondition).
+    */
   def cosineDupPairsPortable(df: DataFrame, threshold: Double, dim: Int,
                              bits: Int = 8, tables: Int = 6): DataFrame = {
     def bucketed(idName: String, vecName: String): DataFrame =
@@ -234,6 +236,14 @@ object Similarity {
 
   /** Embedding-cosine near-duplicate pairs (cosine ≥ threshold),
     * LSH-bucketed (id_a < id_b).
+    *
+    * Precondition: `id` is unique. The threshold filter runs below the
+    * pair dedup, and filter∘dedup ≡ dedup∘filter only while the id
+    * pair determines the cosine: with a repeated id, one (id_a, id_b)
+    * key carries several cosines, and the pair survives if ANY of them
+    * passes rather than the one copy a dedup-first plan would keep.
+    * Not checked at run time — the check would add a Spark job to
+    * every call.
     */
   def cosineDupPairs(df: DataFrame, threshold: Double, dim: Int,
                      bits: Int = 10, tables: Int = 4): DataFrame = {

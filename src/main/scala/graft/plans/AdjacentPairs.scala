@@ -1,16 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** (predecessor, word) pairs of one document's non-empty token
-  * sequence in one generated pass — entry i is
+/** Kernel `graft_adjacent_pairs`: (predecessor, word) pairs of one
+  * document's non-empty token sequence in one generated pass — entry i is
   * (t_{i-1} | null when i = 0, t_i), so `explode` reproduces the rows
   * of the former posexplode + doc-keyed `lag` window
   * ([[graft.operators.Curation.knContinuationCounts]]) without
@@ -19,51 +15,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * kernel is one tight generated loop.) Null token array → null,
   * dropped by explode like the former posexplode-of-null.
   */
-case class AdjacentPairs(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(AdjacentPairs.Entry,
-    containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_adjacent_pairs"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName needs array<string>, got ${other.sql}")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val a = child.eval(input)
-    if (a == null) null
-    else AdjacentPairs.invoke(a.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val c = child.genCode(ctx)
-    ev.copy(
-      code = code"""
-        ${c.code}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          graft.plans.AdjacentPairs.invoke(${c.isNull} ? null : ${c.value});
-        boolean ${ev.isNull} = ${ev.value} == null;""")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): AdjacentPairs =
-    copy(child = newChild)
-}
-
 object AdjacentPairs {
   val Entry: StructType = StructType(Seq(
     StructField("prev", StringType, nullable = true),
     StructField("w", StringType, nullable = false)))
 
-  /** Static entry point shared by interpreted and generated code. */
   def invoke(arr: ArrayData): ArrayData = {
-    if (arr == null) return null
     val n0 = arr.numElements()
     val toks = new java.util.ArrayList[UTF8String](n0)
     var i = 0
@@ -86,15 +43,4 @@ object AdjacentPairs {
     }
     new GenericArrayData(out)
   }
-
-  /** Column-level API (register-on-use, like [[ClassifierScore]]). */
-  def adjacent_pairs(tokens: Column): Column = {
-    register(org.apache.spark.sql.SparkSession.active)
-    org.apache.spark.sql.functions.call_function(
-      "graft_adjacent_pairs", tokens)
-  }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_adjacent_pairs", es => AdjacentPairs(es.head), "built-in")
 }

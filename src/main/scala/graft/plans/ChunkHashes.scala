@@ -1,15 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-/** Fixed-window token chunking of one document in one generated pass
+import KernelSupport.{hex, joinedDigest, nonEmptyTokens}
+
+/** Kernel `graft_chunk_hashes`: fixed-window token chunking of one
+  * document in one generated pass
   * ([[graft.functions.TextAnalysis.chunkTokens]] semantics): chunk c
   * covers token positions [c·stride, c·stride + window) of the
   * non-empty token sequence; chunks with ≥ minTokens tokens emit
@@ -19,107 +17,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * collect_list/sort the aggregate paid. Null token array → null
   * (explode drops the doc, like the former posexplode-of-null).
   */
-case class ChunkHashes(first: Expression, second: Expression,
-                       third: Expression, fourth: Expression)
-    extends QuaternaryExpression {
-  override def dataType: DataType = ArrayType(ChunkHashes.Entry,
-    containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_chunk_hashes"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType, fourth.dataType) match {
-      case (ArrayType(StringType, _), IntegerType, IntegerType, IntegerType)
-          if second.foldable && third.foldable && fourth.foldable =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName needs (array<string>, 3× foldable int), got " +
-            s"(${first.dataType.sql}, ${second.dataType.sql}, " +
-            s"${third.dataType.sql}, ${fourth.dataType.sql})")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val a = first.eval(input)
-    if (a == null) null
-    else ChunkHashes.invoke(a.asInstanceOf[ArrayData],
-      second.eval(input).asInstanceOf[java.lang.Integer],
-      third.eval(input).asInstanceOf[java.lang.Integer],
-      fourth.eval(input).asInstanceOf[java.lang.Integer])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val a = first.genCode(ctx)
-    val w = second.genCode(ctx)
-    val s = third.genCode(ctx)
-    val mt = fourth.genCode(ctx)
-    ev.copy(
-      code = code"""
-        ${a.code}
-        ${w.code}
-        ${s.code}
-        ${mt.code}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          graft.plans.ChunkHashes.invoke(
-            ${a.isNull} ? null : ${a.value},
-            ${w.isNull} ? null : (Integer) ${w.value},
-            ${s.isNull} ? null : (Integer) ${s.value},
-            ${mt.isNull} ? null : (Integer) ${mt.value});
-        boolean ${ev.isNull} = ${ev.value} == null;""")
-  }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression,
-      newFourth: Expression): ChunkHashes =
-    copy(first = newFirst, second = newSecond, third = newThird,
-      fourth = newFourth)
-}
-
 object ChunkHashes {
   val Entry: StructType = StructType(Seq(
     StructField("chunk_id", IntegerType, nullable = false),
     StructField("n_tokens", IntegerType, nullable = false),
     StructField("chunk_hash", StringType, nullable = false)))
 
-  private val mdLocal = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  private val HexChars = "0123456789abcdef".toCharArray
-
-  private def hex(d: Array[Byte]): UTF8String = {
-    val out = new Array[Byte](d.length * 2)
-    var i = 0
-    while (i < d.length) {
-      out(2 * i) = HexChars((d(i) >> 4) & 0xf).toByte
-      out(2 * i + 1) = HexChars(d(i) & 0xf).toByte
-      i += 1
-    }
-    UTF8String.fromBytes(out)
-  }
-
-  /** Static entry point shared by interpreted and generated code. */
-  def invoke(arr: ArrayData, windowBox: Integer, strideBox: Integer,
-             minTokensBox: Integer): ArrayData = {
-    if (arr == null || windowBox == null || strideBox == null ||
-      minTokensBox == null) return null
-    val window = windowBox.intValue()
-    val stride = strideBox.intValue()
-    val minTokens = minTokensBox.intValue()
-    val n0 = arr.numElements()
-    val toks = new java.util.ArrayList[Array[Byte]](n0)
-    var i = 0
-    while (i < n0) {
-      val t = arr.getUTF8String(i)
-      if (t != null && t.numBytes() > 0) toks.add(t.getBytes)
-      i += 1
-    }
+  def invoke(arr: ArrayData, window: Int, stride: Int,
+             minTokens: Int): ArrayData = {
+    val toks = nonEmptyTokens(arr)
     val n = toks.size()
     if (n == 0) return new GenericArrayData(Array.empty[Any])
-    val m = mdLocal.get()
     val maxChunk = (n - 1) / stride
     val out = new java.util.ArrayList[Any](maxChunk + 1)
     var c = 0
@@ -128,30 +36,11 @@ object ChunkHashes {
       val until = math.min(from + window, n)
       val nTok = until - from
       if (nTok >= minTokens) {
-        m.reset()
-        var j = from
-        while (j < until) {
-          if (j > from) m.update(' '.toByte)
-          m.update(toks.get(j))
-          j += 1
-        }
-        out.add(new GenericInternalRow(Array[Any](c, nTok, hex(m.digest()))))
+        out.add(new GenericInternalRow(Array[Any](c, nTok,
+          hex(joinedDigest(toks, from, until)))))
       }
       c += 1
     }
     new GenericArrayData(out.toArray)
   }
-
-  /** Column-level API (register-on-use, like [[ClassifierScore]]). */
-  def chunk_hashes(tokens: Column, window: Column, stride: Column,
-                   minTokens: Column): Column = {
-    register(org.apache.spark.sql.SparkSession.active)
-    org.apache.spark.sql.functions.call_function(
-      "graft_chunk_hashes", tokens, window, stride, minTokens)
-  }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_chunk_hashes",
-      es => ChunkHashes(es.head, es(1), es(2), es(3)), "built-in")
 }

@@ -1,13 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression for the hashing-trick classifier score
+import KernelSupport.{md5, word32}
+
+/** Kernel `graft_classifier_score`: the hashing-trick classifier score
   * ([[graft.functions.TextAnalysis.hashClassifierScore]]): the exact
   * integer sum of md5-bucket weights over a token array's unigrams and
   * adjacent bigrams,
@@ -21,80 +19,31 @@ import org.apache.spark.unsafe.types.UTF8String
   * interpreted lambda dispatch per feature (HOFs are CodegenFallback,
   * and each feature's md5+conv+substring expression subtree was
   * re-evaluated through the interpreter; same rationale as
-  * [[VectorFold]]). Null array or any null element yields 0, exactly
+  * [[VectorExprs]]). Null array or any null element yields 0, exactly
   * the coalesced null-poisoned folds of the HOF form.
   */
-case class ClassifierScore(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_classifier_score"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), IntegerType) if right.foldable =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName needs (array<string>, foldable int), got " +
-            s"(${left.dataType.sql}, ${right.dataType.sql})")
-    }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val arr = left.eval(input)
-    val b = right.eval(input)
-    ClassifierScore.invoke(arr.asInstanceOf[ArrayData],
-      b.asInstanceOf[java.lang.Integer])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val l = left.genCode(ctx)
-    val r = right.genCode(ctx)
-    ev.copy(
-      code = code"""
-        ${l.code}
-        ${r.code}
-        long ${ev.value} = graft.plans.ClassifierScore.invoke(
-          ${l.isNull} ? null : ${l.value},
-          ${r.isNull} ? null : (Integer) ${r.value});""",
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ClassifierScore =
-    copy(left = newLeft, right = newRight)
-}
-
 object ClassifierScore {
-  private val mdLocal = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
   private val Space = UTF8String.fromString(" ")
 
-  /** Static entry point shared by interpreted and generated code.
-    * Null array / null buckets / null element → 0 (the HOF form's
+  /** Null array / null element → 0 (the HOF form's
     * coalesced null-poisoned folds).
     */
-  def invoke(arr: ArrayData, buckets: Integer): Long = {
-    if (arr == null || buckets == null) return 0L
-    val b = buckets.intValue()
-    val half = b / 2
-    val m = mdLocal.get()
+  def invoke(arr: ArrayData, buckets: Int): Long = {
+    if (arr == null) return 0L
+    val half = buckets / 2
+    val m = md5()
     val n = arr.numElements()
     var acc = 0L
     var i = 0
     while (i < n) {
       val t = arr.getUTF8String(i)
       if (t == null) return 0L
-      acc += weight(m, t.getBytes, b, half)
+      acc += weight(m, t.getBytes, buckets, half)
       if (i + 1 < n) {
         val nxt = arr.getUTF8String(i + 1)
         if (nxt == null) return 0L
-        acc += weight(m, UTF8String.concat(t, Space, nxt).getBytes, b, half)
+        acc += weight(m, UTF8String.concat(t, Space, nxt).getBytes,
+          buckets, half)
       }
       i += 1
     }
@@ -107,21 +56,6 @@ object ClassifierScore {
   private def weight(m: java.security.MessageDigest, bytes: Array[Byte],
                      buckets: Int, half: Int): Long = {
     m.reset()
-    val d = m.digest(bytes)
-    val h = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-      ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-    h % buckets - half
+    word32(m.digest(bytes), 0) % buckets - half
   }
-
-  /** Column-level API (register-on-use, like [[VectorExprs]]). */
-  def classifier_score(tokens: Column, buckets: Column): Column = {
-    register(org.apache.spark.sql.SparkSession.active)
-    org.apache.spark.sql.functions.call_function(
-      "graft_classifier_score", tokens, buckets)
-  }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_classifier_score", es => ClassifierScore(es.head, es(1)),
-      "built-in")
 }

@@ -1,16 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-/** Hashed uni+bigram feature ids of one document in one generated
-  * pass ([[graft.operators.Curation.dsirWeights]] feature space):
-  * for each non-empty token t_i the id
+import KernelSupport.{joinedDigest, nonEmptyTokens, word32}
+
+/** Kernel `graft_feature_hashes`: hashed uni+bigram feature ids of
+  * one document in one generated pass
+  * ([[graft.operators.Curation.dsirWeights]] feature space): for each
+  * non-empty token t_i the id
   * `pmod(portableHash(t_i), buckets)` and — when a successor exists —
   * `pmod(portableHash(t_i ++ " " ++ t_{i+1}), buckets)` (portableHash
   * = first 4 md5 bytes unsigned; raw-byte concatenation, identical to
@@ -25,100 +22,22 @@ import org.apache.spark.unsafe.types.UTF8String
   * left in DSIR are the bounded bucket-count aggregate and the
   * per-doc sum.
   */
-case class FeatureHashes(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_feature_hashes"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), IntegerType) if right.foldable =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName needs (array<string>, foldable int), got " +
-            s"(${left.dataType.sql}, ${right.dataType.sql})")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val a = left.eval(input)
-    if (a == null) null
-    else FeatureHashes.invoke(a.asInstanceOf[ArrayData],
-      right.eval(input).asInstanceOf[java.lang.Integer])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val l = left.genCode(ctx)
-    val r = right.genCode(ctx)
-    ev.copy(
-      code = code"""
-        ${l.code}
-        ${r.code}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          graft.plans.FeatureHashes.invoke(
-            ${l.isNull} ? null : ${l.value},
-            ${r.isNull} ? null : (Integer) ${r.value});
-        boolean ${ev.isNull} = ${ev.value} == null;""")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): FeatureHashes =
-    copy(left = newLeft, right = newRight)
-}
-
 object FeatureHashes {
-  private val mdLocal = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  /** Static entry point shared by interpreted and generated code. */
-  def invoke(arr: ArrayData, bucketsBox: Integer): ArrayData = {
-    if (arr == null || bucketsBox == null) return null
-    val buckets = bucketsBox.intValue()
-    val n0 = arr.numElements()
-    val toks = new java.util.ArrayList[Array[Byte]](n0)
-    var i = 0
-    while (i < n0) {
-      val t = arr.getUTF8String(i)
-      if (t != null && t.numBytes() > 0) toks.add(t.getBytes)
-      i += 1
-    }
+  def invoke(arr: ArrayData, buckets: Int): ArrayData = {
+    val toks = nonEmptyTokens(arr)
     val n = toks.size()
-    val m = mdLocal.get()
-
-    def id(a: Array[Byte], b: Array[Byte]): Long = {
-      m.reset()
-      m.update(a)
-      if (b != null) { m.update(' '.toByte); m.update(b) }
-      val d = m.digest()
-      val h = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-        ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-      h % buckets // h is non-negative, so % == pmod
-    }
+    // gram [from, until) → id; the hash is non-negative, so % == pmod
+    def id(from: Int, until: Int): Long =
+      word32(joinedDigest(toks, from, until), 0) % buckets
 
     val out = new Array[Any](math.max(2 * n - 1, 0))
     var p = 0
-    i = 0
+    var i = 0
     while (i < n) {
-      out(p) = id(toks.get(i), null); p += 1
-      if (i + 1 < n) { out(p) = id(toks.get(i), toks.get(i + 1)); p += 1 }
+      out(p) = id(i, i + 1); p += 1
+      if (i + 1 < n) { out(p) = id(i, i + 2); p += 1 }
       i += 1
     }
     new GenericArrayData(out)
   }
-
-  /** Column-level API (register-on-use, like [[ClassifierScore]]). */
-  def feature_hashes(tokens: Column, buckets: Column): Column = {
-    register(org.apache.spark.sql.SparkSession.active)
-    org.apache.spark.sql.functions.call_function(
-      "graft_feature_hashes", tokens, buckets)
-  }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_feature_hashes", es => FeatureHashes(es.head, es(1)), "built-in")
 }

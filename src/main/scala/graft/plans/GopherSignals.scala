@@ -1,14 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression computing ALL Gopher rule signals
+/** Kernel `graft_gopher_signals`: ALL Gopher rule signals
   * ([[graft.functions.TextAnalysis.gopherRules]]) in ONE pass over the
   * text — bit-identical to the pure-Catalyst HOF formulation (which
   * remains as `gopherRulesHof`, equivalence test-pinned) and to the
@@ -33,42 +30,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * Null text yields a null struct (every original output column was
   * null-poisoned through the same chain).
   */
-case class GopherSignals(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = GopherSignals.Schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_gopher_signals"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName needs string, got ${other.sql}")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val t = child.eval(input)
-    if (t == null) null
-    else GopherSignals.invoke(t.asInstanceOf[UTF8String])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val c = child.genCode(ctx)
-    ev.copy(
-      code = code"""
-        ${c.code}
-        org.apache.spark.sql.catalyst.InternalRow ${ev.value} =
-          graft.plans.GopherSignals.invoke(${c.isNull} ? null : ${c.value});
-        boolean ${ev.isNull} = ${ev.value} == null;""")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): GopherSignals =
-    copy(child = newChild)
-}
-
 object GopherSignals {
   import java.util.regex.Pattern
 
@@ -175,11 +136,7 @@ object GopherSignals {
     false
   }
 
-  /** Static entry point shared by interpreted and generated code.
-    * Null text → null struct.
-    */
   def invoke(text: UTF8String): InternalRow = {
-    if (text == null) return null
     val str = text.toString
     // token pass: count, code-point length sum, alpha hits, stop hits
     val parts = Ws.split(trimSpaces(str), -1)
@@ -225,14 +182,4 @@ object GopherSignals {
     new GenericInternalRow(Array[Any](nWords, meanLen, symbolRatio,
       bulletFrac, ellipsisFrac, alphaFrac, stopHits, pass))
   }
-
-  /** Column-level API (register-on-use, like [[ClassifierScore]]). */
-  def gopher_signals(text: Column): Column = {
-    register(org.apache.spark.sql.SparkSession.active)
-    org.apache.spark.sql.functions.call_function("graft_gopher_signals", text)
-  }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gopher_signals", es => GopherSignals(es.head), "built-in")
 }

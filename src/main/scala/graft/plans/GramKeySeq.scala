@@ -1,125 +1,30 @@
 package graft.plans
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-/** Ordered (NON-distinct) md5-hex keys of a document's complete word
-  * k-grams, one generated pass per row: entry p is the key of the
-  * gram starting at token position p, so `posexplode` reproduces the
-  * former (pos, hash) rows of the window-lead gram builder exactly —
-  * without the doc-keyed token-stream shuffle the window needed.
+import KernelSupport.{hex, joinedDigest, nonEmptyTokens}
+
+/** Kernel `graft_gram_key_seq`: ordered (NON-distinct) md5-hex keys
+  * of a document's complete word k-grams, one generated pass per row:
+  * entry p is the key of the gram starting at token position p, so
+  * `posexplode` reproduces the former (pos, hash) rows of the
+  * window-lead gram builder exactly — without the doc-keyed
+  * token-stream shuffle the window needed.
   * Companion of [[GramKeys]] (which dedups) for consumers that need
   * gram POSITIONS ([[graft.operators.Dedup.duplicateSpanScrub]]).
   * Sub-k docs → empty array; null token array → null.
   */
-case class GramKeySeq(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_gram_key_seq"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), IntegerType) if right.foldable =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName needs (array<string>, foldable int), got " +
-            s"(${left.dataType.sql}, ${right.dataType.sql})")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val a = left.eval(input)
-    if (a == null) null
-    else GramKeySeq.invoke(a.asInstanceOf[ArrayData],
-      right.eval(input).asInstanceOf[java.lang.Integer])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val l = left.genCode(ctx)
-    val r = right.genCode(ctx)
-    ev.copy(
-      code = code"""
-        ${l.code}
-        ${r.code}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          graft.plans.GramKeySeq.invoke(
-            ${l.isNull} ? null : ${l.value},
-            ${r.isNull} ? null : (Integer) ${r.value});
-        boolean ${ev.isNull} = ${ev.value} == null;""")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): GramKeySeq =
-    copy(left = newLeft, right = newRight)
-}
-
 object GramKeySeq {
-  private val mdLocal = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  private val HexChars = "0123456789abcdef".toCharArray
-
-  private def hex(d: Array[Byte]): UTF8String = {
-    val out = new Array[Byte](d.length * 2)
-    var i = 0
-    while (i < d.length) {
-      out(2 * i) = HexChars((d(i) >> 4) & 0xf).toByte
-      out(2 * i + 1) = HexChars(d(i) & 0xf).toByte
-      i += 1
-    }
-    UTF8String.fromBytes(out)
-  }
-
-  /** Static entry point shared by interpreted and generated code. */
-  def invoke(arr: ArrayData, kBox: Integer): ArrayData = {
-    if (arr == null || kBox == null) return null
-    val k = kBox.intValue()
-    val n0 = arr.numElements()
-    val toks = new java.util.ArrayList[Array[Byte]](n0)
-    var i = 0
-    while (i < n0) {
-      val t = arr.getUTF8String(i)
-      if (t != null && t.numBytes() > 0) toks.add(t.getBytes)
-      i += 1
-    }
+  def invoke(arr: ArrayData, k: Int): ArrayData = {
+    val toks = nonEmptyTokens(arr)
     val n = toks.size()
     if (n < k) return new GenericArrayData(Array.empty[Any])
-    val m = mdLocal.get()
     val out = new Array[Any](n - k + 1)
     var s = 0
     while (s + k <= n) {
-      m.reset()
-      var j = s
-      while (j < s + k) {
-        if (j > s) m.update(' '.toByte)
-        m.update(toks.get(j))
-        j += 1
-      }
-      out(s) = hex(m.digest())
+      out(s) = hex(joinedDigest(toks, s, s + k))
       s += 1
     }
     new GenericArrayData(out)
   }
-
-  /** Column-level API (register-on-use, like [[ClassifierScore]]). */
-  def gram_key_seq(tokens: Column, k: Column): Column = {
-    register(org.apache.spark.sql.SparkSession.active)
-    org.apache.spark.sql.functions.call_function(
-      "graft_gram_key_seq", tokens, k)
-  }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gram_key_seq", es => GramKeySeq(es.head, es(1)), "built-in")
 }

@@ -1,14 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression emitting the DISTINCT md5-hex keys of a
+import KernelSupport.{hex, joinedDigest, nonEmptyTokens}
+
+/** Kernel `graft_gram_keys`: the DISTINCT md5-hex keys of a
   * document's word k-grams in one generated pass over its token array
   * — the row-local form of the `tokenGramKeys` /
   * `ngramContainment` gram derivation:
@@ -34,104 +31,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * per-doc count aggregates disappear entirely. Null token array
   * (null text upstream) → null, and callers drop the row.
   */
-case class GramKeys(first: Expression, second: Expression,
-                    third: Expression) extends TernaryExpression {
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_gram_keys"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(StringType, _), IntegerType, BooleanType)
-          if second.foldable && third.foldable =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName needs (array<string>, foldable int, foldable " +
-            s"boolean), got (${first.dataType.sql}, ${second.dataType.sql}, " +
-            s"${third.dataType.sql})")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val a = first.eval(input)
-    if (a == null) null
-    else GramKeys.invoke(a.asInstanceOf[ArrayData],
-      second.eval(input).asInstanceOf[java.lang.Integer],
-      third.eval(input).asInstanceOf[java.lang.Boolean])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val a = first.genCode(ctx)
-    val k = second.genCode(ctx)
-    val f = third.genCode(ctx)
-    ev.copy(
-      code = code"""
-        ${a.code}
-        ${k.code}
-        ${f.code}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          graft.plans.GramKeys.invoke(
-            ${a.isNull} ? null : ${a.value},
-            ${k.isNull} ? null : (Integer) ${k.value},
-            ${f.isNull} ? null : (Boolean) ${f.value});
-        boolean ${ev.isNull} = ${ev.value} == null;""")
-  }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): GramKeys =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
 object GramKeys {
-  private val mdLocal = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  private val HexChars = "0123456789abcdef".toCharArray
-
-  private def hex(d: Array[Byte]): UTF8String = {
-    val out = new Array[Byte](d.length * 2)
-    var i = 0
-    while (i < d.length) {
-      out(2 * i) = HexChars((d(i) >> 4) & 0xf).toByte
-      out(2 * i + 1) = HexChars(d(i) & 0xf).toByte
-      i += 1
-    }
-    UTF8String.fromBytes(out)
-  }
-
-  /** Static entry point shared by interpreted and generated code. */
-  def invoke(arr: ArrayData, kBox: Integer,
-             fallbackBox: java.lang.Boolean): ArrayData = {
-    if (arr == null || kBox == null || fallbackBox == null) return null
-    val k = kBox.intValue()
-    val wholeDocFallback = fallbackBox.booleanValue()
-    val n0 = arr.numElements()
-    val toks = new java.util.ArrayList[Array[Byte]](n0)
-    var i = 0
-    while (i < n0) {
-      val t = arr.getUTF8String(i)
-      if (t != null && t.numBytes() > 0) toks.add(t.getBytes)
-      i += 1
-    }
+  def invoke(arr: ArrayData, k: Int, wholeDocFallback: Boolean): ArrayData = {
+    val toks = nonEmptyTokens(arr)
     val n = toks.size()
-    val m = mdLocal.get()
-
-    def keyOf(from: Int, until: Int): UTF8String = {
-      m.reset()
-      var j = from
-      while (j < until) {
-        if (j > from) m.update(' '.toByte)
-        m.update(toks.get(j))
-        j += 1
-      }
-      hex(m.digest())
-    }
+    def keyOf(from: Int, until: Int): UTF8String =
+      hex(joinedDigest(toks, from, until))
 
     if (n < k) {
       if (!wholeDocFallback) return new GenericArrayData(Array.empty[Any])
@@ -149,15 +54,4 @@ object GramKeys {
     while (it.hasNext) { out(p) = it.next(); p += 1 }
     new GenericArrayData(out)
   }
-
-  /** Column-level API (register-on-use, like [[ClassifierScore]]). */
-  def gram_keys(tokens: Column, k: Column, wholeDocFallback: Column): Column = {
-    register(org.apache.spark.sql.SparkSession.active)
-    org.apache.spark.sql.functions.call_function(
-      "graft_gram_keys", tokens, k, wholeDocFallback)
-  }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gram_keys", es => GramKeys(es.head, es(1), es(2)), "built-in")
 }

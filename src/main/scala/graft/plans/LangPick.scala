@@ -1,14 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression for the stopword-ratio language argmax
+/** Kernel `graft_lang_pick`: the stopword-ratio language argmax
   * ([[graft.functions.TextAnalysis.langId]]): ONE pass over the token
   * array counts the hits of each of the three vocabulary lists (en,
   * de, es — passed as a foldable array-of-arrays, in that order) plus
@@ -31,79 +26,33 @@ import org.apache.spark.unsafe.types.UTF8String
   * token array → null (the caller's coalesce supplies the original
   * null-text fallback).
   */
-case class LangPick(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_lang_pick"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(ArrayType(StringType, _), _))
-          if right.foldable =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName needs (array<string>, foldable array<array<string>>), " +
-            s"got (${left.dataType.sql}, ${right.dataType.sql})")
-    }
-
-  @transient private lazy val memberSets: Array[java.util.HashSet[UTF8String]] = {
-    val arr = right.eval(null).asInstanceOf[ArrayData]
-    if (arr == null) Array.empty
-    else Array.tabulate(arr.numElements()) { i =>
-      val inner = arr.getArray(i)
-      val s = new java.util.HashSet[UTF8String]()
-      if (inner != null) {
-        var j = 0
-        while (j < inner.numElements()) {
-          val v = inner.getUTF8String(j)
-          if (v != null) s.add(v)
-          j += 1
-        }
-      }
-      s
-    }
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val a = left.eval(input)
-    if (a == null) null
-    else LangPick.invoke(a.asInstanceOf[ArrayData], memberSets)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val l = left.genCode(ctx)
-    val setsRef = ctx.addReferenceObj("memberSets", memberSets,
-      "java.util.HashSet[]")
-    ev.copy(
-      code = code"""
-        ${l.code}
-        org.apache.spark.unsafe.types.UTF8String ${ev.value} =
-          graft.plans.LangPick.invoke(
-            ${l.isNull} ? null : ${l.value}, $setsRef);
-        boolean ${ev.isNull} = ${ev.value} == null;""")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): LangPick =
-    copy(left = newLeft, right = newRight)
-}
-
 object LangPick {
   private val Und = UTF8String.fromString("und")
   private val En = UTF8String.fromString("en")
   private val De = UTF8String.fromString("de")
   private val Es = UTF8String.fromString("es")
 
-  /** Static entry point shared by interpreted and generated code. */
+  /** One hash set per vocabulary list: the kernel's state, built once
+    * per call site from the constant array-of-arrays.
+    */
+  def memberSets(lists: Any): java.util.ArrayList[java.util.HashSet[UTF8String]] = {
+    val arr = lists.asInstanceOf[ArrayData]
+    val out = new java.util.ArrayList[java.util.HashSet[UTF8String]]()
+    if (arr != null) {
+      var i = 0
+      while (i < arr.numElements()) {
+        out.add(TokenStats.memberSet(arr.getArray(i)))
+        i += 1
+      }
+    }
+    out
+  }
+
   def invoke(arr: ArrayData,
-             members: Array[java.util.HashSet[UTF8String]]): UTF8String = {
-    if (arr == null) return null
+             members: java.util.List[java.util.HashSet[UTF8String]]): UTF8String = {
     var n = 0
-    val hits = new Array[Int](members.length)
+    val sets = members.size()
+    val hits = new Array[Int](sets)
     val len = arr.numElements()
     var i = 0
     while (i < len) {
@@ -111,8 +60,8 @@ object LangPick {
       if (t != null && t.numBytes() > 0) {
         n += 1
         var s = 0
-        while (s < members.length) {
-          if (members(s).contains(t)) hits(s) += 1
+        while (s < sets) {
+          if (members.get(s).contains(t)) hits(s) += 1
           s += 1
         }
       }
@@ -128,15 +77,4 @@ object LangPick {
     else if (de >= en && de >= es) De
     else Es
   }
-
-  /** Column-level API (register-on-use, like [[ClassifierScore]]). */
-  def lang_pick(arr: Column, members: Column): Column = {
-    register(org.apache.spark.sql.SparkSession.active)
-    org.apache.spark.sql.functions.call_function(
-      "graft_lang_pick", arr, members)
-  }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_lang_pick", es => LangPick(es.head, es(1)), "built-in")
 }

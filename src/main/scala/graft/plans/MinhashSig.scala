@@ -1,15 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression computing the FULL portable MinHash
-  * signature of a document in one generated pass over its token array
+import KernelSupport.{md5, nonEmptyTokens, word32}
+
+/** Kernel `graft_minhash_sig`: the FULL portable MinHash signature
+  * of a document in one generated pass over its token array
   * ([[graft.operators.Dedup.minhashPairsPortable]] semantics):
   *
   *  - non-empty tokens t_0..t_{n-1} (empties from the upstream split
@@ -36,88 +32,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * the row — the relational form excluded those docs via its size
   * filters.
   */
-case class MinhashSig(first: Expression, second: Expression,
-                      third: Expression) extends TernaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_minhash_sig"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(StringType, _), IntegerType, IntegerType)
-          if second.foldable && third.foldable =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName needs (array<string>, foldable int, foldable int), " +
-            s"got (${first.dataType.sql}, ${second.dataType.sql}, " +
-            s"${third.dataType.sql})")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val a = first.eval(input)
-    if (a == null) null
-    else MinhashSig.invoke(a.asInstanceOf[ArrayData],
-      second.eval(input).asInstanceOf[java.lang.Integer],
-      third.eval(input).asInstanceOf[java.lang.Integer])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val a = first.genCode(ctx)
-    val k = second.genCode(ctx)
-    val h = third.genCode(ctx)
-    ev.copy(
-      code = code"""
-        ${a.code}
-        ${k.code}
-        ${h.code}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          graft.plans.MinhashSig.invoke(
-            ${a.isNull} ? null : ${a.value},
-            ${k.isNull} ? null : (Integer) ${k.value},
-            ${h.isNull} ? null : (Integer) ${h.value});
-        boolean ${ev.isNull} = ${ev.value} == null;""")
-  }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): MinhashSig =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
 object MinhashSig {
-  private val mdLocal = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
   // "0:", "1:", ... ASCII prefix bytes per md5 group, cached
   private val Prefixes: Array[Array[Byte]] =
     Array.tabulate(16)(g => s"$g:".getBytes(
       java.nio.charset.StandardCharsets.US_ASCII))
 
-  /** Static entry point shared by interpreted and generated code. */
-  def invoke(arr: ArrayData, kBox: Integer, numHashesBox: Integer): ArrayData = {
-    if (arr == null || kBox == null || numHashesBox == null) return null
-    val k = kBox.intValue()
-    val numHashes = numHashesBox.intValue()
+  def invoke(arr: ArrayData, k: Int, numHashes: Int): ArrayData = {
     val groups = (numHashes + 3) / 4
-    // collect non-empty token byte arrays (raw UTF8String bytes — the
-    // md5 input must be byte-identical to concat_ws over UTF8Strings)
-    val n0 = arr.numElements()
-    val toks = new java.util.ArrayList[Array[Byte]](n0)
-    var i = 0
-    while (i < n0) {
-      val t = arr.getUTF8String(i)
-      if (t != null && t.numBytes() > 0) toks.add(t.getBytes)
-      i += 1
-    }
+    val toks = nonEmptyTokens(arr)
     val n = toks.size()
     val sig = new Array[Long](numHashes)
     java.util.Arrays.fill(sig, Long.MaxValue)
-    val m = mdLocal.get()
+    val m = md5()
 
     def updateWith(sh: Array[Byte], off: Int, len: Int): Unit = {
       var g = 0
@@ -129,8 +56,7 @@ object MinhashSig {
         val lim = math.min(4, numHashes - 4 * g)
         var w = 0
         while (w < lim) {
-          val v = ((d(4 * w) & 0xffL) << 24) | ((d(4 * w + 1) & 0xffL) << 16) |
-            ((d(4 * w + 2) & 0xffL) << 8) | (d(4 * w + 3) & 0xffL)
+          val v = word32(d, 4 * w)
           val j = 4 * g + w
           if (v < sig(j)) sig(j) = v
           w += 1
@@ -170,15 +96,4 @@ object MinhashSig {
     }
     new GenericArrayData(sig)
   }
-
-  /** Column-level API (register-on-use, like [[ClassifierScore]]). */
-  def minhash_sig(tokens: Column, k: Column, numHashes: Column): Column = {
-    register(org.apache.spark.sql.SparkSession.active)
-    org.apache.spark.sql.functions.call_function(
-      "graft_minhash_sig", tokens, k, numHashes)
-  }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_sig", es => MinhashSig(es.head, es(1), es(2)), "built-in")
 }

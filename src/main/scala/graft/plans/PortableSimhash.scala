@@ -1,14 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression computing the portable majority-vote
+import KernelSupport.{md5, word32}
+
+/** Kernel `graft_portable_simhash`: the portable majority-vote
   * SimHash sketch of one document in one generated pass
   * ([[graft.operators.Dedup]] `portableSketches` semantics): every
   * non-empty token's portableHash (first 4 md5 bytes unsigned —
@@ -23,74 +19,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * MAP: the relational form shuffled every token hash into a doc-keyed
   * aggregate for one per-row long.
   */
-case class PortableSimhash(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_portable_simhash"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), IntegerType) if right.foldable =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName needs (array<string>, foldable int), got " +
-            s"(${left.dataType.sql}, ${right.dataType.sql})")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val a = left.eval(input)
-    val b = right.eval(input)
-    PortableSimhash.invoke(a.asInstanceOf[ArrayData],
-      b.asInstanceOf[java.lang.Integer])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val l = left.genCode(ctx)
-    val r = right.genCode(ctx)
-    ev.copy(
-      code = code"""
-        ${l.code}
-        ${r.code}
-        long ${ev.value} = graft.plans.PortableSimhash.invoke(
-          ${l.isNull} ? null : ${l.value},
-          ${r.isNull} ? null : (Integer) ${r.value});""",
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PortableSimhash =
-    copy(left = newLeft, right = newRight)
-}
-
 object PortableSimhash {
-  private val mdLocal = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  /** Static entry point shared by interpreted and generated code.
-    * Null array (null text) → 0, the relational explode_outer
+  /** Null array (null text) → 0, the relational explode_outer
     * behavior.
     */
-  def invoke(arr: ArrayData, bitsBox: Integer): Long = {
-    if (arr == null || bitsBox == null) return 0L
-    val bits = bitsBox.intValue()
+  def invoke(arr: ArrayData, bits: Int): Long = {
+    if (arr == null) return 0L
     val votes = new Array[Int](bits)
-    val m = mdLocal.get()
+    val m = md5()
     val n0 = arr.numElements()
     var i = 0
     while (i < n0) {
       val t = arr.getUTF8String(i)
       if (t != null && t.numBytes() > 0) {
         m.reset()
-        val d = m.digest(t.getBytes)
-        val h = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-          ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
+        val h = word32(m.digest(t.getBytes), 0)
         var b = 0
         while (b < bits) {
           if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
@@ -107,16 +50,4 @@ object PortableSimhash {
     }
     out
   }
-
-  /** Column-level API (register-on-use, like [[ClassifierScore]]). */
-  def portable_simhash(tokens: Column, bits: Column): Column = {
-    register(org.apache.spark.sql.SparkSession.active)
-    org.apache.spark.sql.functions.call_function(
-      "graft_portable_simhash", tokens, bits)
-  }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_portable_simhash", es => PortableSimhash(es.head, es(1)),
-      "built-in")
 }

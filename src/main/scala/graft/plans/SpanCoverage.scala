@@ -1,18 +1,17 @@
 package graft.plans
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-/** Duplicate-span coverage summary of one document in one generated
-  * pass ([[graft.operators.Dedup.duplicateSpanScrub]] semantics):
-  * given the token array and the (unsorted) positions of its flagged
-  * k-grams, token position p is covered iff some flagged gram starts
+import KernelSupport.{hex, md5, nonEmptyTokens}
+
+/** Kernel `graft_span_coverage`: the duplicate-span coverage summary
+  * of one document in one generated pass
+  * ([[graft.operators.Dedup.duplicateSpanScrub]] semantics): given the
+  * token array and the (unsorted) positions of its flagged k-grams,
+  * token position p is covered iff some flagged gram starts
   * at f ≤ p with p < f + k; the summary is
   *
   *   (n_tokens, n_spans  = number of covered runs,
@@ -29,56 +28,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * to (0, 0, 0, md5("")) — exactly the coalesced left-join fallback
   * the relational form applied to docs with no token rows.
   */
-case class SpanCoverage(first: Expression, second: Expression,
-                        third: Expression) extends TernaryExpression {
-  override def dataType: DataType = SpanCoverage.Schema
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_span_coverage"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(IntegerType, _), IntegerType)
-          if third.foldable =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName needs (array<string>, array<int>, foldable int), " +
-            s"got (${first.dataType.sql}, ${second.dataType.sql}, " +
-            s"${third.dataType.sql})")
-    }
-
-  override def eval(input: InternalRow): Any =
-    SpanCoverage.invoke(
-      first.eval(input).asInstanceOf[ArrayData],
-      second.eval(input).asInstanceOf[ArrayData],
-      third.eval(input).asInstanceOf[java.lang.Integer])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val a = first.genCode(ctx)
-    val f = second.genCode(ctx)
-    val k = third.genCode(ctx)
-    ev.copy(
-      code = code"""
-        ${a.code}
-        ${f.code}
-        ${k.code}
-        org.apache.spark.sql.catalyst.InternalRow ${ev.value} =
-          graft.plans.SpanCoverage.invoke(
-            ${a.isNull} ? null : ${a.value},
-            ${f.isNull} ? null : ${f.value},
-            ${k.isNull} ? null : (Integer) ${k.value});""",
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): SpanCoverage =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
 object SpanCoverage {
   val Schema: StructType = StructType(Seq(
     StructField("n_tokens", LongType, nullable = false),
@@ -86,41 +35,14 @@ object SpanCoverage {
     StructField("n_covered", LongType, nullable = false),
     StructField("kept_hash", StringType, nullable = false)))
 
-  private val mdLocal = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  private val HexChars = "0123456789abcdef".toCharArray
-
-  private def hex(d: Array[Byte]): UTF8String = {
-    val out = new Array[Byte](d.length * 2)
-    var i = 0
-    while (i < d.length) {
-      out(2 * i) = HexChars((d(i) >> 4) & 0xf).toByte
-      out(2 * i + 1) = HexChars(d(i) & 0xf).toByte
-      i += 1
-    }
-    UTF8String.fromBytes(out)
-  }
-
-  /** Static entry point shared by interpreted and generated code. */
-  def invoke(arr: ArrayData, flagged: ArrayData, kBox: Integer): InternalRow = {
-    val k = if (kBox == null) 1 else kBox.intValue()
-    val m = mdLocal.get()
+  def invoke(arr: ArrayData, flagged: ArrayData, k: Int): InternalRow = {
+    val m = md5()
     m.reset()
     if (arr == null) // null text: no token rows -> coalesced zeros
       return new GenericInternalRow(Array[Any](0L, 0L, 0L, hex(m.digest())))
     // non-empty tokens (empties from the upstream split are dropped,
     // positions refer to the FILTERED sequence, as in the posexplode)
-    val n0 = arr.numElements()
-    val toks = new java.util.ArrayList[Array[Byte]](n0)
-    var i = 0
-    while (i < n0) {
-      val t = arr.getUTF8String(i)
-      if (t != null && t.numBytes() > 0) toks.add(t.getBytes)
-      i += 1
-    }
+    val toks = nonEmptyTokens(arr)
     val n = toks.size()
     if (n == 0)
       return new GenericInternalRow(Array[Any](0L, 0L, 0L, hex(m.digest())))
@@ -153,16 +75,4 @@ object SpanCoverage {
     new GenericInternalRow(Array[Any](n.toLong, nSpans, nCovered,
       hex(m.digest())))
   }
-
-  /** Column-level API (register-on-use, like [[ClassifierScore]]). */
-  def span_coverage(tokens: Column, flagged: Column, k: Column): Column = {
-    register(org.apache.spark.sql.SparkSession.active)
-    org.apache.spark.sql.functions.call_function(
-      "graft_span_coverage", tokens, flagged, k)
-  }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_span_coverage", es => SpanCoverage(es.head, es(1), es(2)),
-      "built-in")
 }

@@ -1,15 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression counting, in ONE pass over a string
+/** Kernel `graft_token_stats`: counts, in ONE pass over a string
   * array, the non-empty elements and how many of them belong to a
   * foldable membership list:
   *
@@ -24,26 +21,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * array → null struct (size(null) null-poisons the original); null
   * elements are dropped like empties (length(null) > 0 is not true).
   */
-case class TokenStats(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = TokenStats.Schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_token_stats"
+object TokenStats {
+  val Schema: StructType = StructType(Seq(
+    StructField("n_tokens", IntegerType, nullable = false),
+    StructField("n_hits", IntegerType, nullable = false)))
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(StringType, _))
-          if right.foldable =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName needs (array<string>, foldable array<string>), got " +
-            s"(${left.dataType.sql}, ${right.dataType.sql})")
-    }
-
-  @transient private lazy val memberSet: java.util.HashSet[UTF8String] = {
-    val arr = right.eval(null).asInstanceOf[ArrayData]
+  /** The member list as a hash set: the kernel's state, built once
+    * per call site from the constant list (null list → empty set).
+    */
+  def memberSet(list: Any): java.util.HashSet[UTF8String] = {
+    val arr = list.asInstanceOf[ArrayData]
     val s = new java.util.HashSet[UTF8String]()
     if (arr != null) {
       var i = 0
@@ -56,39 +43,8 @@ case class TokenStats(left: Expression, right: Expression)
     s
   }
 
-  override def eval(input: InternalRow): Any = {
-    val a = left.eval(input)
-    if (a == null) null
-    else TokenStats.invoke(a.asInstanceOf[ArrayData], memberSet)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val l = left.genCode(ctx)
-    val setRef = ctx.addReferenceObj("memberSet", memberSet,
-      "java.util.HashSet<org.apache.spark.unsafe.types.UTF8String>")
-    ev.copy(
-      code = code"""
-        ${l.code}
-        org.apache.spark.sql.catalyst.InternalRow ${ev.value} =
-          graft.plans.TokenStats.invoke(${l.isNull} ? null : ${l.value}, $setRef);
-        boolean ${ev.isNull} = ${ev.value} == null;""")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): TokenStats =
-    copy(left = newLeft, right = newRight)
-}
-
-object TokenStats {
-  val Schema: StructType = StructType(Seq(
-    StructField("n_tokens", IntegerType, nullable = false),
-    StructField("n_hits", IntegerType, nullable = false)))
-
-  /** Static entry point shared by interpreted and generated code. */
   def invoke(arr: ArrayData,
              members: java.util.HashSet[UTF8String]): InternalRow = {
-    if (arr == null) return null
     val len = arr.numElements()
     var n = 0
     var hits = 0
@@ -103,15 +59,4 @@ object TokenStats {
     }
     new GenericInternalRow(Array[Any](n, hits))
   }
-
-  /** Column-level API (register-on-use, like [[ClassifierScore]]). */
-  def token_stats(arr: Column, members: Column): Column = {
-    register(org.apache.spark.sql.SparkSession.active)
-    org.apache.spark.sql.functions.call_function(
-      "graft_token_stats", arr, members)
-  }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_token_stats", es => TokenStats(es.head, es(1)), "built-in")
 }

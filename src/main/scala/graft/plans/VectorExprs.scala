@@ -1,64 +1,33 @@
 package graft.plans
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
 
-/** Native Catalyst expressions for the vector kernels the similarity
-  * family evaluates per candidate pair. Spark's higher-order functions
-  * (`zip_with`, `aggregate`) are CodegenFallback — every element costs
-  * an interpreted lambda dispatch plus boxing, ~µs each, which made
-  * the SemDedup pair stage spend tens of seconds on 126 k trivial
-  * pairs. These expressions generate a tight primitive loop instead
-  * (measured: the pair stage fell from ~10–80 s to sub-second at
-  * sf0.1) while replicating the fold semantics BIT-EXACTLY, so every
-  * DuckDB oracle stays green:
+/** Vector kernels the similarity family evaluates per candidate pair
+  * ([[Kernels]] rows `graft_float_dot`, `graft_float_double_dot`,
+  * `graft_long_sqdist`). Spark's higher-order functions (`zip_with`,
+  * `aggregate`) are CodegenFallback — every element costs an
+  * interpreted lambda dispatch plus boxing, ~µs each, which made the
+  * SemDedup pair stage spend tens of seconds on 126 k trivial pairs.
+  * These are tight primitive loops instead (measured: the pair stage
+  * fell from ~10–80 s to sub-second at sf0.1) that replicate the fold
+  * semantics BIT-EXACTLY, so every DuckDB oracle stays green:
   *
-  *  - [[FloatDot]]        ≡ aggregate(zip_with(a, b, (x,y) ⇒ x*y), 0.0d, +)
-  *                          with a,b array<float>: FLOAT multiply, then
-  *                          DOUBLE accumulate, in element order;
-  *  - [[FloatDoubleDot]]  ≡ same with b array<double> (hyperplane
-  *                          projections): the float widens, DOUBLE
-  *                          multiply, DOUBLE accumulate;
-  *  - [[LongSqDist]]      ≡ aggregate(zip_with(a, b, (x,y) ⇒ (x−y)²),
-  *                          0L, +) with a,b array<long> (fixed-point
-  *                          IVF distances): exact integer arithmetic.
+  *  - [[floatDot]]       ≡ aggregate(zip_with(a, b, (x,y) ⇒ x*y), 0.0d, +)
+  *                         with a,b array<float>: FLOAT multiply, then
+  *                         DOUBLE accumulate, in element order;
+  *  - [[floatDoubleDot]] ≡ same with b array<double> (hyperplane
+  *                         projections): the float widens, DOUBLE
+  *                         multiply, DOUBLE accumulate;
+  *  - [[longSqDist]]     ≡ aggregate(zip_with(a, b, (x,y) ⇒ (x−y)²),
+  *                         0L, +) with a,b array<long> (fixed-point
+  *                         IVF distances): exact integer arithmetic.
   *
   * Null semantics replicate the HOF pipeline: null array → null;
   * length mismatch → null (zip_with pads with null, poisoning the
   * fold); any null element → null.
   */
-abstract class VectorFold extends BinaryExpression {
-  override def nullable: Boolean = true
-
-  protected def leftElem: DataType
-  protected def rightElem: DataType
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    (left.dataType, right.dataType) match {
-      case (ArrayType(l, _), ArrayType(r, _))
-        if l == leftElem && r == rightElem =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName needs (array<$leftElem>, array<$rightElem>), got " +
-            s"(${left.dataType.sql}, ${right.dataType.sql})")
-    }
-  }
-}
-
-case class FloatDot(left: Expression, right: Expression) extends VectorFold {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_float_dot"
-  override protected def leftElem: DataType = FloatType
-  override protected def rightElem: DataType = FloatType
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
+object VectorExprs {
+  def floatDot(a: ArrayData, b: ArrayData): java.lang.Double = {
     val n = a.numElements()
     if (n != b.numElements()) return null
     var acc = 0.0d
@@ -71,40 +40,7 @@ case class FloatDot(left: Expression, right: Expression) extends VectorFold {
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      s"""
-         |final int $n = $a.numElements();
-         |if ($n != $b.numElements()) { ${ev.isNull} = true; }
-         |else {
-         |  double $acc = 0.0d;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $acc += (double)($a.getFloat($i) * $b.getFloat($i));
-         |  }
-         |  if (!${ev.isNull}) ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): FloatDot =
-    copy(left = newLeft, right = newRight)
-}
-
-case class FloatDoubleDot(left: Expression, right: Expression)
-    extends VectorFold {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_float_double_dot"
-  override protected def leftElem: DataType = FloatType
-  override protected def rightElem: DataType = DoubleType
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
+  def floatDoubleDot(a: ArrayData, b: ArrayData): java.lang.Double = {
     val n = a.numElements()
     if (n != b.numElements()) return null
     var acc = 0.0d
@@ -117,39 +53,7 @@ case class FloatDoubleDot(left: Expression, right: Expression)
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      s"""
-         |final int $n = $a.numElements();
-         |if ($n != $b.numElements()) { ${ev.isNull} = true; }
-         |else {
-         |  double $acc = 0.0d;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $acc += ((double) $a.getFloat($i)) * $b.getDouble($i);
-         |  }
-         |  if (!${ev.isNull}) ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): FloatDoubleDot =
-    copy(left = newLeft, right = newRight)
-}
-
-case class LongSqDist(left: Expression, right: Expression) extends VectorFold {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_long_sqdist"
-  override protected def leftElem: DataType = LongType
-  override protected def rightElem: DataType = LongType
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
+  def longSqDist(a: ArrayData, b: ArrayData): java.lang.Long = {
     val n = a.numElements()
     if (n != b.numElements()) return null
     var acc = 0L
@@ -162,55 +66,4 @@ case class LongSqDist(left: Expression, right: Expression) extends VectorFold {
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      s"""
-         |final int $n = $a.numElements();
-         |if ($n != $b.numElements()) { ${ev.isNull} = true; }
-         |else {
-         |  long $acc = 0L;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    final long $d = $a.getLong($i) - $b.getLong($i);
-         |    $acc += $d * $d;
-         |  }
-         |  if (!${ev.isNull}) ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): LongSqDist =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Column APIs — register-on-use against the active session (same
-  * registry mechanism as [[HostOf]]; idempotent).
-  */
-object VectorExprs {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_float_dot",
-      es => FloatDot(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_float_double_dot",
-      es => FloatDoubleDot(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_long_sqdist",
-      es => LongSqDist(es.head, es(1)), "built-in")
-  }
-
-  private def call(name: String, a: Column, b: Column): Column = {
-    register(SparkSession.active)
-    org.apache.spark.sql.functions.call_function(name, a, b)
-  }
-
-  def float_dot(a: Column, b: Column): Column = call("graft_float_dot", a, b)
-  def float_double_dot(a: Column, b: Column): Column =
-    call("graft_float_double_dot", a, b)
-  def long_sqdist(a: Column, b: Column): Column =
-    call("graft_long_sqdist", a, b)
 }

@@ -1,15 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression computing the token-winnowing
+import KernelSupport.{joinedDigest, nonEmptyTokens, word32}
+
+/** Kernel `graft_winnow_stats`: the token-winnowing
   * fingerprint summary of one document in one generated pass
   * ([[graft.functions.TextAnalysis.winnowFingerprintsTokens]]
   * semantics):
@@ -32,97 +30,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * a PURE MAP: the relational form shuffled the whole token stream
   * into TWO window passes plus an aggregate for three per-row numbers.
   */
-case class WinnowStats(first: Expression, second: Expression,
-                       third: Expression) extends TernaryExpression {
-  override def dataType: DataType = WinnowStats.Schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_winnow_stats"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(StringType, _), IntegerType, IntegerType)
-          if second.foldable && third.foldable =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName needs (array<string>, foldable int, foldable int), " +
-            s"got (${first.dataType.sql}, ${second.dataType.sql}, " +
-            s"${third.dataType.sql})")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val a = first.eval(input)
-    if (a == null) null
-    else WinnowStats.invoke(a.asInstanceOf[ArrayData],
-      second.eval(input).asInstanceOf[java.lang.Integer],
-      third.eval(input).asInstanceOf[java.lang.Integer])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val a = first.genCode(ctx)
-    val k = second.genCode(ctx)
-    val w = third.genCode(ctx)
-    ev.copy(
-      code = code"""
-        ${a.code}
-        ${k.code}
-        ${w.code}
-        org.apache.spark.sql.catalyst.InternalRow ${ev.value} =
-          graft.plans.WinnowStats.invoke(
-            ${a.isNull} ? null : ${a.value},
-            ${k.isNull} ? null : (Integer) ${k.value},
-            ${w.isNull} ? null : (Integer) ${w.value});
-        boolean ${ev.isNull} = ${ev.value} == null;""")
-  }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): WinnowStats =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
 object WinnowStats {
   val Schema: StructType = StructType(Seq(
     StructField("n_fingerprints", IntegerType, nullable = false),
     StructField("min_fp", LongType, nullable = false),
     StructField("max_fp", LongType, nullable = false)))
 
-  private val mdLocal = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  /** Static entry point shared by interpreted and generated code. */
-  def invoke(arr: ArrayData, kBox: Integer, wBox: Integer): InternalRow = {
-    if (arr == null || kBox == null || wBox == null) return null
-    val k = kBox.intValue()
-    val w = wBox.intValue()
-    val n0 = arr.numElements()
-    val toks = new java.util.ArrayList[Array[Byte]](n0)
-    var i = 0
-    while (i < n0) {
-      val t = arr.getUTF8String(i)
-      if (t != null && t.numBytes() > 0) toks.add(t.getBytes)
-      i += 1
-    }
+  def invoke(arr: ArrayData, k: Int, w: Int): InternalRow = {
+    val toks = nonEmptyTokens(arr)
     val n = toks.size()
-    val m = mdLocal.get()
 
     // portableHash of the space-joined tokens [from, until)
-    def hashOf(from: Int, until: Int): Long = {
-      m.reset()
-      var j = from
-      while (j < until) {
-        if (j > from) m.update(' '.toByte)
-        m.update(toks.get(j))
-        j += 1
-      }
-      val d = m.digest()
-      ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-        ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-    }
+    def hashOf(from: Int, until: Int): Long =
+      word32(joinedDigest(toks, from, until), 0)
 
     if (n < k) {
       val fp = hashOf(0, n)
@@ -149,15 +69,4 @@ object WinnowStats {
     }
     new GenericInternalRow(Array[Any](seen.size(), minFp, maxFp))
   }
-
-  /** Column-level API (register-on-use, like [[ClassifierScore]]). */
-  def winnow_stats(tokens: Column, k: Column, w: Column): Column = {
-    register(org.apache.spark.sql.SparkSession.active)
-    org.apache.spark.sql.functions.call_function(
-      "graft_winnow_stats", tokens, k, w)
-  }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_winnow_stats", es => WinnowStats(es.head, es(1), es(2)), "built-in")
 }

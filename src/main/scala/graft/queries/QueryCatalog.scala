@@ -355,13 +355,13 @@ object QueryCatalog {
   // ---------- crawl scalar ops over synthesized columns (SURVEY §2.2) ----------
 
   /** O1 URL canonicalization, oracle-checkable: messy synthesized URL →
-    * canonical via the real UDF; the oracle computes the expected
-    * string directly.
+    * canonical via the `canonicalize_url` kernel; the oracle computes
+    * the expected string directly.
     */
   def qUrlCanonicalize(spark: SparkSession, dir: String): DataFrame =
     t(spark, dir, "documents")
       .select(col("doc_id"),
-        GraftFunctions.canonicalizeUdf(
+        graft.plans.Kernels.canonicalize_url(
           concat(lit("HTTP://"), upper(col("source")),
             lit(".Example.COM.:80/a/./p/"), col("doc_id"),
             lit("?utm_source=x&id="), col("doc_id"), lit("#frag")))
@@ -524,12 +524,12 @@ object QueryCatalog {
 
   def qStopwordRatio(spark: SparkSession, dir: String): DataFrame = {
     val stops = Seq("the", "a", "and", "of", "to", "in")
-    // native one-pass kernel (plans.TokenStats) over the codegen'd
+    // one-pass generated kernel (plans.TokenStats) over the codegen'd
     // split: the HOF statement (`size(filter(w, isin)) / size(w)` over
     // w = filter(split(...))) ran the tokenizing split once per
     // CodegenFallback filter parent with interpreted lambda dispatch
     // per element; results bit-identical (equivalence test-pinned)
-    val g = graft.plans.TokenStats.token_stats(
+    val g = graft.plans.Kernels.token_stats(
       split(lower(col("text")), "[^a-z0-9_']+"),
       array(stops.map(lit): _*))
     t(spark, dir, "documents")

@@ -76,14 +76,21 @@ class CrawlEngineSpec extends AnyFunSuite {
   test("broadcast-exact seen joins ≡ shuffled anti-join path (gate parity)") {
     // default config broadcasts the seen keys (counts are tiny here);
     // force the 10^10 regime's shuffled path and require the identical
-    // crawl — the broadcastSeenKeys gate must never change results
-    val runner2 = new WaveRunner(spark,
-      spark.read.parquet(corpusPath),
-      Files.createTempDirectory("graft-state-noseenbc-").toString,
-      config.copy(broadcastSeenKeys = 0L), policies, robots)
-    runner2.initSeeds(seeds)
-    runner2.run()
-    assert(orderRows(runner2) === baselineOrder)
+    // crawl — the broadcastSeenKeys gate must never change results,
+    // with the broadcast fetch join and with the bucketed one
+    def crawl(cfg: CrawlConfig, label: String): Seq[(Int, Long, Long, String)] = {
+      val r = new WaveRunner(spark, spark.read.parquet(corpusPath),
+        Files.createTempDirectory(s"graft-state-$label-").toString,
+        cfg, policies, robots)
+      r.initSeeds(seeds)
+      r.run()
+      orderRows(r)
+    }
+    assert(crawl(config.copy(broadcastSeenKeys = 0L), "noseenbc") === baselineOrder)
+    val bucketed = config.copy(fetchBuckets = 4, broadcastPopRows = 0L)
+    assert(crawl(bucketed, "bucket-gate") === baselineOrder)
+    assert(crawl(bucketed.copy(broadcastSeenKeys = 0L), "bucket-noseenbc") ===
+      baselineOrder)
   }
 
   test("URL-seen set and page text are identical across runs") {

@@ -129,7 +129,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val both = docs.unionByName(adversarial)
     val kernel = both.select(col("doc_id").as("doc_id_"),
-        graft.plans.MinhashSig.minhash_sig(
+        graft.plans.Kernels.minhash_sig(
           split(lower(col("text")), "\\W+"), lit(3), lit(24)).as("sig"))
       .filter(col("sig").isNotNull)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
@@ -157,7 +157,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val both = docs.unionByName(adversarial)
     for ((k, pat, fb) <- Seq((8, "[^a-z0-9_]+", false), (3, "\\W+", true))) {
       val kernel = both.select(col("doc_id").as("doc_id_"),
-          explode(graft.plans.GramKeys.gram_keys(
+          explode(graft.plans.Kernels.gram_keys(
             split(lower(col("text")), pat), lit(k), lit(fb))).as("gk"))
         .collect().map(r => (r.getLong(0), r.getString(1))).toSet
       val relational = Dedup.gramKeysRelational(both, "doc_id", "text", k, pat, fb)
@@ -165,7 +165,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       assert(kernel === relational, s"k=$k pattern=$pat fallback=$fb")
       // per-row arrays must also be duplicate-free (the distinct claim)
       val sizes = both.select(col("doc_id"),
-          graft.plans.GramKeys.gram_keys(
+          graft.plans.Kernels.gram_keys(
             split(lower(col("text")), pat), lit(k), lit(fb)).as("gs"))
         .filter(col("gs").isNotNull)
         .select(col("doc_id"), size(col("gs")).as("n"),
@@ -182,7 +182,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val both = docs.unionByName(adversarial)
     val kernel = both.select(col("doc_id").as("doc_id_"),
-        graft.plans.PortableSimhash.portable_simhash(
+        graft.plans.Kernels.portable_simhash(
           split(lower(col("text")), "\\W+"), lit(32)).as("sketch"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val relational = Dedup.portableSketchesRelational(both, "doc_id", "text", 32)

@@ -493,7 +493,7 @@ class StateAndOperatorsSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val buckets = 64 // small table forces collisions; multisets must still agree
     val kernel = docs.select(col("doc_id"),
-        explode(graft.plans.FeatureHashes.feature_hashes(
+        explode(graft.plans.Kernels.feature_hashes(
           split(lower(col("text")), "[^a-z0-9_']+"), lit(buckets))).as("f"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
       .groupBy(identity).view.mapValues(_.size).toMap

@@ -272,7 +272,7 @@ class TextAnalysisSpec extends AnyFunSuite {
       "unicode tÄst the", "  ", "'' the '", "in in in")
     val df = texts.toDF("text")
     val raw = split(lower($"text"), "[^a-z0-9_']+")
-    val g = graft.plans.TokenStats.token_stats(raw, array(stops.map(lit): _*))
+    val g = graft.plans.Kernels.token_stats(raw, array(stops.map(lit): _*))
     val w = filter(raw, x => length(x) > 0)
     val rows = df.select(
       g.getField("n_tokens").as("kn"), g.getField("n_hits").as("kh"),
@@ -312,7 +312,7 @@ class TextAnalysisSpec extends AnyFunSuite {
       (4L, "solo"), (5L, "x!!!y punct り splits"))
       .toDF("doc_id", "text")
     val kernel = texts.select(
-        explode(graft.plans.AdjacentPairs.adjacent_pairs(
+        explode(graft.plans.Kernels.adjacent_pairs(
           split(lower($"text"), "[^a-z0-9_]+"))).as("p"))
       .select($"p.prev", $"p.w").collect()
       .map(r => (Option(r.getString(0)), r.getString(1)))
