@@ -136,8 +136,10 @@ object Model {
       bloomMinFrontier: Long = 20000000L,
       /** minimum capacity when the sketch is first built */
       bloomCapacity: Long = 10000000L,
-      // a host whose pending mass exceeds this is salted over
-      // ceil(mass/saltTarget) partitions (SURVEY.md §4 skew note)
+      /** no longer read: the per-host pop's skew control is a map-side
+        * partial top-k ([[graft.operators.Politeness.popPerHost]]), not
+        * salt slots. Kept because `graft.Bench` and the benchmark harness
+        * still set it. */
       saltTarget: Long = 100000L,
       userAgent: String = "graft",
       simulateCrawlDelay: Boolean = false,

@@ -19,7 +19,7 @@ import graft.core.Model.PageInput
   * %-escaped, uppercase-host, javascript: and duplicate variants — all
   * canonicalizing back to in-corpus urls) so the crawl exercises
   * normalization + dedup end to end. Host mass is power-law-skewed so
-  * politeness salting has real skew to kill.
+  * the per-host pop has real skew to handle.
   */
 object SyntheticCorpus {
 

@@ -5,13 +5,13 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{BoilerplateExtractor, Hashing, HtmlDom, LinkExtractor, UrlNormalizer}
 import graft.core.Model._
 import graft.operators.{Politeness, SeenSet}
-import graft.state.SnapshotTable
+import graft.state.{ParquetDir, SnapshotTable}
 
 /** The crawl engine: an iterative-batch frontier loop over snapshot
   * tables (the Spark-native re-expression of the reference's
@@ -47,9 +47,10 @@ import graft.state.SnapshotTable
   * Per wave:
   *  1. plan: pending = fresh ∪ retry-eligible deferred ∪ recrawl-due
   *     (frequency gate, taskmanager.py:338-361) → robots dimension join
-  *     → per-host budgeted pop (two-stage salted window — exact
-  *     per-host top-k, skew-safe); the popped set is STAGED to parquet
-  *     so the ranking windows run once, not once per consumer;
+  *     → per-host budgeted pop (one window over host, one exchange —
+  *     exact per-host top-k, with a map-side partial top-k as the skew
+  *     control); the popped set is STAGED to parquet so the ranking
+  *     window runs once, not once per consumer;
   *  2. fetch+extract: popped ⋈ pages input on urlHash via the
   *     size-gated [[FetchSource]] (broadcast below threshold, bucketed
   *     co-partitioned join above — html is never force-broadcast);
@@ -59,6 +60,9 @@ import graft.state.SnapshotTable
   *     → advance both sketches → append metrics (all counts piggyback
   *     on the staging writes via Observations — no extra count jobs).
   *     A kill at any point resumes without re-extracting anything.
+  *
+  * Every staged artifact and state segment is a [[ParquetDir]]: it
+  * carries its schema, so reading it back launches no job.
   *
   * Determinism: every dataset in the loop is a pure function of
   * (input table, seeds, config); ordering contracts are total
@@ -527,47 +531,39 @@ final class WaveRunner(
     // pending branches are key-disjoint subsets of the discovery log).
     // When that bound fits inside the uniform per-host budget and no
     // per-host policy or delay clock can lower it, every host's budget
-    // provably doesn't bind — the pop IS the allowed set, and both
-    // ranking windows plus the salt-mass aggregate are skipped (an
-    // optimizer short-circuit, not an approximation: the selection is
+    // provably doesn't bind — the pop IS the allowed set, and the
+    // ranking window and its exchange are skipped (an optimizer
+    // short-circuit, not an approximation: the selection is
     // identical, and downstream order is fixed by the total-order
     // contract, never by staged row order).
     val unbudgeted = hostPolicies.isEmpty && config.waveDurationMs <= 0L &&
       bloom.count(w - 1).exists(_ <= config.defaultMaxPerWave)
 
-    def rankedPop: DataFrame = {
-      // salt-slot counts: only hosts above saltTarget need slots > 1;
-      // that set is small by construction, so it broadcasts.
-      val heavyHosts = allowed.groupBy("host")
-        .agg(count(lit(1)).as("pending_mass"))
-        .filter(col("pending_mass") > config.saltTarget)
-        .withColumn("saltSlots",
-          Politeness.saltSlotsCol(col("pending_mass"), config.saltTarget))
-        .select("host", "saltSlots")
+    // the largest budget any host can get (a delay cap only lowers
+    // it): the literal bound that lets the pop's top-k run map-side
+    val maxBudget =
+      (config.defaultMaxPerWave +: hostPolicies.values.map(_.maxPerWave).toSeq).max
 
-      val withBudget = allowed
-        .join(broadcast(heavyHosts), Seq("host"), "left")
-        .withColumn("saltSlots", coalesce(col("saltSlots"), lit(1)))
-        .withColumn("maxPerWave",
-          Politeness.delayCappedBudget(
-            budgetFor(col("host")),
-            greatest(col("robotsDelayMs"), policyDelayFor(col("host"))),
-            config.waveDurationMs))
-      Politeness.popPerHost(withBudget)
-    }
+    def rankedPop: DataFrame = Politeness.popPerHost(
+      allowed.withColumn("maxPerWave",
+        Politeness.delayCappedBudget(
+          budgetFor(col("host")),
+          greatest(col("robotsDelayMs"), policyDelayFor(col("host"))),
+          config.waveDurationMs)),
+      maxBudget)
 
-    // ---- pop, STAGED: the two-stage ranking windows run exactly once;
-    // every consumer (defer split, fetch join, miss anti-join, metrics)
+    // ---- pop, STAGED: the ranking window runs exactly once; every
+    // consumer (defer split, fetch join, miss anti-join, metrics)
     // reads the staged parquet instead of recomputing the plan ----
     val popObs = Observation(s"graft-pop-$w")
-    timed(s"w$w pop+stage")(
+    timed(s"w$w pop+stage")(ParquetDir.write(
       (if (unbudgeted) allowed else rankedPop)
         .select(pendingCols.map(col): _*)
         .observe(popObs,
           count(lit(1)).as("n"),
           count(when(col("origin") === "retry", 1)).as("retries"),
-          count(when(col("origin") === "recrawl", 1)).as("recrawls"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$staging/popped"))
+          count(when(col("origin") === "recrawl", 1)).as("recrawls")),
+        s"$staging/popped"))
     val poppedN = popObs.get("n").asInstanceOf[Long]
     val retryN = popObs.get("retries").asInstanceOf[Long]
     val recrawlN = popObs.get("recrawls").asInstanceOf[Long]
@@ -577,7 +573,7 @@ final class WaveRunner(
       return if (hasFutureWork) StageResult.Idle else StageResult.Drained
     }
 
-    val popped = spark.read.parquet(s"$staging/popped").drop("origin")
+    val popped = ParquetDir.read(spark, s"$staging/popped").drop("origin")
     val (toFetch, deferred) = deferInjector match {
       case None => (popped, None)
       case Some(pred) =>
@@ -641,13 +637,13 @@ final class WaveRunner(
     // budget-bounded keys-only anti-join instead of a SECOND scan of
     // the pages table per wave
     val procObs = Observation(s"graft-proc-$w")
-    timed(s"w$w fetch+extract+stage")(
+    timed(s"w$w fetch+extract+stage")(ParquetDir.write(
       extracted.withColumn("wave", lit(w))
         .withColumn("nOutlinks", size(col("links")))
         .observe(procObs,
           count(lit(1)).as("fetched"),
-          coalesce(sum("htmlBytes"), lit(0L)).as("bytes"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$staging/processed"))
+          coalesce(sum("htmlBytes"), lit(0L)).as("bytes")),
+      s"$staging/processed"))
     val fetchedN = procObs.get("fetched").asInstanceOf[Long]
     val bytes = procObs.get("bytes").asInstanceOf[Long]
 
@@ -668,7 +664,7 @@ final class WaveRunner(
         val failedRows =
           if (fetchedN == 0L) emptyPage(toFetch, FrontierState.Failed)
           else emptyPage(
-            toFetch.join(spark.read.parquet(s"$staging/processed").select("urlHash"),
+            toFetch.join(ParquetDir.read(spark, s"$staging/processed").select("urlHash"),
               Seq("urlHash"), "left_anti"), FrontierState.Failed)
         val tail = (failedRows +:
           deferred.map(d => emptyPage(d, FrontierState.Deferred)).toSeq)
@@ -676,11 +672,12 @@ final class WaveRunner(
         val tailObs = Observation(s"graft-tail-$w")
         val task = new java.util.concurrent.Callable[(Long, Long)] {
           override def call(): (Long, Long) = {
-            tail.withColumn("wave", lit(w))
-              .withColumn("nOutlinks", size(col("links")))
-              .observe(tailObs, count(lit(1)).as("n"),
-                count(when(col("state") === FrontierState.Deferred, 1)).as("deferred"))
-              .write.mode(SaveMode.Overwrite).parquet(tailDir)
+            ParquetDir.write(
+              tail.withColumn("wave", lit(w))
+                .withColumn("nOutlinks", size(col("links")))
+                .observe(tailObs, count(lit(1)).as("n"),
+                  count(when(col("state") === FrontierState.Deferred, 1)).as("deferred")),
+              tailDir)
             (tailObs.get("n").asInstanceOf[Long],
               tailObs.get("deferred").asInstanceOf[Long])
           }
@@ -691,7 +688,7 @@ final class WaveRunner(
 
     // ---- frontier expansion (E2) from the staged artifact (resume
     // never re-extracts): explode links, dedup, anti-join ----
-    val sp = spark.read.parquet(s"$staging/processed")
+    val sp = ParquetDir.read(spark, s"$staging/processed")
     val frontierKeys = frontierT.read().get.select("urlHash")
     val seenCount = bloom.count(w - 1)
     val preBroadcast = seenCount.exists(_ <= config.broadcastSeenKeys)
@@ -750,8 +747,8 @@ final class WaveRunner(
 
     val newObs = Observation(s"graft-new-$w")
     timed(s"w$w expand+stage-new")(
-      newEntries.observe(newObs, count(lit(1)).as("n"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$staging/new_frontier"))
+      ParquetDir.write(newEntries.observe(newObs, count(lit(1)).as("n")),
+        s"$staging/new_frontier"))
     val newUrls = newObs.get("n").asInstanceOf[Long]
 
     // join the overlapped tail job and fold its part-files into the

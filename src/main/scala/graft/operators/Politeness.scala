@@ -6,15 +6,14 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Model.RobotsRule
 
-/** Per-host politeness: robots.txt gating + per-wave crawl budgets,
-  * enforced with explicit skew control.
+/** Per-host politeness: robots.txt gating + per-wave crawl budgets.
   *
   * The reference's politeness is per-source rate limiting with no
   * robots support (SURVEY.md §2.8); the north rule adds robots.txt
   * and per-host budgets. Both are implemented as declarative plan
   * pieces: robots rules are a small dimension broadcast into a filter;
-  * budget selection is a two-stage per-host top-k that stays skew-safe
-  * at 10^10 frontier rows.
+  * budget selection is a one-exchange per-host top-k whose map-side
+  * partial limit keeps it skew-safe at 10^10 frontier rows.
   */
 object Politeness {
 
@@ -161,53 +160,30 @@ object Politeness {
         greatest((lit(waveDurationMs) / delayMs).cast("int"), lit(1))))
       .otherwise(maxPerWave)
 
-  /** Per-host top-k pop with explicit skew control (SURVEY.md §4).
+  /** Per-host top-k pop: each host keeps its `maxPerWave` lowest
+    * (score, urlHash) rows — one window over host, ranked by the
+    * crawl's total order, so the selection is exact and deterministic.
     *
-    * Two stages:
-    *  1. salt: rank within (host, saltSlot) and keep `budget` rows per
-    *     slot — a mega-host's frontier spreads over its slots, so no
-    *     single window partition exceeds ~saltTarget rows;
-    *  2. exact: re-rank the survivors within host (at most
-    *     slots×budget rows per host — tiny) and keep the global
-    *     per-host top-`budget`.
+    * Skew control is map-side. `maxBudget` is a literal upper bound on
+    * every row's `maxPerWave` (the largest configured budget; a
+    * delay-capped budget never exceeds it), and the `rank <= maxBudget`
+    * conjunct lets Spark's InsertWindowGroupLimit plan a partial
+    * per-host top-`maxBudget` (WindowGroupLimit … Partial) BELOW the
+    * only exchange, `hashpartitioning(host)`: each map task forwards at
+    * most `maxBudget` rows per host, so a mega-host's pending mass
+    * never lands on one reducer. Spark plans that limit only while
+    * `maxBudget` ≤ `spark.sql.optimizer.windowGroupLimitThreshold`
+    * (1000 by default); above it the pop stays exact, but one reduce
+    * task ranks all of a host's pending rows.
     *
-    * The result is EXACTLY the unsalted per-host top-k (same selection,
-    * same order contract (score asc, urlHash asc)), but the heavy
-    * window never sees a skewed partition. `saltSlots` is a
-    * deterministic per-host slot count column.
-    *
-    * Frontier columns required: host, score, urlHash, maxPerWave,
-    * saltSlots.
+    * Frontier columns required: host, score, urlHash, maxPerWave.
     */
-  def popPerHost(frontier: DataFrame): DataFrame = {
-    val slotted = frontier.withColumn(
-      "salt_slot",
-      pmod(col("urlHash"), greatest(col("saltSlots"), lit(1))).cast("int"))
-    val wSlot = Window.partitionBy(col("host"), col("salt_slot"))
+  def popPerHost(frontier: DataFrame, maxBudget: Int): DataFrame = {
+    val byHost = Window.partitionBy(col("host"))
       .orderBy(col("score").asc, col("urlHash").asc)
-    val stage1 = slotted
-      .withColumn("rn1", row_number().over(wSlot))
-      .filter(col("rn1") <= col("maxPerWave"))
-      .drop("rn1")
-    val wHost = Window.partitionBy(col("host"))
-      .orderBy(col("score").asc, col("urlHash").asc)
-    // hosts with one slot are already exactly their per-host top-k
-    // after stage 1 — only the (few, by construction) salted hosts
-    // need the second ranking pass, so the second window never scans
-    // the full pending set
-    val light = stage1.filter(col("saltSlots") <= 1).drop("salt_slot")
-    val heavy = stage1.filter(col("saltSlots") > 1)
-      .withColumn("rn2", row_number().over(wHost))
-      .filter(col("rn2") <= col("maxPerWave"))
-      .drop("rn2", "salt_slot")
-    light.unionByName(heavy)
+    frontier
+      .withColumn("rn", row_number().over(byHost))
+      .filter(col("rn") <= maxBudget && col("rn") <= col("maxPerWave"))
+      .drop("rn")
   }
-
-  /** Deterministic per-host salt-slot count: ceil(pendingMass /
-    * saltTarget), at least 1. Computed from an aggregation over the
-    * pending frontier — exact, parallelism-independent.
-    */
-  def saltSlotsCol(pendingMass: Column, saltTarget: Long): Column =
-    greatest(ceil(pendingMass.cast("double") / lit(saltTarget.toDouble)), lit(1))
-      .cast("int")
 }

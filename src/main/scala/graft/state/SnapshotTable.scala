@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Iceberg-style snapshot table over Parquet (SURVEY.md §7 constraint:
   * no Iceberg runtime jar ships offline, so the frontier / seen /
@@ -14,8 +14,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *
   * Layout:
   * {{{
-  *   <root>/<name>/snapshots/v00001/  (immutable parquet)
-  *   <root>/<name>/manifest.json      (current pointer + lineage)
+  *   <root>/<name>/snapshots/v00001/               (immutable parquet)
+  *   <root>/<name>/snapshots/v00001/_schema.json  (its schema, [[ParquetDir]])
+  *   <root>/<name>/manifest.json                   (current pointer + lineage)
   * }}}
   *
   * Commit protocol: write the new snapshot directory fully, then
@@ -61,18 +62,15 @@ final class SnapshotTable(spark: SparkSession, root: String, val name: String) {
 
   /** Read the current snapshot; None when the table has never been
     * committed. The read is a plain parquet scan — predicate pushdown,
-    * column pruning and partition pruning all apply.
+    * column pruning and partition pruning all apply — and launches no
+    * job (the schema comes from the segments' sidecars).
     */
-  def read(): Option[DataFrame] =
-    currentManifest().map { m =>
-      spark.read.parquet(m.segments.map(v => versionDir(v).toString): _*)
-    }
+  def read(): Option[DataFrame] = currentManifest().map(m => readSegments(m.segments))
 
   /** Read a specific historical version's own rows (time travel for a
     * replace-table; a single delta for an append-table).
     */
-  def readVersion(version: Int): DataFrame =
-    spark.read.parquet(versionDir(version).toString)
+  def readVersion(version: Int): DataFrame = readSegments(Seq(version))
 
   /** Write `df` as the next snapshot and atomically flip the pointer,
     * REPLACING table contents. `wave` is the crawl wave this commit
@@ -125,15 +123,13 @@ final class SnapshotTable(spark: SparkSession, root: String, val name: String) {
     * committedWave == wave (the commit protocol's own use).
     */
   def readWaveSegment(wave: Int): Option[DataFrame] =
-    currentManifest().filter(_.wave == wave).map { m =>
-      spark.read.parquet(versionDir(m.segments.last).toString)
-    }
+    currentManifest().filter(_.wave == wave).map(m => readSegments(Seq(m.segments.last)))
 
   private def commitInternal(df: DataFrame, wave: Int, append: Boolean): Int = {
     val prev = currentManifest()
     val next = prev.map(_.version).getOrElse(0) + 1
     val dir = versionDir(next)
-    df.write.mode(SaveMode.Overwrite).parquet(dir.toString)
+    ParquetDir.write(df, dir.toString)
     val segments =
       if (append) prev.map(_.segments).getOrElse(Nil) :+ next
       else Seq(next)
@@ -151,10 +147,9 @@ final class SnapshotTable(spark: SparkSession, root: String, val name: String) {
     */
   def compact(merge: DataFrame => DataFrame = identity): Option[Int] =
     currentManifest().filter(_.segments.size > 1).map { m =>
-      val merged = merge(
-        spark.read.parquet(m.segments.map(v => versionDir(v).toString): _*))
+      val merged = merge(readSegments(m.segments))
       val next = m.version + 1
-      merged.write.mode(SaveMode.Overwrite).parquet(versionDir(next).toString)
+      ParquetDir.write(merged, versionDir(next).toString)
       writeManifest(Manifest(next, m.wave, Seq(next), listLineage(versionDir(next))))
       next
     }
@@ -188,10 +183,9 @@ final class SnapshotTable(spark: SparkSession, root: String, val name: String) {
       if (k < 2) None
       else {
         val toMerge = bySize.take(k).toSet
-        val merged = merge(spark.read.parquet(
-          m.segments.filter(toMerge).map(v => versionDir(v).toString): _*))
+        val merged = merge(readSegments(m.segments.filter(toMerge)))
         val next = m.version + 1
-        merged.write.mode(SaveMode.Overwrite).parquet(versionDir(next).toString)
+        ParquetDir.write(merged, versionDir(next).toString)
         // merged segment FIRST, survivors in original order: `.last`
         // stays the newest delta for readWaveSegment
         val segments = next +: m.segments.filterNot(toMerge)
@@ -202,8 +196,7 @@ final class SnapshotTable(spark: SparkSession, root: String, val name: String) {
     }
 
   private def segmentBytes(v: Int): Long =
-    Files.walk(versionDir(v)).iterator().asScala
-      .filter(Files.isRegularFile(_)).map(Files.size).sum
+    listing(Files.walk(versionDir(v)))(_.filter(Files.isRegularFile(_)).map(Files.size).sum)
 
   /** Point the manifest back at an older version (rollback; replace
     * tables only).
@@ -217,16 +210,25 @@ final class SnapshotTable(spark: SparkSession, root: String, val name: String) {
   /** Drop all snapshot dirs not referenced by the current manifest. */
   def vacuum(): Unit = {
     val live = currentManifest().map(_.segments.toSet).getOrElse(return)
-    if (Files.exists(snapshotsDir)) {
-      Files.list(snapshotsDir).iterator().asScala
+    if (Files.exists(snapshotsDir))
+      listing(Files.list(snapshotsDir))(_.toList)
         .filter(p => versionOf(p).exists(v => !live.contains(v)))
         .foreach(deleteRecursively)
-    }
   }
 
   // ---- internals ----
 
   private def versionDir(v: Int): Path = snapshotsDir.resolve(f"v$v%05d")
+
+  private def readSegments(versions: Seq[Int]): DataFrame =
+    ParquetDir.read(spark, versions.map(v => versionDir(v).toString): _*)
+
+  /** Consume a directory stream and close it: an unclosed
+    * `Files.list`/`Files.walk` stream holds its descriptors until the
+    * JVM exits.
+    */
+  private def listing[T](s: java.util.stream.Stream[Path])(f: Iterator[Path] => T): T =
+    try f(s.iterator().asScala) finally s.close()
 
   private def versionOf(p: Path): Option[Int] = {
     val n = p.getFileName.toString
@@ -234,10 +236,10 @@ final class SnapshotTable(spark: SparkSession, root: String, val name: String) {
   }
 
   private def listLineage(dir: Path): Seq[FileLineage] =
-    Files.walk(dir).iterator().asScala
+    listing(Files.walk(dir))(_
       .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
       .map(p => FileLineage(dir.relativize(p).toString, Files.size(p)))
-      .toSeq.sortBy(_.file)
+      .toList.sortBy(_.file))
 
   private def writeManifest(m: Manifest): Unit = {
     Files.createDirectories(tableDir)
@@ -294,8 +296,7 @@ final class SnapshotTable(spark: SparkSession, root: String, val name: String) {
   }
 
   private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p))
-      Files.list(p).iterator().asScala.foreach(deleteRecursively)
+    if (Files.isDirectory(p)) listing(Files.list(p))(_.toList).foreach(deleteRecursively)
     Files.deleteIfExists(p)
   }
 }

@@ -18,7 +18,7 @@ object ScaleProbe {
   def cfgFor(numUrls: Long, corpusBase: String): CrawlConfig = {
     val base = CrawlConfig(maxDepth = 3,
       defaultMaxPerWave = (numUrls * 4).toInt, // never binds: work-dominated probe
-      maxWaves = 2, saltTarget = 20000L, assumeUniqueUrls = true,
+      maxWaves = 2, assumeUniqueUrls = true,
       broadcastPopRows = numUrls * 2,
       // GRAFT_STRICT_EXTRACT=1 probes the two-parse extractor — the
       // fused-vs-strict pair is the falsifiable test of the

@@ -120,4 +120,32 @@ class ScaleInvariantsSpec extends AnyFunSuite {
     assert(gateOrder === rankedOrder)
     assert(gatePages === rankedPages)
   }
+  test("steady-state wave launches a bounded number of Spark jobs") {
+    // the benchmark's crawl_deep shape, small: a binding per-host
+    // budget, robots, the sketch-prefiltered shuffled anti-joins and a
+    // tiered compaction cycle every wave. A new per-wave job (a
+    // schema-inference scan, an extra aggregate) fails here before a
+    // bench run sees it.
+    val spec = SyntheticCorpus.Spec(numUrls = 2000, numHosts = 20, withRobots = true)
+    val corpus = SyntheticCorpus.generate(spark, spec, partitions = 4).toDF()
+    val cfg = CrawlConfig(maxDepth = 64, defaultMaxPerWave = 5, maxWaves = 3,
+      assumeUniqueUrls = true, compactEveryWaves = 1, compactMaxSegments = 2,
+      bloomMinFrontier = 0L, bloomCapacity = 100000L, broadcastSeenKeys = 0L)
+    val robots = graft.operators.RobotsLoader.robotsDim(spark, corpus, cfg.userAgent)
+      .localCheckpoint()
+    val runner = new WaveRunner(spark, corpus,
+      Files.createTempDirectory("graft-wavejobs-").toString, cfg, robotsDim = Some(robots))
+    runner.initSeeds((0L until 2000L by 10).map(i => SyntheticCorpus.urlFor(i, spec) -> 1))
+    assert(runner.runWave(1))
+    val (more, jobs) = JobCount(spark)(runner.runWave(2))
+    assert(more)
+    val m = runner.metrics().filter(org.apache.spark.sql.functions.col("wave") === 2)
+      .collect().head
+    assert(m.getAs[Long]("scheduled") > 0 && m.getAs[Long]("newUrls") > 0,
+      s"probe setup broken: $m")
+    assert(jobs <= WaveJobBudget, s"runWave(2) launched $jobs Spark jobs (budget $WaveJobBudget)")
+  }
+
+  /** Jobs of one steady-state wave in the test above, as measured. */
+  private val WaveJobBudget = 21
 }

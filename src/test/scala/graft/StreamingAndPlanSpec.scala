@@ -166,6 +166,54 @@ class StreamingAndPlanSpec extends AnyFunSuite {
     assert(kept.count(_.startsWith("http://h1.test/")) === 20)
   }
 
+  /** The ranked pop over a parquet scan: exactly one exchange,
+    * hashpartitioning(host), with a partial per-host top-k below it,
+    * and no aggregate or broadcast of host mass (the old salted pop's
+    * heavy-host groupBy + broadcast join).
+    */
+  private def popAudit(budget: org.apache.spark.sql.Column): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
+    import graft.operators.Politeness
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-popaudit-").resolve("pending").toString
+    ((0 until 400).map(i => (s"h${i % 4}.test", (i * 7 % 50).toLong, i.toLong)) ++
+      (0 until 40).map(i => (s"big.test", i.toLong, 1000L + i)))
+      .toDF("host", "score", "urlHash").repartition(4)
+      .write.parquet(dir)
+    val popped = Politeness.popPerHost(
+      spark.read.parquet(dir).withColumn("maxPerWave", budget), maxBudget = 5)
+    val nodes = planNodes(popped.queryExecution.executedPlan)
+    val shuffles = nodes.collect { case e: ShuffleExchangeLike => e }
+    assert(shuffles.size === 1, s"one exchange expected:\n${popped.queryExecution.executedPlan}")
+    shuffles.head.outputPartitioning match {
+      case HashPartitioning(Seq(a: AttributeReference), _) => assert(a.name === "host")
+      case other => fail(s"pop exchange partitions by $other, not host")
+    }
+    val partial = planNodes(shuffles.head.child).collect {
+      case l: WindowGroupLimitExec if l.mode == Partial => l
+    }
+    assert(partial.size === 1, s"no partial top-k below the exchange:\n${shuffles.head}")
+    assert(!nodes.exists(_.isInstanceOf[BaseAggregateExec]), "pop aggregates host mass")
+    assert(!nodes.exists(_.isInstanceOf[BroadcastExchangeLike]), "pop broadcasts")
+    // the plan still selects the exact per-host top-budget
+    assert(popped.groupBy("host").count().collect().map(_.getLong(1)).max <= 5)
+  }
+
+  test("ranked pop plan: one host exchange over a partial top-k (literal budget)") {
+    popAudit(lit(5))
+  }
+
+  test("ranked pop plan: one host exchange over a partial top-k (policy budgets)") {
+    // per-host budgets from host policies: a small map expression with
+    // the default as fallback, every value at or below the bound
+    popAudit(coalesce(element_at(typedLit(Map("big.test" -> 2, "h1.test" -> 4)),
+      col("host")), lit(5)))
+  }
+
   test("streaming window aggregation works via readStream") {
     import org.apache.spark.sql.streaming.Trigger
     // FileStreamSource wants a directory; the test table is one file
