@@ -1,6 +1,7 @@
 package graft.crawl
 
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.DataFrame
@@ -15,8 +16,11 @@ import graft.operators.SeenSet
   * Chain protocol: the sketch for wave w = sketch(w-1) ∪ delta(w)
   * (the wave's new frontier entries), persisted as
   * `<state>/bloom/wave_w.bloom` with a sidecar `.meta` carrying the
-  * running key count. O(delta) per wave instead of a full frontier
-  * pass. The sketch is ADVISORY ONLY — a missing/stale file degrades
+  * running key count (both written tmp + atomic rename). O(delta) per
+  * wave instead of a full frontier pass. A gap in the chain (a missing
+  * `wave_{w-1}.meta`) re-seeds the count from the full log's row count
+  * — one job, only after a gap — so the count stays an upper bound.
+  * The sketch is ADVISORY ONLY — a missing/stale file degrades
   * to the exact anti-join, never to wrong results (false negatives
   * are impossible because every key that entered the frontier went
   * through `advance`; a broken chain yields None, not a stale filter).
@@ -43,7 +47,7 @@ final class FrontierBloom(
 
   private def readCount(w: Int): Option[Long] =
     if (Files.exists(metaPath(w)))
-      new String(Files.readAllBytes(metaPath(w))).trim.toLongOption
+      new String(Files.readAllBytes(metaPath(w)), UTF_8).trim.toLongOption
     else None
 
   /** Running key count as of completed wave `w` (the sidecar meta is
@@ -77,7 +81,12 @@ final class FrontierBloom(
   def advance(w: Int, delta: DataFrame, knownCount: Option[Long] = None): Unit = {
     Files.createDirectories(dir)
     if (Files.exists(metaPath(w))) return // already advanced (resume)
-    val prevCount = readCount(w - 1).getOrElse(0L)
+    // after a gap in the chain, re-seed from the full log's row count:
+    // an upper bound (the log already holds this wave's delta, and a
+    // key may repeat), never 0 — an undercount would let the budget
+    // short-circuit skip the per-host ranking for the rest of the crawl
+    val prevCount = readCount(w - 1).getOrElse(
+      if (w >= 1) fullFrontier().map(_.count()).getOrElse(0L) else 0L)
     val deltaCount = knownCount.getOrElse(delta.count())
     val total = prevCount + deltaCount
 
@@ -104,7 +113,10 @@ final class FrontierBloom(
       Files.move(tmp, bloomPath(w), StandardCopyOption.ATOMIC_MOVE,
         StandardCopyOption.REPLACE_EXISTING)
     }
-    Files.write(metaPath(w), total.toString.getBytes)
+    val metaTmp = dir.resolve(s"wave_$w.meta.tmp")
+    Files.write(metaTmp, total.toString.getBytes(UTF_8))
+    Files.move(metaTmp, metaPath(w), StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
     cachedWave = w
     cachedBloom = next
   }

@@ -12,6 +12,7 @@ import graft.core.{BoilerplateExtractor, Hashing, HtmlDom, LinkExtractor, UrlNor
 import graft.core.Model._
 import graft.operators.{Politeness, SeenSet}
 import graft.state.{ParquetDir, SnapshotTable}
+import WaveRunner.joinAll
 
 /** The crawl engine: an iterative-batch frontier loop over snapshot
   * tables (the Spark-native re-expression of the reference's
@@ -56,10 +57,23 @@ import graft.state.{ParquetDir, SnapshotTable}
   *     co-partitioned join above — html is never force-broadcast);
   *  3. expand: links → canonicalize → in-batch dedup → bloom-prefiltered
   *     anti-join against the discovery log (URL-seen, SURVEY.md §2.4);
-  *  4. commit: adopt processed + new_frontier segments (atomic renames)
-  *     → advance both sketches → append metrics (all counts piggyback
-  *     on the staging writes via Observations — no extra count jobs).
-  *     A kill at any point resumes without re-extracting anything.
+  *  4. commit: adopt processed + new_frontier segments (atomic renames),
+  *     then the commit TAIL as a small DAG of concurrent Spark jobs
+  *     ([[WaveRunner.joinAll]]): the two sketch advances run side by
+  *     side and the metrics row follows them (all counts piggyback on
+  *     the staging writes via Observations — no extra count jobs); on
+  *     a compaction wave the frontier compaction and the latest-try
+  *     rollup append (then the processed and rollup compactions, side
+  *     by side) overlap them, and the metrics compaction follows the
+  *     metrics row. The chains are independent: each table has its own
+  *     manifest that flips atomically, the sketches read the wave's
+  *     delta segments as listed before any compaction starts, and
+  *     merged-away segments stay on disk until the VACUUM, which runs
+  *     only after every chain has joined (a sketch's full rebuild scans
+  *     the whole log a compaction may just have replaced). A kill at
+  *     any point resumes without re-extracting anything: the resume
+  *     path catches the sketches and the metrics row up, and the
+  *     rollup append is guarded by its committed wave.
   *
   * Every staged artifact and state segment is a [[ParquetDir]]: it
   * carries its schema, so reading it back launches no job.
@@ -132,6 +146,12 @@ final class WaveRunner(
     * ratio alone cannot separate engine serialism from memory-bus
     * saturation). Note "stage" is the parent of the pop/fetch/expand
     * phases — consumers must not sum it with its children.
+    * "sketches" and "compact" are WALL intervals of the concurrent
+    * commit tail, never summed thread time: "sketches" runs from the
+    * tail's start until both sketches have advanced, "compact" from
+    * there to the tail's end (the metrics row, the compactions and the
+    * vacuum; recorded on compaction waves only), so the two still add
+    * up to the tail's wall time.
     */
   private[graft] val phaseSeconds =
     scala.collection.mutable.Map.empty[String, Double].withDefaultValue(0.0)
@@ -139,14 +159,19 @@ final class WaveRunner(
   private def timed[T](label: String)(f: => T): T = {
     val t0 = System.nanoTime()
     val r = f
-    val sec = (System.nanoTime() - t0) / 1e9
+    record(label, t0, System.nanoTime())
+    r
+  }
+
+  /** Add the wall interval [t0, t1] (nanoTime) to `label`'s phase. */
+  private def record(label: String, t0: Long, t1: Long): Unit = {
+    val sec = (t1 - t0) / 1e9
     val phase = label.indexOf(' ') match {
       case -1 => label
       case i  => label.substring(i + 1)
     }
     phaseSeconds.synchronized { phaseSeconds(phase) += sec }
     if (timing) println(f"[graft-timing] $label: $sec%.2fs")
-    r
   }
 
   // the Column APIs register kernels into the ACTIVE session only; a
@@ -214,6 +239,9 @@ final class WaveRunner(
       .sortBy(_.urlHash)
     frontierT.commit(entries.toDS().toDF(), wave = 0)
     bloom.advance(0, frontierT.read().get, Some(entries.size.toLong))
+    // nothing is processed at wave 0: both chains start here, so a
+    // missing wave_0 meta is a real gap, never the chain's start
+    popBloom.advance(0, spark.emptyDataFrame, Some(0L))
   }
 
   /** Run waves until the frontier drains or maxWaves is hit; returns
@@ -291,16 +319,29 @@ final class WaveRunner(
       timed(s"w$w adopt-frontier")(
         frontierT.adoptCommit(s"$staging/new_frontier", w))
 
+    // ---- commit tail: a small DAG of concurrent jobs ----
+    // the wave's delta segments are resolved (file listing, no job)
+    // before any compaction starts; merged-away files stay on disk
+    // until the vacuum, which runs only after every chain has joined
     val counts = readCounts(staging)
-    timed(s"w$w sketches") {
-      frontierT.readWaveSegment(w).foreach(seg =>
-        bloom.advance(w, seg.select("urlHash"), counts.map(_.newUrls)))
-      processedT.readWaveSegment(w).foreach(seg =>
-        popBloom.advance(w, seg.select("urlHash"), counts.map(_.scheduled)))
+    val newKeys = frontierT.readWaveSegment(w).map(_.select("urlHash"))
+    val poppedKeys = processedT.readWaveSegment(w).map(_.select("urlHash"))
+    val compacting = config.compactEveryWaves > 0 && w % config.compactEveryWaves == 0
+    val tail0 = System.nanoTime()
+    var sketched = tail0
+    val chains = Seq.newBuilder[() => Unit]
+    chains += { () =>
+      joinAll(
+        () => newKeys.foreach(bloom.advance(w, _, counts.map(_.newUrls))),
+        () => poppedKeys.foreach(popBloom.advance(w, _, counts.map(_.scheduled))))
+      sketched = System.nanoTime()
+      // after both sketches, so elapsedMs covers them
+      commitMetrics(w, staging.toString, (sketched - t0) / 1000000L)
+      if (compacting) compactTable(metricsT)
     }
-    commitMetrics(w, staging.toString, (System.nanoTime() - t0) / 1000000L)
-    if (config.compactEveryWaves > 0 && w % config.compactEveryWaves == 0)
-      timed(s"w$w compact") {
+    if (compacting) {
+      chains += (() => compactTable(frontierT))
+      chains += { () =>
         // materialize the latest-try rollup for the window since the
         // last materialization (ONE latest-per-key segment per cycle,
         // idempotent via the committed-wave marker), then bound its
@@ -314,27 +355,27 @@ final class WaveRunner(
             if (latestT.exists()) latestT.appendCommit(delta, w)
             else latestT.commit(delta, w)
           }
-        if (config.compactMaxSegments > 1) {
-          frontierT.compactTiered(config.compactMaxSegments)
-          processedT.compactTiered(config.compactMaxSegments)
-          metricsT.compactTiered(config.compactMaxSegments)
-          // rollup: merged segments collapse to ONE row per key
-          latestT.compactTiered(config.compactMaxSegments, latestTry)
-        } else {
-          frontierT.compact()
-          processedT.compact()
-          metricsT.compact()
-          latestT.compact(latestTry)
-        }
-        if (config.vacuumOnCompact) {
-          frontierT.vacuum()
-          processedT.vacuum()
-          metricsT.vacuum()
-          latestT.vacuum()
-        }
+        // rollup: merged segments collapse to ONE row per key
+        joinAll(() => compactTable(processedT), () => compactTable(latestT, latestTry))
       }
+    }
+    joinAll(chains.result(): _*)
+    // a sketch's full rebuild may have scanned segments a compaction
+    // just replaced: vacuum only once every chain has joined
+    if (compacting && config.vacuumOnCompact)
+      Seq(frontierT, processedT, metricsT, latestT).foreach(_.vacuum())
+    record(s"w$w sketches", tail0, sketched)
+    if (compacting) record(s"w$w compact", sketched, System.nanoTime())
     true
   }
+
+  /** Bound `t`'s live segment count: tiered merge, or a full merge
+    * when `compactMaxSegments` ≤ 1.
+    */
+  private def compactTable(t: SnapshotTable,
+                           merge: DataFrame => DataFrame = identity): Unit =
+    if (config.compactMaxSegments > 1) t.compactTiered(config.compactMaxSegments, merge)
+    else t.compact(merge)
 
   // ---- pending-state resolution (read-side; no frontier rewrite) ----
 
@@ -658,7 +699,8 @@ final class WaveRunner(
     // exact) — the tail writes its own directory and its files are
     // folded into the processed artifact after both jobs finish.
     val tailDir = s"$staging/processed_tail"
-    val tailFuture: Option[java.util.concurrent.Future[(Long, Long)]] =
+    val tailObs = Observation(s"graft-tail-$w")
+    val misses: Option[() => Unit] =
       if (deferred.isEmpty && fetchedN == poppedN) None
       else {
         val failedRows =
@@ -669,21 +711,12 @@ final class WaveRunner(
         val tail = (failedRows +:
           deferred.map(d => emptyPage(d, FrontierState.Deferred)).toSeq)
           .reduce(_.unionByName(_))
-        val tailObs = Observation(s"graft-tail-$w")
-        val task = new java.util.concurrent.Callable[(Long, Long)] {
-          override def call(): (Long, Long) = {
-            ParquetDir.write(
-              tail.withColumn("wave", lit(w))
-                .withColumn("nOutlinks", size(col("links")))
-                .observe(tailObs, count(lit(1)).as("n"),
-                  count(when(col("state") === FrontierState.Deferred, 1)).as("deferred")),
-              tailDir)
-            (tailObs.get("n").asInstanceOf[Long],
-              tailObs.get("deferred").asInstanceOf[Long])
-          }
-        }
-        val ex = java.util.concurrent.Executors.newSingleThreadExecutor()
-        try Some(ex.submit(task)) finally ex.shutdown()
+        Some(() => ParquetDir.write(
+          tail.withColumn("wave", lit(w))
+            .withColumn("nOutlinks", size(col("links")))
+            .observe(tailObs, count(lit(1)).as("n"),
+              count(when(col("state") === FrontierState.Deferred, 1)).as("deferred")),
+          tailDir))
       }
 
     // ---- frontier expansion (E2) from the staged artifact (resume
@@ -745,20 +778,26 @@ final class WaveRunner(
         lit(w).as("discoveredWave"),
         col("parentHash"))
 
+    // the misses job is joined even when the expansion throws: no job
+    // of this wave keeps writing into staging after runWave returns
     val newObs = Observation(s"graft-new-$w")
-    timed(s"w$w expand+stage-new")(
-      ParquetDir.write(newEntries.observe(newObs, count(lit(1)).as("n")),
-        s"$staging/new_frontier"))
+    var expanded = 0L
+    joinAll(Seq[() => Unit] { () =>
+      timed(s"w$w expand+stage-new")(
+        ParquetDir.write(newEntries.observe(newObs, count(lit(1)).as("n")),
+          s"$staging/new_frontier"))
+      expanded = System.nanoTime()
+    } ++ misses: _*)
     val newUrls = newObs.get("n").asInstanceOf[Long]
 
-    // join the overlapped tail job and fold its part-files into the
-    // processed artifact (same-filesystem renames; UUID part names
-    // cannot collide). Crash-safe: a kill here re-runs the whole stage
-    // (no _STAGED marker yet), and both writes are Overwrite.
-    val (scheduled, deferredN) = tailFuture match {
-      case None => (poppedN, 0L)
-      case Some(f) =>
-        val (tailN, defN) = timed(s"w$w stage-misses-join")(f.get())
+    // fold the overlapped tail job's part-files into the processed
+    // artifact (same-filesystem renames; UUID part names cannot
+    // collide). Crash-safe: a kill here re-runs the whole stage (no
+    // _STAGED marker yet), and both writes are Overwrite.
+    val (scheduled, deferredN) =
+      if (misses.isEmpty) (poppedN, 0L)
+      else {
+        record(s"w$w stage-misses-join", expanded, System.nanoTime())
         val dst = Paths.get(s"$staging/processed")
         val entries = {
           val s = Files.list(Paths.get(tailDir))
@@ -770,8 +809,9 @@ final class WaveRunner(
         entries.filterNot(_.getFileName.toString.endsWith(".parquet"))
           .foreach(p => Files.delete(p))
         Files.delete(Paths.get(tailDir))
-        (fetchedN + tailN, defN)
-    }
+        (fetchedN + tailObs.get("n").asInstanceOf[Long],
+          tailObs.get("deferred").asInstanceOf[Long])
+      }
 
     writeCounts(staging,
       StageCounts(scheduled, fetchedN, scheduled - fetchedN - deferredN,
@@ -885,4 +925,35 @@ final class WaveRunner(
 
   def metrics(): DataFrame =
     metricsT.read().getOrElse(spark.emptyDataset[WaveMetrics].toDF())
+}
+
+object WaveRunner {
+
+  /** Run `tasks` concurrently and return once ALL have finished: the
+    * first on the calling thread, every other one on a thread started
+    * here, from the calling thread, on every call — so each inherits
+    * Spark's inheritable local properties (job group, scheduler pool)
+    * and the active session, and its jobs are attributed and
+    * cancellable like the caller's. A failing task never cuts the
+    * others short: all are waited for, then the first failure is
+    * rethrown (later ones attached as suppressed), so no job a task
+    * launched outlives the call.
+    */
+  private[graft] def joinAll(tasks: (() => Unit)*): Unit = {
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    def run(task: () => Unit): Unit =
+      try task() catch { case e: Throwable => failures.add(e) }
+    val threads = tasks.drop(1).map { task =>
+      val t = new Thread(() => run(task), "graft-wave-task")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    tasks.headOption.foreach(run)
+    threads.foreach(_.join())
+    Option(failures.poll()).foreach { first =>
+      failures.forEach(e => if (e ne first) first.addSuppressed(e))
+      throw first
+    }
+  }
 }

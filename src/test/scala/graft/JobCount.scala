@@ -1,6 +1,9 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.Properties
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{ListenerBusDrain, SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
@@ -12,17 +15,26 @@ import org.apache.spark.sql.SparkSession
   */
 object JobCount {
   def apply[T](spark: SparkSession)(f: => T): (T, Int) = {
+    val (r, jobs) = properties(spark)(f)
+    (r, jobs.size)
+  }
+
+  /** The local properties (job group, scheduler pool, custom keys)
+    * each job the block launches was submitted with, one per job.
+    */
+  def properties[T](spark: SparkSession)(f: => T): (T, Seq[Properties]) = {
     val sc = spark.sparkContext
     ListenerBusDrain.drain(sc)
-    val jobs = new AtomicInteger
+    val jobs = new ConcurrentLinkedQueue[Properties]
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).getOrElse(new Properties))
     }
     sc.addSparkListener(listener)
     try {
       val r = f
       ListenerBusDrain.drain(sc)
-      (r, jobs.get)
+      (r, jobs.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
   }
 }

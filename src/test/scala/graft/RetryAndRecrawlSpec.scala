@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -295,6 +297,79 @@ class RetryAndRecrawlSpec extends AnyFunSuite {
     assert(segs <= 3, s"compaction must bound segments, got $segs")
     // a wave after compaction still appends deltas on top
     assert(compacted.frontierT.committedWave() === plain.frontierT.committedWave())
+  }
+
+  test("concurrent commit tail: identical crawl state, bounded live segments, no orphans") {
+    // every tail chain runs every wave: both sketches (bloomMinFrontier
+    // 0), the metrics row, the rollup append and all four compactions,
+    // then the vacuum; deferrals add the overlapped misses job and retries
+    val cfg = CrawlConfig(maxDepth = 2, defaultMaxPerWave = 15, maxWaves = 5,
+      bloomMinFrontier = 0L, broadcastSeenKeys = 0L, compactEveryWaves = 0)
+    val seeds = Seq(seedUrl -> 1, SyntheticCorpus.urlFor(3, spec) -> 2,
+      SyntheticCorpus.urlFor(7, spec) -> 3)
+    def runner(c: CrawlConfig, root: String) = {
+      val r = new WaveRunner(spark, corpus, root, c)
+      r.deferInjector = Some(pmod(col("urlHash"), lit(5L)) === 0L)
+      r.initSeeds(seeds)
+      r
+    }
+    val plain = runner(cfg, tmp("graft-tail-plain-"))
+    plain.run()
+
+    val root = tmp("graft-tail-compact-")
+    val compacted = runner(cfg.copy(compactEveryWaves = 1, compactMaxSegments = 2,
+      vacuumOnCompact = true), root)
+    val tables = Seq(compacted.frontierT, compacted.processedT, compacted.metricsT,
+      compacted.latestT)
+    var w = 1
+    var more = true
+    while (more && w <= cfg.maxWaves) {
+      more = compacted.runWave(w)
+      for (t <- tables; m <- t.currentManifest()) {
+        assert(m.segments.size <= 2, s"wave $w: ${t.name} has ${m.segments.size} live segments")
+        val onDisk = Files.list(java.nio.file.Paths.get(root, t.name, "snapshots"))
+        val dirs = try onDisk.iterator().asScala.map(_.getFileName.toString).toSet
+          finally onDisk.close()
+        assert(dirs === m.segments.map(v => f"v$v%05d").toSet,
+          s"wave $w: ${t.name} keeps unreferenced snapshots")
+      }
+      w += 1
+    }
+    assert(compacted.latestT.exists(), "probe setup broken: the rollup never materialized")
+
+    def order(r: WaveRunner) = r.crawlOrder().collect().map(_.toSeq).toSeq
+    def seen(r: WaveRunner) = r.seen().collect().map(_.toSeq).toSet
+    def text(r: WaveRunner) = r.pages().select("urlHash", "wave", "text")
+      .collect().map(_.toSeq).toSet
+    def counts(r: WaveRunner) = r.metrics().drop("elapsedMs").orderBy("wave")
+      .collect().map(_.toSeq).toSeq
+    assert(order(compacted) === order(plain))
+    assert(seen(compacted) === seen(plain))
+    assert(text(compacted) === text(plain))
+    assert(counts(compacted) === counts(plain))
+    assert(counts(plain).exists(_(4) != 0L), "probe setup broken: no deferrals")
+  }
+
+  test("sketch-chain gap re-seeds the running count: the per-host budget still binds") {
+    // 40 seeds on one host, no outlinks: only the budget (5) limits a
+    // wave. A missing wave_1.meta must not restart the count at 0: the
+    // budget short-circuit would then pop the whole host at once.
+    val oneHost = SyntheticCorpus.Spec(numUrls = 40, numHosts = 1,
+      minOutlinks = 0, maxOutlinks = 0)
+    val root = tmp("graft-bloomgap-")
+    val r = new WaveRunner(spark, SyntheticCorpus.generate(spark, oneHost).toDF(), root,
+      CrawlConfig(maxDepth = 1, defaultMaxPerWave = 5, maxWaves = 3))
+    r.initSeeds((0L until 40L).map(i => SyntheticCorpus.urlFor(i, oneHost) -> 1))
+    assert(r.runWave(1))
+    Files.delete(java.nio.file.Paths.get(root, "bloom", "wave_1.meta"))
+    assert(r.runWave(2))
+    assert(r.runWave(3))
+    val perWave = r.crawlOrder().groupBy("wave").count().collect()
+      .map(x => x.getInt(0) -> x.getLong(1)).toMap
+    assert(perWave === Map(1 -> 5L, 2 -> 5L, 3 -> 5L))
+    def meta(w: Int) = new String(Files.readAllBytes(
+      java.nio.file.Paths.get(root, "bloom", s"wave_$w.meta")), "UTF-8").trim.toLong
+    assert(meta(2) >= 40L && meta(3) >= 40L, s"count after the gap: ${meta(2)}, ${meta(3)}")
   }
 
   test("bucketed co-partitioned fetch join ≡ plain broadcast join") {

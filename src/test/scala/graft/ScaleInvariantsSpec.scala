@@ -137,8 +137,21 @@ class ScaleInvariantsSpec extends AnyFunSuite {
       Files.createTempDirectory("graft-wavejobs-").toString, cfg, robotsDim = Some(robots))
     runner.initSeeds((0L until 2000L by 10).map(i => SyntheticCorpus.urlFor(i, spec) -> 1))
     assert(runner.runWave(1))
-    val (more, jobs) = JobCount(spark)(runner.runWave(2))
+    // the commit tail runs its jobs on threads of its own: each must
+    // still carry the caller's job group and local properties (span
+    // attribution and cancelJobGroup depend on them)
+    val sc = spark.sparkContext
+    sc.setJobGroup("graft-wave-2", "steady-state wave")
+    sc.setLocalProperty("graft.test.marker", "wave-2")
+    val (more, props) =
+      try JobCount.properties(spark)(runner.runWave(2))
+      finally { sc.clearJobGroup(); sc.setLocalProperty("graft.test.marker", null) }
+    val jobs = props.size
     assert(more)
+    assert(props.forall(_.getProperty("spark.jobGroup.id") == "graft-wave-2"),
+      "a job of the wave lost the caller's job group")
+    assert(props.forall(_.getProperty("graft.test.marker") == "wave-2"),
+      "a job of the wave lost the caller's local property")
     val m = runner.metrics().filter(org.apache.spark.sql.functions.col("wave") === 2)
       .collect().head
     assert(m.getAs[Long]("scheduled") > 0 && m.getAs[Long]("newUrls") > 0,
@@ -148,4 +161,25 @@ class ScaleInvariantsSpec extends AnyFunSuite {
 
   /** Jobs of one steady-state wave in the test above, as measured. */
   private val WaveJobBudget = 21
+
+  test("joinAll waits for every task, then rethrows the first failure") {
+    val sc = spark.sparkContext
+    val finished = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val first = new IllegalStateException("first")
+    val later = new IllegalArgumentException("later")
+    val thrown = intercept[IllegalStateException] {
+      WaveRunner.joinAll(
+        () => throw first, // fails at once, on the calling thread
+        () => { // a Spark job still running when the first task fails
+          sc.parallelize(1 to 4, 4).foreach(_ => Thread.sleep(400))
+          finished.set(true)
+        },
+        () => { Thread.sleep(200); throw later })
+    }
+    assert(thrown eq first)
+    assert(thrown.getSuppressed.toSeq == Seq(later))
+    assert(finished.get, "joinAll returned before every task had finished")
+    org.apache.spark.scheduler.ListenerBusDrain.drain(sc)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty, "a job outlived joinAll")
+  }
 }
