@@ -3,15 +3,14 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.core.Hashing
-
 /** Text-analysis columns for a large-scale training-data pipeline:
   * token counting, quality scoring, language ID, fingerprinting.
   *
   * Everything that CAN be pure Catalyst IS pure Catalyst (codegen'd,
   * whole-stage-fused, no serialization wall): token counts, ratios and
-  * stopword intersections are built-in expressions; only the rolling
-  * winnowing fingerprint needs a (narrow, deterministic) UDF.
+  * stopword intersections are built-in expressions; the rolling
+  * winnowing fingerprint is a generated kernel
+  * ([[graft.plans.WinnowStats]]), not a UDF.
   */
 object TextAnalysis {
 
@@ -178,9 +177,9 @@ object TextAnalysis {
     * portable variant (round-2 verdict "What's wrong" #2: the previous
     * char-gram twin hashed one gram PER CHARACTER, ~6× the rows of this
     * one, and was masquerading as the operator's bench
-    * cost). Same winnowing semantics as [[fingerprintUdf]] (token
-    * k-grams, window-w minima, distinct), same [[portableHash]] as
-    * every other oracle-checked sketch, stated relationally:
+    * cost). Winnowing semantics: token k-grams, window-w minima,
+    * distinct; same [[portableHash]] as every other oracle-checked
+    * sketch, stated relationally:
     * posexplode + window `lead` builds complete k-grams, then a
     * bounded-frame window min winnows; docs with < k tokens fingerprint
     * as the single hash of their joined tokens.
@@ -734,36 +733,5 @@ object TextAnalysis {
     scored.orderBy(col("score_milli").desc, col(idCol).asc).limit(k)
       .withColumn("rank", row_number().over(
         Window.orderBy(col("score_milli").desc, col(idCol).asc)))
-  }
-
-  /** Winnowing document fingerprint: rolling xxhash64 over `k`-token
-    * windows, keep the minimum of every `w`-window (local minima), and
-    * return the sorted distinct selected hashes. Robust to small edits
-    * — two documents sharing fingerprints overlap in k-gram content.
-    * UDF by necessity (stateful scan), deterministic.
-    */
-  def fingerprintUdf(k: Int = 5, w: Int = 4) = udf { (text: String) =>
-    if (text == null) Array.empty[Long]
-    else {
-      val toks = text.toLowerCase.split("\\W+").filter(_.nonEmpty)
-      if (toks.length < k) {
-        if (toks.isEmpty) Array.empty[Long]
-        else Array(Hashing.xxhash64(toks.mkString(" ")))
-      } else {
-        val grams = Array.tabulate(toks.length - k + 1) { i =>
-          Hashing.xxhash64(toks.slice(i, i + k).mkString(" "))
-        }
-        val selected = scala.collection.mutable.TreeSet.empty[Long]
-        var i = 0
-        while (i + w <= grams.length) {
-          var min = grams(i)
-          var j = i + 1
-          while (j < i + w) { if (grams(j) < min) min = grams(j); j += 1 }
-          selected += min
-          i += 1
-        }
-        if (selected.isEmpty) grams.sorted else selected.toArray
-      }
-    }
   }
 }

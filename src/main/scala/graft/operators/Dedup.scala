@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Hashing
-
 /** Deduplication operators for web-scale training-data curation:
   * exact, MinHash+LSH, SimHash and n-gram-Jaccard near-dup — each a
   * DataFrame → DataFrame transform whose heavy lifting is hash
@@ -15,9 +13,9 @@ import graft.core.Hashing
   *  - exact: one shuffle on a 16-byte key;
   *  - minhash-LSH: per-row signature (map-side) + one shuffle per band
   *    on (band, bandHash) — candidate pairs only within buckets;
-  *  - simhash: per-row 64-bit sketch + pigeonhole band join;
-  *  - verification joins are bounded by bucket sizes, and BOTH
-  *    candidate-pair generators cap pathological buckets explicitly
+  *  - simhash: per-row 32-bit sketch + pigeonhole band join;
+  *  - verification joins are bounded by bucket sizes, and the MinHash
+  *    candidate-pair generator caps pathological buckets explicitly
   *    (a 10^6-doc boilerplate bucket would otherwise explode
   *    quadratically). The cap is deterministic (lowest ids kept) and
   *    NEVER silent: every capped run emits `capped_buckets` /
@@ -34,7 +32,7 @@ object Dedup {
     * EVERY run — through the caller's [[Observation]] when provided,
     * else under a unique auto name so the metric still reaches
     * listener-based metric sinks (names must be unique per query, so
-    * a fixed name would break plans using both LSH variants).
+    * a fixed name would break a plan that bands twice).
     */
   private val capMetricSeq = new java.util.concurrent.atomic.AtomicLong(0L)
   private def observeCap(banded: DataFrame, maxBucket: Int,
@@ -72,125 +70,7 @@ object Dedup {
     df.join(keep, Seq(idCol), "left_semi")
   }
 
-  // ---------- shingles + minhash ----------
-
-  /** Word k-shingle hashes of a text column (distinct, sorted for
-    * determinism). Pure function per row.
-    */
-  def shingleUdf(k: Int) = udf { (text: String) =>
-    if (text == null) Array.empty[Long]
-    else {
-      val toks = text.toLowerCase.split("\\W+").filter(_.nonEmpty)
-      if (toks.length < k) {
-        if (toks.isEmpty) Array.empty[Long] else Array(Hashing.xxhash64(toks.mkString(" ")))
-      } else {
-        val set = scala.collection.mutable.TreeSet.empty[Long]
-        var i = 0
-        while (i + k <= toks.length) {
-          set += Hashing.xxhash64(toks.slice(i, i + k).mkString(" "))
-          i += 1
-        }
-        set.toArray
-      }
-    }
-  }
-
-  /** MinHash signature of a shingle-hash array: n universal-hash
-    * permutations h_i(x) = a_i·x + b_i (odd a_i), min over shingles.
-    * Empty shingle set ⇒ all Long.MaxValue (never collides).
-    */
-  def minhashUdf(numHashes: Int, seed: Long = 42L) = {
-    val as = Array.tabulate(numHashes)(i => Hashing.xxhash64(s"a:$seed:$i") | 1L)
-    val bs = Array.tabulate(numHashes)(i => Hashing.xxhash64(s"b:$seed:$i"))
-    udf { (shingles: Array[Long]) =>
-      val sig = Array.fill(numHashes)(Long.MaxValue)
-      if (shingles != null) {
-        var i = 0
-        while (i < shingles.length) {
-          val s = shingles(i)
-          var j = 0
-          while (j < numHashes) {
-            val h = as(j) * s + bs(j)
-            if (h < sig(j)) sig(j) = h
-            j += 1
-          }
-          i += 1
-        }
-      }
-      sig
-    }
-  }
-
-  /** MinHash+LSH near-duplicate PAIRS.
-    *
-    * Pipeline: shingle → signature → explode into `bands` band keys
-    * (hash of the signature's rows in that band) → self-join within
-    * (band, key) buckets → distinct pairs → estimate Jaccard from full
-    * signatures → filter ≥ threshold.
-    *
-    * Returns (id_a, id_b, est_jaccard) with id_a < id_b.
-    *
-    * `maxBucket` caps pathological buckets (pairs in a bucket grow
-    * quadratically) deterministically — lowest ids kept — and the cap
-    * is LOUD: `capped_buckets` / `rows_dropped_by_cap` are emitted as
-    * an observed metric on every run (pass `capMetrics` to read them
-    * directly; see [[observeCap]]). Callers at 10^10 scale should
-    * still route mega-buckets (usually exact boilerplate) through
-    * exactDedup first.
-    */
-  def minhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   shingleK: Int = 5, numHashes: Int = 64, bands: Int = 16,
-                   threshold: Double = 0.7, maxBucket: Int = 1000,
-                   capMetrics: Option[Observation] = None): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rowsPerBand = numHashes / bands
-    val sigs = df.select(col(idCol).as("doc_id_"),
-        minhashUdf(numHashes)(shingleUdf(shingleK)(col(textCol))).as("sig"))
-
-    val bandHash = udf { (sig: Array[Long], band: Int) =>
-      var h = 1125899906842597L
-      var i = band * rowsPerBand
-      while (i < (band + 1) * rowsPerBand) { h = h * 31 + sig(i); i += 1 }
-      h
-    }
-    val banded = sigs.select(col("doc_id_"), col("sig"),
-        explode(sequence(lit(0), lit(bands - 1))).as("band"))
-      .withColumn("bkey", bandHash(col("sig"), col("band")))
-
-    // cap pathological buckets deterministically (keep lowest ids),
-    // loudly (observed metric)
-    val wB = Window.partitionBy("band", "bkey").orderBy("doc_id_")
-    val capped = observeCap(banded.withColumn("rn", row_number().over(wB)),
-        maxBucket, capMetrics)
-      .filter(col("rn") <= maxBucket).drop("rn")
-
-    val left = capped.select(col("band"), col("bkey"),
-      col("doc_id_").as("id_a"), col("sig").as("sig_a"))
-    val right = capped.select(col("band"), col("bkey"),
-      col("doc_id_").as("id_b"), col("sig").as("sig_b"))
-    val simUdf = udf { (a: Array[Long], b: Array[Long]) =>
-      var same = 0; var i = 0
-      while (i < a.length) { if (a(i) == b(i)) same += 1; i += 1 }
-      same.toDouble / a.length
-    }
-    // estimate + threshold BEFORE the pair dedup: the pair determines
-    // its signatures, so est_jaccard is identical on every duplicate
-    // candidate row and filter∘dedup ≡ dedup∘filter — the dedup
-    // exchange then carries (long, long, double) instead of two
-    // numHashes-long signature arrays (guide §2.3/§8), and the
-    // dedup is a map-side-combinable hash aggregate instead of the
-    // Sort+SortAggregate Spark falls back to when First() holds an
-    // array. A pair sharing b bands evaluates the estimate b times —
-    // numHashes compares per copy, cheaper than sort-shuffling the
-    // arrays those copies carried.
-    left.join(right, Seq("band", "bkey"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        simUdf(col("sig_a"), col("sig_b")).as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
-      .dropDuplicates("id_a", "id_b")
-      .select("id_a", "id_b", "est_jaccard")
-  }
+  // ---------- minhash ----------
 
   /** Near-dup dedup via MinHash: the scalable per-wave approximation —
     * removes every doc that pairs with a lower id (union-find-free, one
@@ -199,7 +79,7 @@ object Dedup {
     */
   def minhashDedup(df: DataFrame, idCol: String, textCol: String,
                    threshold: Double = 0.7): DataFrame = {
-    val pairs = minhashPairs(df, idCol, textCol, threshold = threshold)
+    val pairs = minhashPairsPortable(df, idCol, textCol, threshold = threshold)
     val losers = pairs.select(col("id_b").as(idCol)).distinct()
     df.join(losers, Seq(idCol), "left_anti")
   }
@@ -296,7 +176,7 @@ object Dedup {
                              threshold: Double = 0.7,
                              maxIterations: Int = 20,
                              reliableCheckpoints: Boolean = false): DataFrame = {
-    val pairs = minhashPairs(df, idCol, textCol, threshold = threshold)
+    val pairs = minhashPairsPortable(df, idCol, textCol, threshold = threshold)
       .select("id_a", "id_b")
     val labels = connectedMinLabels(df.select(col(idCol)), pairs, maxIterations,
       reliableCheckpoints)
@@ -304,84 +184,30 @@ object Dedup {
     df.join(keep, Seq(idCol), "left_semi")
   }
 
-  // ---------- simhash ----------
-
-  /** 64-bit SimHash of a text column: per-token hash votes on each bit.
-    * Near-dups differ in few bits (small Hamming distance).
-    */
-  def simhashUdf = udf { (text: String) =>
-    if (text == null) 0L
-    else {
-      val votes = new Array[Int](64)
-      text.toLowerCase.split("\\W+").filter(_.nonEmpty).foreach { tok =>
-        val h = Hashing.xxhash64(tok)
-        var b = 0
-        while (b < 64) {
-          if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-          b += 1
-        }
-      }
-      var out = 0L
-      var b = 0
-      while (b < 64) { if (votes(b) > 0) out |= (1L << b); b += 1 }
-      out
-    }
-  }
-
-  /** SimHash near-dup pairs with Hamming distance ≤ maxDist, found by
-    * the pigeonhole band trick: split the 64-bit sketch into
-    * maxDist+1 chunks — any pair within distance shares at least one
-    * exact chunk, so candidates come from equi-joins on (chunk index,
-    * chunk value), never an all-pairs scan.
-    */
-  def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxDist: Int = 3): DataFrame = {
-    val chunks = maxDist + 1
-    val bitsPer = 64 / chunks
-    val sketched = df.select(col(idCol).as("doc_id_"),
-      simhashUdf(col(textCol)).as("sketch"))
-    val chunkUdf = udf { (sketch: Long, c: Int) =>
-      (sketch >>> (c * bitsPer)) & ((1L << bitsPer) - 1)
-    }
-    val banded = sketched
-      .select(col("doc_id_"), col("sketch"),
-        explode(sequence(lit(0), lit(chunks - 1))).as("chunk"))
-      .withColumn("ckey", chunkUdf(col("sketch"), col("chunk")))
-    val left = banded.select(col("chunk"), col("ckey"),
-      col("doc_id_").as("id_a"), col("sketch").as("sk_a"))
-    val right = banded.select(col("chunk"), col("ckey"),
-      col("doc_id_").as("id_b"), col("sketch").as("sk_b"))
-    val hamming = udf { (a: Long, b: Long) => java.lang.Long.bitCount(a ^ b) }
-    left.join(right, Seq("chunk", "ckey"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b", "sk_a", "sk_b").distinct()
-      .withColumn("hamming", hamming(col("sk_a"), col("sk_b")))
-      .filter(col("hamming") <= maxDist)
-      .select("id_a", "id_b", "hamming")
-  }
-
-  /** SQL-portable MinHash+LSH pairs, PURE CATALYST and stated
-    * relationally (no per-element lambda touches another column — see
-    * the O(n²) re-inlining hazard documented on
-    * [[graft.functions.TextAnalysis.winnowFingerprintsTokens]]):
+  /** MinHash+LSH near-duplicate PAIRS, SQL-portable end to end:
     *
-    *  1. tokens → complete word 3-shingles via posexplode + window
-    *     lead (docs with < k tokens shingle as their joined tokens);
-    *  2. signature row (doc, j, min over shingles of
-    *     portableHash(j:shingle)) via one explode + one aggregate;
-    *  3. signatures assembled ordered (sort_array of (j, minhash));
-    *  4. band keys = md5 of each band's signature slice; buckets
+    *  1. tokens → complete word `shingleK`-shingles (docs with fewer
+    *     tokens shingle as their joined tokens);
+    *  2. signature slot j = min over shingles of the 32-bit md5 word
+    *     j%4 of md5((j/4) ':' shingle) — steps 1-2 run in one
+    *     generated pass per row ([[graft.plans.MinhashSig]]), whose
+    *     relational statement is [[minhashSigsRelational]];
+    *  3. band keys = md5 of each band's signature slice; buckets
     *     capped at `maxBucket` rows (deterministic `row_number ≤ cap`
-    *     by doc id, LOUD via the observed cap metric — same rule as
-    *     [[minhashPairs]], statable verbatim in the SQL oracle: one
-    *     viral-boilerplate bucket of 10^6 near-identical docs would
-    *     otherwise detonate quadratically); candidate pairs from
-    *     (band, key) equi-joins — never all-pairs;
-    *  5. est_jaccard = matching signature rows / numHashes.
+    *     by doc id, LOUD via the observed cap metric — pass
+    *     `capMetrics` to read `capped_buckets` / `rows_dropped_by_cap`
+    *     directly, see [[observeCap]]; one viral-boilerplate bucket of
+    *     10^6 near-identical docs would otherwise detonate
+    *     quadratically); candidate pairs from (band, key) equi-joins —
+    *     never all-pairs;
+    *  4. est_jaccard = matching signature slots / numHashes, rounded to
+    *     4 places; pairs below `threshold` are dropped.
     *
-    * Same banding semantics as [[minhashPairs]]; every step is a
-    * built-in expression a DuckDB oracle states identically. The
-    * xxhash permutation variant remains the raw-throughput path.
+    * Every step is a built-in expression or a kernel a DuckDB oracle
+    * states identically. Returns (id_a, id_b, est_jaccard) with
+    * id_a < id_b. Callers at 10^10 scale should still route
+    * mega-buckets (usually exact boilerplate) through [[exactDedup]]
+    * first.
     *
     * Precondition: `idCol` is unique. The est_jaccard threshold runs
     * below the pair dedup, and filter∘dedup ≡ dedup∘filter only while
@@ -421,8 +247,7 @@ object Dedup {
         md5(concat_ws(",", slice(col("sig"), col("band") * rowsPerBand + 1,
           lit(rowsPerBand)).cast("array<string>"))))
     // cap pathological buckets deterministically (keep lowest ids),
-    // loudly (observed metric) — identical rule to minhashPairs and
-    // stated verbatim in the SQL oracle
+    // loudly (observed metric) — stated verbatim in the SQL oracle
     val wB = Window.partitionBy("band", "bkey").orderBy("doc_id_")
     val capped = observeCap(banded.withColumn("rn", row_number().over(wB)),
         maxBucket, capMetrics)
@@ -431,10 +256,16 @@ object Dedup {
       col("doc_id_").as("id_a"), col("sig").as("sig_a"))
     val right = capped.select(col("band"), col("bkey"),
       col("doc_id_").as("id_b"), col("sig").as("sig_b"))
-    // estimate + threshold BEFORE the pair dedup (same proxy-dedup
-    // rationale as [[minhashPairs]], stated there): identical rows
-    // out, scalar-only dedup exchange, hash aggregate instead of the
-    // array-payload sort aggregate.
+    // estimate + threshold BEFORE the pair dedup: the pair determines
+    // its signatures, so est_jaccard is identical on every duplicate
+    // candidate row and filter∘dedup ≡ dedup∘filter — the dedup
+    // exchange then carries (long, long, double) instead of two
+    // numHashes-long signature arrays (guide §2.3/§8), and the
+    // dedup is a map-side-combinable hash aggregate instead of the
+    // Sort+SortAggregate Spark falls back to when First() holds an
+    // array. A pair sharing b bands evaluates the estimate b times —
+    // numHashes compares per copy, cheaper than sort-shuffling the
+    // arrays those copies carried.
     left.join(right, Seq("band", "bkey"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
@@ -606,13 +437,14 @@ object Dedup {
     (if (wholeDocFallback) big.unionByName(small) else big).distinct()
   }
 
-  /** SQL-portable SimHash sketch, PURE CATALYST: per-token 32-bit
-    * [[graft.functions.TextAnalysis.portableHash]] votes on each bit
+  /** Per-token portable hashes of a text column: the 32-bit
+    * [[graft.functions.TextAnalysis.portableHash]] of each lowercase
+    * `\W+` token. These are the votes of the SQL-portable SimHash
+    * sketch ([[portableSketches]]): each token hash votes on each bit
     * (majority wins). Bit extraction is power-of-two arithmetic
     * (exact in doubles for 32-bit values) so DuckDB states the
     * identical computation — the oracle checks the whole sketch.
     */
-  /** Per-token portable hashes of a text column. */
   def portableTokenHashes(text: Column): Column =
     transform(filter(split(lower(text), "\\W+"), t => length(t) > 0),
       t => graft.functions.TextAnalysis.portableHash(t))
@@ -661,15 +493,22 @@ object Dedup {
       .select(col("doc_id_"), sketch.as("sketch"))
   }
 
-  /** SimHash near-dup pairs over the PORTABLE 32-bit sketch — same
-    * pigeonhole band join as [[simhashPairs]] (chunks = maxDist+1,
-    * candidates only from shared-chunk buckets, never all-pairs), but
-    * every step is a built-in expression, so a SQL oracle can verify
-    * end to end. The 64-bit xxhash variant remains the throughput
-    * path; this one is the verification-grade twin.
+  /** SimHash near-dup pairs with Hamming distance ≤ maxDist over the
+    * PORTABLE `bits`-bit sketch, found by the pigeonhole band trick:
+    * split the sketch into maxDist+1 chunks — any pair within distance
+    * shares at least one exact chunk, so candidates come from
+    * equi-joins on (chunk index, chunk value), never an all-pairs scan.
+    * Every step is a built-in expression or kernel, so a SQL oracle
+    * verifies it end to end.
+    *
+    * Requires 0 ≤ maxDist < bits ≤ 32: each chunk must keep at least
+    * one bit (with maxDist ≥ bits every chunk key would be the
+    * constant 0 and the join all-pairs), and the sketch has 32 bits.
     */
   def simhashPairsPortable(df: DataFrame, idCol: String, textCol: String,
                            maxDist: Int = 3, bits: Int = 32): DataFrame = {
+    require(bits >= 1 && bits <= 32 && maxDist >= 0 && maxDist < bits,
+      s"simhashPairsPortable needs 0 <= maxDist < bits <= 32 (maxDist=$maxDist, bits=$bits)")
     val chunks = maxDist + 1
     val bitsPer = bits / chunks
     val sketched = portableSketches(df, idCol, textCol, bits)
@@ -695,13 +534,19 @@ object Dedup {
 
   /** Exact n-gram Jaccard similarity for candidate pairs — the
     * verification stage behind the MinHash estimate. `pairs` carries
-    * (id_a, id_b); texts join in by id. Pure Catalyst set algebra
-    * (array_intersect / array_union on shingle arrays).
+    * (id_a, id_b); texts join in by id. Grams are the distinct md5
+    * keys of [[ngramContainment]]'s derivation (lowercase, `\W+`
+    * split, sub-k docs fall back to the whole-doc gram), so for the
+    * same pairs and `k` jaccard = n_shared / (n_a + n_b − n_shared).
+    * Null text has no grams: its pairs score 0.0. Pure Catalyst set
+    * algebra (array_intersect / array_union on the key arrays).
     */
   def ngramJaccard(pairs: DataFrame, docs: DataFrame, idCol: String,
                    textCol: String, k: Int = 5): DataFrame = {
     val sh = docs.select(col(idCol).as("jid"),
-      shingleUdf(k)(col(textCol)).as("jsh"))
+      coalesce(graft.plans.Kernels.gram_keys(
+          split(lower(col(textCol)), "\\W+"), lit(k), lit(true)),
+        array().cast("array<string>")).as("jsh"))
     pairs
       .join(sh.select(col("jid").as("id_a"), col("jsh").as("sh_a")), Seq("id_a"))
       .join(sh.select(col("jid").as("id_b"), col("jsh").as("sh_b")), Seq("id_b"))

@@ -4,104 +4,32 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Hashing
-
 /** IVF (inverted-file) approximate nearest neighbor — the coarse-
-  * quantizer scale path next to [[Similarity.lshTopK]]:
+  * quantizer scale path next to [[Similarity.lshTopKPortable]]:
   *
-  *  1. train k centroids with a few Lloyd iterations, fully as
-  *     DataFrame aggregations (posexplode → per-dimension mean);
-  *     deterministic init (the k corpus rows with smallest
-  *     xxhash64(id) — no RNG state, replays identically);
-  *  2. assign every corpus vector to its nearest centroid (one narrow
-  *     cluster-id column — the inverted file);
-  *  3. query: probe the `nprobe` nearest centroid lists only, exact
-  *     cosine rerank inside them.
+  *  1. [[trainPortable]]: k centroids from a few Lloyd iterations,
+  *     fully as DataFrame aggregations (posexplode → per-dimension
+  *     sum); deterministic init (the k corpus rows with smallest
+  *     portable hash of their id — no RNG state, replays identically);
+  *  2. [[assignPortable]]: every corpus vector to its nearest centroid
+  *     (one narrow cluster-id column — the inverted file);
+  *  3. [[topKPortable]]: probe the `nprobe` nearest centroid lists
+  *     only, exact cosine rerank inside them.
+  *
+  * Every step is exactly reproducible across engines: vectors are
+  * quantized to fixed-point longs (floor(x·10⁴ + 0.5) — exact in
+  * doubles, identical everywhere), so sums and distances are exact
+  * integers (order-independent), centroid components are
+  * floor(sum/count), argmin ties break by cluster id, and the ONLY
+  * floats left are the final rerank cosines — the same
+  * sequential-fold double arithmetic the LSH path uses. The whole
+  * train → assign → probe → rerank pipeline is therefore statable
+  * (unrolled) as one SQL oracle.
   *
   * At 10^10 vectors the assign pass is one map over the corpus and
   * the probe join touches nprobe/k of it — the classic IVF trade.
   */
 object IvfIndex {
-
-  final case class Model(centroids: Array[Array[Float]]) extends Serializable
-
-  private def l2Udf(centroids: Array[Array[Float]]) = udf { (vec: Array[Float]) =>
-    var best = 0
-    var bestD = Double.MaxValue
-    var c = 0
-    while (c < centroids.length) {
-      val cen = centroids(c)
-      var d = 0.0
-      val n = math.min(vec.length, cen.length)
-      var j = 0
-      while (j < n) { val t = vec(j) - cen(j); d += t * t; j += 1 }
-      if (d < bestD) { bestD = d; best = c }
-      c += 1
-    }
-    best
-  }
-
-  /** Deterministic k-means over (id, vec). */
-  def train(spark: SparkSession, corpus: DataFrame, k: Int,
-            iterations: Int = 3): Model = {
-    import spark.implicits._
-    // deterministic seed pick: k rows with smallest xxhash64(id)
-    var centroids: Array[Array[Float]] = corpus
-      .select(col("id"), col("vec"))
-      .withColumn("h", xxhash64(col("id")))
-      .orderBy("h")
-      .limit(k)
-      .select("vec").as[Array[Float]].collect()
-
-    (0 until iterations).foreach { _ =>
-      val assigned = corpus.select(col("vec"),
-        l2Udf(centroids)(col("vec")).as("cluster"))
-      val means = assigned
-        .select(col("cluster"), posexplode(col("vec")).as(Seq("pos", "v")))
-        .groupBy("cluster", "pos")
-        .agg(avg(col("v")).as("m"))
-        .collect()
-      val dim = centroids.head.length
-      val next = centroids.map(_.clone())
-      means.foreach { r =>
-        val c = r.getInt(0)
-        val p = r.getInt(1)
-        if (c < next.length && p < dim) next(c)(p) = r.getDouble(2).toFloat
-      }
-      centroids = next
-    }
-    Model(centroids)
-  }
-
-  /** Corpus with its inverted-file cluster column. */
-  def assign(corpus: DataFrame, model: Model): DataFrame =
-    corpus.withColumn("cluster", l2Udf(model.centroids)(col("vec")))
-
-  /** `nprobe` nearest centroid ids per query vector. */
-  private def probesUdf(model: Model, nprobe: Int) = udf { (vec: Array[Float]) =>
-    model.centroids.indices.map { c =>
-      val cen = model.centroids(c)
-      var d = 0.0
-      val n = math.min(vec.length, cen.length)
-      var j = 0
-      while (j < n) { val t = vec(j) - cen(j); d += t * t; j += 1 }
-      (d, c)
-    }.sorted.take(nprobe).map(_._2).toArray
-  }
-
-  // ---------- SQL-portable twin (round-3 item #4) ----------
-  //
-  // The float k-means above is NOT cross-engine reproducible: double
-  // means depend on summation order. The portable twin quantizes
-  // vectors to fixed-point BIGINTs (floor(x·10⁴ + 0.5) — exact in
-  // doubles, identical everywhere), so sums/distances are exact
-  // integers (order-independent), centroid components are
-  // floor(sum/count) (exact), argmin ties break by cluster id, and the
-  // ONLY floats left are the final rerank cosines — the same
-  // sequential-fold double arithmetic the oracle-green LSH path
-  // already proved matches DuckDB's list_dot_product bit-for-bit. The
-  // whole train → assign → probe → rerank pipeline is therefore
-  // statable (unrolled) as one SQL oracle.
 
   /** Fixed-point scale: 4 decimal digits. */
   val QScale = 10000.0
@@ -175,23 +103,6 @@ object IvfIndex {
       .select(col("id").as("query_id"), col("vec").as("qvec"),
         explode(transform(slice(sort_array(probeStructs), 1, nprobe),
           s => s.getField("cid"))).as("cluster"))
-    val c = corpusAssigned.select(col("id").as("neighbor_id"),
-      col("vec").as("cvec"), col("cluster"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    q.join(c, Seq("cluster"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", Similarity.cosine(col("qvec"), col("cvec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
-  }
-
-  /** Approximate cosine top-k: probe nprobe lists, exact rerank. */
-  def topK(queries: DataFrame, corpusAssigned: DataFrame, model: Model,
-           k: Int, nprobe: Int): DataFrame = {
-    val q = queries.select(col("id").as("query_id"), col("vec").as("qvec"),
-      explode(probesUdf(model, nprobe)(col("vec"))).as("cluster"))
     val c = corpusAssigned.select(col("id").as("neighbor_id"),
       col("vec").as("cvec"), col("cluster"))
     val w = Window.partitionBy("query_id")

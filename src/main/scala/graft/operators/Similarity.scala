@@ -9,14 +9,15 @@ import graft.core.Hashing
 /** Similarity search over an embedding column (`array<float>`).
   *
   * Two paths:
-  *  - [[cosineTopK]] — brute-force exact top-k, pure Catalyst
-  *    (`zip_with` + `aggregate` for the dot product, codegen'd): the
-  *    correctness baseline, O(|queries|·|corpus|);
-  *  - [[lshTopK]] — random-hyperplane LSH buckets + exact rerank inside
-  *    buckets: the scale path; recall tunable by (bits, tables).
+  *  - [[cosineTopK]] — brute-force exact top-k (a generated dot
+  *    product kernel): the correctness baseline,
+  *    O(|queries|·|corpus|);
+  *  - [[lshTopKPortable]] — random-hyperplane LSH buckets + exact
+  *    rerank inside buckets: the scale path; recall tunable by (bits,
+  *    tables).
   *
-  * Embedding-cosine near-dup ([[cosineDupPairs]]) rides the same LSH
-  * bucketing.
+  * Embedding-cosine near-dup ([[cosineDupPairsPortable]]) rides the
+  * same LSH bucketing.
   */
 object Similarity {
 
@@ -58,67 +59,6 @@ object Similarity {
     val w = Window.partitionBy("query_id")
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
-  }
-
-  /** Random-hyperplane signature: `bits` sign bits of projections onto
-    * deterministic pseudo-random hyperplanes (seeded; plane component
-    * j of plane p = centered hash in [-0.5, 0.5)). One long per table.
-    */
-  def hyperplaneSigUdf(bits: Int, dim: Int, table: Int, seed: Long = 42L) = {
-    val planes: Array[Array[Float]] = Array.tabulate(bits) { p =>
-      Array.tabulate(dim) { j =>
-        ((Hashing.xxhash64(s"hp:$seed:$table:$p:$j") >>> 11).toDouble /
-          (1L << 53).toDouble - 0.5).toFloat
-      }
-    }
-    udf { (vec: Array[Float]) =>
-      if (vec == null) 0L
-      else {
-        var sig = 0L
-        var p = 0
-        while (p < bits) {
-          var s = 0.0f
-          val plane = planes(p)
-          val n = math.min(vec.length, plane.length)
-          var j = 0
-          while (j < n) { s += vec(j) * plane(j); j += 1 }
-          if (s >= 0) sig |= (1L << p)
-          p += 1
-        }
-        sig
-      }
-    }
-  }
-
-  /** Approximate cosine top-k: `tables` independent hyperplane hash
-    * tables; candidates = corpus rows sharing a bucket with the query
-    * in ANY table; exact cosine rerank inside the candidate set.
-    * Recall rises with tables, bucket selectivity with bits.
-    */
-  def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-              dim: Int, bits: Int = 12, tables: Int = 4): DataFrame = {
-    def bucketed(df: DataFrame, idName: String, vecName: String): DataFrame = {
-      val perTable = (0 until tables).map { t =>
-        df.select(col("id").as(idName), col("vec").as(vecName),
-          lit(t).as("table"),
-          hyperplaneSigUdf(bits, dim, t)(col("vec")).as("bucket"))
-      }
-      perTable.reduce(_ unionByName _)
-    }
-    val qb = bucketed(queries, "query_id", "qvec")
-    val cb = bucketed(corpus, "neighbor_id", "cvec")
-    // cosine BEFORE the candidate dedup (see [[lshTopKPortable]] for
-    // the rationale — identical results, scalar-only dedup exchange)
-    val candidates = qb.join(cb, Seq("table", "bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("qvec"), col("cvec")).as("cosine"))
-      .dropDuplicates("query_id", "neighbor_id")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    candidates.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select("query_id", "neighbor_id", "cosine", "rank")
   }
@@ -175,9 +115,11 @@ object Similarity {
       .select(col(idName), col(vecName), col("table"), sig.as("bucket"))
   }
 
-  /** [[lshTopK]] over the portable signatures — same bucket-join +
-    * exact-rerank shape, every step oracle-checkable. The xxhash
-    * variant stays as the throughput path.
+  /** Approximate cosine top-k: `tables` independent hyperplane hash
+    * tables over the portable signatures; candidates = corpus rows
+    * sharing a bucket with the query in ANY table; exact cosine rerank
+    * inside the candidate set. Recall rises with tables, bucket
+    * selectivity with bits. Every step is oracle-checkable.
     */
   def lshTopKPortable(queries: DataFrame, corpus: DataFrame, k: Int,
                       dim: Int, bits: Int = 10, tables: Int = 6): DataFrame = {
@@ -212,8 +154,17 @@ object Similarity {
       .select("query_id", "neighbor_id", "cosine", "rank")
   }
 
-  /** [[cosineDupPairs]] over the portable signatures (same unique-id
-    * precondition).
+  /** Embedding-cosine near-duplicate pairs (cosine ≥ threshold,
+    * rounded to 4 places), bucketed by the portable hyperplane
+    * signatures (id_a < id_b).
+    *
+    * Precondition: `id` is unique. The threshold filter runs below the
+    * pair dedup, and filter∘dedup ≡ dedup∘filter only while the id
+    * pair determines the cosine: with a repeated id, one (id_a, id_b)
+    * key carries several cosines, and the pair survives if ANY of them
+    * passes rather than the one copy a dedup-first plan would keep.
+    * Not checked at run time — the check would add a Spark job to
+    * every call.
     */
   def cosineDupPairsPortable(df: DataFrame, threshold: Double, dim: Int,
                              bits: Int = 8, tables: Int = 6): DataFrame = {
@@ -234,45 +185,15 @@ object Similarity {
       .select(col("id_a"), col("id_b"), round(col("cosine"), 4).as("cosine"))
   }
 
-  /** Embedding-cosine near-duplicate pairs (cosine ≥ threshold),
-    * LSH-bucketed (id_a < id_b).
-    *
-    * Precondition: `id` is unique. The threshold filter runs below the
-    * pair dedup, and filter∘dedup ≡ dedup∘filter only while the id
-    * pair determines the cosine: with a repeated id, one (id_a, id_b)
-    * key carries several cosines, and the pair survives if ANY of them
-    * passes rather than the one copy a dedup-first plan would keep.
-    * Not checked at run time — the check would add a Spark job to
-    * every call.
-    */
-  def cosineDupPairs(df: DataFrame, threshold: Double, dim: Int,
-                     bits: Int = 10, tables: Int = 4): DataFrame = {
-    def bucketed(idName: String, vecName: String): DataFrame = {
-      val perTable = (0 until tables).map { t =>
-        df.select(col("id").as(idName), col("vec").as(vecName),
-          lit(t).as("table"),
-          hyperplaneSigUdf(bits, dim, t)(col("vec")).as("bucket"))
-      }
-      perTable.reduce(_ unionByName _)
-    }
-    // same scalar-proxy dedup as [[cosineDupPairsPortable]]
-    bucketed("id_a", "vec_a").join(bucketed("id_b", "vec_b"), Seq("table", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        cosine(col("vec_a"), col("vec_b")).as("cosine"))
-      .filter(col("cosine") >= threshold)
-      .dropDuplicates("id_a", "id_b")
-      .select("id_a", "id_b", "cosine")
-  }
-
   /** SemDedup (Abbas et al. 2023, "SemDeDup", public): semantic
     * near-duplicate REMOVAL — cluster the embedding space with the
     * portable IVF k-means ([[IvfIndex.trainPortable]]), then inside
     * each cluster drop every document whose cosine to a LOWER-id
     * cluster-mate reaches `tau` (keep-first, deterministic). Unlike
-    * [[cosineDupPairs]] (which REPORTS near-dup pairs), this emits the
-    * keep/drop decision a pipeline acts on, and unlike MinHash it
-    * catches paraphrases — text that shares meaning, not shingles.
+    * [[cosineDupPairsPortable]] (which REPORTS near-dup pairs), this
+    * emits the keep/drop decision a pipeline acts on, and unlike
+    * MinHash it catches paraphrases — text that shares meaning, not
+    * shingles.
     *
     * Scale shape at 10^10 docs: train touches k×dim driver state only;
     * assign is one map over the corpus; the pair stage is an EQUI-join

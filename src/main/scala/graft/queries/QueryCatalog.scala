@@ -602,13 +602,8 @@ object QueryCatalog {
 
   /** Winnow-min fingerprint summary, oracle-checkable end to end AND
     * throughput-shaped: TOKEN 5-gram portable hashes, window-8 minima,
-    * distinct set — pure Catalyst
-    * ([[TextAnalysis.winnowFingerprintsTokens]]); the oracle states the
-    * identical computation in SQL. (Round 2 benched the char-gram twin
-    * — one hash per CHARACTER, 13.6× slower — as if it were the
-    * operator's cost; the char variant stays unit-pinned in code, and
-    * the raw xxhash winnowing UDF remains the no-oracle-needed
-    * throughput ceiling.)
+    * distinct set ([[TextAnalysis.winnowFingerprintsTokens]]); the
+    * oracle states the identical computation in SQL.
     */
   def qFingerprint(spark: SparkSession, dir: String): DataFrame =
     TextAnalysis.winnowFingerprintsTokens(t(spark, dir, "documents"),
@@ -627,10 +622,9 @@ object QueryCatalog {
     Dedup.exactDedup(t(spark, dir, "documents"), "doc_id", "text")
       .select(col("doc_id"))
 
-  /** Portable MinHash+LSH pairs (pure Catalyst, full SQL oracle of the
-    * whole shingle→signature→band→cap→estimate pipeline, the
-    * `row_number ≤ 1000` bucket cap included); the xxhash permutation
-    * variant stays unit-test-pinned as the throughput path.
+  /** Portable MinHash+LSH pairs (full SQL oracle of the whole
+    * shingle→signature→band→cap→estimate pipeline, the
+    * `row_number ≤ 1000` bucket cap included).
     */
   def qMinhashPairs(spark: SparkSession, dir: String): DataFrame =
     Dedup.minhashPairsPortable(t(spark, dir, "documents"), "doc_id", "text",
@@ -640,15 +634,10 @@ object QueryCatalog {
   /** One-pass dedup over the portable pairs (drop every id that pairs
     * with a lower id) — oracle-checkable end to end.
     */
-  def qMinhashDedup(spark: SparkSession, dir: String): DataFrame = {
-    val docs = t(spark, dir, "documents")
-    val pairs = Dedup.minhashPairsPortable(docs, "doc_id", "text",
-      shingleK = 3, numHashes = 24, bands = 8, threshold = 0.5,
-      maxBucket = 1000)
-    docs.join(pairs.select(col("id_b").as("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
+  def qMinhashDedup(spark: SparkSession, dir: String): DataFrame =
+    Dedup.minhashDedup(t(spark, dir, "documents"), "doc_id", "text",
+        threshold = 0.5)
       .groupBy().agg(count(lit(1)).as("n_kept"))
-  }
 
   /** Transitive near-dup CLUSTER IDS: the full shingle → MinHash →
     * LSH-band → connected-components composition, oracle-checked end
@@ -679,10 +668,7 @@ object QueryCatalog {
         coalesce(col("label"), col("doc_id")).as("cluster"))
   }
 
-  /** Portable-sketch SimHash pairs (pure Catalyst, full SQL oracle);
-    * the 64-bit xxhash variant stays unit-test-pinned as the
-    * throughput path.
-    */
+  /** Portable-sketch SimHash pairs (full SQL oracle). */
   def qSimhashPairs(spark: SparkSession, dir: String): DataFrame =
     Dedup.simhashPairsPortable(t(spark, dir, "documents"), "doc_id", "text",
       maxDist = 3, bits = 32)
@@ -721,8 +707,7 @@ object QueryCatalog {
   }
 
   /** LSH ANN over portable hyperplanes — the ENTIRE approximate path
-    * (signatures, bucket join, exact rerank) is oracle-checked; the
-    * xxhash-plane variant stays unit-test-pinned for throughput.
+    * (signatures, bucket join, exact rerank) is oracle-checked.
     */
   def qAnnLsh(spark: SparkSession, dir: String): DataFrame = {
     val emb = embeddings(spark, dir)
@@ -737,8 +722,7 @@ object QueryCatalog {
     * ([[graft.operators.IvfIndex.trainPortable]]): train, assign,
     * probe and rerank are all exactly reproducible cross-engine, so the
     * ENTIRE pipeline — two unrolled Lloyd rounds included — has a SQL
-    * oracle (round-2 verdict missing #2 closed). The float/xxhash IVF
-    * stays as the throughput path, pinned by its recall unit tests.
+    * oracle (round-2 verdict missing #2 closed).
     */
   def qAnnIvf(spark: SparkSession, dir: String): DataFrame = {
     val emb = embeddings(spark, dir)

@@ -44,8 +44,8 @@ object StreamDedup {
     * `dropDuplicatesWithinWatermark` state store. Batches are
     * driver-side Seqs: VERIFICATION-scale only (the production entry
     * is [[dedupStream]] on a live readStream source).
-    */
-  /** @param statePartitions number of state-store partitions for the
+    *
+    * @param statePartitions number of state-store partitions for the
     *   replay's streaming query (`spark.sql.shuffle.partitions` at
     *   query start, restored afterwards). A replay of N driver-staged
     *   rows wants state shards ∝ N, not the session's batch-join

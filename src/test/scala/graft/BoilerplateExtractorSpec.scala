@@ -84,6 +84,23 @@ class BoilerplateExtractorSpec extends AnyFunSuite {
     assert(runs.distinct.size === 1)
   }
 
+  test("garbage in never throws: empty, stray markup, unclosed tags") {
+    assert(BE.extractText("") === "")
+    assert(BE.extractText("<<<>>>%%% <a href=") === "<<<>>>%%%")
+    BE.extractText("<html><body><div><p>never closed anywhere " * 3)
+  }
+
+  test("5,000-deep nesting extracts on a default-sized thread stack") {
+    // recursive DOM walks would overflow here; run on a fresh thread so
+    // the stack is the JVM default, not whatever the runner's thread has
+    val deep = "<html><body>" + "<div>" * 5000 + "word " * 20 + "</div>" * 5000
+    var out: Either[Throwable, String] = Left(new IllegalStateException("not run"))
+    val t = new Thread(() => out =
+      try Right(BE.extractText(deep)) catch { case e: Throwable => Left(e) })
+    t.start(); t.join()
+    assert(out === Right(Seq.fill(20)("word").mkString(" ")))
+  }
+
   test("title extraction with entity decode and regex fallback") {
     assert(BE.extractTitle("<html><head><title>A &amp; B</title></head></html>") ===
       Some("A & B"))

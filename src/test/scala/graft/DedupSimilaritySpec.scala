@@ -92,12 +92,13 @@ class DedupSimilaritySpec extends AnyFunSuite {
   }
 
   test("minhash pairs find exact and near dups, not unrelated docs") {
-    val pairs = Dedup.minhashPairs(docs, "doc_id", "text",
+    // a wider signature than the catalog's 24/8 shape: 64 slots in 16
+    // bands
+    val pairs = Dedup.minhashPairsPortable(docs, "doc_id", "text",
         shingleK = 3, numHashes = 64, bands = 16, threshold = 0.5)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((7L, 100L)), s"missing exact dup pair in $pairs")
-    assert(pairs.contains((9L, 101L)), s"missing near dup pair in $pairs")
-    assert(!pairs.exists(p => p._1 == 102L || p._2 == 102L))
+    assert(pairs === Set((7L, 100L), (9L, 101L)),
+      s"exactly the planted exact and near dup pairs, got $pairs")
   }
 
   test("minhash dedup removes the higher-id duplicate") {
@@ -251,13 +252,13 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(obsP.get("capped_buckets") === 8L,
       "one overflowing bucket per band must be counted")
     assert(obsP.get("rows_dropped_by_cap") === 8L * 1950L)
-    val obsX = Observation("cap-xxhash")
-    val pairsX = Dedup.minhashPairs(viral, "doc_id", "text",
+    val obsW = Observation("cap-wide")
+    val pairsW = Dedup.minhashPairsPortable(viral, "doc_id", "text",
       shingleK = 3, numHashes = 64, bands = 16, threshold = 0.5,
-      maxBucket = 50, capMetrics = Some(obsX))
-    assert(pairsX.count() === 1225L)
-    assert(obsX.get("capped_buckets") === 16L)
-    assert(obsX.get("rows_dropped_by_cap") === 16L * 1950L)
+      maxBucket = 50, capMetrics = Some(obsW))
+    assert(pairsW.count() === 1225L)
+    assert(obsW.get("capped_buckets") === 16L)
+    assert(obsW.get("rows_dropped_by_cap") === 16L * 1950L)
     // an uncapped-regime run on the REGULAR fixture reports zero:
     // the metric is attached (loud) even when nothing is capped
     val obs0 = Observation("cap-none")
@@ -378,10 +379,23 @@ class DedupSimilaritySpec extends AnyFunSuite {
   }
 
   test("simhash pairs find the near dup within hamming distance") {
-    val pairs = Dedup.simhashPairs(docs, "doc_id", "text", maxDist = 8)
+    val pairs = Dedup.simhashPairsPortable(docs, "doc_id", "text",
+        maxDist = 8, bits = 32)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((7L, 100L)))
     assert(pairs.contains((9L, 101L)))
+  }
+
+  test("simhash pairs reject a distance with no bit left per chunk") {
+    // maxDist >= bits leaves 0 bits per pigeonhole chunk: every chunk
+    // key would be the constant 0 and the band join all-pairs
+    Seq((32, 32), (40, 32), (-1, 32), (3, 0), (3, 33)).foreach {
+      case (maxDist, bits) =>
+        intercept[IllegalArgumentException] {
+          Dedup.simhashPairsPortable(docs, "doc_id", "text",
+            maxDist = maxDist, bits = bits)
+        }
+    }
   }
 
   test("ngram jaccard: identical = 1.0, disjoint = 0.0") {
@@ -390,6 +404,32 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(got((7L, 100L)) === 1.0)
     assert(got((7L, 102L)) === 0.0)
+  }
+
+  test("ngram jaccard agrees with the containment counts on the same pairs") {
+    // both verify stages derive the same gram sets, so for every pair
+    // jaccard = n_shared / (n_a + n_b - n_shared); a null-text doc has
+    // no grams and scores 0.0 (containment drops it)
+    val withNull = docs.unionByName(Seq(
+        (103L, null.asInstanceOf[String]), (104L, "two words"),
+        (105L, "two words and more"))
+      .toDF("doc_id", "text"))
+    val pairs = Seq((7L, 100L), (9L, 101L), (7L, 102L), (1L, 2L),
+      (104L, 105L), (7L, 103L)).toDF("id_a", "id_b")
+    Seq(2, 3, 5).foreach { k =>
+      val jac = Dedup.ngramJaccard(pairs, withNull, "doc_id", "text", k = k)
+        .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+      val cont = Dedup.ngramContainment(pairs, withNull, "doc_id", "text", k = k)
+        .collect().map(r => ((r.getLong(0), r.getLong(1)),
+          (r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
+      assert(jac.keySet === pairs.as[(Long, Long)].collect().toSet, s"k=$k")
+      assert(cont.keySet === jac.keySet - ((7L, 103L)), s"k=$k")
+      cont.foreach { case (pair, (na, nb, shared)) =>
+        assert(jac(pair) === shared.toDouble / (na + nb - shared),
+          s"k=$k pair $pair")
+      }
+      assert(jac((7L, 103L)) === 0.0)
+    }
   }
 
   // ---- similarity ----
@@ -424,8 +464,9 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val exact = Similarity.cosineTopK(queries, vecs, k = 5)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val approx = Similarity.lshTopK(queries, vecs, k = 5, dim = 20,
-        bits = 8, tables = 6)
+    // fewer, more selective tables than the portable sibling test
+    val approx = Similarity.lshTopKPortable(queries, vecs, k = 5, dim = 20,
+        bits = 12, tables = 4)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (exact intersect approx).size.toDouble / exact.size
@@ -451,8 +492,8 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val twin = base.clone(); twin(0) += 0.01f
     val vecs = (clusteredVecs(50, 16) ++ Seq((900L, base), (901L, twin)))
       .toDF("id", "vec")
-    val pairs = Similarity.cosineDupPairs(vecs, threshold = 0.999, dim = 16,
-        bits = 8, tables = 6)
+    val pairs = Similarity.cosineDupPairsPortable(vecs, threshold = 0.999,
+        dim = 16, bits = 8, tables = 6)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((900L, 901L)))
   }
@@ -460,16 +501,17 @@ class DedupSimilaritySpec extends AnyFunSuite {
   test("IVF ANN: deterministic training, recall >= 0.6 vs brute force") {
     import graft.operators.IvfIndex
     val vecs = clusteredVecs(300, 20).toDF("id", "vec")
-    val model1 = IvfIndex.train(spark, vecs, k = 10, iterations = 2)
-    val model2 = IvfIndex.train(spark, vecs, k = 10, iterations = 2)
-    assert(model1.centroids.map(_.toSeq).toSeq === model2.centroids.map(_.toSeq).toSeq,
+    val cents1 = IvfIndex.trainPortable(spark, vecs, k = 10, iterations = 2)
+    val cents2 = IvfIndex.trainPortable(spark, vecs, k = 10, iterations = 2)
+    assert(cents1.map(_.toSeq).toSeq === cents2.map(_.toSeq).toSeq,
       "training must be deterministic")
-    val assigned = IvfIndex.assign(vecs, model1)
+    val assigned = IvfIndex.assignPortable(vecs, cents1)
     val queries = vecs.filter(col("id") < 20)
     val exact = Similarity.cosineTopK(queries, vecs, k = 5)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val approx = IvfIndex.topK(queries, assigned, model1, k = 5, nprobe = 4)
+    val approx = IvfIndex.topKPortable(queries, assigned, cents1, k = 5,
+        nprobe = 4)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (exact intersect approx).size.toDouble / exact.size

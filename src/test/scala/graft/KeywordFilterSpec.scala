@@ -67,4 +67,8 @@ class KeywordFilterSpec extends AnyFunSuite {
   test("empty expression throws") {
     intercept[IllegalArgumentException](KeywordFilter.compile("   "))
   }
+
+  test("unbalanced parentheses throw") {
+    intercept[IllegalArgumentException](KeywordFilter.compile(")(()"))
+  }
 }

@@ -671,6 +671,48 @@ class StreamingAndPlanSpec extends AnyFunSuite {
       "the pair stage must join on the cluster id, not cross the corpus")
   }
 
+  test("sketch-family catalog queries carry no ScalaUDF in any plan they run") {
+    // every near-dup and ANN query runs the portable, oracle-checked
+    // path; a Scala-UDF copy reached from a catalog path would show up
+    // as a ScalaUDF expression. Plans are captured from every query
+    // execution the call makes (centroid training collects, pair-table
+    // checkpoints) plus the result's own plan.
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.ListenerBusDrain
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def udfs(p: LogicalPlan): Seq[String] =
+      p.collectWithSubqueries { case n => n }.flatMap(_.expressions)
+        .flatMap(_.collect { case u: ScalaUDF => u.udfName.getOrElse(u.toString) })
+    val seen = new ConcurrentLinkedQueue[LogicalPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(qe.optimizedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        seen.add(qe.optimizedPlan)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Seq("q_minhash_pairs", "q_minhash_dedup", "q_dup_clusters",
+        "q_simhash_pairs", "q_fingerprint", "q_containment_pairs",
+        "q_ngram_jaccard", "q_ann_lsh", "q_cosine_dup_pairs", "q_ann_ivf",
+        "q_semdedup").foreach { name =>
+        ListenerBusDrain.drain(spark.sparkContext)
+        seen.clear()
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        df.collect()
+        ListenerBusDrain.drain(spark.sparkContext)
+        val plans = df.queryExecution.optimizedPlan +: seen.asScala.toSeq
+        assert(seen.size >= 1, s"$name: no query execution was seen")
+        val found = plans.flatMap(udfs)
+        assert(found.isEmpty, s"$name runs Scala UDFs: ${found.distinct}")
+      }
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("familiarityScore never hints broadcast on the unbounded bigram dimension") {
     // same discipline as topTerms: with auto-broadcast off, any
     // BroadcastExchange in the plan could only come from a hint — and

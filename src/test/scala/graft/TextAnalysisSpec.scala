@@ -64,13 +64,18 @@ class TextAnalysisSpec extends AnyFunSuite {
     val b = a.replace("lazy", "sleepy") // one-token edit
     val c = "entirely unrelated content about catalyst optimizer rules and " +
       "whole stage code generation inside the spark sql execution engine"
-    val fp = TextAnalysis.fingerprintUdf(k = 5, w = 4)
-    val df = Seq(("a", a), ("b", b), ("c", c)).toDF("id", "text")
-      .select($"id", fp($"text").as("fp"))
-    val m = df.collect().map(r => r.getString(0) -> r.getSeq[Long](1).toSet).toMap
-    val abOverlap = (m("a") intersect m("b")).size.toDouble / m("a").size
-    assert(abOverlap > 0.5, s"overlap=$abOverlap")
-    assert((m("a") intersect m("c")).isEmpty)
+    // the summary (n_fingerprints, min_fp, max_fp): the edit leaves
+    // the grams away from "lazy" — and with them the largest selected
+    // fingerprint — in place; unrelated text shares neither extreme
+    val m = TextAnalysis.winnowFingerprintsTokens(
+        Seq(("a", a), ("b", b), ("c", c)).toDF("id", "text"), "id", "text",
+        k = 5, w = 4)
+      .collect().map(r => r.getString(0) -> ((r.getLong(2), r.getLong(3)))).toMap
+    assert(m("a")._2 === m("b")._2, s"edit moved max_fp: $m")
+    Seq("a", "b").foreach { x =>
+      assert(m("c")._1 != m(x)._1 && m("c")._2 != m(x)._2,
+        s"unrelated text shares an extreme with $x: $m")
+    }
   }
 
   test("winnowFingerprintsTokens matches a brute-force reference") {
@@ -107,10 +112,17 @@ class TextAnalysisSpec extends AnyFunSuite {
   }
 
   test("fingerprint is deterministic") {
-    val fp = TextAnalysis.fingerprintUdf()
-    val df = Seq("same text for both runs of this determinism check with words")
-      .toDF("text").select(fp($"text").as("fp"))
-    assert(df.collect().head.getSeq[Long](0) === df.collect().head.getSeq[Long](0))
+    // same rows on a rerun and at another parallelism
+    val df = (0 until 40).map(i => (i.toLong,
+        s"same text for both runs of this determinism check with words $i"))
+      .toDF("doc_id", "text")
+    def run(in: org.apache.spark.sql.DataFrame) =
+      TextAnalysis.winnowFingerprintsTokens(in, "doc_id", "text", k = 5, w = 4)
+        .collect().map(_.toSeq).toSet
+    val first = run(df)
+    assert(first.size === 40)
+    assert(run(df) === first)
+    assert(run(df.repartition(7)) === first)
   }
 
   test("topTerms ranks rare-and-frequent terms first, ties by term asc") {
