@@ -71,18 +71,15 @@ object BoilerplateExtractor {
     *
     * `text` is byte-identical to [[extractText]] BY CONSTRUCTION
     * (same cleaned string, same parse, same pruning). Title and links
-    * differ from the strict raw-parse path ONLY on markup the
-    * reference's own string passes discard before its soup would have
-    * seen it natively:
-    *  - anchors/titles in text BEFORE the `<html` tag (the strict path
-    *    reads them off the raw parse; the reference soup of the raw
-    *    page would too — divergence pinned in BoilerplateExtractorSpec);
+    * differ from a second parse of the RAW page (the reference's
+    * soup-of-rawpage) ONLY on markup the reference's own string passes
+    * discard before its soup would have seen it natively:
+    *  - anchors/titles in text BEFORE the `<html` tag (a raw parse
+    *    reads them; divergence pinned in BoilerplateExtractorSpec);
     *  - anchors inside `<!-- -->` comments whose removal changes
     *    script extents (pathological; pinned likewise).
     * The title fallback regex still scans the RAW page, so a page
-    * whose only `<title>` predates `<html` keeps its title. Engines
-    * needing strict raw-parse title/link semantics set
-    * `CrawlConfig.strictExtract` (golden replay passes under BOTH).
+    * whose only `<title>` predates `<html` keeps its title.
     */
   def extractAll(rawPage: String, pageUrl: String): Extracted = {
     val doc = HtmlDom.parse(cleanedPage(rawPage))
@@ -389,8 +386,7 @@ object BoilerplateExtractor {
     * originals live on as spec twins in BoilerplateExtractorSpec and a
     * seeded fuzz suite pins byte-identity. Rationale: this runs once
     * per page in the wave hot path, and the regex engine's per-match
-    * allocation was a measurable slice of extract CPU (MicroBench
-    * --phases).
+    * allocation was a measurable slice of extract CPU.
     */
   def stripHtml(textIn: String): String = {
     var text = removeNulls(textIn)

@@ -206,13 +206,13 @@ object Model {
         * scan; 0 disables. Default ON — the check is a manifest read
         * when under the bound, so short crawls pay nothing. */
       compactEveryWaves: Int = 8,
-      /** segment-count bound for the compaction check. > 1: LSM-style
+      /** segment-count bound for the compaction check (>= 2): LSM-style
         * tiered merge of the SMALLEST segments once the count exceeds
         * the bound — each row is rewritten O(log waves) times over the
         * crawl, never O(waves/k) full-table rewrites (the write-
         * amplification bound that matters when the processed log is
-        * most of 100 TB). 1: full single-segment merge every check
-        * (small states where one segment beats everything). */
+        * most of 100 TB). At 2, each check merges a log back to two
+        * segments: the newest delta and everything before it. */
       compactMaxSegments: Int = 64,
       /** drop merged-away segment directories right after a compaction
         * (only non-live segments are ever deleted, so resume/crash
@@ -229,16 +229,6 @@ object Model {
         * gate — the 10^10 regime — the bloom-prefiltered shuffled
         * anti-join runs as before. 10M keys ≈ 80 MB relation. */
       broadcastSeenKeys: Long = 10000000L,
-      /** false (default): FUSED single-parse extraction — title and
-        * outlinks are read from the one parse of the string-cleaned
-        * page (text is byte-identical either way; title/links can
-        * differ only on markup before the `<html` tag or inside
-        * comments that alter script extents — see
-        * [[graft.core.BoilerplateExtractor.extractAll]]). true:
-        * strict two-parse semantics (title/links off a separate RAW
-        * parse, exactly the reference's soup-of-rawpage), at ~2×
-        * parse cost per byte. */
-      strictExtract: Boolean = false,
       /** politeness wave clock: with a per-host crawl delay d (robots
         * Crawl-delay or HostPolicy), at most waveDurationMs/d URLs of
         * that host are schedulable per wave; 0 disables the delay gate

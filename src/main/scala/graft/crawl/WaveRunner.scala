@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{BoilerplateExtractor, Hashing, HtmlDom, LinkExtractor, UrlNormalizer}
+import graft.core.{BoilerplateExtractor, Hashing, UrlNormalizer}
 import graft.core.Model._
 import graft.operators.{Politeness, SeenSet}
 import graft.state.{ParquetDir, SnapshotTable}
@@ -92,6 +92,11 @@ final class WaveRunner(
     robotsRules: Seq[RobotsRule] = Nil,
     robotsDim: Option[DataFrame] = None) {
 
+  // the tiered merge keeps at least the newest delta beside the merged
+  // segment: a smaller bound would silently act as 2
+  require(config.compactMaxSegments >= 2,
+    s"compactMaxSegments must be >= 2, got ${config.compactMaxSegments}")
+
   import spark.implicits._
 
   val frontierT = SnapshotTable(spark, stateRoot, "frontier")
@@ -135,8 +140,6 @@ final class WaveRunner(
     */
   private[graft] var deferInjector: Option[Column] = None
 
-  private val timing = sys.env.contains("GRAFT_TIMING")
-
   /** Wall seconds per phase, summed across waves (label with the
     * per-wave "wN " prefix stripped, e.g. "pop+stage",
     * "fetch+extract+stage", "expand+stage-new"). Always accumulated —
@@ -171,7 +174,6 @@ final class WaveRunner(
       case i  => label.substring(i + 1)
     }
     phaseSeconds.synchronized { phaseSeconds(phase) += sec }
-    if (timing) println(f"[graft-timing] $label: $sec%.2fs")
   }
 
   // the Column APIs register kernels into the ACTIVE session only; a
@@ -369,13 +371,10 @@ final class WaveRunner(
     true
   }
 
-  /** Bound `t`'s live segment count: tiered merge, or a full merge
-    * when `compactMaxSegments` ≤ 1.
-    */
+  /** Bound `t`'s live segment count with the tiered merge. */
   private def compactTable(t: SnapshotTable,
                            merge: DataFrame => DataFrame = identity): Unit =
-    if (config.compactMaxSegments > 1) t.compactTiered(config.compactMaxSegments, merge)
-    else t.compact(merge)
+    t.compactTiered(config.compactMaxSegments, merge)
 
   // ---- pending-state resolution (read-side; no frontier rewrite) ----
 
@@ -631,7 +630,6 @@ final class WaveRunner(
     // the reference's updateSessionInfo (sessioninfomanager.py:72-90)
     // computed inline, no extra join ----
     val counter = extractCounter
-    val strict = config.strictExtract
     val extracted = fetchSource.fetched(toFetch, poppedN)
       .select(col("urlHash"), col("url"), col("host"), col("score"),
         col("depth"), col("priority"), col("attempts"), col("priorHash"),
@@ -641,23 +639,13 @@ final class WaveRunner(
         rows.map { case (urlHash, url, host, scoreV, depth, priority,
             attempts, priorHash, html) =>
           counter.add(1)
-          val s = new String(html, UTF_8)
-          // FUSED default: ONE parse of the cleaned page shared by
-          // title + outlinks + text (BoilerplateExtractor.extractAll).
-          // strictExtract restores the two-parse raw-soup semantics.
-          val (title, text, rawLinks) =
-            if (strict) {
-              val rawDoc = HtmlDom.parse(s)
-              (BoilerplateExtractor.titleFromDoc(rawDoc, s).getOrElse("No Title"),
-                BoilerplateExtractor.extractText(s),
-                LinkExtractor.linkUrls(rawDoc, url))
-            } else {
-              val e = BoilerplateExtractor.extractAll(s, url)
-              (e.title.getOrElse("No Title"), e.text, e.links)
-            }
-          val links = rawLinks.filter(_ != url).distinct // self-link drop (F8)
-          val contentHash = Hashing.contentHash(Seq(text, title)) // O6
-          (urlHash, url, host, scoreV, FrontierState.Fetched, title, text,
+          // ONE parse of the cleaned page shared by title + outlinks +
+          // text (BoilerplateExtractor.extractAll)
+          val e = BoilerplateExtractor.extractAll(new String(html, UTF_8), url)
+          val title = e.title.getOrElse("No Title")
+          val links = e.links.filter(_ != url).distinct // self-link drop (F8)
+          val contentHash = Hashing.contentHash(Seq(e.text, title)) // O6
+          (urlHash, url, host, scoreV, FrontierState.Fetched, title, e.text,
             contentHash, html.length.toLong, links.toArray, depth, priority,
             attempts + 1, priorHash == null || priorHash != contentHash)
         }

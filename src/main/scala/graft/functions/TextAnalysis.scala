@@ -62,8 +62,9 @@ object TextAnalysis {
     // ONE generated [[graft.plans.LangPick]] pass over ONE codegen'd
     // tokenization: hit counting AND the ratio/argmax decision live in
     // the kernel (the arithmetic replicated verbatim, IEEE doubles) —
-    // bit-identical to the interpreted fold ([[langIdFold]], kept as
-    // the executable semantics statement, equivalence test-pinned).
+    // bit-identical to the interpreted fold (`langIdFold`, kept in test
+    // sources as the executable semantics statement, equivalence
+    // test-pinned).
     // Two intermediate forms were measured SLOWER and rejected: three
     // separate TokenStats calls re-ran the split per call, and a
     // counts-array kernel referenced from the Catalyst when-chain was
@@ -74,43 +75,6 @@ object TextAnalysis {
       split(lower(text), "[^a-zA-Zäöüßáéíóúñ']+"),
       array(Seq(EnStop, DeStop, EsStop)
         .map(s => array(s.map(lit): _*)): _*)), lit("es"))
-  }
-
-  /** The single-fold HOF form of [[langId]], kept as the executable
-    * semantics statement the TokenStats formulation must match
-    * (equivalence test-pinned).
-    */
-  private[graft] def langIdFold(text: Column): Column = {
-    // ONE pass over ONE tokenization: the three per-language hit
-    // counts (plus the token count) ride a single fold accumulator,
-    // and the argmax happens in the finish lambda. The ratio
-    // arithmetic in the finish lambda is the ORIGINAL expression
-    // verbatim (same double divisions, same
-    // comparisons), so results are bit-identical.
-    val w = words(text)
-    val zero = struct(lit(0).as("en"), lit(0).as("de"), lit(0).as("es"),
-      lit(0).as("n"))
-    def hit(x: Column, stop: Seq[String]): Column =
-      when(x.isin(stop.map(lit): _*), 1).otherwise(0)
-    // NULL text: the old form's when-chain fell through every null
-    // comparison to the final otherwise — preserved via coalesce
-    coalesce(aggregate(w, zero,
-      (acc, x) => struct(
-        (acc.getField("en") + hit(x, EnStop)).as("en"),
-        (acc.getField("de") + hit(x, DeStop)).as("de"),
-        (acc.getField("es") + hit(x, EsStop)).as("es"),
-        (acc.getField("n") + 1).as("n")),
-      acc => {
-        val n = acc.getField("n").cast("double")
-        def ratio(f: String): Column =
-          when(acc.getField("n") === 0, lit(0.0))
-            .otherwise(acc.getField(f).cast("double") / n)
-        val en = ratio("en"); val de = ratio("de"); val es = ratio("es")
-        when(greatest(en, de, es) < 0.02, lit("und"))
-          .when(en >= de && en >= es, lit("en"))
-          .when(de >= en && de >= es, lit("de"))
-          .otherwise(lit("es"))
-      }), lit("es"))
   }
 
   /** Document quality score in [0,1]: blends length saturation,
@@ -200,8 +164,8 @@ object TextAnalysis {
     // ONE generated pass per row ([[graft.plans.WinnowStats]]): gram
     // hashing, the sliding minima and the distinct/min/max summary are
     // all row-local, so the operator is a PURE MAP — the relational
-    // statement below ([[winnowFingerprintsTokensRelational]],
-    // equivalence test-pinned) shuffled the whole token stream into
+    // statement (`winnowFingerprintsTokensRelational`, kept in test
+    // sources, equivalence test-pinned) shuffled the whole token stream into
     // two doc-keyed window passes plus an aggregate for three per-row
     // numbers. Null-text docs yield a null struct and are dropped,
     // exactly like the relational size filters.
@@ -211,50 +175,6 @@ object TextAnalysis {
       .filter(col("g").isNotNull)
       .select(col(idCol), col("g.n_fingerprints").as("n_fingerprints"),
         col("g.min_fp").as("min_fp"), col("g.max_fp").as("max_fp"))
-  }
-
-  /** The original relational statement of [[winnowFingerprintsTokens]]
-    * — kept as the executable semantics the native kernel must match
-    * (equivalence test-pinned); the kernel is the production path.
-    */
-  private[graft] def winnowFingerprintsTokensRelational(
-      df: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, k: Int = 5, w: Int = 8)
-      : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val toks = filter(split(lower(col(textCol)), "[^a-z0-9_]+"), t => length(t) > 0)
-    val docsT = df.select(col(idCol), toks.as("tk"))
-    val wLead = Window.partitionBy(idCol).orderBy("pos")
-    val leadCols = (1 until k).map(i => lead(col("tok"), i).over(wLead).as(s"l$i"))
-    // complete-gram count per doc is known BEFORE the explode
-    // (size - k + 1) — carrying it as a column saves a third
-    // whole-partition WindowExec pass over the exploded grams.
-    // (Round-6 note: a pure-map zip_with/fold formulation of the grams
-    // and sliding minima was measured — the k-1 + w-1 chained
-    // interpreted array re-materializations cost ~3× the two doc-keyed
-    // windows they replace; the relational form stays.)
-    val grams = docsT.filter(size(col("tk")) >= k)
-      .withColumn("m", (size(col("tk")) - (k - 1)).cast("long"))
-      .select(col(idCol), col("m"), posexplode(col("tk")).as(Seq("pos", "tok")))
-      .select((col(idCol) +: col("m") +: col("pos") +: col("tok") +: leadCols): _*)
-      .filter(col(s"l${k - 1}").isNotNull) // only complete k-grams
-      .select(col(idCol), col("m"), col("pos"),
-        portableHash(concat_ws(" ",
-          (col("tok") +: (1 until k).map(i => col(s"l$i"))): _*)).as("gh"))
-    val slide = Window.partitionBy(idCol).orderBy("pos")
-      .rowsBetween(Window.currentRow, w - 1)
-    val big = grams
-      .withColumn("wmin", min(col("gh")).over(slide))
-      .filter(col("pos") <= greatest(col("m") - w, lit(0)))
-      .groupBy(col(idCol))
-      .agg(countDistinct(col("wmin")).cast("int").as("n_fingerprints"),
-        min(col("wmin")).as("min_fp"),
-        max(col("wmin")).as("max_fp"))
-    val small = docsT.filter(size(col("tk")) < k)
-      .select(col(idCol), portableHash(array_join(col("tk"), " ")).as("fp"))
-      .select(col(idCol), lit(1).as("n_fingerprints"),
-        col("fp").as("min_fp"), col("fp").as("max_fp"))
-    big.unionByName(small)
   }
 
   /** Per-document top-k characteristic terms — the document-keyword
@@ -488,8 +408,8 @@ object TextAnalysis {
   def gopherRules(text: Column): Seq[Column] = {
     // generated kernel ([[graft.plans.GopherSignals]]): ONE
     // generated pass over the text computes every signal; the HOF
-    // formulation below ([[gopherRulesHof]]) remains the executable
-    // statement of the semantics (equivalence test-pinned). The HOF
+    // formulation (`gopherRulesHof`, in test sources) remains the
+    // executable statement of the semantics (equivalence test-pinned). The HOF
     // form ran ~six interpreted CodegenFallback subtrees per row, each
     // re-running the tokenizing split (no CSE across fallback
     // subtrees) — same rationale as [[hashClassifierScore]]'s kernel.
@@ -497,41 +417,6 @@ object TextAnalysis {
     Seq("n_words", "mean_word_len", "symbol_ratio", "bullet_frac",
       "ellipsis_frac", "alpha_word_frac", "n_stop_hits", "gopher_pass")
       .map(f => g.getField(f).as(f))
-  }
-
-  /** The original pure-Catalyst HOF form of [[gopherRules]], kept as
-    * the executable semantics statement the native kernel must match
-    * (equivalence test-pinned).
-    */
-  def gopherRulesHof(text: Column): Seq[Column] = {
-    val tk = filter(split(trim(text), "\\s+"), t => length(t) > 0)
-    val nWords = size(tk)
-    val nWordsD = nWords.cast("double")
-    val meanLen = when(nWords === 0, lit(0.0)).otherwise(
-      round(aggregate(tk, lit(0L), (acc, t) => acc + length(t))
-        .cast("double") / nWordsD, 4))
-    val nSymbols = regexp_count(text, lit("#")) +
-      regexp_count(text, lit("\\.\\.\\.")) + regexp_count(text, lit("…"))
-    val symbolRatio = when(nWords === 0, lit(0.0))
-      .otherwise(round(nSymbols.cast("double") / nWordsD, 4))
-    val lines = split(text, "\n")
-    val nLines = size(lines).cast("double")
-    val bulletFrac = round(size(filter(lines,
-      l => l.rlike("^\\s*[-*•]"))).cast("double") / nLines, 4)
-    val ellipsisFrac = round(size(filter(lines,
-      l => l.rlike("(\\.\\.\\.|…)\\s*$"))).cast("double") / nLines, 4)
-    val alphaFrac = when(nWords === 0, lit(0.0)).otherwise(
-      round(size(filter(tk, t => t.rlike("[a-zA-Z]"))).cast("double") /
-        nWordsD, 4))
-    val stopHits = size(filter(tk,
-      t => lower(t).isin(GopherStop.map(lit): _*)))
-    val pass = nWords.between(50, 100000) && meanLen.between(3.0, 10.0) &&
-      symbolRatio < 0.1 && bulletFrac < 0.9 && ellipsisFrac < 0.3 &&
-      alphaFrac > 0.8 && stopHits >= 2
-    Seq(nWords.cast("int").as("n_words"), meanLen.as("mean_word_len"),
-      symbolRatio.as("symbol_ratio"), bulletFrac.as("bullet_frac"),
-      ellipsisFrac.as("ellipsis_frac"), alphaFrac.as("alpha_word_frac"),
-      stopHits.cast("int").as("n_stop_hits"), pass.as("gopher_pass"))
   }
 
   /** Hashing-trick linear text classifier score (the fastText /
@@ -558,31 +443,15 @@ object TextAnalysis {
     portableHash(feature) % buckets - lit(buckets / 2)
 
   def hashClassifierScore(text: Column, buckets: Int = 1001): Column = {
-    // generated kernel ([[graft.plans.ClassifierScore]]): the
-    // HOF formulation below remains the executable statement of the
-    // semantics (equivalence is test-pinned); the kernel replaces
+    // generated kernel ([[graft.plans.ClassifierScore]]): the HOF
+    // formulation (`hashClassifierScoreFold`, in test sources) remains
+    // the executable statement of the semantics (equivalence is
+    // test-pinned); the kernel replaces
     // per-feature interpreted lambda dispatch + an interpreted
     // md5/conv/substring subtree per feature with one generated call
     // into a tight loop — same rationale as [[graft.plans.VectorExprs]].
     val tk = filter(split(lower(text), "[^a-z0-9_']+"), t => length(t) > 0)
     graft.plans.Kernels.classifier_score(tk, lit(buckets))
-  }
-
-  /** The original HOF fold form of [[hashClassifierScore]], kept as
-    * the executable semantics statement the native kernel must match
-    * (equivalence test-pinned).
-    */
-  def hashClassifierScoreFold(text: Column, buckets: Int = 1001): Column = {
-    val tk = filter(split(lower(text), "[^a-z0-9_']+"), t => length(t) > 0)
-    val uni = coalesce(
-      aggregate(tk, lit(0L), (acc, t) => acc + hashFeatureWeight(t, buckets)),
-      lit(0L))
-    val bi = when(size(tk) < 2, lit(0L)).otherwise(coalesce(aggregate(
-      zip_with(tk, slice(tk, lit(2), greatest(size(tk) - 1, lit(1))),
-        (a, b) => when(b.isNull, lit(0L))
-          .otherwise(hashFeatureWeight(concat(a, lit(" "), b), buckets))),
-      lit(0L), (acc, x) => acc + x), lit(0L)))
-    uni + bi
   }
 
   /** Fixed-window token chunking with overlap — the pretraining/RAG
@@ -611,40 +480,14 @@ object TextAnalysis {
     // posexploded every token into ≤ ceil(window/stride) chunk rows
     // and aggregated per (doc, chunk) with a collect_list sort — a
     // corpus-sized shuffle for per-row-computable values (guide §2.4).
-    // Relational statement kept as [[chunkTokensRelational]],
-    // equivalence test-pinned.
+    // Relational statement kept in test sources as
+    // `chunkTokensRelational`, equivalence test-pinned.
     val ch = graft.plans.Kernels.chunk_hashes(
       split(lower(col(textCol)), "[^a-z0-9_']+"),
       lit(window), lit(stride), lit(minTokens))
     df.select(col(idCol), explode(ch).as("c"))
       .select(col(idCol), col("c.chunk_id").as("chunk_id"),
         col("c.n_tokens").as("n_tokens"), col("c.chunk_hash").as("chunk_hash"))
-  }
-
-  /** The original relational statement of [[chunkTokens]] — kept as
-    * the executable semantics the native kernel must match
-    * (equivalence test-pinned); the kernel is the production path.
-    */
-  private[graft] def chunkTokensRelational(df: org.apache.spark.sql.DataFrame,
-      idCol: String, textCol: String, window: Int = 64, stride: Int = 48,
-      minTokens: Int = 8): org.apache.spark.sql.DataFrame = {
-    require(stride > 0 && stride <= window && minTokens >= 1)
-    val toks = filter(split(lower(col(textCol)), "[^a-z0-9_']+"),
-      t => length(t) > 0)
-    val ex = df.select(col(idCol), posexplode(toks).as(Seq("pos", "tok")))
-    // token at pos belongs to chunk c iff c*stride <= pos < c*stride+window
-    // i.e. c in [ceil((pos-window+1)/stride), floor(pos/stride)]
-    val lo = greatest(ceil((col("pos") - window + 1).cast("double") / stride)
-      .cast("int"), lit(0))
-    val hi = expr(s"pos div $stride").cast("int") // int div, NOT / (double)
-    ex.select(col(idCol), col("pos"), col("tok"),
-        explode(sequence(lo, hi)).as("chunk_id"))
-      .groupBy(col(idCol), col("chunk_id"))
-      .agg(count(lit(1)).cast("int").as("n_tokens"),
-        md5(concat_ws(" ", transform(
-          array_sort(collect_list(struct(col("pos"), col("tok")))),
-          s => s.getField("tok")))).as("chunk_hash"))
-      .filter(col("n_tokens") >= minTokens)
   }
 
   /** PII patterns, deliberately RE2-compatible (no backreferences or

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -84,6 +84,21 @@ object Dedup {
     df.join(losers, Seq(idCol), "left_anti")
   }
 
+  /** The eager materialization the iterative operators (connected
+    * components, PageRank, SemDedup's assignment) take per round:
+    * `checkpoint()` to the SparkContext's checkpoint dir when
+    * `reliable` (DFS on a cluster — the lost-executor-safe path; the
+    * caller must have called `sc.setCheckpointDir`, checked here,
+    * before the operator launches any job), else the local[*]-only
+    * `localCheckpoint` fast path.
+    */
+  private[graft] def checkpointer(spark: SparkSession,
+                                  reliable: Boolean): DataFrame => DataFrame = {
+    require(!reliable || spark.sparkContext.getCheckpointDir.isDefined,
+      "reliableCheckpoints=true requires sc.setCheckpointDir (a DFS path on a cluster)")
+    if (reliable) _.checkpoint(eager = true) else _.localCheckpoint(true)
+  }
+
   /** Minimum reachable label per vertex over an undirected pair graph —
     * iterative min propagation with POINTER HALVING to a fixpoint (the
     * label-propagation connected-components kernel, accelerated): each
@@ -114,12 +129,7 @@ object Dedup {
     // — analysis cost grows 3^rounds and a 12-round run kills the
     // driver. Checkpointing flattens the plan to a LogicalRDD so each
     // round re-analyzes O(1) nodes.
-    val ckpt: DataFrame => DataFrame =
-      if (reliableCheckpoints) { d =>
-        require(d.sparkSession.sparkContext.getCheckpointDir.isDefined,
-          "reliableCheckpoints=true requires sc.setCheckpointDir (a DFS path on a cluster)")
-        d.checkpoint(eager = true)
-      } else _.localCheckpoint(true)
+    val ckpt = checkpointer(vertices.sparkSession, reliableCheckpoints)
     var labels = ckpt(vertices.select(col(vertices.columns.head).as("v"))
       .withColumn("label", col("v")))
     var iter = 0
@@ -191,7 +201,8 @@ object Dedup {
     *  2. signature slot j = min over shingles of the 32-bit md5 word
     *     j%4 of md5((j/4) ':' shingle) — steps 1-2 run in one
     *     generated pass per row ([[graft.plans.MinhashSig]]), whose
-    *     relational statement is [[minhashSigsRelational]];
+    *     relational statement is the test-side
+    *     `DedupSimilaritySpec.minhashSigsRelational`;
     *  3. band keys = md5 of each band's signature slice; buckets
     *     capped at `maxBucket` rows (deterministic `row_number ≤ cap`
     *     by doc id, LOUD via the observed cap metric — pass
@@ -228,8 +239,8 @@ object Dedup {
     // ([[graft.plans.MinhashSig]]): shingling and the 24 md5-word
     // minima are row-local, so the signature stage is now a PURE MAP
     // fused with the scan — the relational statement (posexplode +
-    // window leads + one min aggregate, kept below as
-    // [[minhashSigsRelational]], equivalence test-pinned) shuffled the
+    // window leads + one min aggregate, kept in test sources as
+    // `minhashSigsRelational`, equivalence test-pinned) shuffled the
     // whole token stream into doc-keyed window sorts to compute 24
     // per-doc numbers (guide §2.4: the banding join is this operator's
     // only fundamental exchange). Null-text docs yield a null
@@ -276,44 +287,6 @@ object Dedup {
       .filter(col("est_jaccard") >= threshold)
       .dropDuplicates("id_a", "id_b")
       .select("id_a", "id_b", "est_jaccard")
-  }
-
-  /** The original relational statement of the portable MinHash
-    * signatures — posexplode + window leads build the shingles, one
-    * aggregate takes the `numHashes` minima (permutation j's hash is
-    * 32-bit word j%4 of md5((j/4) ':' shingle); the md5s are hoisted
-    * below the aggregate so 24 permutations cost 6 evaluations per
-    * shingle). Kept as the executable semantics statement the
-    * [[graft.plans.MinhashSig]] kernel must match (equivalence
-    * test-pinned); the kernel is the production path.
-    */
-  private[graft] def minhashSigsRelational(df: DataFrame, idCol: String,
-      textCol: String, shingleK: Int = 3, numHashes: Int = 24): DataFrame = {
-    val toks = filter(split(lower(col(textCol)), "\\W+"), t => length(t) > 0)
-    val docsT = df.select(col(idCol).as("doc_id_"), toks.as("tk"))
-    val w = Window.partitionBy("doc_id_").orderBy("pos")
-    val leadCols = (1 until shingleK).map(i => lead(col("tok"), i).over(w).as(s"l$i"))
-    val bigShingles = docsT.filter(size(col("tk")) >= shingleK)
-      .select(col("doc_id_"), posexplode(col("tk")).as(Seq("pos", "tok")))
-      .select((col("doc_id_") +: col("tok") +: leadCols): _*)
-      .filter(col(s"l${shingleK - 1}").isNotNull)
-      .select(col("doc_id_"), concat_ws(" ",
-        (col("tok") +: (1 until shingleK).map(i => col(s"l$i"))): _*).as("sh"))
-    val smallShingles = docsT.filter(size(col("tk")) < shingleK)
-      .select(col("doc_id_"), concat_ws(" ", col("tk")).as("sh"))
-    val shingles = bigShingles.unionByName(smallShingles)
-    val md5Groups = (numHashes + 3) / 4
-    val withMd5 = shingles.select(col("doc_id_") +:
-      (0 until md5Groups).map(g =>
-        md5(concat(lit(s"$g:"), col("sh"))).as(s"m$g")): _*)
-    val minCols = (0 until numHashes).map { j =>
-      min(conv(substring(col(s"m${j / 4}"), 1 + 8 * (j % 4), 8), 16, 10)
-        .cast("long")).as(s"mh$j")
-    }
-    withMd5.groupBy(col("doc_id_"))
-      .agg(minCols.head, minCols.tail: _*)
-      .select(col("doc_id_"),
-        array((0 until numHashes).map(j => col(s"mh$j")): _*).as("sig"))
   }
 
   /** Benchmark decontamination: exact token-`k`-gram overlap between
@@ -394,8 +367,8 @@ object Dedup {
   /** Per-doc DISTINCT gram-key ARRAY ([[graft.plans.GramKeys]], one
     * generated pass per row): null for null text, empty for sub-k
     * docs (no whole-doc fallback). The former relational shape
-    * (posexplode + window lead + corpus-wide distinct — kept below as
-    * [[gramKeysRelational]], equivalence test-pinned) shuffled the
+    * (posexplode + window lead + corpus-wide distinct — kept in test
+    * sources as `gramKeysRelational`, equivalence test-pinned) shuffled the
     * whole token stream into doc-keyed window sorts and paid a second
     * full exchange for the distinct; the kernel makes gram derivation
     * (and the gram COUNT, via `size`) row-local. The within-row
@@ -412,43 +385,6 @@ object Dedup {
     df.select(col(idCol).as("doc_id_"),
       explode(tokenGramKeyArr(textCol, k)).as("gk"))
 
-  /** The original relational statement of the distinct per-doc gram
-    * keys, parameterized over the tokenizer and the sub-k fallback —
-    * kept as the executable semantics the [[graft.plans.GramKeys]]
-    * kernel must match (equivalence test-pinned); the kernel is the
-    * production path. Returns distinct (doc_id_, gk) rows.
-    */
-  private[graft] def gramKeysRelational(df: DataFrame, idCol: String,
-      textCol: String, k: Int, splitPattern: String,
-      wholeDocFallback: Boolean): DataFrame = {
-    val toks = filter(split(lower(col(textCol)), splitPattern),
-      t => length(t) > 0)
-    val docsT = df.select(col(idCol).as("doc_id_"), toks.as("tk"))
-    val w = Window.partitionBy("doc_id_").orderBy("pos")
-    val leadCols = (1 until k).map(i => lead(col("tok"), i).over(w).as(s"l$i"))
-    val big = docsT.filter(size(col("tk")) >= k)
-      .select(col("doc_id_"), posexplode(col("tk")).as(Seq("pos", "tok")))
-      .select((col("doc_id_") +: col("tok") +: leadCols): _*)
-      .filter(col(s"l${k - 1}").isNotNull)
-      .select(col("doc_id_"), md5(concat_ws(" ",
-        (col("tok") +: (1 until k).map(i => col(s"l$i"))): _*)).as("gk"))
-    val small = docsT.filter(size(col("tk")) < k)
-      .select(col("doc_id_"), md5(concat_ws(" ", col("tk"))).as("gk"))
-    (if (wholeDocFallback) big.unionByName(small) else big).distinct()
-  }
-
-  /** Per-token portable hashes of a text column: the 32-bit
-    * [[graft.functions.TextAnalysis.portableHash]] of each lowercase
-    * `\W+` token. These are the votes of the SQL-portable SimHash
-    * sketch ([[portableSketches]]): each token hash votes on each bit
-    * (majority wins). Bit extraction is power-of-two arithmetic
-    * (exact in doubles for 32-bit values) so DuckDB states the
-    * identical computation — the oracle checks the whole sketch.
-    */
-  def portableTokenHashes(text: Column): Column =
-    transform(filter(split(lower(text), "\\W+"), t => length(t) > 0),
-      t => graft.functions.TextAnalysis.portableHash(t))
-
   /** Majority-vote portable sketches, stated RELATIONALLY: explode the
     * TOKENS, hash each in a codegen'd projection (round-6: hashing
     * inside the `transform` lambda ran the md5 through the interpreted
@@ -464,34 +400,14 @@ object Dedup {
     // the WHOLE majority-vote sketch in one generated pass per row
     // ([[graft.plans.PortableSimhash]]) — a PURE MAP fused with the
     // scan; the relational statement (explode + hash projection + one
-    // bits-column vote aggregate, kept below as
-    // [[portableSketchesRelational]], equivalence test-pinned)
+    // bits-column vote aggregate, kept in test sources as
+    // `portableSketchesRelational`, equivalence test-pinned)
     // shuffled every token hash into a doc-keyed aggregate for one
     // per-row long. Token-less and null-text docs sketch to 0, the
     // explode_outer behavior.
     df.select(col(idCol).as("doc_id_"),
       graft.plans.Kernels.portable_simhash(
         split(lower(col(textCol)), "\\W+"), lit(bits)).as("sketch"))
-
-  /** The original relational statement of [[portableSketches]] — kept
-    * as the executable semantics the native kernel must match
-    * (equivalence test-pinned); the kernel is the production path.
-    */
-  private[graft] def portableSketchesRelational(df: DataFrame, idCol: String,
-      textCol: String, bits: Int): DataFrame = {
-    val hrows = df.select(col(idCol).as("doc_id_"),
-        explode_outer(filter(split(lower(col(textCol)), "\\W+"),
-          t => length(t) > 0)).as("tok"))
-      .select(col("doc_id_"),
-        graft.functions.TextAnalysis.portableHash(col("tok")).as("h"))
-    val voteCols = (0 until bits).map { b =>
-      sum(shiftright(col("h"), b).bitwiseAND(lit(1L)) * 2 - 1).as(s"v$b")
-    }
-    val sketch = (0 until bits).map(b =>
-      when(col(s"v$b") > 0, lit(1L << b)).otherwise(lit(0L))).reduce(_ + _)
-    hrows.groupBy("doc_id_").agg(voteCols.head, voteCols.tail: _*)
-      .select(col("doc_id_"), sketch.as("sketch"))
-  }
 
   /** SimHash near-dup pairs with Hamming distance ≤ maxDist over the
     * PORTABLE `bits`-bit sketch, found by the pigeonhole band trick:
@@ -586,7 +502,8 @@ object Dedup {
     // ([[graft.plans.GramKeys]], whole-doc fallback for sub-k docs —
     // the same derivation as the portable MinHash shingles); gram
     // COUNTS are the array size, a pure map — the former relational
-    // shape (kept as [[gramKeysRelational]], equivalence test-pinned)
+    // shape (kept in test sources as `gramKeysRelational`, equivalence
+    // test-pinned)
     // paid a doc-keyed window shuffle, a corpus-wide distinct AND a
     // counting aggregate for what one projection now computes.
     val docsK = docs.select(col(idCol).as("cid"),
@@ -756,8 +673,8 @@ object Dedup {
     // generated per-row kernel ([[graft.plans.SpanCoverage]]). The
     // former relational tail — token stream joined against the flags,
     // two doc-keyed window passes, a per-doc collect_list sort of
-    // EVERY token — is kept as [[duplicateSpanScrubRelational]],
-    // equivalence test-pinned. The flagged-position lists are bounded
+    // EVERY token — is kept in test sources as
+    // `duplicateSpanScrubRelational`, equivalence test-pinned. The flagged-position lists are bounded
     // by doc length, strictly smaller than the old all-token
     // collect_list.
     val rawToks = split(lower(col(textCol)), "[^a-z0-9_]+")
@@ -781,52 +698,4 @@ object Dedup {
         col("g.n_covered").as("n_covered"), col("g.kept_hash").as("kept_hash"))
   }
 
-  /** The original relational statement of [[duplicateSpanScrub]] —
-    * kept as the executable semantics the GramKeySeq/SpanCoverage
-    * kernels must match (equivalence test-pinned); the kernel path is
-    * the production one.
-    */
-  private[graft] def duplicateSpanScrubRelational(df: DataFrame, idCol: String,
-      textCol: String, k: Int = 8, minDf: Int = 2): DataFrame = {
-    require(k >= 1, "gram length k must be >= 1")
-    val toks = df.select(col(idCol).cast("long").as("doc_id"),
-      posexplode(filter(split(lower(col(textCol)), "[^a-z0-9_]+"),
-        t => length(t) > 0)).as(Seq("pos", "tok")))
-    val wDoc = Window.partitionBy("doc_id").orderBy("pos")
-    // complete k-grams only: the (k-1)-ahead token exists
-    val gramCols = col("tok") +:
-      (1 until k).map(j => lead(col("tok"), j).over(wDoc))
-    val grams = toks
-      .withColumn("complete",
-        if (k == 1) lit(true) else lead(col("tok"), k - 1).over(wDoc).isNotNull)
-      .withColumn("h", md5(concat_ws(" ", gramCols: _*)))
-      .where(col("complete"))
-      .select(col("doc_id"), col("pos"), col("h"))
-    val dup = grams.groupBy("h")
-      .agg(count_distinct(col("doc_id")).as("docf"))
-      .filter(col("docf") >= minDf)
-      .select("h")
-    val flagged = grams.join(dup, Seq("h"), "left_semi")
-      .select(col("doc_id"), col("pos"), lit(1).as("flag"))
-    val covered = toks.join(flagged, Seq("doc_id", "pos"), "left")
-      .withColumn("lastf",
-        last(when(col("flag") === 1, col("pos")), ignoreNulls = true)
-          .over(wDoc.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("cov", col("lastf").isNotNull && col("pos") < col("lastf") + k)
-      .withColumn("prev_cov", lag(col("cov"), 1, false).over(wDoc))
-    val perDoc = covered.groupBy("doc_id")
-      .agg(count(lit(1)).as("n_tokens"),
-        sum(when(col("cov") && !col("prev_cov"), 1L).otherwise(0L)).as("n_spans"),
-        sum(when(col("cov"), 1L).otherwise(0L)).as("n_covered"),
-        md5(array_join(transform(
-          array_sort(collect_list(when(!col("cov"),
-            struct(col("pos"), col("tok"))))),
-          x => x.getField("tok")), " ")).as("kept_hash"))
-    df.select(col(idCol).cast("long").as("doc_id")).join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
-        coalesce(col("n_spans"), lit(0L)).as("n_spans"),
-        coalesce(col("n_covered"), lit(0L)).as("n_covered"),
-        coalesce(col("kept_hash"), md5(lit(""))).as("kept_hash"))
-  }
 }

@@ -66,12 +66,7 @@ object LinkGraph {
     val v = vertices.select(col(vertices.columns.head).cast("long").as("v"))
     val e = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"))
-    val ckpt: DataFrame => DataFrame =
-      if (reliableCheckpoints) { d =>
-        require(d.sparkSession.sparkContext.getCheckpointDir.isDefined,
-          "reliableCheckpoints=true requires sc.setCheckpointDir (a DFS path on a cluster)")
-        d.checkpoint(eager = true)
-      } else _.localCheckpoint(true)
+    val ckpt = Dedup.checkpointer(vertices.sparkSession, reliableCheckpoints)
     // degree once, riding with the edges for every iteration
     val eDeg = e.join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
       .persist()

@@ -30,12 +30,6 @@ object Similarity {
     */
   def dot(a: Column, b: Column): Column = graft.plans.Kernels.float_dot(a, b)
 
-  /** The original fold form, kept as the executable statement of the
-    * semantics [[dot]] must match (equivalence is test-pinned).
-    */
-  def dotFold(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, x) => acc + x)
-
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** cosine(a,b); 0.0 when either norm is 0 (never NaN). */
@@ -211,31 +205,17 @@ object Similarity {
     */
   def semDedup(spark: org.apache.spark.sql.SparkSession, corpus: DataFrame,
                k: Int, iterations: Int, tau: Double,
-               reliableCheckpoints: Boolean = false,
-               materialize: Option[DataFrame => DataFrame] = None)
-      : DataFrame = {
+               reliableCheckpoints: Boolean = false): DataFrame = {
+    val ckpt = Dedup.checkpointer(spark, reliableCheckpoints)
     val cents = IvfIndex.trainPortable(spark, corpus, k, iterations)
     // materialize the assignment ONCE: it feeds both self-join sides
     // and the final verdict join — unmaterialized, Spark re-evaluates
     // the k-way nearest-centroid expression three times over the
     // corpus (measured 10.2 s -> 4 s at sf0.1). At production scale
     // the assignment is written to a table before the pair stage (the
-    // published SemDeDup recipe does exactly this). The in-session
-    // analogs mirror [[graft.operators.Dedup.connectedMinLabels]]'
-    // EXPLICIT choice: `reliableCheckpoints=true` pins it via
-    // `checkpoint()` to the SparkContext's checkpoint dir (DFS on a
-    // cluster — the lost-executor-safe path; caller must
-    // `sc.setCheckpointDir` first), the default is the local[*]-only
-    // `localCheckpoint` fast path, and `materialize` overrides both
-    // (e.g. a table write+read).
-    val mat: DataFrame => DataFrame = materialize.getOrElse {
-      if (reliableCheckpoints) { d =>
-        require(d.sparkSession.sparkContext.getCheckpointDir.isDefined,
-          "reliableCheckpoints=true requires sc.setCheckpointDir (a DFS path on a cluster)")
-        d.checkpoint(eager = true)
-      } else (_: DataFrame).localCheckpoint(true)
-    }
-    val assigned = mat(IvfIndex.assignPortable(corpus, cents)
+    // published SemDeDup recipe does exactly this); in session it is
+    // the [[Dedup.checkpointer]] of `reliableCheckpoints`.
+    val assigned = ckpt(IvfIndex.assignPortable(corpus, cents)
       .select(col("id"), col("vec"), col("cluster")))
     val dropped = assigned.as("a")
       .join(assigned.as("b"),

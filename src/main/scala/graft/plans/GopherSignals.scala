@@ -8,7 +8,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Kernel `graft_gopher_signals`: ALL Gopher rule signals
   * ([[graft.functions.TextAnalysis.gopherRules]]) in ONE pass over the
   * text — bit-identical to the pure-Catalyst HOF formulation (which
-  * remains as `gopherRulesHof`, equivalence test-pinned) and to the
+  * remains as `TextAnalysisSpec.gopherRulesHof`, equivalence
+  * test-pinned) and to the
   * DuckDB oracle, but evaluated as one generated call instead of ~six
   * interpreted HOF subtrees per row (each `filter`/`aggregate` lambda
   * is CodegenFallback, and the tokenizing `split` child was re-run

@@ -21,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * subexpression elimination — a struct/array-returning kernel
   * referenced from the when-chain was re-evaluated once PER REFERENCE
   * (measured 2× slower than even the interpreted fold). The fold form
-  * ([[graft.functions.TextAnalysis.langIdFold]]) remains the
+  * (`TextAnalysisSpec.langIdFold`, in test sources) remains the
   * executable semantics statement, equivalence test-pinned. Null
   * token array → null (the caller's coalesce supplies the original
   * null-text fallback).

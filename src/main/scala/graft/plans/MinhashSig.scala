@@ -20,7 +20,8 @@ import KernelSupport.{md5, nonEmptyTokens, word32}
   *
   * Bit-identical to the relational statement (posexplode + window
   * leads + one min aggregate — kept as
-  * `Dedup.minhashSigsRelational`, equivalence test-pinned) and to the
+  * `DedupSimilaritySpec.minhashSigsRelational`, equivalence
+  * test-pinned) and to the
   * DuckDB oracle, but a PURE MAP: the relational form shuffled the
   * whole token stream into doc-keyed window sorts and aggregated 24
   * minima per doc — at any scale, one full exchange of the corpus'

@@ -15,7 +15,8 @@ import KernelSupport.{md5, word32}
   *
   * Bit-identical to the relational statement (explode + hash
   * projection + one `bits`-column vote aggregate — kept as
-  * `portableSketchesRelational`, equivalence test-pinned) but a PURE
+  * `DedupSimilaritySpec.portableSketchesRelational`, equivalence
+  * test-pinned) but a PURE
   * MAP: the relational form shuffled every token hash into a doc-keyed
   * aggregate for one per-row long.
   */

@@ -21,7 +21,8 @@ import KernelSupport.{hex, md5, nonEmptyTokens}
   * Bit-identical to the relational statement (a running-`last` window
   * for the most recent flag, a `lag` for run starts, and a per-doc
   * collect_list sort for the kept text — kept as
-  * `duplicateSpanScrubRelational`, equivalence test-pinned), but
+  * `DedupSimilaritySpec.duplicateSpanScrubRelational`, equivalence
+  * test-pinned), but
   * row-local: the relational form joined the whole token stream
   * against the flags and ran two doc-keyed window passes plus a
   * collect_list aggregate per doc. Null/empty token arrays summarize

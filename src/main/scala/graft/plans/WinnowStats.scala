@@ -26,7 +26,8 @@ import KernelSupport.{joinedDigest, nonEmptyTokens, word32}
   *
   * Bit-identical to the relational statement (posexplode + two
   * doc-keyed windows + one aggregate — kept as
-  * `winnowFingerprintsTokensRelational`, equivalence test-pinned) but
+  * `DedupSimilaritySpec.winnowFingerprintsTokensRelational`,
+  * equivalence test-pinned) but
   * a PURE MAP: the relational form shuffled the whole token stream
   * into TWO window passes plus an aggregate for three per-row numbers.
   */

@@ -100,7 +100,7 @@ final class SnapshotTable(spark: SparkSession, root: String, val name: String) {
     if (Files.exists(src)) {
       // the staged source still exists, so any directory already at the
       // target version is an ORPHAN of a crashed unflipped commit (e.g.
-      // a compact() killed between its segment write and manifest flip)
+      // a compaction killed between its segment write and manifest flip)
       // — never adopt it in place of the real delta
       if (Files.exists(dir)) deleteRecursively(dir)
       Files.move(src, dir, StandardCopyOption.ATOMIC_MOVE)
@@ -137,33 +137,17 @@ final class SnapshotTable(spark: SparkSession, root: String, val name: String) {
     next
   }
 
-  /** Merge all live segments into ONE new segment (same rows, same
-    * committed wave) and flip the pointer — bounds the segment count
-    * of long-running append logs (a 10^4-wave crawl would otherwise
-    * read 10^4 parquet directories per scan). Old segments stay until
-    * `vacuum`. Crash-safe like any commit: the flip is atomic and the
-    * wave marker is unchanged, so resume logic is unaffected (the
-    * sketch chain is keyed by per-wave meta files, not segments).
-    */
-  def compact(merge: DataFrame => DataFrame = identity): Option[Int] =
-    currentManifest().filter(_.segments.size > 1).map { m =>
-      val merged = merge(readSegments(m.segments))
-      val next = m.version + 1
-      ParquetDir.write(merged, versionDir(next).toString)
-      writeManifest(Manifest(next, m.wave, Seq(next), listLineage(versionDir(next))))
-      next
-    }
-
   /** LSM-style tiered compaction: when more than `maxSegments` live
     * segments exist, merge the SMALLEST ones (by on-disk bytes) into a
     * single new segment, leaving the largest segments and the newest
     * delta untouched. The count drops to ~maxSegments/2, so merges are
     * infrequent, and because small segments merge into geometrically
     * larger ones, each row is rewritten O(log n) times over an n-wave
-    * crawl — vs O(n/k) full-table rewrites for `compact()`, which is
-    * the difference between feasible and not when the log is most of
-    * 100 TB. The newest segment is never merged, so
-    * `readWaveSegment(committedWave)` still returns the latest delta.
+    * crawl — vs O(n/k) full-table rewrites for a merge of every
+    * segment at each check, which is the difference between feasible
+    * and not when the log is most of 100 TB. The newest segment is
+    * never merged, so `readWaveSegment(committedWave)` still returns
+    * the latest delta.
     * Crash-safe like any commit (atomic manifest flip, wave marker
     * unchanged); old segments stay until `vacuum`. Returns the merged
     * segment's version, or None when under the bound.

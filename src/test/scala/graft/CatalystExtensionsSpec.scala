@@ -1,5 +1,7 @@
 package graft
 
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+
 import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -7,15 +9,16 @@ import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.BloomFilter
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.UrlNormalizer
-import graft.operators.BloomSketchAgg
+import graft.operators.SeenSet
 import graft.plans.{GraftExtensions, Kernels}
 
 /** The custom Catalyst surface: an audit of every [[Kernels]] row
   * (whole-stage codegen, SQL by name, null input, mistyped calls) and
-  * the typed Bloom aggregator.
+  * the Bloom sketch chain step.
   */
 class CatalystExtensionsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
@@ -189,13 +192,19 @@ class CatalystExtensionsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("BloomSketchAgg builds a mergeable sketch with no false negatives") {
+    // the chain step of FrontierBloom: the wave's delta sketch, built
+    // at the running sketch's capacity, merges in place, and the result
+    // round-trips through the on-disk format
     val s = spark
     import s.implicits._
     val keys = (0L until 5000L).map(i => i * 2654435761L)
-    val agg = new BloomSketchAgg(expectedItems = 5000, fpp = 0.01)
-    val bytes = keys.toDF("k").repartition(4).as[Long]
-      .select(udaf(agg).apply($"k")).as[Array[Byte]].head()
-    val bf = BloomSketchAgg.deserialize(bytes)
+    val (lo, hi) = keys.splitAt(keys.size / 2)
+    def sketch(ks: Seq[Long]) =
+      SeenSet.buildBloom(ks.toDF("k").repartition(4), "k", expectedItems = 5000, fpp = 0.01)
+    val merged = sketch(lo).mergeInPlace(sketch(hi))
+    val out = new ByteArrayOutputStream()
+    merged.writeTo(out)
+    val bf = BloomFilter.readFrom(new ByteArrayInputStream(out.toByteArray))
     keys.foreach(k => assert(bf.mightContainLong(k)))
     val falsePos = (0L until 10000L).map(i => i * 7919L + 3L)
       .count(k => !keys.contains(k) && bf.mightContainLong(k))

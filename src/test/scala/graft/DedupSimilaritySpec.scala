@@ -1,10 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.TextAnalysis.portableHash
 import graft.operators.{Dedup, Multimodal, Similarity}
+import DedupSimilaritySpec._
 
 /** Dedup family + similarity search + multimodal plumbing: planted
   * duplicates must be found, unrelated content must not be, LSH recall
@@ -134,7 +137,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
           split(lower(col("text")), "\\W+"), lit(3), lit(24)).as("sig"))
       .filter(col("sig").isNotNull)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val relational = Dedup.minhashSigsRelational(both, "doc_id", "text")
+    val relational = minhashSigsRelational(both, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(kernel.keySet === relational.keySet)
     assert(!kernel.keySet.contains(207L)) // null text excluded by both
@@ -161,7 +164,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
           explode(graft.plans.Kernels.gram_keys(
             split(lower(col("text")), pat), lit(k), lit(fb))).as("gk"))
         .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-      val relational = Dedup.gramKeysRelational(both, "doc_id", "text", k, pat, fb)
+      val relational = gramKeysRelational(both, "doc_id", "text", k, pat, fb)
         .collect().map(r => (r.getLong(0), r.getString(1))).toSet
       assert(kernel === relational, s"k=$k pattern=$pat fallback=$fb")
       // per-row arrays must also be duplicate-free (the distinct claim)
@@ -186,7 +189,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
         graft.plans.Kernels.portable_simhash(
           split(lower(col("text")), "\\W+"), lit(32)).as("sketch"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val relational = Dedup.portableSketchesRelational(both, "doc_id", "text", 32)
+    val relational = portableSketchesRelational(both, "doc_id", "text", 32)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(kernel === relational)
     assert(kernel(400L) === 0L && kernel(402L) === 0L) // token-less -> 0
@@ -203,8 +206,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val both = docs.unionByName(adversarial)
     val kernel = TextAnalysis.winnowFingerprintsTokens(both, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.getLong(2), r.getLong(3)))).toMap
-    val relational = TextAnalysis
-      .winnowFingerprintsTokensRelational(both, "doc_id", "text")
+    val relational = winnowFingerprintsTokensRelational(both, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.getLong(2), r.getLong(3)))).toMap
     assert(kernel === relational)
     assert(!kernel.keySet.contains(503L)) // null text excluded by both
@@ -226,7 +228,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val kernel = Dedup.duplicateSpanScrub(rows, "doc_id", "text")
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)))).toMap
-    val relational = Dedup.duplicateSpanScrubRelational(rows, "doc_id", "text")
+    val relational = duplicateSpanScrubRelational(rows, "doc_id", "text")
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)))).toMap
     assert(kernel === relational)
@@ -319,6 +321,23 @@ class DedupSimilaritySpec extends AnyFunSuite {
           Seq((1L, Array(1.0f, 0.0f))).toDF("id", "vec"),
           k = 1, iterations = 1, tau = 0.9, reliableCheckpoints = true)
       }
+    } finally prev.foreach(spark.sparkContext.setCheckpointDir)
+  }
+
+  test("reliable semDedup without a checkpoint dir fails before launching a job") {
+    // the precondition is checked at the call, not after k-means
+    // training has already run one job per round
+    val prev = spark.sparkContext.getCheckpointDir
+    spark.sparkContext.setCheckpointDir(null)
+    try {
+      val corpus = Seq((1L, Array(1.0f, 0.0f)), (2L, Array(0.0f, 1.0f))).toDF("id", "vec")
+      val (_, jobs) = JobCount(spark) {
+        intercept[IllegalArgumentException] {
+          Similarity.semDedup(spark, corpus, k = 2, iterations = 3, tau = 0.9,
+            reliableCheckpoints = true)
+        }
+      }
+      assert(jobs === 0)
     } finally prev.foreach(spark.sparkContext.setCheckpointDir)
   }
 
@@ -623,7 +642,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       spark.sparkContext.parallelize(rows, 3), schema)
     val cmp = df.select(col("id"),
       Similarity.dot(col("a"), col("b")).as("fast"),
-      Similarity.dotFold(col("a"), col("b")).as("fold")).collect()
+      dotFold(col("a"), col("b")).as("fold")).collect()
     cmp.foreach { r =>
       assert(r.isNullAt(1) === r.isNullAt(2), s"null mismatch at id ${r.getLong(0)}")
       if (!r.isNullAt(1))
@@ -679,4 +698,194 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(out((4L, 2L)) === ((1L, 2L, 1L, 1000L, 500L)),
       "exact-k doc contributes its single gram")
   }
+}
+
+/** The executable semantics statements the generated kernels replaced
+  * in the production operators: relational (explode + window +
+  * aggregate) and fold forms that the equivalence tests above compare
+  * each kernel path to, row for row.
+  */
+object DedupSimilaritySpec {
+
+  /** The original relational statement of the portable MinHash
+    * signatures — posexplode + window leads build the shingles, one
+    * aggregate takes the `numHashes` minima (permutation j's hash is
+    * 32-bit word j%4 of md5((j/4) ':' shingle); the md5s are hoisted
+    * below the aggregate so 24 permutations cost 6 evaluations per
+    * shingle). Kept as the executable semantics statement the
+    * [[graft.plans.MinhashSig]] kernel must match (equivalence
+    * test-pinned); the kernel is the production path.
+    */
+  def minhashSigsRelational(df: DataFrame, idCol: String,
+      textCol: String, shingleK: Int = 3, numHashes: Int = 24): DataFrame = {
+    val toks = filter(split(lower(col(textCol)), "\\W+"), t => length(t) > 0)
+    val docsT = df.select(col(idCol).as("doc_id_"), toks.as("tk"))
+    val w = Window.partitionBy("doc_id_").orderBy("pos")
+    val leadCols = (1 until shingleK).map(i => lead(col("tok"), i).over(w).as(s"l$i"))
+    val bigShingles = docsT.filter(size(col("tk")) >= shingleK)
+      .select(col("doc_id_"), posexplode(col("tk")).as(Seq("pos", "tok")))
+      .select((col("doc_id_") +: col("tok") +: leadCols): _*)
+      .filter(col(s"l${shingleK - 1}").isNotNull)
+      .select(col("doc_id_"), concat_ws(" ",
+        (col("tok") +: (1 until shingleK).map(i => col(s"l$i"))): _*).as("sh"))
+    val smallShingles = docsT.filter(size(col("tk")) < shingleK)
+      .select(col("doc_id_"), concat_ws(" ", col("tk")).as("sh"))
+    val shingles = bigShingles.unionByName(smallShingles)
+    val md5Groups = (numHashes + 3) / 4
+    val withMd5 = shingles.select(col("doc_id_") +:
+      (0 until md5Groups).map(g =>
+        md5(concat(lit(s"$g:"), col("sh"))).as(s"m$g")): _*)
+    val minCols = (0 until numHashes).map { j =>
+      min(conv(substring(col(s"m${j / 4}"), 1 + 8 * (j % 4), 8), 16, 10)
+        .cast("long")).as(s"mh$j")
+    }
+    withMd5.groupBy(col("doc_id_"))
+      .agg(minCols.head, minCols.tail: _*)
+      .select(col("doc_id_"),
+        array((0 until numHashes).map(j => col(s"mh$j")): _*).as("sig"))
+  }
+
+  /** The original relational statement of the distinct per-doc gram
+    * keys, parameterized over the tokenizer and the sub-k fallback —
+    * kept as the executable semantics the [[graft.plans.GramKeys]]
+    * kernel must match (equivalence test-pinned); the kernel is the
+    * production path. Returns distinct (doc_id_, gk) rows.
+    */
+  def gramKeysRelational(df: DataFrame, idCol: String,
+      textCol: String, k: Int, splitPattern: String,
+      wholeDocFallback: Boolean): DataFrame = {
+    val toks = filter(split(lower(col(textCol)), splitPattern),
+      t => length(t) > 0)
+    val docsT = df.select(col(idCol).as("doc_id_"), toks.as("tk"))
+    val w = Window.partitionBy("doc_id_").orderBy("pos")
+    val leadCols = (1 until k).map(i => lead(col("tok"), i).over(w).as(s"l$i"))
+    val big = docsT.filter(size(col("tk")) >= k)
+      .select(col("doc_id_"), posexplode(col("tk")).as(Seq("pos", "tok")))
+      .select((col("doc_id_") +: col("tok") +: leadCols): _*)
+      .filter(col(s"l${k - 1}").isNotNull)
+      .select(col("doc_id_"), md5(concat_ws(" ",
+        (col("tok") +: (1 until k).map(i => col(s"l$i"))): _*)).as("gk"))
+    val small = docsT.filter(size(col("tk")) < k)
+      .select(col("doc_id_"), md5(concat_ws(" ", col("tk"))).as("gk"))
+    (if (wholeDocFallback) big.unionByName(small) else big).distinct()
+  }
+
+  /** The original relational statement of `Dedup.portableSketches` — kept
+    * as the executable semantics the native kernel must match
+    * (equivalence test-pinned); the kernel is the production path.
+    */
+  def portableSketchesRelational(df: DataFrame, idCol: String,
+      textCol: String, bits: Int): DataFrame = {
+    val hrows = df.select(col(idCol).as("doc_id_"),
+        explode_outer(filter(split(lower(col(textCol)), "\\W+"),
+          t => length(t) > 0)).as("tok"))
+      .select(col("doc_id_"),
+        graft.functions.TextAnalysis.portableHash(col("tok")).as("h"))
+    val voteCols = (0 until bits).map { b =>
+      sum(shiftright(col("h"), b).bitwiseAND(lit(1L)) * 2 - 1).as(s"v$b")
+    }
+    val sketch = (0 until bits).map(b =>
+      when(col(s"v$b") > 0, lit(1L << b)).otherwise(lit(0L))).reduce(_ + _)
+    hrows.groupBy("doc_id_").agg(voteCols.head, voteCols.tail: _*)
+      .select(col("doc_id_"), sketch.as("sketch"))
+  }
+
+  /** The original relational statement of [[graft.operators.Dedup.duplicateSpanScrub]] —
+    * kept as the executable semantics the GramKeySeq/SpanCoverage
+    * kernels must match (equivalence test-pinned); the kernel path is
+    * the production one.
+    */
+  def duplicateSpanScrubRelational(df: DataFrame, idCol: String,
+      textCol: String, k: Int = 8, minDf: Int = 2): DataFrame = {
+    require(k >= 1, "gram length k must be >= 1")
+    val toks = df.select(col(idCol).cast("long").as("doc_id"),
+      posexplode(filter(split(lower(col(textCol)), "[^a-z0-9_]+"),
+        t => length(t) > 0)).as(Seq("pos", "tok")))
+    val wDoc = Window.partitionBy("doc_id").orderBy("pos")
+    // complete k-grams only: the (k-1)-ahead token exists
+    val gramCols = col("tok") +:
+      (1 until k).map(j => lead(col("tok"), j).over(wDoc))
+    val grams = toks
+      .withColumn("complete",
+        if (k == 1) lit(true) else lead(col("tok"), k - 1).over(wDoc).isNotNull)
+      .withColumn("h", md5(concat_ws(" ", gramCols: _*)))
+      .where(col("complete"))
+      .select(col("doc_id"), col("pos"), col("h"))
+    val dup = grams.groupBy("h")
+      .agg(count_distinct(col("doc_id")).as("docf"))
+      .filter(col("docf") >= minDf)
+      .select("h")
+    val flagged = grams.join(dup, Seq("h"), "left_semi")
+      .select(col("doc_id"), col("pos"), lit(1).as("flag"))
+    val covered = toks.join(flagged, Seq("doc_id", "pos"), "left")
+      .withColumn("lastf",
+        last(when(col("flag") === 1, col("pos")), ignoreNulls = true)
+          .over(wDoc.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("cov", col("lastf").isNotNull && col("pos") < col("lastf") + k)
+      .withColumn("prev_cov", lag(col("cov"), 1, false).over(wDoc))
+    val perDoc = covered.groupBy("doc_id")
+      .agg(count(lit(1)).as("n_tokens"),
+        sum(when(col("cov") && !col("prev_cov"), 1L).otherwise(0L)).as("n_spans"),
+        sum(when(col("cov"), 1L).otherwise(0L)).as("n_covered"),
+        md5(array_join(transform(
+          array_sort(collect_list(when(!col("cov"),
+            struct(col("pos"), col("tok"))))),
+          x => x.getField("tok")), " ")).as("kept_hash"))
+    df.select(col(idCol).cast("long").as("doc_id")).join(perDoc, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
+        coalesce(col("n_spans"), lit(0L)).as("n_spans"),
+        coalesce(col("n_covered"), lit(0L)).as("n_covered"),
+        coalesce(col("kept_hash"), md5(lit(""))).as("kept_hash"))
+  }
+
+  /** The original relational statement of
+    * [[graft.functions.TextAnalysis.winnowFingerprintsTokens]]
+    * — kept as the executable semantics the native kernel must match
+    * (equivalence test-pinned); the kernel is the production path.
+    */
+  def winnowFingerprintsTokensRelational(
+      df: DataFrame, idCol: String,
+      textCol: String, k: Int = 5, w: Int = 8)
+      : DataFrame = {
+    val toks = filter(split(lower(col(textCol)), "[^a-z0-9_]+"), t => length(t) > 0)
+    val docsT = df.select(col(idCol), toks.as("tk"))
+    val wLead = Window.partitionBy(idCol).orderBy("pos")
+    val leadCols = (1 until k).map(i => lead(col("tok"), i).over(wLead).as(s"l$i"))
+    // complete-gram count per doc is known BEFORE the explode
+    // (size - k + 1) — carrying it as a column saves a third
+    // whole-partition WindowExec pass over the exploded grams.
+    // (Round-6 note: a pure-map zip_with/fold formulation of the grams
+    // and sliding minima was measured — the k-1 + w-1 chained
+    // interpreted array re-materializations cost ~3× the two doc-keyed
+    // windows they replace; the relational form stays.)
+    val grams = docsT.filter(size(col("tk")) >= k)
+      .withColumn("m", (size(col("tk")) - (k - 1)).cast("long"))
+      .select(col(idCol), col("m"), posexplode(col("tk")).as(Seq("pos", "tok")))
+      .select((col(idCol) +: col("m") +: col("pos") +: col("tok") +: leadCols): _*)
+      .filter(col(s"l${k - 1}").isNotNull) // only complete k-grams
+      .select(col(idCol), col("m"), col("pos"),
+        portableHash(concat_ws(" ",
+          (col("tok") +: (1 until k).map(i => col(s"l$i"))): _*)).as("gh"))
+    val slide = Window.partitionBy(idCol).orderBy("pos")
+      .rowsBetween(Window.currentRow, w - 1)
+    val big = grams
+      .withColumn("wmin", min(col("gh")).over(slide))
+      .filter(col("pos") <= greatest(col("m") - w, lit(0)))
+      .groupBy(col(idCol))
+      .agg(countDistinct(col("wmin")).cast("int").as("n_fingerprints"),
+        min(col("wmin")).as("min_fp"),
+        max(col("wmin")).as("max_fp"))
+    val small = docsT.filter(size(col("tk")) < k)
+      .select(col(idCol), portableHash(array_join(col("tk"), " ")).as("fp"))
+      .select(col(idCol), lit(1).as("n_fingerprints"),
+        col("fp").as("min_fp"), col("fp").as("max_fp"))
+    big.unionByName(small)
+  }
+
+  /** The original fold form, kept as the executable statement of the
+    * semantics [[graft.operators.Similarity.dot]] must match (equivalence is test-pinned).
+    */
+  def dotFold(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, x) => acc + x)
 }

@@ -286,7 +286,7 @@ class RetryAndRecrawlSpec extends AnyFunSuite {
     plain.run()
 
     val compacted = new WaveRunner(spark, corpus, tmp("graft-compact-"),
-      cfg.copy(compactEveryWaves = 2, compactMaxSegments = 1)) // full merge
+      cfg.copy(compactEveryWaves = 2, compactMaxSegments = 2)) // tightest bound
     compacted.initSeeds(Seq(seedUrl -> 1, SyntheticCorpus.urlFor(3, spec) -> 2))
     compacted.run()
 
@@ -297,6 +297,14 @@ class RetryAndRecrawlSpec extends AnyFunSuite {
     assert(segs <= 3, s"compaction must bound segments, got $segs")
     // a wave after compaction still appends deltas on top
     assert(compacted.frontierT.committedWave() === plain.frontierT.committedWave())
+  }
+
+  test("a segment bound below 2 is rejected at construction") {
+    val e = intercept[IllegalArgumentException] {
+      new WaveRunner(spark, corpus, tmp("graft-badbound-"),
+        CrawlConfig(compactMaxSegments = 1))
+    }
+    assert(e.getMessage.contains("compactMaxSegments"))
   }
 
   test("concurrent commit tail: identical crawl state, bounded live segments, no orphans") {

@@ -1,6 +1,9 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -811,5 +814,26 @@ class StreamingAndPlanSpec extends AnyFunSuite {
         case None => spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
       }
     }
+  }
+
+  test("entry points: five supported mains, and only they read the environment") {
+    // scratch mains and engine env knobs stay out of src/main: a probe
+    // belongs in perfbench/ or a test, an engine setting in CrawlConfig
+    val root = Paths.get("src/main/scala")
+    val sources = {
+      val s = Files.walk(root)
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    }
+    def filesWith(token: String): Set[String] = sources
+      .filter(f => new String(Files.readAllBytes(f), UTF_8).contains(token))
+      .map(root.relativize(_).toString).toSet
+    val entryPoints = Set("graft/Bench.scala", "graft/Verify.scala",
+      "graft/tools/BenchExtra.scala", "graft/tools/PlanDump.scala",
+      "graft/tools/CrawlDemo.scala")
+    assert(filesWith("def main(") === entryPoints)
+    val envReaders = filesWith("sys.env") ++ filesWith("System.getenv")
+    assert(envReaders.subsetOf(entryPoints),
+      s"environment read outside the entry points: ${envReaders -- entryPoints}")
   }
 }

@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.TextAnalysis
+import TextAnalysisSpec._
 
 class TextAnalysisSpec extends AnyFunSuite {
 
@@ -272,7 +273,7 @@ class TextAnalysisSpec extends AnyFunSuite {
       "only-symbols !!! ??? ###")
     val df = texts.toDF("text")
     val kernel = df.select(TextAnalysis.gopherRules($"text"): _*).collect()
-    val hof = df.select(TextAnalysis.gopherRulesHof($"text"): _*).collect()
+    val hof = df.select(gopherRulesHof($"text"): _*).collect()
     kernel.zip(hof).zip(texts).foreach { case ((k, h), t) =>
       assert(k === h, s"mismatch on ${Option(t).map(_.take(60))}")
     }
@@ -312,7 +313,7 @@ class TextAnalysisSpec extends AnyFunSuite {
       .toMap
     val kernel = asMap(TextAnalysis.chunkTokens(texts, "doc_id", "text",
       window = 10, stride = 8, minTokens = 4))
-    val relational = asMap(TextAnalysis.chunkTokensRelational(texts,
+    val relational = asMap(chunkTokensRelational(texts,
       "doc_id", "text", window = 10, stride = 8, minTokens = 4))
     assert(kernel === relational)
     assert(kernel.keySet.map(_._1) === Set(1L, 5L, 6L))
@@ -348,7 +349,7 @@ class TextAnalysisSpec extends AnyFunSuite {
       "ümlaut für straße auf im", "a", "THE THE THE")
     val df = texts.toDF("text")
     val rows = df.select(TextAnalysis.langId($"text").as("k"),
-      coalesce(TextAnalysis.langIdFold($"text"), lit("es")).as("f")).collect()
+      coalesce(langIdFold($"text"), lit("es")).as("f")).collect()
     rows.zip(texts).foreach { case (r, t) =>
       assert(r.getString(0) === r.getString(1), s"langId mismatch on '$t'")
     }
@@ -363,7 +364,7 @@ class TextAnalysisSpec extends AnyFunSuite {
     val df = texts.toDF("text")
     val rows = df.select(
       TextAnalysis.hashClassifierScore($"text").as("kernel"),
-      coalesce(TextAnalysis.hashClassifierScoreFold($"text"), lit(0L)).as("fold"))
+      coalesce(hashClassifierScoreFold($"text"), lit(0L)).as("fold"))
       .collect()
     rows.foreach(r => assert(r.getLong(0) === r.getLong(1), r.toString))
   }
@@ -421,5 +422,129 @@ class TextAnalysisSpec extends AnyFunSuite {
       "a long article mentioning the phrase is not a soft 404")
     assert(out(3L) === ((false, true, false)))
     assert(out(4L) === ((true, true, true)))
+  }
+}
+
+/** The executable semantics statements the generated kernels replaced
+  * in [[TextAnalysis]]: HOF-fold and relational forms that the
+  * equivalence tests above compare each kernel path to, row for row.
+  */
+object TextAnalysisSpec {
+  import TextAnalysis.{DeStop, EnStop, EsStop, GopherStop, hashFeatureWeight}
+
+  /** The single-fold HOF form of [[TextAnalysis.langId]], kept as the executable
+    * semantics statement the TokenStats formulation must match
+    * (equivalence test-pinned).
+    */
+  def langIdFold(text: Column): Column = {
+    // ONE pass over ONE tokenization: the three per-language hit
+    // counts (plus the token count) ride a single fold accumulator,
+    // and the argmax happens in the finish lambda. The ratio
+    // arithmetic in the finish lambda is the ORIGINAL expression
+    // verbatim (same double divisions, same
+    // comparisons), so results are bit-identical.
+    val w = filter(split(lower(text), "[^a-zA-Zäöüßáéíóúñ']+"), x => length(x) > 0)
+    val zero = struct(lit(0).as("en"), lit(0).as("de"), lit(0).as("es"),
+      lit(0).as("n"))
+    def hit(x: Column, stop: Seq[String]): Column =
+      when(x.isin(stop.map(lit): _*), 1).otherwise(0)
+    // NULL text: the old form's when-chain fell through every null
+    // comparison to the final otherwise — preserved via coalesce
+    coalesce(aggregate(w, zero,
+      (acc, x) => struct(
+        (acc.getField("en") + hit(x, EnStop)).as("en"),
+        (acc.getField("de") + hit(x, DeStop)).as("de"),
+        (acc.getField("es") + hit(x, EsStop)).as("es"),
+        (acc.getField("n") + 1).as("n")),
+      acc => {
+        val n = acc.getField("n").cast("double")
+        def ratio(f: String): Column =
+          when(acc.getField("n") === 0, lit(0.0))
+            .otherwise(acc.getField(f).cast("double") / n)
+        val en = ratio("en"); val de = ratio("de"); val es = ratio("es")
+        when(greatest(en, de, es) < 0.02, lit("und"))
+          .when(en >= de && en >= es, lit("en"))
+          .when(de >= en && de >= es, lit("de"))
+          .otherwise(lit("es"))
+      }), lit("es"))
+  }
+
+  /** The original pure-Catalyst HOF form of [[TextAnalysis.gopherRules]], kept as
+    * the executable semantics statement the native kernel must match
+    * (equivalence test-pinned).
+    */
+  def gopherRulesHof(text: Column): Seq[Column] = {
+    val tk = filter(split(trim(text), "\\s+"), t => length(t) > 0)
+    val nWords = size(tk)
+    val nWordsD = nWords.cast("double")
+    val meanLen = when(nWords === 0, lit(0.0)).otherwise(
+      round(aggregate(tk, lit(0L), (acc, t) => acc + length(t))
+        .cast("double") / nWordsD, 4))
+    val nSymbols = regexp_count(text, lit("#")) +
+      regexp_count(text, lit("\\.\\.\\.")) + regexp_count(text, lit("…"))
+    val symbolRatio = when(nWords === 0, lit(0.0))
+      .otherwise(round(nSymbols.cast("double") / nWordsD, 4))
+    val lines = split(text, "\n")
+    val nLines = size(lines).cast("double")
+    val bulletFrac = round(size(filter(lines,
+      l => l.rlike("^\\s*[-*•]"))).cast("double") / nLines, 4)
+    val ellipsisFrac = round(size(filter(lines,
+      l => l.rlike("(\\.\\.\\.|…)\\s*$"))).cast("double") / nLines, 4)
+    val alphaFrac = when(nWords === 0, lit(0.0)).otherwise(
+      round(size(filter(tk, t => t.rlike("[a-zA-Z]"))).cast("double") /
+        nWordsD, 4))
+    val stopHits = size(filter(tk,
+      t => lower(t).isin(GopherStop.map(lit): _*)))
+    val pass = nWords.between(50, 100000) && meanLen.between(3.0, 10.0) &&
+      symbolRatio < 0.1 && bulletFrac < 0.9 && ellipsisFrac < 0.3 &&
+      alphaFrac > 0.8 && stopHits >= 2
+    Seq(nWords.cast("int").as("n_words"), meanLen.as("mean_word_len"),
+      symbolRatio.as("symbol_ratio"), bulletFrac.as("bullet_frac"),
+      ellipsisFrac.as("ellipsis_frac"), alphaFrac.as("alpha_word_frac"),
+      stopHits.cast("int").as("n_stop_hits"), pass.as("gopher_pass"))
+  }
+
+  /** The original HOF fold form of
+    * [[TextAnalysis.hashClassifierScore]], kept as
+    * the executable semantics statement the native kernel must match
+    * (equivalence test-pinned).
+    */
+  def hashClassifierScoreFold(text: Column, buckets: Int = 1001): Column = {
+    val tk = filter(split(lower(text), "[^a-z0-9_']+"), t => length(t) > 0)
+    val uni = coalesce(
+      aggregate(tk, lit(0L), (acc, t) => acc + hashFeatureWeight(t, buckets)),
+      lit(0L))
+    val bi = when(size(tk) < 2, lit(0L)).otherwise(coalesce(aggregate(
+      zip_with(tk, slice(tk, lit(2), greatest(size(tk) - 1, lit(1))),
+        (a, b) => when(b.isNull, lit(0L))
+          .otherwise(hashFeatureWeight(concat(a, lit(" "), b), buckets))),
+      lit(0L), (acc, x) => acc + x), lit(0L)))
+    uni + bi
+  }
+
+  /** The original relational statement of [[TextAnalysis.chunkTokens]] — kept as
+    * the executable semantics the native kernel must match
+    * (equivalence test-pinned); the kernel is the production path.
+    */
+  def chunkTokensRelational(df: DataFrame,
+      idCol: String, textCol: String, window: Int = 64, stride: Int = 48,
+      minTokens: Int = 8): DataFrame = {
+    require(stride > 0 && stride <= window && minTokens >= 1)
+    val toks = filter(split(lower(col(textCol)), "[^a-z0-9_']+"),
+      t => length(t) > 0)
+    val ex = df.select(col(idCol), posexplode(toks).as(Seq("pos", "tok")))
+    // token at pos belongs to chunk c iff c*stride <= pos < c*stride+window
+    // i.e. c in [ceil((pos-window+1)/stride), floor(pos/stride)]
+    val lo = greatest(ceil((col("pos") - window + 1).cast("double") / stride)
+      .cast("int"), lit(0))
+    val hi = expr(s"pos div $stride").cast("int") // int div, NOT / (double)
+    ex.select(col(idCol), col("pos"), col("tok"),
+        explode(sequence(lo, hi)).as("chunk_id"))
+      .groupBy(col(idCol), col("chunk_id"))
+      .agg(count(lit(1)).cast("int").as("n_tokens"),
+        md5(concat_ws(" ", transform(
+          array_sort(collect_list(struct(col("pos"), col("tok")))),
+          s => s.getField("tok")))).as("chunk_hash"))
+      .filter(col("n_tokens") >= minTokens)
   }
 }
