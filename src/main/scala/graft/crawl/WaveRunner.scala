@@ -11,6 +11,7 @@ import org.apache.spark.sql.functions._
 import graft.core.{BoilerplateExtractor, Hashing, UrlNormalizer}
 import graft.core.Model._
 import graft.operators.{Politeness, SeenSet}
+import graft.plans.Kernels
 import graft.state.{ParquetDir, SnapshotTable}
 import WaveRunner.joinAll
 
@@ -31,9 +32,10 @@ import WaveRunner.joinAll
   *  - `latest` = the incremental latest-try ROLLUP of `processed`
   *    (slim columns, materialized at compaction cadence, merged
   *    tiered): retry/recrawl scheduling and state resolution read
-  *    rollup ∪ newer-than-rollup rows (wave-predicate pushdown), so
-  *    per-wave planning input is O(distinct keys + recent deltas),
-  *    never O(history) — and no per-wave rollup write exists.
+  *    rollup ∪ newer-than-rollup segments (chosen by wave from the
+  *    manifest), so per-wave planning input is O(distinct keys +
+  *    recent deltas), never O(history) — and no per-wave rollup write
+  *    exists.
   *  - a row's EFFECTIVE state is resolved at read: pending = discovered
   *    with no processed row; fetched/failed/deferred = its latest
   *    processed row. The per-wave pending scan is read-only — an
@@ -107,15 +109,14 @@ final class WaveRunner(
     * verdict #3). The rollup MATERIALIZES only at compaction cadence —
     * zero per-wave jobs (a measured 0.3-0.8 s/wave serial write in the
     * first cut): between materializations, reads compose the rollup
-    * with the processed rows NEWER than its `committedWave` (a
-    * `wave > mergedWave` predicate that pushes into the parquet scan,
-    * so row-group stats skip the old segments). Each compaction cycle
-    * appends ONE latest-per-key segment for the accumulated window and
-    * tiered-merges with [[latestTry]], so total rollup write I/O stays
-    * O(history + keys·log) like the log itself, and per-wave planning
-    * input is O(distinct keys + recent deltas) — never O(history)
-    * (10^10 rows at 10^4 waves × 10^6 pops). The reference analog is
-    * the Postgres-indexed as-of TaskLog restore
+    * with the processed segments NEWER than its `committedWave`,
+    * selected from the manifest, so the old segments are never opened.
+    * Each compaction cycle appends ONE latest-per-key segment for the
+    * accumulated window and tiered-merges with [[latestTry]], so total
+    * rollup write I/O stays O(history + keys·log) like the log itself,
+    * and per-wave planning input is O(distinct keys + recent deltas) —
+    * never O(history) (10^10 rows at 10^4 waves × 10^6 pops). The
+    * reference analog is the Postgres-indexed as-of TaskLog restore
     * (crawler/utils/taskmanager.py:102-116); this is its table-side
     * equivalent.
     */
@@ -179,7 +180,7 @@ final class WaveRunner(
   // the Column APIs register kernels into the ACTIVE session only; a
   // runner may run on another one (e.g. spark.newSession()), so its
   // own session gets the table here (idempotent)
-  graft.plans.Kernels.register(spark)
+  Kernels.register(spark)
 
   private val fetchSource = new FetchSource(spark, pagesInput, stateRoot, config)
 
@@ -348,12 +349,11 @@ final class WaveRunner(
         // last materialization (ONE latest-per-key segment per cycle,
         // idempotent via the committed-wave marker), then bound its
         // segment count with the merging tiered compaction. Runs
-        // BEFORE the processed log's own compaction so the recent-wave
-        // scan still row-group-prunes cleanly.
+        // BEFORE the processed log's own compaction, so the newer
+        // segments it reads are still the single-wave deltas.
         if (latestT.committedWave() < w)
-          processedT.read().foreach { p =>
-            val delta = latestTry(processedSlim(p).filter(
-              col("wave") > latestT.committedWave()))
+          recentTries().foreach { recent =>
+            val delta = latestTry(recent)
             if (latestT.exists()) latestT.appendCommit(delta, w)
             else latestT.commit(delta, w)
           }
@@ -378,9 +378,33 @@ final class WaveRunner(
 
   // ---- pending-state resolution (read-side; no frontier rewrite) ----
 
-  private def processedSlim(p: DataFrame): DataFrame =
-    p.select("urlHash", "url", "host", "depth", "priority", "score",
-      "wave", "attempts", "state", "contentHash", "changed")
+  /** The processed columns latest-try resolution reads, in the order
+    * every processed segment and rollup segment stores them (the
+    * processed log's leading columns): the three resolutions (the
+    * pop's, the rollup append and the rollup's merge) then aggregate
+    * rows of one layout and share their generated classes.
+    */
+  private val slimCols = Seq("urlHash", "url", "host", "depth", "priority",
+    "score", "wave", "attempts", "state", "contentHash", "changed")
+
+  /** The processed log's columns: [[slimCols]], then the page payload. */
+  private val processedCols =
+    slimCols ++ Seq("title", "text", "htmlBytes", "links", "nOutlinks")
+
+  private def processedSlim(p: DataFrame): DataFrame = p.select(slimCols.map(col): _*)
+
+  /** Processed rows newer than the rollup's merged wave, or None when
+    * none exists. The segments are selected by wave from the manifest,
+    * with no row filter, so the plan carries no wave constant. The
+    * selection is exact: every processed delta holds one wave, and the
+    * processed log is compacted only right after a rollup append, so a
+    * merged segment never holds a wave newer than the rollup's. (A
+    * manifest from before per-segment waves keeps every segment; the
+    * older rows then only repeat what the rollup already resolves, and
+    * the max_by of [[latestTry]] is unchanged by repeats.)
+    */
+  private def recentTries(): Option[DataFrame] =
+    processedT.readNewerThan(latestT.committedWave()).map(processedSlim)
 
   /** Latest try per urlHash (max by (wave, attempts) — total within a
     * key because attempts increase per wave for the same key). Also
@@ -396,32 +420,26 @@ final class WaveRunner(
       .select("urlHash", "r.*")
 
   /** Rollup ∪ the processed rows NEWER than the rollup's merged wave —
-    * the exact input set for any latest-key resolution. The wave
-    * filter pushes into the parquet scan (row-group pruning skips the
-    * already-rolled-up history); with no rollup yet, mergedWave = -1
-    * and this degrades to the full slim log (short crawls never pay a
-    * rollup job at all).
+    * the exact input set for any latest-key resolution. Only segments
+    * that can hold newer rows are read ([[recentTries]]); with no
+    * rollup yet, mergedWave = -1 and this degrades to the full slim log
+    * (short crawls never pay a rollup job at all). Once the processed
+    * log has been compacted right after a rollup append, no segment is
+    * newer and this is the rollup alone.
     */
-  private def rollupAndRecent(p: DataFrame): DataFrame = {
-    val recent = processedSlim(p).filter(col("wave") > latestT.committedWave())
-    latestT.read() match {
-      case Some(rollup) => rollup.unionByName(recent)
-      case None => recent
-    }
-  }
+  private def rollupAndRecent(): DataFrame =
+    (latestT.read().toSeq ++ recentTries()).reduce(_.unionByName(_))
 
   /** Latest try per key — O(distinct keys + recent deltas) input rows
     * once the rollup has materialized, never O(history).
     */
-  private def latestResolved(p: DataFrame): DataFrame =
-    latestTry(rollupAndRecent(p))
+  private def latestResolved(): DataFrame = latestTry(rollupAndRecent())
 
   /** Processed KEYS for the fresh-vs-seen anti-join: same key set as
     * the full log in far fewer rows (≤ one per key per rollup segment
     * + one per recent try).
     */
-  private def processedKeys(p: DataFrame): DataFrame =
-    rollupAndRecent(p).select("urlHash")
+  private def processedKeys(): DataFrame = rollupAndRecent().select("urlHash")
 
   private val pendingCols =
     Seq("urlHash", "url", "host", "depth", "priority", "score", "attempts",
@@ -436,44 +454,77 @@ final class WaveRunner(
     *    (reference crawl-frequency gate, taskmanager.py:338-361) —
     *    subtree-gated by parent change state (see [[recrawlDue]]).
     * `priorHash` rides along for recrawl pops (the stored content hash
-    * the probe compares against — null for fresh/retry rows).
+    * the probe compares against — null for fresh/retry rows). The
+    * retry and recrawl branches are built only for the `reentries`
+    * origins ([[reentryOrigins]]).
     */
-  private def pendingSet(w: Int): DataFrame = {
+  private def pendingSet(w: Int, reentries: Seq[String]): DataFrame = {
     val discoveries = frontierT.read().get
       .select("urlHash", "url", "host", "depth", "priority", "score")
-    processedT.read() match {
-      case None =>
-        discoveries.withColumn("attempts", lit(0))
-          .withColumn("origin", lit("fresh"))
+    if (!processedT.exists()) {
+      discoveries.withColumn("attempts", lit(0))
+        .withColumn("origin", lit("fresh"))
+        .withColumn("priorHash", lit(null).cast("string"))
+    } else {
+      val fresh = SeenSet.notSeen(discoveries,
+          Some(processedKeys()), popBloom.get(w - 1),
+          popBloom.count(w - 1), config.broadcastSeenKeys)
+        .withColumn("attempts", lit(0))
+        .withColumn("origin", lit("fresh"))
+        .withColumn("priorHash", lit(null).cast("string"))
+      // ONE latest-try resolve shared by the retry and recrawl
+      // branches (the identical aggregate subtrees reuse one shuffle
+      // via exchange reuse) — and its input is the rollup, not the
+      // full processed history
+      lazy val latest = latestResolved()
+      val parts = Seq.newBuilder[DataFrame]
+      parts += fresh
+      if (reentries.contains("retry")) {
+        parts += latest
+          .filter(col("state") === FrontierState.Deferred &&
+            col("attempts") < config.maxFetchAttempts &&
+            col("wave") + config.retryBackoffWaves <= Kernels.bound_int(w))
+          .withColumn("origin", lit("retry"))
           .withColumn("priorHash", lit(null).cast("string"))
-      case Some(p) =>
-        val fresh = SeenSet.notSeen(discoveries,
-            Some(processedKeys(p)), popBloom.get(w - 1),
-            popBloom.count(w - 1), config.broadcastSeenKeys)
-          .withColumn("attempts", lit(0))
-          .withColumn("origin", lit("fresh"))
-          .withColumn("priorHash", lit(null).cast("string"))
-        // ONE latest-try resolve shared by the retry and recrawl
-        // branches (the identical aggregate subtrees reuse one shuffle
-        // via exchange reuse) — and its input is the rollup, not the
-        // full processed history
-        lazy val latest = latestResolved(p)
-        val parts = Seq.newBuilder[DataFrame]
-        parts += fresh
-        if (config.maxFetchAttempts > 1) {
-          parts += latest
-            .filter(col("state") === FrontierState.Deferred &&
-              col("attempts") < config.maxFetchAttempts &&
-              col("wave") + config.retryBackoffWaves <= w)
-            .withColumn("origin", lit("retry"))
-            .withColumn("priorHash", lit(null).cast("string"))
-            .select(pendingCols.map(col): _*)
-        }
-        if (config.recrawlEveryWaves > 0)
-          parts += recrawlDue(w, latest).select(pendingCols.map(col): _*)
-        parts.result().reduce(_.unionByName(_))
+          .select(pendingCols.map(col): _*)
+      }
+      if (reentries.contains("recrawl"))
+        parts += recrawlDue(w, latest).select(pendingCols.map(col): _*)
+      parts.result().reduce(_.unionByName(_))
     }
   }
+
+  /** The origins besides "fresh" the pending set can hold this wave:
+    * "retry" when a deferred row may exist and retries are on,
+    * "recrawl" when re-crawling is on; none before anything is
+    * processed.
+    */
+  private def reentryOrigins(): Seq[String] =
+    if (!processedT.exists()) {
+      deferralsSeen = Some(false) // nothing processed, nothing deferred
+      Nil
+    } else
+      (if (config.maxFetchAttempts > 1 && mayHaveDeferred()) Seq("retry") else Nil) ++
+        (if (config.recrawlEveryWaves > 0) Seq("recrawl") else Nil)
+
+  /** Whether any committed wave may have deferred a row. Only deferred
+    * rows can be retried, so when none exists the retry branch is
+    * provably empty and stays out of the plan (the crawl's common case:
+    * its latest-try aggregate over every processed key then never
+    * runs). Known without a job from the counts this runner commits
+    * ([[commitMetrics]]); a runner resuming a crawl reads it once from
+    * the metrics table, where a lost-counts row (-1) counts as a
+    * deferral, and metrics that lag the processed log count as one too.
+    */
+  private var deferralsSeen: Option[Boolean] = None
+
+  private def mayHaveDeferred(): Boolean =
+    metricsT.committedWave() < processedT.committedWave() ||
+      deferralsSeen.getOrElse {
+        val seen = metricsT.read().exists(m => !m.filter(col("deferred") =!= 0L).isEmpty)
+        deferralsSeen = Some(seen)
+        seen
+      }
 
   /** Recrawl-eligible rows for wave `w` — the wave-model form of the
     * reference's hierarchical session-info check
@@ -493,7 +544,7 @@ final class WaveRunner(
   private def recrawlDue(w: Int, latest: DataFrame): DataFrame = {
     val due = latest
       .filter(col("state") === FrontierState.Fetched &&
-        col("wave") + config.recrawlEveryWaves <= w)
+        col("wave") + config.recrawlEveryWaves <= Kernels.bound_int(w))
       .withColumn("attempts", lit(0))
       .withColumn("origin", lit("recrawl"))
       .withColumn("priorHash", col("contentHash"))
@@ -523,16 +574,13 @@ final class WaveRunner(
     */
   def frontierStates(): DataFrame = {
     val discoveries = frontierT.read().get
-    processedT.read() match {
-      case None => discoveries.withColumn("state", lit(FrontierState.Pending))
-      case Some(p) =>
-        discoveries
-          .join(latestResolved(p).select(col("urlHash"),
-            col("state").as("p_state")), Seq("urlHash"), "left")
-          .withColumn("state",
-            coalesce(col("p_state"), lit(FrontierState.Pending)))
-          .drop("p_state")
-    }
+    if (!processedT.exists()) discoveries.withColumn("state", lit(FrontierState.Pending))
+    else discoveries
+      .join(latestResolved().select(col("urlHash"),
+        col("state").as("p_state")), Seq("urlHash"), "left")
+      .withColumn("state",
+        coalesce(col("p_state"), lit(FrontierState.Pending)))
+      .drop("p_state")
   }
 
   private sealed trait StageResult
@@ -548,8 +596,8 @@ final class WaveRunner(
     */
   private def hasFutureWork: Boolean =
     processedT.read().exists { p =>
-      val openDeferred = config.maxFetchAttempts > 1 &&
-        !latestResolved(p)
+      val openDeferred = config.maxFetchAttempts > 1 && mayHaveDeferred() &&
+        !latestResolved()
           .filter(col("state") === FrontierState.Deferred &&
             col("attempts") < config.maxFetchAttempts)
           .isEmpty
@@ -562,7 +610,8 @@ final class WaveRunner(
     * kills/resumes.
     */
   private def stageWave(w: Int, staging: String): StageResult = {
-    val pending = pendingSet(w)
+    val reentries = reentryOrigins()
+    val pending = pendingSet(w, reentries)
       .filter(col("depth") <= config.maxDepth)
     val allowed = Politeness.applyRobots(pending, robots)
 
@@ -595,18 +644,21 @@ final class WaveRunner(
     // ---- pop, STAGED: the ranking window runs exactly once; every
     // consumer (defer split, fetch join, miss anti-join, metrics)
     // reads the staged parquet instead of recomputing the plan ----
+    // only the counters the plan can make nonzero are observed: each
+    // observed aggregate list is a class of generated code, and a bare
+    // row count is one class shared by every observation that is one
     val popObs = Observation(s"graft-pop-$w")
     timed(s"w$w pop+stage")(ParquetDir.write(
       (if (unbudgeted) allowed else rankedPop)
         .select(pendingCols.map(col): _*)
-        .observe(popObs,
-          count(lit(1)).as("n"),
-          count(when(col("origin") === "retry", 1)).as("retries"),
-          count(when(col("origin") === "recrawl", 1)).as("recrawls")),
+        .observe(popObs, count(lit(1)).as("n"),
+          reentries.map(o => count(when(col("origin") === o, 1)).as(o)): _*),
         s"$staging/popped"))
     val poppedN = popObs.get("n").asInstanceOf[Long]
-    val retryN = popObs.get("retries").asInstanceOf[Long]
-    val recrawlN = popObs.get("recrawls").asInstanceOf[Long]
+    def reentered(origin: String): Long =
+      if (reentries.contains(origin)) popObs.get(origin).asInstanceOf[Long] else 0L
+    val retryN = reentered("retry")
+    val recrawlN = reentered("recrawl")
 
     if (poppedN == 0L) {
       writeCounts(staging, StageCounts(0, 0, 0, 0, 0, 0, 0, 0))
@@ -667,8 +719,9 @@ final class WaveRunner(
     // the pages table per wave
     val procObs = Observation(s"graft-proc-$w")
     timed(s"w$w fetch+extract+stage")(ParquetDir.write(
-      extracted.withColumn("wave", lit(w))
+      extracted.withColumn("wave", Kernels.bound_int(w))
         .withColumn("nOutlinks", size(col("links")))
+        .select(processedCols.map(col): _*)
         .observe(procObs,
           count(lit(1)).as("fetched"),
           coalesce(sum("htmlBytes"), lit(0L)).as("bytes")),
@@ -700,10 +753,11 @@ final class WaveRunner(
           deferred.map(d => emptyPage(d, FrontierState.Deferred)).toSeq)
           .reduce(_.unionByName(_))
         Some(() => ParquetDir.write(
-          tail.withColumn("wave", lit(w))
+          tail.withColumn("wave", Kernels.bound_int(w))
             .withColumn("nOutlinks", size(col("links")))
-            .observe(tailObs, count(lit(1)).as("n"),
-              count(when(col("state") === FrontierState.Deferred, 1)).as("deferred")),
+            .select(processedCols.map(col): _*)
+            .observe(tailObs, count(lit(1)).as("n"), deferred.map(_ =>
+              count(when(col("state") === FrontierState.Deferred, 1)).as("deferred")).toSeq: _*),
           tailDir))
       }
 
@@ -713,10 +767,13 @@ final class WaveRunner(
     val frontierKeys = frontierT.read().get.select("urlHash")
     val seenCount = bloom.count(w - 1)
     val preBroadcast = seenCount.exists(_ <= config.broadcastSeenKeys)
+    // the key leads, as in every other urlHash aggregate of the wave,
+    // so the dedup's sorts and projections share their generated classes
     val links = sp
       .select(col("urlHash").as("parentHash"), col("depth"), col("priority"),
         explode(col("links")).as("url"))
-      .withColumn("urlHash", xxhash64(col("url")))
+      .select(xxhash64(col("url")).as("urlHash"), col("parentHash"), col("depth"),
+        col("priority"), col("url"))
     // under the broadcast gate the seen filter runs BEFORE the dedup
     // groupBy — exact (all rows of a key drop together, so it commutes
     // with the per-key aggregate) and it keeps the already-discovered
@@ -752,7 +809,7 @@ final class WaveRunner(
         // generated kernel (plans.UrlKernels): the expand projection stays
         // inside whole-stage codegen — no Scala-UDF encoder round trip
         // in the hottest per-wave stage
-        graft.plans.Kernels.host_of(col("url")).as("host"),
+        Kernels.host_of(col("url")).as("host"),
         (col("pdepth") + 1).as("depth"),
         col("priority"),
         // optional link-mass feedback: floor(log2(inlinks)) as an exact
@@ -763,7 +820,7 @@ final class WaveRunner(
            scoreCol(col("priority"), col("pdepth") + 1) -
              (length(bin(col("inlinks"))) - 1).cast("long")
          else scoreCol(col("priority"), col("pdepth") + 1)).as("score"),
-        lit(w).as("discoveredWave"),
+        Kernels.bound_int(w).as("discoveredWave"),
         col("parentHash"))
 
     // the misses job is joined even when the expansion throws: no job
@@ -798,7 +855,7 @@ final class WaveRunner(
           .foreach(p => Files.delete(p))
         Files.delete(Paths.get(tailDir))
         (fetchedN + tailObs.get("n").asInstanceOf[Long],
-          tailObs.get("deferred").asInstanceOf[Long])
+          if (deferred.isEmpty) 0L else tailObs.get("deferred").asInstanceOf[Long])
       }
 
     writeCounts(staging,
@@ -851,6 +908,7 @@ final class WaveRunner(
           c.bytes, c.newUrls, pendingLeft, elapsedMs)
     }
     metricsT.appendCommit(Seq(m).toDS().toDF(), w)
+    deferralsSeen = deferralsSeen.map(_ || m.deferred != 0L)
   }
 
   /** Pending count after wave w: previous pending − freshly-scheduled +

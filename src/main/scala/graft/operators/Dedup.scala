@@ -30,13 +30,14 @@ object Dedup {
     * bucket): `capped_buckets` = buckets that overflowed `maxBucket`,
     * `rows_dropped_by_cap` = banded rows the cap removed. Emitted on
     * EVERY run — through the caller's [[Observation]] when provided,
-    * else under a unique auto name so the metric still reaches
-    * listener-based metric sinks (names must be unique per query, so
-    * a fixed name would break a plan that bands twice).
+    * else under a unique auto name (`<prefix>_<n>`) so the metric
+    * still reaches listener-based metric sinks (names must be unique
+    * per query, so a fixed name would break a plan that bands twice).
     */
   private val capMetricSeq = new java.util.concurrent.atomic.AtomicLong(0L)
   private def observeCap(banded: DataFrame, maxBucket: Int,
-                         obs: Option[Observation]): DataFrame = {
+                         obs: Option[Observation],
+                         prefix: String = "minhash_lsh_cap"): DataFrame = {
     val cappedBuckets =
       sum(when(col("rn") === maxBucket + 1, 1L).otherwise(0L))
         .as("capped_buckets")
@@ -46,7 +47,7 @@ object Dedup {
     obs match {
       case Some(o) => banded.observe(o, cappedBuckets, droppedRows)
       case None => banded.observe(
-        s"minhash_lsh_cap_${capMetricSeq.incrementAndGet()}",
+        s"${prefix}_${capMetricSeq.incrementAndGet()}",
         cappedBuckets, droppedRows)
     }
   }
@@ -420,9 +421,19 @@ object Dedup {
     * Requires 0 ≤ maxDist < bits ≤ 32: each chunk must keep at least
     * one bit (with maxDist ≥ bits every chunk key would be the
     * constant 0 and the join all-pairs), and the sketch has 32 bits.
+    *
+    * Each (chunk, key) bucket is capped at `maxBucket` rows, lowest
+    * ids kept, as in [[minhashPairsPortable]]: n near-identical docs
+    * share every chunk, and an uncapped bucket joins into n(n-1)/2
+    * candidates before the Hamming filter. The cap is loud, through
+    * the same observed `capped_buckets` / `rows_dropped_by_cap` metric
+    * (`capMetrics`, else an auto-named `simhash_band_cap_<n>`).
+    * Precondition: `idCol` is unique (the cap ranks by it).
     */
   def simhashPairsPortable(df: DataFrame, idCol: String, textCol: String,
-                           maxDist: Int = 3, bits: Int = 32): DataFrame = {
+                           maxDist: Int = 3, bits: Int = 32,
+                           maxBucket: Int = 1000,
+                           capMetrics: Option[Observation] = None): DataFrame = {
     require(bits >= 1 && bits <= 32 && maxDist >= 0 && maxDist < bits,
       s"simhashPairsPortable needs 0 <= maxDist < bits <= 32 (maxDist=$maxDist, bits=$bits)")
     val chunks = maxDist + 1
@@ -434,9 +445,13 @@ object Dedup {
       .withColumn("ckey",
         pmod(floor(col("sketch") / pow(lit(2.0), col("chunk") * bitsPer)).cast("long"),
           lit(1L << bitsPer)))
-    val left = banded.select(col("chunk"), col("ckey"),
+    val wB = Window.partitionBy("chunk", "ckey").orderBy("doc_id_")
+    val capped = observeCap(banded.withColumn("rn", row_number().over(wB)),
+        maxBucket, capMetrics, "simhash_band_cap")
+      .filter(col("rn") <= maxBucket).drop("rn")
+    val left = capped.select(col("chunk"), col("ckey"),
       col("doc_id_").as("id_a"), col("sketch").as("sk_a"))
-    val right = banded.select(col("chunk"), col("ckey"),
+    val right = capped.select(col("chunk"), col("ckey"),
       col("doc_id_").as("id_b"), col("sketch").as("sk_b"))
     left.join(right, Seq("chunk", "ckey"))
       .filter(col("id_a") < col("id_b"))

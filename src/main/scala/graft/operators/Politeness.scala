@@ -115,10 +115,13 @@ object Politeness {
   /** Join the robots dimension onto a frontier (columns url, host, …):
     * drops disallowed rows and attaches `robotsDelayMs` (0 when the
     * host has none). Longest-prefix-match with Allow winning length
-    * ties, evaluated as PURE CATALYST array algebra over the joined
-    * rules column (codegen'd; no driver-side rule map, no UDF):
-    * best = max over matching prefixes of (prefixLen, allowBit).
-    * The dimension side broadcasts (hosts-with-rules << frontier).
+    * ties, evaluated by one generated kernel over the joined rules
+    * column (`graft_robots_allowed`, [[graft.plans.UrlKernels]]: inside
+    * whole-stage codegen, no driver-side rule map, no UDF). Its
+    * relational statement is
+    * `best = max over matching prefixes of (prefixLen, allowBit)`,
+    * kept with its equivalence test in test sources. The dimension
+    * side broadcasts (hosts-with-rules << frontier).
     *
     * Path semantics: rules match against the full URI path INCLUDING
     * `;params` (RFC 9309 matches the percent-encoded path component
@@ -129,18 +132,10 @@ object Politeness {
     dim match {
       case None => frontier.withColumn("robotsDelayMs", lit(0L))
       case Some(d) =>
-        val path = {
-          val p = regexp_extract(col("url"), "^[a-z][a-z0-9+.-]*://[^/]*(/[^?#]*)", 1)
-          when(p === "", lit("/")).otherwise(p)
-        }
-        val best = array_max(transform(
-          filter(col("rules"), r => path.startsWith(r.getField("pathPrefix"))),
-          r => struct(length(r.getField("pathPrefix")).as("len"),
-            r.getField("allow").cast("int").as("allowBit"))))
         frontier
           .join(broadcast(d), Seq("host"), "left")
           .withColumn("robotsDelayMs", coalesce(col("robotsDelayMs"), lit(0L)))
-          .filter(col("rules").isNull || best.isNull || best.getField("allowBit") === 1)
+          .filter(graft.plans.Kernels.robots_allowed(col("url"), col("rules")))
           .drop("rules")
     }
   }

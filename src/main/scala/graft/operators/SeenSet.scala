@@ -65,7 +65,13 @@ object SeenSet {
           case None =>
             candidates.join(seenDf.select("urlHash"), Seq("urlHash"), "left_anti")
           case Some(bf) =>
-            val mightContain = udf((h: Long) => bf.mightContainLong(h))
+            // declared nondeterministic so the optimizer keeps the probe
+            // where it is written: over an aggregate it stays over it (a
+            // copy pushed below into each union branch would run the
+            // aggregate's exchange once per branch), and it is never
+            // copied onto the seen side as an inferred filter (every
+            // seen key passes a sketch built over the seen keys)
+            val mightContain = udf((h: Long) => bf.mightContainLong(h)).asNondeterministic()
             val definitelyNew = candidates.filter(!mightContain(col("urlHash")))
             val maybeSeen = candidates.filter(mightContain(col("urlHash")))
             definitelyNew.unionByName(

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -96,6 +96,8 @@ object Kernels {
     Kernel("canonicalize_url", UrlKernels, "canonicalize", StringType,
       Seq(in(StringType))),
     Kernel("host_of", UrlKernels, "hostOf", StringType, Seq(in(StringType))),
+    Kernel("graft_robots_allowed", UrlKernels, "robotsAllowed", BooleanType,
+      Seq(in(StringType), in(UrlKernels.Rules)), propagateNull = false),
     Kernel("graft_float_dot", VectorExprs, "floatDot", DoubleType,
       Seq(in(ArrayType(FloatType)), in(ArrayType(FloatType)))),
     Kernel("graft_float_double_dot", VectorExprs, "floatDoubleDot", DoubleType,
@@ -135,6 +137,24 @@ object Kernels {
     Kernel("graft_adjacent_pairs", AdjacentPairs, "invoke",
       ArrayType(AdjacentPairs.Entry, containsNull = false), Seq(in(Tokens))))
 
+  /** `graft_bound_int(n)`: the constant int `n` as a [[BoundInt]], which
+    * generated code reads at run time instead of inlining. Not a kernel
+    * row: it calls no loop, it only keeps a constant out of the source.
+    */
+  private[plans] val boundInt: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier("graft_bound_int"),
+      new ExpressionInfo(classOf[BoundInt].getName, "graft_bound_int"),
+      {
+        case Seq(a) if a.foldable && a.dataType == IntegerType && a.eval() != null =>
+          BoundInt(a.eval().asInstanceOf[Int])
+        case args =>
+          throw new AnalysisException("UNEXPECTED_INPUT_TYPE", Map(
+            "paramIndex" -> "1", "functionName" -> "`graft_bound_int`",
+            "requiredType" -> "\"INT\" constant",
+            "inputSql" -> args.map(_.sql).mkString("\"", ", ", "\""),
+            "inputType" -> args.map(_.dataType.sql).mkString("\"", ", ", "\"")))
+      })
+
   /** Registers every kernel missing from `spark`'s function registry. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
@@ -142,6 +162,8 @@ object Kernels {
       val id = FunctionIdentifier(k.name)
       if (!reg.functionExists(id)) reg.registerFunction(id, k.info, k.build _)
     }
+    val (id, info, builder) = boundInt
+    if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
   }
 
   private def call(name: String, args: Column*): Column = {
@@ -151,6 +173,8 @@ object Kernels {
 
   def canonicalize_url(url: Column): Column = call("canonicalize_url", url)
   def host_of(url: Column): Column = call("host_of", url)
+  def robots_allowed(url: Column, rules: Column): Column =
+    call("graft_robots_allowed", url, rules)
   def float_dot(a: Column, b: Column): Column = call("graft_float_dot", a, b)
   def float_double_dot(a: Column, b: Column): Column =
     call("graft_float_double_dot", a, b)
@@ -180,6 +204,7 @@ object Kernels {
                    minTokens: Column): Column =
     call("graft_chunk_hashes", tokens, window, stride, minTokens)
   def adjacent_pairs(tokens: Column): Column = call("graft_adjacent_pairs", tokens)
+  def bound_int(value: Int): Column = call(boundInt._1.funcName, lit(value))
 }
 
 /** Session extensions: every [[Kernels]] row, callable by name from SQL.
@@ -187,9 +212,11 @@ object Kernels {
   * `spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     Kernels.all.foreach(k =>
       ext.injectFunction((FunctionIdentifier(k.name), k.info, k.build)))
+    ext.injectFunction(Kernels.boundInt)
+  }
 }
 
 /** Pieces the token kernels share. */

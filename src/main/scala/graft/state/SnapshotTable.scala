@@ -43,9 +43,14 @@ final class SnapshotTable(spark: SparkSession, root: String, val name: String) {
     * manifest lists only the new version; an append commit's manifest
     * lists all previous segments plus the new delta — so appends never
     * rewrite history (the 100 TB-honest path for pages/order/metrics).
+    * `segmentWaves` pairs each segment with the newest wave committed
+    * into it (a merged segment takes the newest of its inputs), which
+    * is what [[readNewerThan]] selects on. A manifest written without
+    * them reads as if every segment held the manifest's wave: an upper
+    * bound, so a selection over it only ever keeps too much.
     */
   final case class Manifest(version: Int, wave: Int, segments: Seq[Int],
-                            files: Seq[FileLineage])
+                            files: Seq[FileLineage], segmentWaves: Seq[Int])
 
   def currentManifest(): Option[Manifest] = {
     if (!Files.exists(manifestPath)) return None
@@ -107,7 +112,8 @@ final class SnapshotTable(spark: SparkSession, root: String, val name: String) {
     } else require(Files.exists(dir),
       s"adoptCommit: neither source $srcDir nor target $dir exists")
     val segments = prev.map(_.segments).getOrElse(Nil) :+ next
-    writeManifest(Manifest(next, wave, segments, listLineage(dir)))
+    val waves = prev.map(_.segmentWaves).getOrElse(Nil) :+ wave
+    writeManifest(Manifest(next, wave, segments, listLineage(dir), waves))
     next
   }
 
@@ -125,15 +131,28 @@ final class SnapshotTable(spark: SparkSession, root: String, val name: String) {
   def readWaveSegment(wave: Int): Option[DataFrame] =
     currentManifest().filter(_.wave == wave).map(m => readSegments(Seq(m.segments.last)))
 
+  /** The live segments that may hold rows committed after `wave`, read
+    * as one relation; None when no segment does. The selection is by
+    * manifest, so skipped segments cost no file listing or footer read.
+    * A kept segment may still hold older rows (a merged one), so a
+    * reader that needs exactly the newer rows filters them as well.
+    */
+  def readNewerThan(wave: Int): Option[DataFrame] =
+    currentManifest().flatMap { m =>
+      val newer = m.segments.zip(m.segmentWaves).collect { case (v, w) if w > wave => v }
+      if (newer.isEmpty) None else Some(readSegments(newer))
+    }
+
   private def commitInternal(df: DataFrame, wave: Int, append: Boolean): Int = {
     val prev = currentManifest()
     val next = prev.map(_.version).getOrElse(0) + 1
     val dir = versionDir(next)
     ParquetDir.write(df, dir.toString)
-    val segments =
-      if (append) prev.map(_.segments).getOrElse(Nil) :+ next
-      else Seq(next)
-    writeManifest(Manifest(next, wave, segments, listLineage(dir)))
+    val (segments, waves) =
+      if (append) (prev.map(_.segments).getOrElse(Nil) :+ next,
+        prev.map(_.segmentWaves).getOrElse(Nil) :+ wave)
+      else (Seq(next), Seq(wave))
+    writeManifest(Manifest(next, wave, segments, listLineage(dir), waves))
     next
   }
 
@@ -172,9 +191,9 @@ final class SnapshotTable(spark: SparkSession, root: String, val name: String) {
         ParquetDir.write(merged, versionDir(next).toString)
         // merged segment FIRST, survivors in original order: `.last`
         // stays the newest delta for readWaveSegment
-        val segments = next +: m.segments.filterNot(toMerge)
-        writeManifest(Manifest(next, m.wave, segments,
-          listLineage(versionDir(next))))
+        val (mergedAway, kept) = m.segments.zip(m.segmentWaves).partition(s => toMerge(s._1))
+        writeManifest(Manifest(next, m.wave, next +: kept.map(_._1),
+          listLineage(versionDir(next)), mergedAway.map(_._2).max +: kept.map(_._2)))
         Some(next)
       }
     }
@@ -188,7 +207,8 @@ final class SnapshotTable(spark: SparkSession, root: String, val name: String) {
   def rollback(version: Int): Unit = {
     require(Files.exists(versionDir(version)), s"no snapshot v$version for $name")
     val wave = currentManifest().map(_.wave).getOrElse(-1)
-    writeManifest(Manifest(version, wave, Seq(version), listLineage(versionDir(version))))
+    writeManifest(Manifest(version, wave, Seq(version), listLineage(versionDir(version)),
+      Seq(wave)))
   }
 
   /** Drop all snapshot dirs not referenced by the current manifest. */
@@ -230,8 +250,10 @@ final class SnapshotTable(spark: SparkSession, root: String, val name: String) {
     val files = m.files.map(f =>
       s"""{"file":${jsonStr(f.file)},"bytes":${f.bytes}}""").mkString("[", ",", "]")
     val segs = m.segments.mkString("[", ",", "]")
+    val waves = m.segmentWaves.mkString("[", ",", "]")
     val json =
-      s"""{"version":${m.version},"wave":${m.wave},"segments":$segs,"files":$files}"""
+      s"""{"version":${m.version},"wave":${m.wave},"segments":$segs,""" +
+        s""""segmentWaves":$waves,"files":$files}"""
     val tmp = tableDir.resolve(s"manifest.json.tmp-${m.version}")
     Files.write(tmp, json.getBytes(UTF_8))
     Files.move(tmp, manifestPath, StandardCopyOption.ATOMIC_MOVE,
@@ -256,11 +278,14 @@ final class SnapshotTable(spark: SparkSession, root: String, val name: String) {
     val files = """\{"file":"((?:[^"\\]|\\.)*)","bytes":(\d+)\}""".r
       .findAllMatchIn(json)
       .map(m => FileLineage(unescape(m.group(1)), m.group(2).toLong)).toSeq
-    val segments = """"segments"\s*:\s*\[([0-9,\s]*)\]""".r
+    def intList(k: String): Option[Seq[Int]] = s""""$k"\\s*:\\s*\\[([0-9,\\s-]*)\\]""".r
       .findFirstMatchIn(json)
       .map(_.group(1).split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt).toSeq)
-      .getOrElse(Seq(intField("version")))
-    Manifest(intField("version"), intField("wave"), segments, files)
+    val segments = intList("segments").getOrElse(Seq(intField("version")))
+    val wave = intField("wave")
+    val segmentWaves = intList("segmentWaves").filter(_.size == segments.size)
+      .getOrElse(segments.map(_ => wave))
+    Manifest(intField("version"), wave, segments, files, segmentWaves)
   }
 
   private def unescape(s: String): String = {

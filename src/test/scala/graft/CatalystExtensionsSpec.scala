@@ -59,12 +59,14 @@ class CatalystExtensionsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       "array(CAST(doc_id AS DOUBLE), 0.5D) AS vd",
       "array(doc_id, doc_id % 5) AS vl",
       "array(0, CAST(doc_id % 3 AS INT)) AS pos",
+      "array(named_struct('allow', doc_id % 2 = 0, 'pathPrefix', '/p/')) AS rules",
       "IF(doc_id < 0, text, NULL) AS text_n",
       "IF(doc_id < 0, concat('http://', source), NULL) AS url_n",
       "IF(doc_id < 0, split(text, ' '), NULL) AS toks_n",
       "IF(doc_id < 0, array(CAST(doc_id AS FLOAT)), NULL) AS vf_n",
       "IF(doc_id < 0, array(CAST(doc_id AS DOUBLE)), NULL) AS vd_n",
-      "IF(doc_id < 0, array(doc_id), NULL) AS vl_n")
+      "IF(doc_id < 0, array(doc_id), NULL) AS vl_n",
+      "IF(doc_id < 0, array(named_struct('allow', false, 'pathPrefix', '/')), NULL) AS rules_n")
 
   /** One kernel's audit: a call over [[docs]], the same call with a
     * null data argument, the value that null gives, and a call that
@@ -78,6 +80,8 @@ class CatalystExtensionsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     "canonicalize_url" -> Audit("canonicalize_url(url)",
       "canonicalize_url(url_n)", null, "canonicalize_url(doc_id)"),
     "host_of" -> Audit("host_of(url)", "host_of(url_n)", null, "host_of(toks)"),
+    "graft_robots_allowed" -> Audit("graft_robots_allowed(url, rules)",
+      "graft_robots_allowed(url, rules_n)", true, "graft_robots_allowed(url, toks)"),
     "graft_float_dot" -> Audit("graft_float_dot(vf, vf)",
       "graft_float_dot(vf_n, vf)", null, "graft_float_dot(vd, vf)"),
     "graft_float_double_dot" -> Audit("graft_float_double_dot(vf, vd)",
@@ -189,6 +193,27 @@ class CatalystExtensionsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .collect().map(r => Option(r.getString(0)))
     val want = messy.map(u => UrlNormalizer.canonicalize(u))
     assert(got.toSeq === want)
+  }
+
+  test("graft_bound_int keeps its constant out of the generated source") {
+    // the same plan over two constants generates one source, so one
+    // compiled class serves both; a literal generates two
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    def source(c: org.apache.spark.sql.Column): Seq[String] = {
+      val df = docs(spark).select((col("doc_id") + c).as("r")).filter(col("r") > c)
+      assert(df.collect().nonEmpty)
+      codegenStringSeq(df.queryExecution.executedPlan).map(_._2)
+    }
+    assert(source(Kernels.bound_int(3)) === source(Kernels.bound_int(4)))
+    assert(source(lit(3)) !== source(lit(4)))
+    // the bound value evaluates like the literal, interpreted or
+    // generated, and is not folded away
+    val df = docs(spark).select((col("doc_id") + Kernels.bound_int(7)).as("r"), col("doc_id"))
+    assert(df.collect().forall(r => r.getLong(0) == r.getLong(1) + 7))
+    assert(spark.range(1).select(Kernels.bound_int(7)).head().getInt(0) === 7)
+    assert(df.queryExecution.optimizedPlan.expressions.exists(_.exists(_.isInstanceOf[graft.plans.BoundInt])))
+    assert(sqlOnly.sql("SELECT graft_bound_int(5) AS b").head().getInt(0) === 5)
+    intercept[AnalysisException](docs(spark).selectExpr("graft_bound_int(CAST(doc_id AS INT))").schema)
   }
 
   test("BloomSketchAgg builds a mergeable sketch with no false negatives") {

@@ -417,6 +417,30 @@ class DedupSimilaritySpec extends AnyFunSuite {
     }
   }
 
+  test("simhash pairs cap each band bucket and report it") {
+    // 1,000 byte-identical docs share every chunk key: uncapped, the
+    // band join gives C(1000,2) = 499,500 pairs. Capped at 100 it keeps
+    // the 100 lowest ids of each of the 4 buckets (the same 100), so
+    // exactly C(100,2) = 4,950 pairs, and the cap reports itself
+    import org.apache.spark.sql.Observation
+    val viral = (0 until 1000).map(i =>
+      (i.toLong, "identical viral boilerplate text repeated across the corpus"))
+      .toDF("doc_id", "text")
+    val obs = Observation("simhash-cap")
+    val pairs = Dedup.simhashPairsPortable(viral, "doc_id", "text",
+      maxDist = 3, bits = 32, maxBucket = 100, capMetrics = Some(obs))
+    assert(pairs.count() === 4950L)
+    assert(pairs.agg(max("id_b")).head().getLong(0) === 99L, "the cap keeps the lowest ids")
+    assert(obs.get("capped_buckets") === 4L, "one overflowing bucket per chunk")
+    assert(obs.get("rows_dropped_by_cap") === 4L * 900L)
+    // under the cap nothing is dropped, and the metric still reports
+    val obs0 = Observation("simhash-cap-none")
+    Dedup.simhashPairsPortable(docs, "doc_id", "text", maxDist = 8, bits = 32,
+      capMetrics = Some(obs0)).count()
+    assert(obs0.get("capped_buckets") === 0L)
+    assert(obs0.get("rows_dropped_by_cap") === 0L)
+  }
+
   test("ngram jaccard: identical = 1.0, disjoint = 0.0") {
     val pairs = Seq((7L, 100L), (7L, 102L)).toDF("id_a", "id_b")
     val got = Dedup.ngramJaccard(pairs, docs, "doc_id", "text", k = 3)

@@ -120,22 +120,28 @@ class ScaleInvariantsSpec extends AnyFunSuite {
     assert(gateOrder === rankedOrder)
     assert(gatePages === rankedPages)
   }
-  test("steady-state wave launches a bounded number of Spark jobs") {
-    // the benchmark's crawl_deep shape, small: a binding per-host
-    // budget, robots, the sketch-prefiltered shuffled anti-joins and a
-    // tiered compaction cycle every wave. A new per-wave job (a
-    // schema-inference scan, an extra aggregate) fails here before a
-    // bench run sees it.
+  /** The benchmark's crawl_deep shape, small: a binding per-host
+    * budget, robots, the sketch-prefiltered shuffled anti-joins and a
+    * tiered compaction cycle every wave. Seeds committed, no wave run.
+    */
+  private def deepCrawl(name: String, waves: Int): WaveRunner = {
     val spec = SyntheticCorpus.Spec(numUrls = 2000, numHosts = 20, withRobots = true)
     val corpus = SyntheticCorpus.generate(spark, spec, partitions = 4).toDF()
-    val cfg = CrawlConfig(maxDepth = 64, defaultMaxPerWave = 5, maxWaves = 3,
+    val cfg = CrawlConfig(maxDepth = 64, defaultMaxPerWave = 5, maxWaves = waves,
       assumeUniqueUrls = true, compactEveryWaves = 1, compactMaxSegments = 2,
       bloomMinFrontier = 0L, bloomCapacity = 100000L, broadcastSeenKeys = 0L)
     val robots = graft.operators.RobotsLoader.robotsDim(spark, corpus, cfg.userAgent)
       .localCheckpoint()
     val runner = new WaveRunner(spark, corpus,
-      Files.createTempDirectory("graft-wavejobs-").toString, cfg, robotsDim = Some(robots))
+      Files.createTempDirectory(s"graft-$name-").toString, cfg, robotsDim = Some(robots))
     runner.initSeeds((0L until 2000L by 10).map(i => SyntheticCorpus.urlFor(i, spec) -> 1))
+    runner
+  }
+
+  test("steady-state wave launches a bounded number of Spark jobs") {
+    // A new per-wave job (a schema-inference scan, an extra aggregate)
+    // fails here before a bench run sees it.
+    val runner = deepCrawl("wavejobs", waves = 3)
     assert(runner.runWave(1))
     // the commit tail runs its jobs on threads of its own: each must
     // still carry the caller's job group and local properties (span
@@ -160,7 +166,87 @@ class ScaleInvariantsSpec extends AnyFunSuite {
   }
 
   /** Jobs of one steady-state wave in the test above, as measured. */
-  private val WaveJobBudget = 21
+  private val WaveJobBudget = 19
+
+  test("steady waves run byte-identical generated code") {
+    // Spark compiles one class per distinct generated source and keeps
+    // the classes in a bounded per-JVM cache: a wave number inlined as
+    // a literal would make every wave recompile the pipelines it
+    // reaches, and a steady wave that needs more classes than the cache
+    // holds recompiles them anyway. Pin both: consecutive steady waves
+    // generate the same sources, and a wave generates few of them.
+    val runner = deepCrawl("wavecode", waves = 5)
+    (1 to 2).foreach(w => assert(runner.runWave(w)))
+    val (more3, wave3) = CodegenProbe.sources(spark)(runner.runWave(3))
+    val (more4, wave4) = CodegenProbe.sources(spark)(runner.runWave(4))
+    assert(more3 && more4)
+    assert(wave3.nonEmpty, "probe setup broken: no whole-stage code captured")
+    val (s3, s4) = (wave3.toSet, wave4.toSet)
+    assert(s3 === s4, s"sources only in wave 3: ${(s3 -- s4).size}, only in wave 4: " +
+      s"${(s4 -- s3).size}\n${(s3 -- s4).headOption.getOrElse("")}")
+    assert(s3.size <= WaveSourceBudget,
+      s"a steady wave generated ${s3.size} distinct whole-stage sources (budget $WaveSourceBudget)")
+  }
+
+  /** Distinct whole-stage sources of one steady wave above, as measured. */
+  private val WaveSourceBudget = 25
+
+  test("latest-try resolution reads no processed segment the rollup covers") {
+    // the rollup merges the processed log up to its committed wave;
+    // resolution reads the rollup plus only the newer segments, chosen
+    // from the manifest. With a compaction every wave, the pop reads no
+    // processed segment at all and the rollup append reads exactly the
+    // wave's own delta.
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p.collect {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case n => Seq(n)
+    }.flatten
+    // (written directory, scanned root paths) of one query execution
+    def io(p: SparkPlan): (String, Seq[String]) = {
+      val all = nodes(p)
+      (all.collectFirst { case DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _) =>
+        c.outputPath.toString }.getOrElse(""),
+        all.collect { case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toString) }
+          .flatten)
+    }
+    val runner = deepCrawl("rollupscan", waves = 4)
+    (1 to 2).foreach(w => assert(runner.runWave(w)))
+    val merged = runner.latestT.committedWave()
+    assert(merged === 2, "probe setup broken: the rollup did not merge wave 2")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[String])]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      private def record(qe: org.apache.spark.sql.execution.QueryExecution): Unit =
+        seen.add(io(qe.executedPlan))
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        record(qe)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = record(qe)
+    }
+    spark.listenerManager.register(listener)
+    try assert(runner.runWave(3))
+    finally {
+      org.apache.spark.scheduler.ListenerBusDrain.drain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val queries = seen.asScala.toSeq
+    def processed(paths: Seq[String]) = paths.filter(_.contains("/processed/"))
+    val pops = queries.filter(_._1.endsWith("/staging/wave_3/popped"))
+    assert(pops.size === 1, "probe setup broken: no pop query")
+    assert(processed(pops.head._2).isEmpty,
+      s"the pop read processed segments: ${processed(pops.head._2)}")
+    val delta = f"/processed/snapshots/v${runner.processedT.currentManifest().get.segments.last}%05d"
+    val appends = queries.filter(q =>
+      q._1.contains("/latest/snapshots/") && processed(q._2).nonEmpty)
+    assert(appends.size === 1, "probe setup broken: no rollup append read the processed log")
+    assert(processed(appends.head._2).map(p => p.substring(p.indexOf("/processed/"))) ===
+      Seq(delta))
+  }
 
   test("joinAll waits for every task, then rethrows the first failure") {
     val sc = spark.sparkContext

@@ -52,6 +52,32 @@ class StateAndOperatorsSpec extends AnyFunSuite {
     assert(t.read().get.count() === 5)
   }
 
+  test("snapshot table: segments newer than a wave are selected from the manifest") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-st-").toString
+    val t = SnapshotTable(spark, root, "log")
+    assert(t.readNewerThan(0).isEmpty)
+    (1 to 4).foreach(w => t.appendCommit(Seq(w).toDF("x"), wave = w))
+    def newer(w: Int) = t.readNewerThan(w).map(_.as[Int].collect().toSet)
+    assert(newer(2) === Some(Set(3, 4)))
+    assert(newer(4).isEmpty)
+    // a merged segment carries the newest wave merged into it
+    t.compactTiered(2)
+    assert(t.currentManifest().get.segmentWaves === Seq(3, 4))
+    assert(newer(2) === Some(Set(1, 2, 3, 4)))
+    assert(newer(3) === Some(Set(4)))
+    t.markCommit(5) // an idle wave adds no segment
+    assert(newer(4).isEmpty)
+    // a manifest without segment waves reads every segment as holding
+    // the manifest's wave: an upper bound, so nothing newer is missed
+    val manifest = java.nio.file.Paths.get(root, "log", "manifest.json")
+    val json = new String(Files.readAllBytes(manifest), "UTF-8")
+    Files.write(manifest, json.replaceAll(""""segmentWaves":\[[0-9,]*\],""", "").getBytes("UTF-8"))
+    assert(t.currentManifest().get.segmentWaves === Seq(5, 5))
+    assert(newer(4) === Some(Set(1, 2, 3, 4)))
+    assert(newer(5).isEmpty)
+  }
+
   test("snapshot table: rollback points at an old version") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft-st-").toString
@@ -297,6 +323,45 @@ class StateAndOperatorsSpec extends AnyFunSuite {
     val kept = Politeness.applyRobots(frontier, dim)
       .select("url").collect().map(_.getString(0)).toSet
     assert(kept === Set("http://h.test/q"))
+  }
+
+  test("robots kernel equals the relational longest-prefix statement") {
+    import spark.implicits._
+    // the Catalyst array-algebra statement of the robots decision
+    val path = {
+      val p = regexp_extract(col("url"), "^[a-z][a-z0-9+.-]*://[^/]*(/[^?#]*)", 1)
+      when(p === "", lit("/")).otherwise(p)
+    }
+    val best = array_max(transform(
+      filter(col("rules"), r => path.startsWith(r.getField("pathPrefix"))),
+      r => struct(length(r.getField("pathPrefix")).as("len"),
+        r.getField("allow").cast("int").as("allowBit"))))
+    val relational = col("rules").isNull || best.isNull || best.getField("allowBit") === 1
+    val urls = Seq("http://h.test/", "http://h.test", "http://h.test/a/b?x=1#f",
+      "http://h.test/a;p=1/b", "https://h.test/ab", "HTTP://h.test/a", "h.test/a",
+      "http://h.test/é/x", null)
+    val prefixes = Seq("/", "/a", "/a/", "/ab", "/a;p", "/é", "", null)
+    val allows = Seq(Some(true), Some(false), None)
+    val rng = new scala.util.Random(7)
+    val ruleSets: Seq[Option[Seq[Option[(Option[Boolean], String)]]]] =
+      None +: Some(Nil) +: Some(Seq(None)) +: (1 to 60).map { _ =>
+        Some(Seq.fill(1 + rng.nextInt(4))(
+          if (rng.nextInt(10) == 0) None
+          else Some(allows(rng.nextInt(allows.size)) -> prefixes(rng.nextInt(prefixes.size)))))
+      }
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("url", org.apache.spark.sql.types.StringType),
+      org.apache.spark.sql.types.StructField("rules", graft.plans.UrlKernels.Rules)))
+    val rows = for (u <- urls; rs <- ruleSets) yield
+      org.apache.spark.sql.Row(u, rs.map(_.map(_.map { case (a, p) =>
+        org.apache.spark.sql.Row(a.map(Boolean.box).orNull, p) }.orNull)).orNull)
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
+    val got = df.select(col("url"), col("rules"),
+        graft.plans.Kernels.robots_allowed(col("url"), col("rules")).as("k"),
+        coalesce(relational, lit(false)).as("r"))
+      .filter(col("k") =!= col("r")).collect()
+    assert(got.isEmpty, got.take(5).mkString("\n"))
+    assert(df.count() === urls.size * ruleSets.size)
   }
 
   test("poststore: append-mode versioned saves resolve to the eager SCD-2 content") {
