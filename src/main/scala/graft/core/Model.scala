@@ -208,11 +208,10 @@ object Model {
       compactEveryWaves: Int = 8,
       /** segment-count bound for the compaction check (>= 2): LSM-style
         * tiered merge of the SMALLEST segments once the count exceeds
-        * the bound — each row is rewritten O(log waves) times over the
-        * crawl, never O(waves/k) full-table rewrites (the write-
-        * amplification bound that matters when the processed log is
-        * most of 100 TB). At 2, each check merges a log back to two
-        * segments: the newest delta and everything before it. */
+        * the bound (see `SnapshotTable.compactTiered`). A large bound
+        * merges rarely and mostly rewrites recent small deltas. At 2,
+        * each check merges a log back to two segments: the newest delta
+        * and everything before it, a rewrite of the whole history. */
       compactMaxSegments: Int = 64,
       /** drop merged-away segment directories right after a compaction
         * (only non-live segments are ever deleted, so resume/crash

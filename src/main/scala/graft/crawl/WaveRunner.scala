@@ -914,7 +914,8 @@ final class WaveRunner(
   /** Pending count after wave w: previous pending − freshly-scheduled +
     * newly-discovered (retry/recrawl pops re-enter from the processed
     * log, not the pending pool, so they don't decrement it). Falls
-    * back to the exact anti-join count when no history exists.
+    * back to the exact anti-join count when no history exists (a
+    * metrics gap, or no wave-0 sketch meta before wave 1).
     */
   private var pendingCache: Option[(Int, Long)] = None
   private def pendingLeftAfter(w: Int, freshScheduled: Long, newUrls: Long): Long = {
@@ -925,7 +926,10 @@ final class WaveRunner(
           m.filter(col("wave") === w - 1).select("frontierPending")
             .collect().headOption.map(_.getLong(0))
         }.filter(_ >= 0L) // a -1 gap marker is not a usable ledger value
-      case _ => None // wave 1: before = the seed count
+      // wave 1: before = the distinct seed count, which initSeeds
+      // records as the wave-0 key count
+      case _ if w == 1 => bloom.count(0)
+      case _ => None
     }
     before match {
       case Some(n) => n - freshScheduled + newUrls

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{EntityExtract, GraftFunctions, TextAnalysis}
 import graft.operators.{Curation, Dedup, LinkGraph, Multimodal, Similarity, SitemapSource}
+import graft.state.ParquetDir
 
 /** The operator catalog exposed through SparkEntry: one query per
   * operator family from SURVEY.md §2 plus the training-data-pipeline
@@ -24,7 +25,7 @@ import graft.operators.{Curation, Dedup, LinkGraph, Multimodal, Similarity, Site
 object QueryCatalog {
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    ParquetDir.read(spark, s"$dir/$name.parquet")
 
   // ---------- aggregations (SURVEY §2.6) ----------
 

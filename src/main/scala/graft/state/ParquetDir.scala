@@ -3,20 +3,39 @@ package graft.state
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import scala.util.Try
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Parquet directories that carry their own schema, the way an Iceberg
-  * table's metadata carries its schema: a read then needs no
-  * schema-inference job (`spark.read.parquet` without a schema runs a
-  * one-task job that opens a footer, ~35-50 ms of wall time per read).
+/** Parquet inputs opened without a schema-inference job, the way an
+  * Iceberg table's metadata carries its schema (`spark.read.parquet`
+  * without a schema runs a one-task job that opens one footer, ~35-75 ms
+  * of wall time per read; the driver reads the same footer in ~11 ms).
   *
   * The writer puts the DataFrame's schema next to the part files as
   * `_schema.json`; Spark's file index skips `_`-prefixed names, so the
-  * sidecar is invisible to scans. The reader hands that schema to
-  * `spark.read.schema(…)` and infers only when the file is absent
-  * (directories written without it). Spark reads file sources with
-  * every field nullable either way, so both paths give one schema.
+  * sidecar is invisible to scans. The reader takes the schema from, in
+  * order:
+  *  1. the path-first directory's sidecar (every crawl state read);
+  *  2. the footer of the input's path-first data file, read on the
+  *     driver and converted exactly as Spark's inference converts it
+  *     (the `org.apache.spark.sql.parquet.row.metadata` schema Spark
+  *     writers store, else the parquet-to-Spark type converter) —
+  *     catalog inputs and directories written without a sidecar;
+  *  3. Spark's own inference, with its own schema and error messages,
+  *     whenever it would do more than open that one footer: schema
+  *     merging on, a subdirectory (partition directories), a glob, a
+  *     `_metadata` summary file, a missing path, no data file or an
+  *     unreadable footer.
+  * Spark reads file sources with every field nullable either way, so
+  * all three give one schema.
   */
 object ParquetDir {
 
@@ -33,16 +52,58 @@ object ParquetDir {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Scan `dirs` as one parquet relation. Inference without a schema
-    * reads the footer of the first part file in path order, so the
-    * schema comes from the path-first directory's sidecar.
+  /** Scan `paths` (parquet files or directories) as one parquet
+    * relation. Inference without a schema reads the footer of the first
+    * data file in path order, so the schema comes from the path-first
+    * directory's sidecar, else from that file's footer.
     */
-  def read(spark: SparkSession, dirs: String*): DataFrame = {
-    val sidecar = Paths.get(dirs.min, SchemaFile)
-    if (Files.exists(sidecar)) {
-      val schema = DataType.fromJson(new String(Files.readAllBytes(sidecar), UTF_8))
-        .asInstanceOf[StructType]
-      spark.read.schema(schema).parquet(dirs: _*)
-    } else spark.read.parquet(dirs: _*)
+  def read(spark: SparkSession, paths: String*): DataFrame = {
+    val sidecar = Paths.get(paths.min, SchemaFile)
+    val schema =
+      if (Files.exists(sidecar))
+        Some(DataType.fromJson(new String(Files.readAllBytes(sidecar), UTF_8))
+          .asInstanceOf[StructType])
+      else footerSchema(spark, paths)
+    schema.fold(spark.read.parquet(paths: _*))(spark.read.schema(_).parquet(paths: _*))
   }
+
+  /** The schema Spark's inference reads from the path-first data file
+    * of `paths`, or None where inference would do more than that.
+    */
+  private def footerSchema(spark: SparkSession, paths: Seq[String]): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    def dataFiles(p: String): Seq[FileStatus] = {
+      val path = new Path(p)
+      val fs = path.getFileSystem(conf)
+      val status = fs.getFileStatus(path)
+      if (status.isFile) Seq(status)
+      else fs.listStatus(path).toSeq.filter { s =>
+        val n = s.getPath.getName
+        !hidden(n) || n.startsWith("_metadata") || n.startsWith("_common_metadata")
+      }
+    }
+    if (spark.sessionState.conf.isParquetSchemaMergingEnabled ||
+        paths.exists(_.exists("{}[]*?\\".contains(_)))) None
+    else Try(paths.flatMap(dataFiles)).toOption
+      .filter(fs => fs.nonEmpty && fs.forall(s => s.isFile && !hidden(s.getPath.getName)))
+      .flatMap { fs =>
+        val first = fs.minBy(_.getPath.toString) // Spark's order: full path
+        Try {
+          val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(first, conf),
+            HadoopReadOptions.builder(conf).withMetadataFilter(SKIP_ROW_GROUPS).build())
+          try ParquetFileFormat.readSchemaFromFooter(new Footer(first.getPath, reader.getFooter),
+            new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+          finally reader.close()
+        }.toOption
+      }
+  }
+
+  /** Names Spark's file index skips. It keeps the `_metadata` /
+    * `_common_metadata` summary files although they match, and
+    * inference reads those before any data file: a listing keeps them
+    * too, so that they send the read to inference.
+    */
+  private def hidden(name: String): Boolean =
+    name.startsWith("_") && !name.contains("=") || name.startsWith(".") ||
+      name.endsWith("._COPYING_")
 }

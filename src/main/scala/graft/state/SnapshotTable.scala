@@ -159,12 +159,12 @@ final class SnapshotTable(spark: SparkSession, root: String, val name: String) {
   /** LSM-style tiered compaction: when more than `maxSegments` live
     * segments exist, merge the SMALLEST ones (by on-disk bytes) into a
     * single new segment, leaving the largest segments and the newest
-    * delta untouched. The count drops to ~maxSegments/2, so merges are
-    * infrequent, and because small segments merge into geometrically
-    * larger ones, each row is rewritten O(log n) times over an n-wave
-    * crawl — vs O(n/k) full-table rewrites for a merge of every
-    * segment at each check, which is the difference between feasible
-    * and not when the log is most of 100 TB. The newest segment is
+    * delta untouched, so the count drops to max(2, maxSegments/2). The
+    * write cost depends on the bound. A large one (the default 64)
+    * makes merges infrequent, and each merge mostly rewrites recent
+    * small deltas while the large merged segments stay put. A bound of
+    * 2 rewrites every segment but the newest on each compaction: the
+    * whole history, O(history) bytes per check. The newest segment is
     * never merged, so `readWaveSegment(committedWave)` still returns
     * the latest delta.
     * Crash-safe like any commit (atomic manifest flip, wave marker

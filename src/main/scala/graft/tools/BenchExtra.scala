@@ -1,7 +1,11 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** Query-only benchmark for the optimization loop (guide §1.4): times
@@ -15,7 +19,11 @@ import org.apache.spark.sql.SparkSession
   *   repeats: timed repeats per query (default 3; min is reported —
   *            the noise-free estimator for a quiet host)
   *   queryName...: subset to run (default: all)
-  * Prints one JSON line: {"queries": {name: minSec, ...}, "total": sum}
+  * Prints one JSON line: {"queries": {name: minSec, ...}, "jobs": {name:
+  * most Spark jobs of any run, ...}, "total": sum}, and to stderr
+  * one line per query with its times and each run's job count. A
+  * listener counts the jobs, so counting adds none; the counts are read
+  * once the session has stopped, when the listener has seen every job.
   */
 object BenchExtra {
   private val shmOk = Files.isDirectory(Paths.get("/dev/shm"))
@@ -43,25 +51,38 @@ object BenchExtra {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = newSession(cores)
+    val sc = spark.sparkContext
+    val jobRuns = new ConcurrentLinkedQueue[String] // one description per job
+    sc.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(jobRuns.add(_))
+    })
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
       .filter(n => subset.isEmpty || subset.contains(n))
-    val results = names.map { n =>
+    val times = names.map { n =>
       val fn = graft.SparkEntry.queries(n)
-      spark.sparkContext.setJobDescription(n)
-      val times = (1 to repeats).map { _ =>
+      n -> (1 to repeats).map { r =>
+        sc.setJobDescription(s"$n#$r")
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       }
-      System.err.println(f"[bx] $n%-24s " +
-        times.map(t => f"$t%.2f").mkString(" "))
-      n -> times.min
     }
-    spark.sparkContext.setJobDescription(null)
+    sc.setJobDescription(null)
+    spark.stop() // drains the listener bus
+    val jobsOf = jobRuns.asScala.groupBy(identity).view.mapValues(_.size).toMap
+    val results = times.map { case (n, ts) =>
+      val jobs = (1 to repeats).map(r => jobsOf.getOrElse(s"$n#$r", 0))
+      System.err.println(f"[bx] $n%-24s " + ts.map(t => f"$t%.2f").mkString(" ") +
+        "  jobs " + jobs.mkString(" "))
+      (n, ts.min, jobs.max)
+    }
     val total = results.map(_._2).sum
-    val qs = results.map { case (k, v) => s""""$k":${f"$v%.3f"}""" }
-      .mkString("{", ",", "}")
-    println(s"""{"queries":$qs,"total":${f"$total%.3f"},"repeats":$repeats,"sf":"$sfDir"}""")
-    spark.stop()
+    def obj(kvs: Seq[(String, String)]) =
+      kvs.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+    val qs = obj(results.map { case (n, t, _) => n -> f"$t%.3f" })
+    val js = obj(results.map { case (n, _, j) => n -> j.toString })
+    println(s"""{"queries":$qs,"jobs":$js,"total":${f"$total%.3f"},"repeats":$repeats,"sf":"$sfDir"}""")
   }
 }

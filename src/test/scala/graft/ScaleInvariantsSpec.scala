@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Model.CrawlConfig
@@ -167,6 +168,45 @@ class ScaleInvariantsSpec extends AnyFunSuite {
 
   /** Jobs of one steady-state wave in the test above, as measured. */
   private val WaveJobBudget = 19
+
+  test("wave 1's pending ledger starts from the seed count, without a counting job") {
+    val spec = SyntheticCorpus.Spec(numUrls = 400, numHosts = 10)
+    val corpus = SyntheticCorpus.generate(spark, spec, partitions = 4).toDF()
+    val cfg = CrawlConfig(maxDepth = 3, defaultMaxPerWave = 5, maxWaves = 1)
+    val root = Files.createTempDirectory("graft-ledger-")
+    def runner() = new WaveRunner(spark, corpus, root.toString, cfg)
+    def pending(r: WaveRunner) = r.metrics().filter(col("wave") === 1)
+      .select("frontierPending").collect().head.getLong(0)
+    val first = runner()
+    first.initSeeds((0L until 400L by 10).map(i => SyntheticCorpus.urlFor(i, spec) -> 1))
+    assert(first.runWave(1))
+    val exact = first.frontierT.read().get.select("urlHash")
+      .join(first.processedT.read().get.select("urlHash"), Seq("urlHash"), "left_anti")
+      .count()
+    assert(exact > 0, "probe setup broken: nothing pending after wave 1")
+    assert(pending(first) === exact)
+    // a crash right behind wave 1's frontier flip: a restarted runner
+    // commits the wave's metrics from its staged counts
+    def replayMetrics(): (Long, Int) = {
+      val metricsDir = root.resolve("metrics")
+      val s = Files.walk(metricsDir)
+      try s.sorted(java.util.Comparator.reverseOrder()).forEach(Files.delete(_))
+      finally s.close()
+      val r = runner()
+      val (more, jobs) = JobCount(spark)(r.runWave(1))
+      assert(more)
+      (pending(r), jobs)
+    }
+    val (fromSeeds, seedJobs) = replayMetrics()
+    assert(fromSeeds === exact)
+    assert(seedJobs === 1, "the metrics commit ran more than its own write")
+    // without the wave-0 sketch meta the exact anti-join count stands in
+    Files.delete(root.resolve("bloom").resolve("wave_0.meta"))
+    val (fromCount, countJobs) = replayMetrics()
+    assert(fromCount === exact)
+    assert(countJobs > seedJobs)
+  }
+
 
   test("steady waves run byte-identical generated code") {
     // Spark compiles one class per distinct generated source and keeps

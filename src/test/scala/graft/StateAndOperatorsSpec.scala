@@ -2,7 +2,9 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -133,17 +135,23 @@ class StateAndOperatorsSpec extends AnyFunSuite {
   private def segmentDirs(root: String, t: SnapshotTable): Seq[String] =
     t.currentManifest().get.segments.map(v => f"$root/${t.name}/snapshots/v$v%05d")
 
-  /** `read()` launches zero jobs and yields exactly the schema (and the
-    * rows) a schema-inferring scan of the same directories yields.
+  /** `read` launches zero jobs and yields exactly the schema (and the
+    * rows) a schema-inferring scan of `paths` yields.
     */
-  private def assertReadsLikeInference(root: String, t: SnapshotTable): Unit = {
-    val (df, jobs) = JobCount(spark)(t.read().get)
-    assert(jobs === 0, s"${t.name}: read() launched $jobs job(s)")
-    val inferred = spark.read.parquet(segmentDirs(root, t): _*)
-    assert(df.schema === inferred.schema, s"${t.name}")
+  private def assertLikeInference(what: String, read: => DataFrame, paths: Seq[String]): Unit = {
+    val (df, jobs) = JobCount(spark)(read)
+    assert(jobs === 0, s"$what: read launched $jobs job(s)")
+    val inferred = spark.read.parquet(paths: _*)
+    assert(df.schema === inferred.schema, what)
     assert(df.collect().map(_.toString).sorted ===
-      inferred.collect().map(_.toString).sorted, s"${t.name}")
+      inferred.collect().map(_.toString).sorted, what)
   }
+
+  private def assertReadsLikeInference(root: String, t: SnapshotTable): Unit =
+    assertLikeInference(t.name, t.read().get, segmentDirs(root, t))
+
+  private def assertFooterReadsLikeInference(paths: String*): Unit =
+    assertLikeInference(paths.mkString(", "), graft.state.ParquetDir.read(spark, paths: _*), paths)
 
   test("schema sidecar: commit, appendCommit and adoptCommit read without a job") {
     val root = Files.createTempDirectory("graft-st-schema-").toString
@@ -205,9 +213,67 @@ class StateAndOperatorsSpec extends AnyFunSuite {
     // (the one inference reads the footer of) carries none
     dropSidecar(segmentDirs(root, t).head)
     val (df, jobs) = JobCount(spark)(t.read().get)
-    assert(jobs > 0, "without a sidecar the schema is inferred")
+    assert(jobs === 0, "without a sidecar the schema comes from the footer")
     assert(df.schema === before.schema)
     assert(df.collect().map(_.toString).sorted === rowsBefore)
+    // schema merging reads every footer: Spark's own inference job runs
+    withConf("spark.sql.parquet.mergeSchema", "true") {
+      val (merged, mergedJobs) = JobCount(spark)(t.read().get)
+      assert(mergedJobs > 0, "with schema merging on the schema is inferred")
+      assert(merged.schema === before.schema)
+      assert(merged.collect().map(_.toString).sorted === rowsBefore)
+    }
+  }
+
+  private def withConf[T](key: String, value: String)(body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("footer schema: every test table reads like inference, without a job") {
+    // written outside Spark: no row-metadata schema, so the footer goes
+    // through the parquet-to-Spark type converter
+    for (sf <- Seq("sf0.001", "sf0.01")) {
+      val dir = java.nio.file.Paths.get("/root/testdata", sf)
+      val tables = Files.list(dir)
+      try tables.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet"))
+        .toSeq.sorted.foreach(assertFooterReadsLikeInference(_))
+      finally tables.close()
+    }
+  }
+
+  test("footer schema: a Spark-written directory without its sidecar reads like inference") {
+    // Spark writers store the row-metadata schema (arrays, struct, map)
+    val dir = Files.createTempDirectory("graft-footer-").resolve("t").toString
+    graft.state.ParquetDir.write(richRows(0, 6).repartition(3), dir)
+    Files.delete(java.nio.file.Paths.get(dir, graft.state.ParquetDir.SchemaFile))
+    assertFooterReadsLikeInference(dir)
+    val other = Files.createTempDirectory("graft-footer-").resolve("u").toString
+    richRows(6, 3).write.parquet(other)
+    assertFooterReadsLikeInference(dir, other)
+  }
+
+  test("footer schema: partition subdirectories and no data file fall back to inference") {
+    import spark.implicits._
+    val parted = Files.createTempDirectory("graft-footer-").resolve("p").toString
+    Seq((1L, "a", 0), (2L, "b", 1)).toDF("id", "s", "part")
+      .write.partitionBy("part").parquet(parted)
+    val (df, jobs) = JobCount(spark)(graft.state.ParquetDir.read(spark, parted))
+    assert(jobs > 0, "a partitioned directory is inferred by Spark")
+    val inferred = spark.read.parquet(parted)
+    assert(df.schema === inferred.schema)
+    assert(df.schema.fieldNames.toSeq === Seq("id", "s", "part"))
+    assert(df.collect().map(_.toString).sorted ===
+      inferred.collect().map(_.toString).sorted)
+
+    val empty = Files.createTempDirectory("graft-footer-empty-").toString
+    Files.write(java.nio.file.Paths.get(empty, "_SUCCESS"), Array.emptyByteArray)
+    val ours = intercept[org.apache.spark.sql.AnalysisException](
+      graft.state.ParquetDir.read(spark, empty))
+    val theirs = intercept[org.apache.spark.sql.AnalysisException](spark.read.parquet(empty))
+    assert(ours.getCondition === theirs.getCondition)
+    assert(ours.getMessage === theirs.getMessage)
   }
 
   test("robots parse: groups, specificity, crawl-delay") {

@@ -816,18 +816,20 @@ class StreamingAndPlanSpec extends AnyFunSuite {
     }
   }
 
+  /** Every main source file: (path relative to src/main/scala, text). */
+  private lazy val mainSources: Seq[(String, String)] = {
+    val root = Paths.get("src/main/scala")
+    val s = Files.walk(root)
+    try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      .map(f => root.relativize(f).toString -> new String(Files.readAllBytes(f), UTF_8))
+    finally s.close()
+  }
+
   test("entry points: five supported mains, and only they read the environment") {
     // scratch mains and engine env knobs stay out of src/main: a probe
     // belongs in perfbench/ or a test, an engine setting in CrawlConfig
-    val root = Paths.get("src/main/scala")
-    val sources = {
-      val s = Files.walk(root)
-      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally s.close()
-    }
-    def filesWith(token: String): Set[String] = sources
-      .filter(f => new String(Files.readAllBytes(f), UTF_8).contains(token))
-      .map(root.relativize(_).toString).toSet
+    def filesWith(token: String): Set[String] =
+      mainSources.collect { case (f, text) if text.contains(token) => f }.toSet
     val entryPoints = Set("graft/Bench.scala", "graft/Verify.scala",
       "graft/tools/BenchExtra.scala", "graft/tools/PlanDump.scala",
       "graft/tools/CrawlDemo.scala")
@@ -835,5 +837,16 @@ class StreamingAndPlanSpec extends AnyFunSuite {
     val envReaders = filesWith("sys.env") ++ filesWith("System.getenv")
     assert(envReaders.subsetOf(entryPoints),
       s"environment read outside the entry points: ${envReaders -- entryPoints}")
+  }
+
+  test("parquet inputs: only ParquetDir opens them (and the frozen bench harness)") {
+    // a bare read infers its schema with a job before the query's own
+    // work; ParquetDir.read takes it from a sidecar or the footer
+    val parquetRead =
+      """\.read(\s*\.\w+\([^()]*\))*\s*\.(parquet\(|format\(\s*"parquet"\s*\))""".r
+    val readers = mainSources.collect {
+      case (f, text) if parquetRead.findFirstIn(text).isDefined => f
+    }.toSet
+    assert(readers === Set("graft/state/ParquetDir.scala", "graft/Bench.scala"))
   }
 }
