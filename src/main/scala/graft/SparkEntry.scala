@@ -179,7 +179,7 @@ object SparkEntry {
   /** Shared CTE for the portable hyperplane-LSH oracles: per-vector
     * per-table bucket signatures (plane component = md5-derived double,
     * projection = sequential fold — bit-for-bit the engine's
-    * computation, Similarity.portableSig).
+    * computation, graft.plans.LshBucket).
     */
   private def lshSigsCte(bits: Int, tables: Int): String =
     s"""WITH v AS (SELECT vec_id AS id, embedding AS vec, len(embedding) AS d

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructField, StructType}
 
 /** Deduplication operators for web-scale training-data curation:
   * exact, MinHash+LSH, SimHash and n-gram-Jaccard near-dup — each a
@@ -86,7 +87,8 @@ object Dedup {
   }
 
   /** The eager materialization the iterative operators (connected
-    * components, PageRank, SemDedup's assignment) take per round:
+    * components, PageRank, SemDedup's assignment) take once for their
+    * working set and per distributed round:
     * `checkpoint()` to the SparkContext's checkpoint dir when
     * `reliable` (DFS on a cluster — the lost-executor-safe path; the
     * caller must have called `sc.setCheckpointDir`, checked here,
@@ -108,75 +110,172 @@ object Dedup {
     * only shrink, so composing the label map with itself is sound).
     * The shortcut doubles the propagation distance per round, so rounds
     * are O(log component-diameter) instead of O(diameter) — a
-    * 1000-vertex chain converges in ~10 rounds, not ~1000. Each round
-    * is two equi-joins + one aggregate — no driver-side graph state.
-    * Returns (v, label).
+    * 1000-vertex chain converges in ~10 rounds, not ~1000. Returns
+    * (v, label), `label` the smallest vertex id of v's component.
+    * Vertex ids are unique and of any orderable type; a pair endpoint
+    * outside the vertex set is ignored, with every edge through it. A
+    * graph that needs more than `maxIterations` rounds fails loudly
+    * rather than return a non-fixpoint.
     *
-    * `reliableCheckpoints=true` swaps the per-round eager
-    * `localCheckpoint` (executor-local blocks — lost-executor-UNSAFE
-    * on a real cluster) for `checkpoint()` to the SparkContext's
-    * checkpoint dir (DFS on a cluster): the caller must have called
-    * `sc.setCheckpointDir` first. Same plan shape, same results; the
+    * The vertices and both directions of every pair are materialized
+    * once (one job), and an `Observation` on that job counts them in
+    * collected values (one per vertex, two per directed edge). With
+    * integral ids and at most [[LocalFinish.MaxValues]] values, they
+    * are collected once and the rounds run on the driver over int
+    * arrays. Otherwise each round is two equi-joins and one aggregate
+    * over the materialization, with no driver-side graph state: two
+    * eager checkpoints and a `limit(1).count()` convergence job, ~11
+    * jobs under adaptive execution, where each shuffle stage is its own
+    * job. Both paths run the same rounds, so they give the same labels
+    * and fail on the same `maxIterations`.
+    *
+    * `reliableCheckpoints=true` swaps the eager `localCheckpoint`
+    * (executor-local blocks — lost-executor-UNSAFE on a real cluster)
+    * for `checkpoint()` to the SparkContext's checkpoint dir (DFS on a
+    * cluster): the caller must have called `sc.setCheckpointDir`
+    * first, checked before any job runs. Same results; the
     * 10^10-vertex cluster run wants the reliable path.
     */
   def connectedMinLabels(vertices: DataFrame, pairs: DataFrame,
                          maxIterations: Int = 50,
-                         reliableCheckpoints: Boolean = false): DataFrame = {
-    val edges = pairs.select(col("id_a"), col("id_b")).unionByName(
-      pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b"))).persist()
+                         reliableCheckpoints: Boolean = false): DataFrame =
+    connectedMinLabels(vertices, pairs, maxIterations, reliableCheckpoints,
+      LocalFinish.MaxValues)
+
+  private[graft] def connectedMinLabels(vertices: DataFrame, pairs: DataFrame,
+                                        maxIterations: Int,
+                                        reliableCheckpoints: Boolean,
+                                        localBound: Long): DataFrame = {
+    val ckpt = checkpointer(vertices.sparkSession, reliableCheckpoints)
+    val vType = vertices.schema.head.dataType
+    val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType).contains(vType)
+    val kType = if (integral) LongType else vType
+    val volume = Observation()
+    // state rows: a vertex (v, nb = null, edge = false) or a directed
+    // edge (v, nb, edge = true)
+    def directed(a: String, b: String): DataFrame =
+      pairs.select(col(a).cast(kType).as("v"), col(b).cast(kType).as("nb"), lit(true).as("edge"))
+    val state = ckpt(vertices.select(col(vertices.columns.head).cast(kType).as("v"),
+        lit(null).cast(kType).as("nb"), lit(false).as("edge"))
+      .unionByName(directed("id_a", "id_b")).unionByName(directed("id_b", "id_a"))
+      .observe(volume,
+        coalesce(sum(when(col("edge"), 2L).otherwise(1L)), lit(0L)).as("values"),
+        coalesce(sum(when(col("edge"), 1L).otherwise(0L)), lit(0L)).as("edges")))
+    val metrics = volume.get
+    val labels =
+      if (integral && metrics("values").asInstanceOf[Long] <= localBound)
+        minLabelsLocal(state.collect(), maxIterations, vertices.sparkSession)
+      else minLabelsDistributed(state, metrics("edges").asInstanceOf[Long] == 0L,
+        maxIterations, ckpt)
+    labels.select(col("v").cast(vType).as("v"), col("label").cast(vType).as("label"))
+  }
+
+  // a silent non-fixpoint would violate the one-per-component contract
+  // downstream (a component diameter beyond ~2^maxIterations means the
+  // caller should raise the bound)
+  private def nonConvergence(maxIterations: Int) = new IllegalStateException(
+    s"connectedMinLabels did not converge within $maxIterations rounds")
+
+  /** The rounds of [[connectedMinLabels]] as Spark plans over the
+    * materialized state.
+    */
+  private def minLabelsDistributed(state: DataFrame, noEdges: Boolean, maxIterations: Int,
+                                   ckpt: DataFrame => DataFrame): DataFrame = {
+    val edges = state.filter(col("edge")).select(col("v").as("id_a"), col("nb").as("id_b"))
     // EAGER checkpoint each round, not persist: a persisted DataFrame
     // keeps its full logical plan, and every round embeds the
     // previous round's plan ~3× (neighbor join + the halving self-join)
     // — analysis cost grows 3^rounds and a 12-round run kills the
     // driver. Checkpointing flattens the plan to a LogicalRDD so each
     // round re-analyzes O(1) nodes.
-    val ckpt = checkpointer(vertices.sparkSession, reliableCheckpoints)
-    var labels = ckpt(vertices.select(col(vertices.columns.head).as("v"))
-      .withColumn("label", col("v")))
+    var labels = state.filter(!col("edge")).select(col("v"), col("v").as("label"))
     var iter = 0
-    var converged = false
-    // the edges cache must be released on every exit path (fixpoint,
-    // non-convergence throw, Spark failure mid-loop); checkpointed
-    // label RDDs are released by the ContextCleaner as references drop
-    try {
-      converged = edges.isEmpty
-      while (!converged && iter < maxIterations) {
-        val neighborMin = edges
-          .join(labels, edges("id_b") === labels("v"))
-          .groupBy(col("id_a").as("nv")).agg(min(col("label")).as("nmin"))
-        // the round's previous label rides along as `prev` so the
-        // convergence check is a join-FREE scan of the checkpointed
-        // result (the old form re-joined next against labels — one
-        // whole extra shuffle join per round just to count changes)
-        val hop = ckpt(labels
-          .join(neighborMin, labels("v") === col("nv"), "left")
-          .select(col("v"), col("label").as("prev"),
-            least(col("label"), coalesce(col("nmin"), col("label"))).as("label")))
-        // pointer halving: label := min(label, label(label)) — min
-        // labels only shrink, so composing the label map with itself is
-        // sound and doubles propagation distance per round
-        val next = ckpt(hop.as("a")
-          .join(hop.select(col("v").as("lv"), col("label").as("llabel")),
-            col("a.label") === col("lv"), "left")
-          .select(col("a.v").as("v"), col("a.prev").as("prev"),
-            least(col("a.label"), coalesce(col("llabel"), col("a.label")))
-              .as("label")))
-        val changed = next
-          .filter(col("label") =!= col("prev")).limit(1).count()
-        labels = next.select(col("v"), col("label"))
-        converged = changed == 0L
-        iter += 1
-      }
-      // a silent non-fixpoint would violate the one-per-component
-      // contract downstream — fail loudly instead (a component diameter
-      // beyond ~2^maxIterations means the caller should raise the bound)
-      if (!converged)
-        throw new IllegalStateException(
-          s"connectedMinLabels did not converge within $maxIterations rounds")
-      labels
-    } finally {
-      edges.unpersist()
+    var converged = noEdges
+    while (!converged && iter < maxIterations) {
+      val neighborMin = edges
+        .join(labels, edges("id_b") === labels("v"))
+        .groupBy(col("id_a").as("nv")).agg(min(col("label")).as("nmin"))
+      // the round's previous label rides along as `prev` so the
+      // convergence check is a join-FREE scan of the checkpointed
+      // result (the old form re-joined next against labels — one
+      // whole extra shuffle join per round just to count changes)
+      val hop = ckpt(labels
+        .join(neighborMin, labels("v") === col("nv"), "left")
+        .select(col("v"), col("label").as("prev"),
+          least(col("label"), coalesce(col("nmin"), col("label"))).as("label")))
+      // pointer halving: label := min(label, label(label)) — min
+      // labels only shrink, so composing the label map with itself is
+      // sound and doubles propagation distance per round
+      val next = ckpt(hop.as("a")
+        .join(hop.select(col("v").as("lv"), col("label").as("llabel")),
+          col("a.label") === col("lv"), "left")
+        .select(col("a.v").as("v"), col("a.prev").as("prev"),
+          least(col("a.label"), coalesce(col("llabel"), col("a.label")))
+            .as("label")))
+      val changed = next
+        .filter(col("label") =!= col("prev")).limit(1).count()
+      labels = next.select(col("v"), col("label"))
+      converged = changed == 0L
+      iter += 1
     }
+    if (!converged) throw nonConvergence(maxIterations)
+    labels
+  }
+
+  /** The same rounds over the collected state, in int arrays: vertex i
+    * is the i-th smallest id, so the min over indices is the min over
+    * ids, and a label is the index of its vertex.
+    */
+  private def minLabelsLocal(rows: Array[Row], maxIterations: Int,
+                             spark: SparkSession): DataFrame = {
+    val ids = rows.iterator.filter(r => !r.getBoolean(2) && !r.isNullAt(0))
+      .map(_.getLong(0)).toArray
+    java.util.Arrays.sort(ids)
+    def index(r: Row, i: Int): Int =
+      if (r.isNullAt(i)) -1 else java.util.Arrays.binarySearch(ids, r.getLong(i)) max -1
+    // directed edges between vertex indices; an endpoint outside the
+    // vertex set drops its edge, as the joins do
+    val (ea, eb) = (Array.newBuilder[Int], Array.newBuilder[Int])
+    var anyEdge = false
+    rows.foreach { r =>
+      if (r.getBoolean(2)) {
+        anyEdge = true
+        val (a, b) = (index(r, 0), index(r, 1))
+        if (a >= 0 && b >= 0) { ea += a; eb += b }
+      }
+    }
+    val (from, to) = (ea.result(), eb.result())
+    val n = ids.length
+    var label = Array.range(0, n)
+    var iter = 0
+    var converged = !anyEdge
+    while (!converged && iter < maxIterations) {
+      val hop = label.clone()
+      var e = 0
+      while (e < from.length) {
+        if (label(to(e)) < hop(from(e))) hop(from(e)) = label(to(e))
+        e += 1
+      }
+      val next = new Array[Int](n)
+      converged = true
+      var i = 0
+      while (i < n) {
+        next(i) = math.min(hop(i), hop(hop(i)))
+        if (next(i) != label(i)) converged = false
+        i += 1
+      }
+      label = next
+      iter += 1
+    }
+    if (!converged) throw nonConvergence(maxIterations)
+    // a null id keeps a null label, as the joins give
+    val out = new java.util.ArrayList[Row](ids.length)
+    rows.foreach { r =>
+      if (!r.getBoolean(2)) out.add(if (r.isNullAt(0)) Row(null, null)
+        else Row(r.getLong(0), ids(label(index(r, 0)))))
+    }
+    spark.createDataFrame(out,
+      StructType(Seq(StructField("v", LongType), StructField("label", LongType))))
   }
 
   /** Fully transitive near-dup dedup: keep exactly one doc (the min id)

@@ -38,26 +38,10 @@ object IvfIndex {
   def quantize(vec: Column): Column =
     transform(vec, x => floor(x.cast("double") * QScale + 0.5d).cast("long"))
 
-  /** Exact integer L2² between a quantized column and a literal
-    * centroid (overflow-safe: |q| ≤ ~10⁵ ⇒ Σ diff² ≤ 2.6·10¹² « 2⁶³).
-    * Generated kernel ([[graft.plans.VectorExprs.longSqDist]]) — the HOF fold
-    * form is CodegenFallback, and k of these run per row.
-    */
-  private def qDist(qv: Column, cent: Array[Long]): Column =
-    graft.plans.Kernels.long_sqdist(qv, typedLit(cent.toSeq))
-
-  /** argmin over literal centroids, ties to the smallest cluster id
-    * (lexicographic array_min over (dist, cid) structs — one codegen'd
-    * expression, no join).
-    */
-  private def nearestCid(qv: Column, cents: Array[Array[Long]]): Column =
-    array_min(array(cents.zipWithIndex.map { case (c, i) =>
-      struct(qDist(qv, c).as("d"), lit(i).as("cid"))
-    }: _*)).getField("cid")
-
   /** Deterministic portable k-means over (id, vec): seeds = the k rows
     * with smallest (portableHash("seed:" + id), id); each Lloyd round
-    * assigns by exact integer distance and recomputes centroid
+    * assigns by exact integer distance (the [[graft.plans.IvfNearest]]
+    * kernel, ties to the smaller cid) and recomputes centroid
     * components as floor(Σq / n) via one posexplode aggregate. Empty
     * clusters keep their previous centroid. Driver state is k×dim
     * longs — nothing data-sized ever collects.
@@ -73,7 +57,8 @@ object IvfIndex {
       .select("qv").as[Array[Long]].collect()
     (0 until iterations).foreach { _ =>
       val sums = qv
-        .withColumn("cid", nearestCid(col("qv"), cents))
+        .withColumn("cid", graft.plans.Kernels.ivf_nearest(col("qv"),
+          new graft.plans.IvfCentroids(cents)))
         .select(col("cid"), posexplode(col("qv")).as(Seq("pos", "v")))
         .groupBy("cid", "pos")
         .agg(floor(sum(col("v")).cast("double") / count(lit(1))).cast("long").as("m"))
@@ -87,7 +72,8 @@ object IvfIndex {
 
   /** Corpus with its portable inverted-file cluster column. */
   def assignPortable(corpus: DataFrame, cents: Array[Array[Long]]): DataFrame =
-    corpus.withColumn("cluster", nearestCid(quantize(col("vec")), cents))
+    corpus.withColumn("cluster", graft.plans.Kernels.ivf_nearest(
+      quantize(col("vec")), new graft.plans.IvfCentroids(cents)))
 
   /** Portable probe + exact cosine rerank: nprobe nearest centroids by
     * integer distance (ties to smaller cid), candidates from those
@@ -96,13 +82,10 @@ object IvfIndex {
     */
   def topKPortable(queries: DataFrame, corpusAssigned: DataFrame,
                    cents: Array[Array[Long]], k: Int, nprobe: Int): DataFrame = {
-    val probeStructs = array(cents.zipWithIndex.map { case (c, i) =>
-      struct(qDist(quantize(col("vec")), c).as("d"), lit(i).as("cid"))
-    }: _*)
     val q = queries
       .select(col("id").as("query_id"), col("vec").as("qvec"),
-        explode(transform(slice(sort_array(probeStructs), 1, nprobe),
-          s => s.getField("cid"))).as("cluster"))
+        explode(graft.plans.Kernels.ivf_probe(quantize(col("vec")),
+          new graft.plans.IvfCentroids(cents), nprobe)).as("cluster"))
     val c = corpusAssigned.select(col("id").as("neighbor_id"),
       col("vec").as("cvec"), col("cluster"))
     val w = Window.partitionBy("query_id")

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Link-graph analytics over the crawl's extracted-outlink table — the
   * frontier-prioritization signals a web-scale scheduler feeds back into
@@ -10,9 +11,11 @@ import org.apache.spark.sql.functions._
   * rebuilt as [[graft.core.Model.priorityScore]]); a 10^10-URL frontier
   * additionally wants the link structure itself — PageRank mass for
   * schedule ordering and connected components for mirror/host-cluster
-  * collapsing. Both kernels here are pure DataFrame iteration: no driver
-  * graph state, no RDDs, each round a bounded number of key-partitioned
-  * joins/aggregates, so a 4× executor scale-up shards every step.
+  * collapsing. Both kernels materialize their working set once; a small
+  * one (at most [[LocalFinish.MaxValues]] values) finishes on the driver,
+  * a larger one iterates as DataFrame rounds, each a bounded number of
+  * key-partitioned joins/aggregates, so a 4× executor scale-up shards
+  * every step.
   *
   * Arithmetic is FIXED-POINT INTEGER (ranks in micro-units, damping in
   * per-mille) so results are bit-exact across engines — the DuckDB
@@ -33,23 +36,27 @@ object LinkGraph {
     * `share = (Σ_{outdeg(u)=0} rank(u)) DIV |V|`: at web scale ~20-30%
     * of frontier URLs are sinks, and without the correction ranks
     * systematically deflate and the frontier-priority ordering drifts.
-    * The correction stays EXACT in integer micro-units — one extra
-    * 1-row aggregate per iteration (the dangling-vertex set itself is
-    * iteration-invariant and computed once). Vertices nobody links to
-    * hold the base mass (+ the damped share when redistributing).
+    * Vertices nobody links to hold the base mass (+ the damped share
+    * when redistributing).
     *
-    * Scale shape at 10^10 edges: `outdeg` is computed ONCE and rides on
-    * the edge rows (one src-keyed aggregate + join, amortized across all
-    * iterations); each iteration is exactly one src-keyed equi-join
-    * (ranks are keyed by vertex, edges arrive hash-partitioned by src —
-    * the same partitioning every round, so the exchange is reused) and
-    * one dst-keyed partial-aggregated sum. Ranks are eagerly
-    * checkpointed per round so the logical plan stays O(1) nodes instead
-    * of growing with the iteration count (same rationale as
-    * [[Dedup.connectedMinLabels]]); `reliableCheckpoints=true` swaps the
-    * executor-local blocks for `checkpoint()` to the SparkContext's
+    * The vertices and the degree-annotated edges (`outdeg` computed
+    * once, riding on the edge rows) are materialized once, one job
+    * whose `Observation` counts them, |V| and the dangling vertices
+    * (a vertex row carries its dangling flag). When they hold at most
+    * [[LocalFinish.MaxValues]] values they are collected once and the
+    * iterations run on the driver with the same integer arithmetic.
+    * Otherwise the edges are hash-partitioned by src once and persisted,
+    * and each iteration is one src-keyed equi-join of the ranks to them
+    * (the edges never move again) and one dst-keyed partial-aggregated
+    * sum; the ranks are eagerly checkpointed per round, so the logical
+    * plan stays O(1) nodes (same rationale as
+    * [[Dedup.connectedMinLabels]]). The
+    * dangling mass of a round is an observed sum over the flagged rows
+    * on that round's checkpoint job, so redistribution adds no job.
+    * `reliableCheckpoints=true` checkpoints to the SparkContext's
     * checkpoint dir — the lost-executor-safe path a real cluster run
-    * wants (caller must `sc.setCheckpointDir` first).
+    * wants (caller must `sc.setCheckpointDir` first, checked before any
+    * job runs).
     *
     * @param vertices one-column frame of vertex ids (first column used)
     * @param edges    (src, dst) long columns; parallel edges count twice
@@ -59,58 +66,140 @@ object LinkGraph {
   def pageRank(vertices: DataFrame, edges: DataFrame, iterations: Int,
                dampingPermille: Long = 850L, scale: Long = 1000000L,
                reliableCheckpoints: Boolean = false,
-               redistributeDangling: Boolean = false): DataFrame = {
+               redistributeDangling: Boolean = false): DataFrame =
+    pageRank(vertices, edges, iterations, dampingPermille, scale,
+      reliableCheckpoints, redistributeDangling, LocalFinish.MaxValues)
+
+  private[graft] def pageRank(vertices: DataFrame, edges: DataFrame, iterations: Int,
+                              dampingPermille: Long, scale: Long,
+                              reliableCheckpoints: Boolean,
+                              redistributeDangling: Boolean,
+                              localBound: Long): DataFrame = {
     require(iterations >= 0, s"iterations must be >= 0, got $iterations")
     require(dampingPermille >= 0L && dampingPermille <= 1000L,
       s"dampingPermille must be in [0,1000], got $dampingPermille")
+    val spark = vertices.sparkSession
+    val ckpt = Dedup.checkpointer(spark, reliableCheckpoints)
     val v = vertices.select(col(vertices.columns.head).cast("long").as("v"))
     val e = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"))
-    val ckpt = Dedup.checkpointer(vertices.sparkSession, reliableCheckpoints)
-    // degree once, riding with the edges for every iteration
-    val eDeg = e.join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
-      .persist()
-    val base = scale * (1000L - dampingPermille) / 1000L
-    // dangling-vertex set: iteration-invariant, computed once; nV is a
-    // 1-value driver scalar (like the IVF centroid state — k×1 values,
-    // never data)
-    val dangling: Option[DataFrame] =
+    val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
+    // a sink: a vertex that is no edge's src (a null id is never one)
+    val vRows =
       if (redistributeDangling)
-        Some(v.join(e.select(col("src").as("v")).distinct(), Seq("v"), "left_anti")
-          .persist())
-      else None
-    val nV = if (redistributeDangling) v.count() else 0L
-    var ranks = v.withColumn("rank_micro", lit(scale))
-    try {
-      (1 to iterations).foreach { _ =>
-        // 1-row aggregate: the mass sitting on sinks this round,
-        // shared equally (integer DIV — exact, deterministic)
-        val share = dangling match {
-          case Some(d) if nV > 0L =>
-            ranks.join(d, Seq("v"), "left_semi")
-              .agg(coalesce(sum(col("rank_micro")), lit(0L)))
-              .head().getLong(0) / nV
-          case _ => 0L
-        }
+        v.join(deg.select(col("src"), lit(true).as("out")), v("v") === col("src"), "left")
+          .select(v("v"), (v("v").isNotNull && col("out").isNull).as("dangling"))
+      else v.select(col("v"), lit(false).as("dangling"))
+    val nullLong = lit(null).cast("long")
+    val volume = Observation()
+    // state rows: a vertex (v, dst = null, outdeg = null, dangling) or
+    // an edge (v = src, dst, outdeg)
+    val state = ckpt(vRows.select(col("v"), nullLong.as("dst"), nullLong.as("outdeg"),
+        col("dangling"), lit(false).as("edge"))
+      .unionByName(e.join(deg, "src").select(col("src").as("v"), col("dst"),
+        col("outdeg"), lit(false).as("dangling"), lit(true).as("edge")))
+      .observe(volume,
+        coalesce(sum(when(col("edge"), 3L).otherwise(1L)), lit(0L)).as("values"),
+        coalesce(sum(when(col("edge"), 0L).otherwise(1L)), lit(0L)).as("vertices"),
+        coalesce(sum(when(col("dangling"), 1L).otherwise(0L)), lit(0L)).as("dangling")))
+    val m = volume.get
+    val nV = m("vertices").asInstanceOf[Long]
+    val base = scale * (1000L - dampingPermille) / 1000L
+    // the share of the dangling mass each vertex gets (integer DIV —
+    // exact, deterministic)
+    def shareOf(danglingMass: Long): Long =
+      if (redistributeDangling && nV > 0L) danglingMass / nV else 0L
+    if (m("values").asInstanceOf[Long] <= localBound)
+      pageRankLocal(state.collect(), iterations, dampingPermille, scale, base,
+        shareOf, spark)
+    else {
+      // the degree-annotated edges, hash-partitioned by src once and
+      // persisted (a checkpoint keeps no partitioning under adaptive
+      // execution): every round joins the ranks to them without moving
+      // them
+      val eDeg = state.filter(col("edge"))
+        .select(col("v").as("src"), col("dst"), col("outdeg"))
+        .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("src"))
+        .persist()
+      val vFlags = state.filter(!col("edge")).select(col("v"), col("dangling"))
+      var ranks = vFlags.withColumn("rank_micro", lit(scale))
+      var danglingMass = Math.multiplyExact(scale, m("dangling").asInstanceOf[Long])
+      try (1 to iterations).foreach { _ =>
+        val share = shareOf(danglingMass)
         val contribs = eDeg
-          .join(ranks.withColumnRenamed("v", "src"), "src")
+          .join(ranks.select(col("v").as("src"), col("rank_micro")), "src")
           .select(col("dst"), expr("rank_micro DIV outdeg").as("c"))
           .groupBy("dst").agg(sum(col("c")).as("s"))
-        ranks = ckpt(v.join(contribs, v("v") === contribs("dst"), "left")
-          .select(col("v"), (lit(base) +
+        val next = vFlags.join(contribs, vFlags("v") === contribs("dst"), "left")
+          .select(col("v"), col("dangling"), (lit(base) +
             expr(s"($dampingPermille * (coalesce(s, CAST(0 AS BIGINT)) + $share)) DIV 1000"))
-            .as("rank_micro")))
-      }
-      // each loop round already left `ranks` eagerly materialized by
-      // `ckpt` (reliable or local per the flag) — re-pinning the
-      // reliable result to executor-local blocks here would silently
-      // downgrade the lost-executor-safe contract. Only the
-      // iterations==0 start frame still needs materializing.
-      if (iterations == 0) ckpt(ranks) else ranks
-    } finally {
-      eDeg.unpersist()
-      dangling.foreach(_.unpersist())
+            .as("rank_micro"))
+        // the mass on sinks this round, observed on the checkpoint's job
+        if (redistributeDangling) {
+          val mass = Observation()
+          ranks = ckpt(next.observe(mass,
+            coalesce(sum(when(col("dangling"), col("rank_micro"))), lit(0L)).as("mass")))
+          danglingMass = mass.get("mass").asInstanceOf[Long]
+        } else ranks = ckpt(next)
+      } finally eDeg.unpersist()
+      ranks.select(col("v"), col("rank_micro"))
     }
+  }
+
+  /** The iterations of [[pageRank]] over the collected state, in arrays
+    * indexed by distinct vertex id: each edge contributes once per
+    * vertex row of its src (the join's multiplicity) and never to a dst
+    * outside the vertex set; overflow fails as Spark's ANSI long
+    * arithmetic does.
+    */
+  private def pageRankLocal(rows: Array[Row], iterations: Int, dampingPermille: Long,
+                            scale: Long, base: Long, shareOf: Long => Long,
+                            spark: SparkSession): DataFrame = {
+    import Math.{addExact, multiplyExact}
+    val sorted = rows.iterator.filter(r => !r.getBoolean(4) && !r.isNullAt(0))
+      .map(_.getLong(0)).toArray
+    java.util.Arrays.sort(sorted)
+    // distinct ids, and the number of vertex rows of each
+    val ids = sorted.distinct
+    val mult = new Array[Long](ids.length)
+    def index(r: Row, i: Int): Int =
+      if (r.isNullAt(i)) -1 else java.util.Arrays.binarySearch(ids, r.getLong(i)) max -1
+    sorted.foreach(id => mult(java.util.Arrays.binarySearch(ids, id)) += 1L)
+    // one entry per dangling vertex row
+    val dangling = rows.iterator.filter(r => !r.getBoolean(4) && r.getBoolean(3))
+      .map(index(_, 0)).toArray
+    // edges whose src is a vertex; dst -1 when it is none
+    val (src, dst, outdeg) =
+      (Array.newBuilder[Int], Array.newBuilder[Int], Array.newBuilder[Long])
+    rows.foreach { r =>
+      if (r.getBoolean(4) && index(r, 0) >= 0) {
+        src += index(r, 0); dst += index(r, 1); outdeg += r.getLong(2)
+      }
+    }
+    val (es, ed, eo) = (src.result(), dst.result(), outdeg.result())
+    var rank = Array.fill(ids.length)(scale)
+    var rankOfNull = scale
+    def step(s: Long, share: Long): Long =
+      addExact(base, multiplyExact(dampingPermille, addExact(s, share)) / 1000L)
+    (1 to iterations).foreach { _ =>
+      val share = shareOf(dangling.foldLeft(0L)((acc, d) => addExact(acc, rank(d))))
+      val s = new Array[Long](ids.length)
+      var e = 0
+      while (e < es.length) {
+        if (ed(e) >= 0)
+          s(ed(e)) = addExact(s(ed(e)), multiplyExact(mult(es(e)), rank(es(e)) / eo(e)))
+        e += 1
+      }
+      rank = s.map(step(_, share))
+      rankOfNull = step(0L, share)
+    }
+    val out = new java.util.ArrayList[Row](sorted.length)
+    rows.foreach { r =>
+      if (!r.getBoolean(4)) out.add(
+        if (r.isNullAt(0)) Row(null, rankOfNull) else Row(r.getLong(0), rank(index(r, 0))))
+    }
+    spark.createDataFrame(out, StructType(Seq(StructField("v", LongType),
+      StructField("rank_micro", LongType, nullable = false))))
   }
 
   /** Anchor-text aggregation: per LINK TARGET, the inbound-link count,

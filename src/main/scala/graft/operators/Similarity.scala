@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Hashing
-
 /** Similarity search over an embedding column (`array<float>`).
   *
   * Two paths:
@@ -57,56 +55,25 @@ object Similarity {
       .select("query_id", "neighbor_id", "cosine", "rank")
   }
 
-  /** SQL-portable hyperplane component: md5-derived double in
-    * [-0.5, 0.5), computed identically by the DuckDB oracle
-    * (`('0x'||substr(md5('hp:t:p:j'),1,8))::BIGINT / 2^32 - 0.5`).
-    */
-  def portablePlaneComponent(table: Int, p: Int, j: Int): Double =
-    java.lang.Long.parseLong(
-      Hashing.md5Hex(s"hp:$table:$p:$j").substring(0, 8), 16).toDouble /
-      4294967296.0 - 0.5
-
-  /** Signature for one hash table, PURE CATALYST: the planes are
-    * literal arrays (constants — md5-derived, so the oracle states the
-    * same numbers), projections are sequential folds (bit-for-bit
-    * reproducible across engines: identical products, identical
-    * summation order), bits are sign tests.
-    */
-  def portableSig(vec: Column, dim: Int, bits: Int, table: Int): Column =
-    (0 until bits).map { p =>
-      val plane = typedLit(Array.tabulate(dim)(j => portablePlaneComponent(table, p, j)))
-      // float element widens, DOUBLE multiply, DOUBLE accumulate —
-      // exactly zip_with(vec, plane, _*_) folded with +, but codegen'd
-      // (bits × tables HOF aggregates per row were all interpreted)
-      val proj = graft.plans.Kernels.float_double_dot(vec, plane)
-      when(proj >= 0.0, lit(1L << p)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
   /** All `tables` portable signatures from ONE scan: the table id is
-    * exploded FIRST and each row's bucket evaluates `bits` dot
-    * products against planes looked up (by table) from one literal
-    * array-of-planes — so a single small codegen'd projection serves
-    * every table. The previous per-table unionByName re-scanned the
-    * input `tables` times and compiled `tables` separate codegen
-    * stages of `bits` dot products each (guide §2.4; the dominant cost
-    * of a cold run was that compilation). Row set and bucket values
-    * are identical: same [[portablePlaneComponent]] literals through
-    * the same [[graft.plans.VectorExprs.floatDoubleDot]] fold.
+    * exploded FIRST and each row's bucket is one
+    * [[graft.plans.LshBucket]] kernel call — `bits` sign tests of
+    * [[graft.plans.VectorExprs.floatDoubleDot]] folds against the md5
+    * planes ([[graft.plans.LshPlanes.component]], the numbers the
+    * oracle states). The planes are the kernel's state, built once per
+    * call site from (dim, bits, tables): the plan carries those three
+    * ints, not a tables × bits × dim literal (which, referenced once
+    * per bit, made every description of these plans megabytes long,
+    * and the SQL status store keeps each one for the session). A
+    * single small codegen'd projection serves every table.
     */
   private def bucketedPortable(df: DataFrame, idName: String, vecName: String,
                                dim: Int, bits: Int, tables: Int): DataFrame = {
-    val planes: Seq[Seq[Double]] = (0 until tables).flatMap(t =>
-      (0 until bits).map(p =>
-        (0 until dim).map(j => portablePlaneComponent(t, p, j)).toSeq))
-    val planesLit = typedLit(planes)
-    val sig = (0 until bits).map { p =>
-      val proj = graft.plans.Kernels.float_double_dot(col(vecName),
-        element_at(planesLit, col("table") * bits + p + 1))
-      when(proj >= 0.0, lit(1L << p)).otherwise(lit(0L))
-    }.reduce(_ + _)
+    val planes = graft.plans.LshPlanes(dim, bits, tables)
     df.select(col("id").as(idName), col("vec").as(vecName),
         explode(sequence(lit(0), lit(tables - 1))).as("table"))
-      .select(col(idName), col(vecName), col("table"), sig.as("bucket"))
+      .select(col(idName), col(vecName), col("table"),
+        graft.plans.Kernels.lsh_bucket(col(vecName), col("table"), planes).as("bucket"))
   }
 
   /** Approximate cosine top-k: `tables` independent hyperplane hash

@@ -33,7 +33,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * with `state(...)`. The builder evaluates the constant once, builds the
   * state, and passes it as an `ObjectType` literal, which generated
   * code holds as one reference per stage. State types need value
-  * equality (hash sets, lists), so plans built twice compare equal.
+  * equality (hash sets, lists), so plans built twice compare equal,
+  * and a short `toString`, which is what a plan description prints.
+  * A Column API may pass the state already built ([[stateLit]]), so
+  * data-derived state (IVF centroids) never enters a plan as a
+  * literal array.
   *
   * The Column APIs register the table in the ACTIVE session on use;
   * code that plans on another session calls [[register]] for it, and
@@ -42,17 +46,20 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object Kernels {
 
-  /** One kernel argument: its type (array nullability is ignored),
-    * whether it must be a constant, and for a state argument how the
-    * constant's value becomes the state object the loop receives.
+  /** A state argument's class and how the constant's value becomes
+    * the state object the loop receives.
     */
-  final case class Param(tpe: DataType, constant: Boolean,
-                         state: Option[Any => AnyRef] = None)
+  final case class State(cls: Class[_], build: Any => AnyRef)
+
+  /** One kernel argument: its type (array nullability is ignored),
+    * whether it must be a constant, and its [[State]] if it is one.
+    */
+  final case class Param(tpe: DataType, constant: Boolean, state: Option[State] = None)
 
   private def in(t: DataType) = Param(t, constant = false)
   private def const(t: DataType) = Param(t, constant = true)
-  private def state(t: DataType)(build: Any => AnyRef) =
-    Param(t, constant = true, Some(build))
+  private def state[S <: AnyRef](t: DataType, cls: Class[S])(build: Any => S) =
+    Param(t, constant = true, Some(State(cls, build)))
 
   /** One kernel: SQL name, the object and static function holding its
     * loop, result type, parameters and null policy.
@@ -70,20 +77,23 @@ object Kernels {
           "functionName" -> s"`$name`", "expectedNum" -> params.length.toString,
           "actualNum" -> args.length.toString,
           "docroot" -> "https://spark.apache.org/docs/latest"))
-      val prepared = args.zip(params).zipWithIndex.map { case ((a, p), i) =>
-        if (!DataType.equalsStructurally(p.tpe, a.dataType, ignoreNullability = true))
-          throw new AnalysisException("UNEXPECTED_INPUT_TYPE", Map(
-            "paramIndex" -> s"${i + 1}", "functionName" -> s"`$name`",
-            "requiredType" -> s"\"${p.tpe.sql}\"", "inputSql" -> s"\"${a.sql}\"",
-            "inputType" -> s"\"${a.dataType.sql}\""))
-        if (p.constant && !a.foldable)
-          throw new AnalysisException("NON_FOLDABLE_ARGUMENT", Map(
-            "funcName" -> s"`$name`", "paramName" -> s"`${i + 1}`",
-            "paramType" -> s"\"${p.tpe.sql}\""))
-        p.state.fold(a) { build =>
-          val s = build(a.eval())
-          Literal(s, ObjectType(s.getClass))
-        }
+      val prepared = args.zip(params).zipWithIndex.map {
+        case ((l @ Literal(v, ObjectType(c)), p), _)
+            if p.state.exists(_.cls == c) && v != null => l
+        case ((a, p), i) =>
+          if (!DataType.equalsStructurally(p.tpe, a.dataType, ignoreNullability = true))
+            throw new AnalysisException("UNEXPECTED_INPUT_TYPE", Map(
+              "paramIndex" -> s"${i + 1}", "functionName" -> s"`$name`",
+              "requiredType" -> s"\"${p.tpe.sql}\"", "inputSql" -> s"\"${a.sql}\"",
+              "inputType" -> s"\"${a.dataType.sql}\""))
+          if (p.constant && !a.foldable)
+            throw new AnalysisException("NON_FOLDABLE_ARGUMENT", Map(
+              "funcName" -> s"`$name`", "paramName" -> s"`${i + 1}`",
+              "paramType" -> s"\"${p.tpe.sql}\""))
+          p.state.fold(a) { st =>
+            val s = st.build(a.eval())
+            Literal(s, ObjectType(s.getClass))
+          }
       }
       StaticInvoke(owner.getClass, result, function, prepared,
         propagateNull = propagateNull, returnNullable = propagateNull)
@@ -104,6 +114,20 @@ object Kernels {
       Seq(in(ArrayType(FloatType)), in(ArrayType(DoubleType)))),
     Kernel("graft_long_sqdist", VectorExprs, "longSqDist", LongType,
       Seq(in(ArrayType(LongType)), in(ArrayType(LongType)))),
+    Kernel("graft_lsh_bucket", LshBucket, "invoke", LongType,
+      Seq(in(ArrayType(FloatType)), in(IntegerType),
+        state(ArrayType(IntegerType), classOf[LshPlanes])(LshPlanes.fromSizes)),
+      propagateNull = false),
+    Kernel("graft_ivf_nearest", IvfNearest, "nearest", IntegerType,
+      Seq(in(ArrayType(LongType)),
+        state(ArrayType(ArrayType(LongType)), classOf[IvfCentroids])(IvfCentroids.fromArray)),
+      propagateNull = false),
+    Kernel("graft_ivf_probe", IvfNearest, "probe",
+      ArrayType(IntegerType, containsNull = false),
+      Seq(in(ArrayType(LongType)),
+        state(ArrayType(ArrayType(LongType)), classOf[IvfCentroids])(IvfCentroids.fromArray),
+        const(IntegerType)),
+      propagateNull = false),
     Kernel("graft_minhash_sig", MinhashSig, "invoke",
       ArrayType(LongType, containsNull = false),
       Seq(in(Tokens), const(IntegerType), const(IntegerType))),
@@ -128,9 +152,10 @@ object Kernels {
     Kernel("graft_gopher_signals", GopherSignals, "invoke", GopherSignals.Schema,
       Seq(in(StringType))),
     Kernel("graft_token_stats", TokenStats, "invoke", TokenStats.Schema,
-      Seq(in(Tokens), state(Tokens)(TokenStats.memberSet))),
+      Seq(in(Tokens), state(Tokens, classOf[java.util.HashSet[UTF8String]])(TokenStats.memberSet))),
     Kernel("graft_lang_pick", LangPick, "invoke", StringType,
-      Seq(in(Tokens), state(ArrayType(Tokens))(LangPick.memberSets))),
+      Seq(in(Tokens), state(ArrayType(Tokens),
+        classOf[java.util.ArrayList[java.util.HashSet[UTF8String]]])(LangPick.memberSets))),
     Kernel("graft_chunk_hashes", ChunkHashes, "invoke",
       ArrayType(ChunkHashes.Entry, containsNull = false),
       Seq(in(Tokens), const(IntegerType), const(IntegerType), const(IntegerType))),
@@ -179,6 +204,12 @@ object Kernels {
   def float_double_dot(a: Column, b: Column): Column =
     call("graft_float_double_dot", a, b)
   def long_sqdist(a: Column, b: Column): Column = call("graft_long_sqdist", a, b)
+  def lsh_bucket(vec: Column, table: Column, planes: LshPlanes): Column =
+    call("graft_lsh_bucket", vec, table, stateLit(planes))
+  def ivf_nearest(qv: Column, cents: IvfCentroids): Column =
+    call("graft_ivf_nearest", qv, stateLit(cents))
+  def ivf_probe(qv: Column, cents: IvfCentroids, nprobe: Int): Column =
+    call("graft_ivf_probe", qv, stateLit(cents), lit(nprobe))
   def minhash_sig(tokens: Column, k: Column, numHashes: Column): Column =
     call("graft_minhash_sig", tokens, k, numHashes)
   def gram_keys(tokens: Column, k: Column, wholeDocFallback: Column): Column =
@@ -205,6 +236,12 @@ object Kernels {
     call("graft_chunk_hashes", tokens, window, stride, minTokens)
   def adjacent_pairs(tokens: Column): Column = call("graft_adjacent_pairs", tokens)
   def bound_int(value: Int): Column = call(boundInt._1.funcName, lit(value))
+
+  /** A state argument passed already built: an `ObjectType` literal
+    * the row's builder accepts in place of the SQL constant.
+    */
+  private def stateLit(s: AnyRef): Column =
+    org.apache.spark.sql.GraftColumns.column(Literal(s, ObjectType(s.getClass)))
 }
 
 /** Session extensions: every [[Kernels]] row, callable by name from SQL.

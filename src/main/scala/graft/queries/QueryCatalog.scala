@@ -451,10 +451,20 @@ object QueryCatalog {
     * The sec offsets are mod-997 so no row is ever watermark-late at
     * ANY scale factor. The oracle states the expected emission set
     * arithmetically.
+    *
+    * The replay stages its batches on the driver because MemoryStream
+    * does, so the doc ids are collected. The collect is bounded by
+    * [[graft.operators.LocalFinish.MaxValues]] (at most that many ids
+    * plus one are fetched): a larger documents table fails loudly
+    * instead of staging an input-sized batch in driver memory.
     */
   def qStreamDedup(spark: SparkSession, dir: String): DataFrame = {
+    val bound = graft.operators.LocalFinish.MaxValues
     val ids = t(spark, dir, "documents").select(col("doc_id"))
-      .collect().map(_.getLong(0)).sorted
+      .limit(bound.toInt + 1).collect().map(_.getLong(0)).sorted
+    if (ids.length > bound)
+      throw new IllegalStateException(s"q_stream_dedup stages its replay on the driver " +
+        s"and takes at most $bound doc ids; the documents table has more")
     val b1 = ids.filter(_ % 2 == 0).map(i => (i, 1000L + i % 997)).toSeq
     val b2 = ids.map(i => (i, 3000L + i % 997)).toSeq
     val b3 = Seq((-1L, 10000000L))

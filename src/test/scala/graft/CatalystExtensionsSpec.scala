@@ -88,6 +88,17 @@ class CatalystExtensionsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       "graft_float_double_dot(vf, vd_n)", null, "graft_float_double_dot(vf, vf)"),
     "graft_long_sqdist" -> Audit("graft_long_sqdist(vl, vl)",
       "graft_long_sqdist(vl_n, vl)", null, "graft_long_sqdist(vl, vf)"),
+    "graft_lsh_bucket" -> Audit("graft_lsh_bucket(vf, 1, array(1, 4, 2))",
+      "graft_lsh_bucket(vf_n, 1, array(1, 4, 2))", 0L,
+      "graft_lsh_bucket(vd, 1, array(1, 4, 2))"),
+    "graft_ivf_nearest" -> Audit(
+      "graft_ivf_nearest(vl, array(array(0L, 0L), array(300L, 3L)))",
+      "graft_ivf_nearest(vl_n, array(array(0L, 0L), array(300L, 3L)))", 0,
+      "graft_ivf_nearest(vl, array(vl))"),
+    "graft_ivf_probe" -> Audit(
+      "graft_ivf_probe(vl, array(array(0L, 0L), array(300L, 3L), array(9L, 1L)), 2)",
+      "graft_ivf_probe(vl_n, array(array(0L, 0L), array(300L, 3L), array(9L, 1L)), 2)",
+      Seq(0, 1), "graft_ivf_probe(vl, array(array(0L)), CAST(doc_id AS INT))"),
     "graft_minhash_sig" -> Audit("graft_minhash_sig(toks, 5, 24)",
       "graft_minhash_sig(toks_n, 5, 24)", null,
       "graft_minhash_sig(toks, CAST(doc_id AS INT), 24)"),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.TextAnalysis.portableHash
-import graft.operators.{Dedup, Multimodal, Similarity}
+import graft.operators.{Dedup, LocalFinish, Multimodal, Similarity}
 import DedupSimilaritySpec._
 
 /** Dedup family + similarity search + multimodal plumbing: planted
@@ -274,13 +274,13 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // components: {1,2,9} (chain 2-9, 9-1), {4,5}, singleton {7}
     val vertices = Seq(1L, 2L, 4L, 5L, 7L, 9L).toDF("v")
     val pairs = Seq((2L, 9L), (1L, 9L), (4L, 5L)).toDF("id_a", "id_b")
-    val labels = Dedup.connectedMinLabels(vertices, pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(labels === Map(1L -> 1L, 2L -> 1L, 9L -> 1L, 4L -> 4L, 5L -> 4L, 7L -> 7L))
-    // fixpoint: re-running on the already-labeled graph changes nothing
-    val again = Dedup.connectedMinLabels(vertices, pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(again === labels)
+    bounds.foreach { b =>
+      val labels = labelMap(Dedup.connectedMinLabels(vertices, pairs, 50, false, b))
+      assert(labels === Map(1L -> 1L, 2L -> 1L, 9L -> 1L, 4L -> 4L, 5L -> 4L, 7L -> 7L))
+      // fixpoint: re-running on the already-labeled graph changes nothing
+      val again = labelMap(Dedup.connectedMinLabels(vertices, pairs, 50, false, b))
+      assert(again === labels)
+    }
   }
 
   test("connectedMinLabels: pointer halving converges a 1000-chain in O(log n)") {
@@ -291,9 +291,58 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val vertices = spark.range(0, n).toDF("v")
     val pairs = spark.range(0, n - 1)
       .select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
-    val labels = Dedup.connectedMinLabels(vertices, pairs, maxIterations = 12)
-    assert(labels.filter(col("label") =!= 0L).isEmpty,
-      "every chain vertex must flood to the component min (0)")
+    bounds.foreach { b =>
+      val labels = Dedup.connectedMinLabels(vertices, pairs, 12, false, b)
+      assert(labels.filter(col("label") =!= 0L).isEmpty,
+        "every chain vertex must flood to the component min (0)")
+    }
+  }
+
+  /** The two finishing paths of the iterative operators, by their
+    * local bound: the local finish and the distributed rounds.
+    */
+  private val bounds = Seq(LocalFinish.MaxValues, 0L)
+
+  private def labelMap(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  test("connectedMinLabels: local finish equals the distributed rounds") {
+    // random graphs with isolated vertices, self-loops, duplicate pairs
+    // and endpoints outside the vertex set, plus an empty pair set;
+    // each also against union-find over the pairs inside the vertex set
+    val rnd = new scala.util.Random(7)
+    val graphs = (1 to 5).map { _ =>
+      val n = 10 + rnd.nextInt(30)
+      val vs = (0L until n.toLong).filter(_ => rnd.nextInt(8) != 0)
+      val ps = Seq.fill(rnd.nextInt(n))((rnd.nextInt(n + 4).toLong, rnd.nextInt(n + 4).toLong))
+      val loops = vs.take(2).map(v => (v, v))
+      (vs, ps ++ ps.take(3) ++ loops)
+    } :+ ((0L until 5L), Seq.empty[(Long, Long)])
+    graphs.foreach { case (vs, ps) =>
+      val vertices = vs.toDF("v")
+      val pairs = ps.toDF("id_a", "id_b")
+      val local = labelMap(Dedup.connectedMinLabels(vertices, pairs))
+      val rounds = labelMap(Dedup.connectedMinLabels(vertices, pairs, 50, false, 0L))
+      assert(local === rounds, s"graph $vs / $ps")
+      val parent = scala.collection.mutable.Map(vs.map(v => v -> v): _*)
+      def find(v: Long): Long = if (parent(v) == v) v else find(parent(v))
+      ps.filter(p => parent.contains(p._1) && parent.contains(p._2)).foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      assert(local === vs.map(v => v -> find(v)).toMap)
+    }
+  }
+
+  test("connectedMinLabels: too few rounds fail loudly on both paths") {
+    val vertices = spark.range(0, 1000).toDF("v")
+    val pairs = spark.range(0, 999)
+      .select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
+    bounds.foreach { b =>
+      val e = intercept[IllegalStateException](
+        Dedup.connectedMinLabels(vertices, pairs, 3, false, b))
+      assert(e.getMessage.contains("did not converge within 3 rounds"))
+    }
   }
 
   test("reliableCheckpoints without a checkpoint dir fails loudly (all operators)") {
@@ -354,11 +403,11 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val vertices = Seq(1L, 2L, 4L, 5L, 7L, 9L).toDF("v")
     val pairs = Seq((2L, 9L), (1L, 9L), (4L, 5L)).toDF("id_a", "id_b")
     ensureCheckpointDir()
-    val reliable = Dedup.connectedMinLabels(vertices, pairs,
-        reliableCheckpoints = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(reliable ===
-      Map(1L -> 1L, 2L -> 1L, 9L -> 1L, 4L -> 4L, 5L -> 4L, 7L -> 7L))
+    bounds.foreach { b =>
+      val reliable = labelMap(Dedup.connectedMinLabels(vertices, pairs, 50, true, b))
+      assert(reliable ===
+        Map(1L -> 1L, 2L -> 1L, 9L -> 1L, 4L -> 4L, 5L -> 4L, 7L -> 7L))
+    }
   }
 
   test("semDedup: reliable-checkpoint materialization matches the default path") {
@@ -395,6 +444,17 @@ class DedupSimilaritySpec extends AnyFunSuite {
       s"transitive survivors must be a subset: ${kept -- onePass}")
     assert(kept.contains(7L) && !kept.contains(100L)) // dup group collapses
     assert(kept.contains(102L)) // singleton survives
+  }
+
+  test("transitive dedup keyed by a string id keeps the same docs") {
+    // string ids take the distributed rounds (the local finish is for
+    // integral ids); zero-padded, they order as the numbers do
+    val byName = docs.withColumn("doc_id", format_string("d%05d", col("doc_id")))
+    val kept = Dedup.minhashDedupTransitive(byName, "doc_id", "text", threshold = 0.5)
+      .select("doc_id").collect().map(_.getString(0)).toSet
+    val byNumber = Dedup.minhashDedupTransitive(docs, "doc_id", "text", threshold = 0.5)
+      .select("doc_id").collect().map(r => f"d${r.getLong(0)}%05d").toSet
+    assert(kept === byNumber)
   }
 
   test("simhash pairs find the near dup within hamming distance") {

@@ -1,17 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.TextAnalysis
-import graft.operators.LinkGraph
+import graft.operators.{Dedup, LinkGraph, LocalFinish}
 
 /** Link-graph analytics: PageRank against hand-computed fixed-point
   * iterations, components against known topologies (including a chain
   * long enough that plain one-hop propagation would need more rounds
   * than pointer halving), BM25 against an independent plain-Scala
-  * evaluation of the same integer formula.
+  * evaluation of the same integer formula. PageRank and components
+  * run on both paths: the local finish and, with the bound forced to
+  * 0, the distributed rounds.
   */
 class LinkGraphSpec extends AnyFunSuite {
 
@@ -23,28 +25,41 @@ class LinkGraphSpec extends AnyFunSuite {
     .getOrCreate()
   import spark.implicits._
 
+  /** The two finishing paths, by their local bound. */
+  private val bounds = Seq(LocalFinish.MaxValues, 0L)
+
+  private def pageRank(vertices: DataFrame, edges: DataFrame, iterations: Int,
+                       bound: Long, redistributeDangling: Boolean = false,
+                       reliableCheckpoints: Boolean = false): DataFrame =
+    LinkGraph.pageRank(vertices, edges, iterations, 850L, 1000000L,
+      reliableCheckpoints, redistributeDangling, bound)
+
+  private def ranks(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
   test("pageRank matches two hand-computed damped integer iterations") {
     val vertices = Seq(0L, 1L, 2L).toDF("v")
     val edges = Seq((0L, 1L), (0L, 2L), (1L, 2L), (2L, 0L)).toDF("src", "dst")
     // iter1: s = (1000000, 500000, 1500000) -> r = (1000000, 575000, 1425000)
     // iter2: s = (1425000, 500000, 1075000) -> r = (1361250, 575000, 1063750)
-    val got = LinkGraph.pageRank(vertices, edges, iterations = 2)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === Map(0L -> 1361250L, 1L -> 575000L, 2L -> 1063750L))
+    bounds.foreach { b =>
+      assert(ranks(pageRank(vertices, edges, 2, b)) ===
+        Map(0L -> 1361250L, 1L -> 575000L, 2L -> 1063750L), s"bound $b")
+    }
   }
 
   test("pageRank: unlinked vertex holds exactly the base mass; zero iterations is the uniform start") {
     val vertices = Seq(0L, 1L, 2L, 3L).toDF("v")
     val edges = Seq((0L, 1L), (1L, 0L)).toDF("src", "dst") // 2,3 isolated
-    val r0 = LinkGraph.pageRank(vertices, edges, iterations = 0)
-      .collect().map(r => r.getLong(1)).toSet
-    assert(r0 === Set(1000000L))
-    val r1 = LinkGraph.pageRank(vertices, edges, iterations = 1)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // 0 and 1 swap full mass: 150000 + 850*1000000//1000 = 1000000
-    assert(r1(0L) === 1000000L && r1(1L) === 1000000L)
-    // isolated vertices: base only
-    assert(r1(2L) === 150000L && r1(3L) === 150000L)
+    bounds.foreach { b =>
+      val r0 = pageRank(vertices, edges, 0, b).collect().map(r => r.getLong(1)).toSet
+      assert(r0 === Set(1000000L))
+      val r1 = ranks(pageRank(vertices, edges, 1, b))
+      // 0 and 1 swap full mass: 150000 + 850*1000000//1000 = 1000000
+      assert(r1(0L) === 1000000L && r1(1L) === 1000000L)
+      // isolated vertices: base only
+      assert(r1(2L) === 150000L && r1(3L) === 150000L)
+    }
   }
 
   test("pageRank redistributeDangling matches a hand-computed iteration") {
@@ -55,14 +70,13 @@ class LinkGraphSpec extends AnyFunSuite {
     //   rank'(2) = rank'(1)                                 = 1283333
     val vertices = Seq(0L, 1L, 2L).toDF("v")
     val edges = Seq((0L, 1L), (1L, 2L)).toDF("src", "dst")
-    val got = LinkGraph.pageRank(vertices, edges, iterations = 1,
-        redistributeDangling = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === Map(0L -> 433333L, 1L -> 1283333L, 2L -> 1283333L))
-    // flag off on the same graph: the sink's mass leaks instead
-    val leaky = LinkGraph.pageRank(vertices, edges, iterations = 1)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(leaky === Map(0L -> 150000L, 1L -> 1000000L, 2L -> 1000000L))
+    bounds.foreach { b =>
+      assert(ranks(pageRank(vertices, edges, 1, b, redistributeDangling = true)) ===
+        Map(0L -> 433333L, 1L -> 1283333L, 2L -> 1283333L), s"bound $b")
+      // flag off on the same graph: the sink's mass leaks instead
+      assert(ranks(pageRank(vertices, edges, 1, b)) ===
+        Map(0L -> 150000L, 1L -> 1000000L, 2L -> 1000000L), s"bound $b")
+    }
   }
 
   test("pageRank redistributeDangling conserves Σrank up to integer truncation") {
@@ -75,14 +89,16 @@ class LinkGraphSpec extends AnyFunSuite {
     val n = 10L
     val vertices = (0L until n).toDF("v")
     val edges = (0L until n - 1).map(i => (i, i + 1)).toDF("src", "dst")
-    def total(flag: Boolean): Long = LinkGraph.pageRank(vertices, edges,
-        iterations = 5, redistributeDangling = flag)
-      .agg(sum("rank_micro")).head().getLong(0)
-    val conserved = total(true)
-    assert(conserved >= n * 1000000L - 200L && conserved <= n * 1000000L,
-      s"redistributed total $conserved must stay within truncation of ${n * 1000000L}")
-    assert(total(false) < conserved - 1000000L,
-      "the leaky default must visibly lose the sink mass")
+    bounds.foreach { b =>
+      def total(flag: Boolean): Long = pageRank(vertices, edges, 5, b,
+          redistributeDangling = flag)
+        .agg(sum("rank_micro")).head().getLong(0)
+      val conserved = total(true)
+      assert(conserved >= n * 1000000L - 200L && conserved <= n * 1000000L,
+        s"redistributed total $conserved must stay within truncation of ${n * 1000000L}")
+      assert(total(false) < conserved - 1000000L,
+        "the leaky default must visibly lose the sink mass")
+    }
   }
 
   test("pageRank conserves mass up to integer truncation on a dangling-free graph") {
@@ -90,9 +106,10 @@ class LinkGraphSpec extends AnyFunSuite {
     // loss (rank DIV 1) -> total mass is exactly |V| * scale each round
     val vertices = (0L until 10L).toDF("v")
     val edges = (0L until 10L).map(i => (i, (i + 1) % 10)).toDF("src", "dst")
-    val total = LinkGraph.pageRank(vertices, edges, iterations = 3)
-      .agg(sum("rank_micro")).head().getLong(0)
-    assert(total === 10L * 1000000L)
+    bounds.foreach { b =>
+      val total = pageRank(vertices, edges, 3, b).agg(sum("rank_micro")).head().getLong(0)
+      assert(total === 10L * 1000000L)
+    }
   }
 
   test("pageRank: reliable-checkpoint path matches localCheckpoint") {
@@ -105,12 +122,11 @@ class LinkGraphSpec extends AnyFunSuite {
     if (spark.sparkContext.getCheckpointDir.isEmpty)
       spark.sparkContext.setCheckpointDir(
         java.nio.file.Files.createTempDirectory("graft-pr-ckpt-").toString)
-    val local = LinkGraph.pageRank(vertices, edges, iterations = 2)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val reliable = LinkGraph.pageRank(vertices, edges, iterations = 2,
-        reliableCheckpoints = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(reliable === local)
+    bounds.foreach { b =>
+      val local = ranks(pageRank(vertices, edges, 2, b))
+      val reliable = ranks(pageRank(vertices, edges, 2, b, reliableCheckpoints = true))
+      assert(reliable === local)
+    }
   }
 
   test("components: chain, star, isolated vertices resolve to min labels") {
@@ -118,11 +134,75 @@ class LinkGraphSpec extends AnyFunSuite {
     val chain = (0L until 8L).map(i => (i, i + 1))
     val pairs = (chain ++ Seq((20L, 21L), (20L, 22L))).toDF("id_a", "id_b")
     val vertices = ((0L to 8L) ++ Seq(20L, 21L, 22L, 30L, 31L)).toDF("v")
-    val got = LinkGraph.components(vertices, pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    (0L to 8L).foreach(i => assert(got(i) === 0L, s"chain vertex $i"))
-    Seq(20L, 21L, 22L).foreach(i => assert(got(i) === 20L))
-    assert(got(30L) === 30L && got(31L) === 31L)
+    val local = LinkGraph.components(vertices, pairs)
+    val distributed = Dedup.connectedMinLabels(vertices, pairs, 50, false, 0L)
+    Seq(local, distributed).foreach { df =>
+      val got = ranks(df)
+      (0L to 8L).foreach(i => assert(got(i) === 0L, s"chain vertex $i"))
+      Seq(20L, 21L, 22L).foreach(i => assert(got(i) === 20L))
+      assert(got(30L) === 30L && got(31L) === 31L)
+    }
+  }
+
+  test("pageRank: local finish equals the distributed rounds") {
+    // random graphs with parallel edges, self-loops, sinks, and edges
+    // from and to ids outside the vertex set; zero to three iterations,
+    // dangling redistribution on and off
+    val rnd = new scala.util.Random(11)
+    (1 to 4).foreach { g =>
+      val n = 6 + rnd.nextInt(10)
+      val vertices = (0L until n.toLong).toDF("v")
+      val edges = Seq.fill(3 * n)((rnd.nextInt(n + 3).toLong, rnd.nextInt(n + 2).toLong))
+        .filter(_._1 % 4 != 3).toDF("src", "dst")
+      for (iters <- 0 to 3; flag <- Seq(false, true)) {
+        val local = ranks(pageRank(vertices, edges, iters, LocalFinish.MaxValues, flag))
+        val rounds = ranks(pageRank(vertices, edges, iters, 0L, flag))
+        assert(local === rounds, s"graph $g, $iters iterations, redistribute $flag")
+      }
+    }
+  }
+
+  test("pageRank: the dangling mass adds no job to a distributed round") {
+    val vertices = (0L until 20L).toDF("v")
+    val edges = (0L until 15L).map(i => (i, (i * 7 + 3) % 20)).toDF("src", "dst")
+    def jobs(iters: Int, flag: Boolean): Int =
+      JobCount(spark)(pageRank(vertices, edges, iters, 0L, flag).collect())._2
+    assert(jobs(3, flag = true) - jobs(1, flag = true) ===
+      jobs(3, flag = false) - jobs(1, flag = false))
+  }
+
+  test("pageRank: distributed rounds never move the edges") {
+    // the degree-annotated edges are hash-partitioned by src once and
+    // every round joins the ranks to them: a round shuffles vertex-sized
+    // data (ranks, vertex rows, partial sums), never the edges. With
+    // broadcasts off, a join that lost the partitioning would shuffle
+    // all 400 edge rows once per round.
+    import org.apache.spark.scheduler.{ListenerBusDrain, SparkListener, SparkListenerTaskEnd}
+    val vertices = (0L until 10L).toDF("v")
+    val edges = (0L until 400L).map(i => (i % 10, (i * 7 + 3) % 10)).toDF("src", "dst")
+    val written = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          written.addAndGet(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
+    }
+    def shuffled(iterations: Int): Long = {
+      val sc = spark.sparkContext
+      ListenerBusDrain.drain(sc)
+      written.set(0L)
+      sc.addSparkListener(listener)
+      try {
+        pageRank(vertices, edges, iterations, 0L, redistributeDangling = true).collect()
+        ListenerBusDrain.drain(sc)
+      } finally sc.removeSparkListener(listener)
+      written.get
+    }
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val perRound = (shuffled(4) - shuffled(1)) / 3
+      assert(perRound > 0L && perRound < 400L, s"a round shuffled $perRound rows")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
   }
 
   test("anchorText: counts, distinct anchors, deterministic top-k ties") {

@@ -716,6 +716,80 @@ class StreamingAndPlanSpec extends AnyFunSuite {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  test("catalog plans stay small: every posted description under 64 KiB, no big array literal") {
+    // Spark's SQL status store keeps every execution's plan description
+    // for the session, so a data- or parameter-sized literal in a plan
+    // is memory the session never gets back. Descriptions are captured
+    // as posted (execution start and every adaptive re-plan), so the
+    // plans behind collects and checkpoints count too.
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import org.apache.spark.scheduler.{ListenerBusDrain, SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
+    import org.apache.spark.sql.types.{ArrayType, DataType}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val posted = new ConcurrentLinkedQueue[(String, Int)]
+    val sizes = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          posted.add(s.description -> s.physicalPlanDescription.length)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+          posted.add(s"execution ${u.executionId}" -> u.physicalPlanDescription.length)
+        case _ =>
+      }
+    }
+    val plans = new ConcurrentLinkedQueue[LogicalPlan]
+    val qel = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.optimizedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = plans.add(qe.optimizedPlan)
+    }
+    def elements(v: Any, t: DataType): Long = (v, t) match {
+      case (a: ArrayData, ArrayType(et, _)) =>
+        (0 until a.numElements()).map(i =>
+          if (a.isNullAt(i)) 1L else elements(a.get(i, et), et)).sum
+      case _ => 1L
+    }
+    def arrayLiterals(p: LogicalPlan): Seq[Long] =
+      p.collectWithSubqueries { case n => n }.flatMap(_.expressions)
+        .flatMap(_.collect { case Literal(v, t: ArrayType) if v != null => elements(v, t) })
+    spark.sparkContext.addSparkListener(sizes)
+    spark.listenerManager.register(qel)
+    val sc = spark.sparkContext
+    try {
+      val tooBig = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
+        ListenerBusDrain.drain(sc)
+        posted.clear()
+        plans.clear()
+        sc.setJobDescription(name)
+        try SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+        finally sc.setJobDescription(null)
+        ListenerBusDrain.drain(sc)
+        val big = posted.asScala.collect { case (d, n) if n > 65536 => s"$name: $n chars ($d)" }
+        val arrays = plans.asScala.flatMap(arrayLiterals).filter(_ > 256)
+          .map(n => s"$name: an array literal of $n elements")
+        assert(posted.size >= 1, s"$name posted no plan description")
+        big ++ arrays
+      }
+      assert(tooBig.isEmpty, tooBig.mkString("\n"))
+    } finally {
+      spark.listenerManager.unregister(qel)
+      sc.removeSparkListener(sizes)
+    }
+  }
+
+  test("iterative catalog queries finish in a bounded number of jobs") {
+    // the local finish: inputs, one materialization, one collect
+    Seq("q_components" -> 9, "q_dup_clusters" -> 12, "q_pagerank" -> 8).foreach {
+      case (name, most) =>
+        val (_, jobs) = JobCount(spark)(SparkEntry.queries(name)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save())
+        assert(jobs <= most, s"$name launched $jobs jobs (at most $most)")
+    }
+  }
+
   test("familiarityScore never hints broadcast on the unbounded bigram dimension") {
     // same discipline as topTerms: with auto-broadcast off, any
     // BroadcastExchange in the plan could only come from a hint — and
