@@ -118,9 +118,7 @@ object Model {
       elapsedMs: Long)
 
   /** Engine configuration. All values participate in the deterministic
-    * replay contract except `simulateCrawlDelay` (a local-mode switch:
-    * real deployments rate-limit inside the fetch partition; tests
-    * must not sleep).
+    * replay contract.
     */
   final case class CrawlConfig(
       maxDepth: Int = 1, // reference default max_recursion = 1 (crawler.cfg:197-198)
@@ -142,7 +140,6 @@ object Model {
         * still set it. */
       saltTarget: Long = 100000L,
       userAgent: String = "graft",
-      simulateCrawlDelay: Boolean = false,
       /** total tries per URL for a Deferred (transient) refusal —
         * mirrors the reference's 3-attempt fetch retry
         * (baseconnector.py:1176-1181) lifted to wave granularity via

@@ -59,23 +59,23 @@ import WaveRunner.joinAll
   *     co-partitioned join above — html is never force-broadcast);
   *  3. expand: links → canonicalize → in-batch dedup → bloom-prefiltered
   *     anti-join against the discovery log (URL-seen, SURVEY.md §2.4);
-  *  4. commit: adopt processed + new_frontier segments (atomic renames),
-  *     then the commit TAIL as a small DAG of concurrent Spark jobs
-  *     ([[WaveRunner.joinAll]]): the two sketch advances run side by
-  *     side and the metrics row follows them (all counts piggyback on
-  *     the staging writes via Observations — no extra count jobs); on
-  *     a compaction wave the frontier compaction and the latest-try
-  *     rollup append (then the processed and rollup compactions, side
-  *     by side) overlap them, and the metrics compaction follows the
-  *     metrics row. The chains are independent: each table has its own
-  *     manifest that flips atomically, the sketches read the wave's
-  *     delta segments as listed before any compaction starts, and
-  *     merged-away segments stay on disk until the VACUUM, which runs
-  *     only after every chain has joined (a sketch's full rebuild scans
-  *     the whole log a compaction may just have replaced). A kill at
-  *     any point resumes without re-extracting anything: the resume
-  *     path catches the sketches and the metrics row up, and the
-  *     rollup append is guarded by its committed wave.
+  *  4. commit: ONE list of idempotent steps, each skipped when the
+  *     durable state it writes shows it done: stage (steps 1-3, marked
+  *     `_STAGED`, or `_IDLE` when nothing is schedulable now but work
+  *     remains); flip processed, then frontier (their committed waves:
+  *     atomic directory renames, zero jobs; an idle wave flips with no
+  *     segment, so its deltas are empty); the commit TAIL, a small DAG
+  *     of concurrent Spark jobs ([[WaveRunner.joinAll]]): the two
+  *     sketch advances side by side (their `.meta` files), then the
+  *     metrics row (its committed wave; counts piggyback on the staging
+  *     writes via Observations), alongside, on a compaction wave, the
+  *     frontier compaction and the rollup append (its committed wave),
+  *     then the processed and rollup compactions; the VACUUM, once every
+  *     chain has joined (a sketch's full rebuild may scan segments a
+  *     compaction just merged away); and a `_COMMITTED` marker file. A
+  *     restart ([[nextWave]]) re-enters the newest flipped wave until
+  *     its marker exists and runs the same list: finished steps skip,
+  *     and nothing is re-extracted.
   *
   * Every staged artifact and state segment is a [[ParquetDir]]: it
   * carries its schema, so reading it back launches no job.
@@ -127,10 +127,11 @@ final class WaveRunner(
     */
   val extractCounter = spark.sparkContext.longAccumulator("graft.extracted")
 
-  /** Test hook: crash-inject between the pages flip and the remaining
-    * flips to exercise mid-wave resume.
+  /** Test hook, called with each commit step's name once the step is
+    * done (tail steps from their chain's thread): one that throws kills
+    * the wave there.
     */
-  private[graft] var failAfterPagesCommit: Boolean = false
+  @volatile private[graft] var failPoint: String => Unit = _ => ()
 
   /** Test/integration hook for TRANSIENT fetch refusals (the 429 /
     * rate-limited analog — reference requeue-self,
@@ -251,99 +252,94 @@ final class WaveRunner(
     * the number of the last completed wave.
     */
   def run(): Int = {
-    var wave = frontierT.committedWave() + 1
-    var continue = true
-    while (continue && wave <= config.maxWaves) {
-      continue = runWave(wave)
-      if (continue) wave += 1
-    }
+    var wave = nextWave()
+    while (wave <= config.maxWaves && runWave(wave)) wave += 1
     frontierT.committedWave()
   }
 
-  /** Execute (or resume) wave `w`. Returns false when there was nothing
+  /** The wave to run next: the newest flipped wave while its commit
+    * tail is unfinished (a kill cut it), else the one after it. [[run]]
+    * and [[graft.streaming.CrawlStream]] both start here.
+    */
+  def nextWave(): Int = {
+    val w = frontierT.committedWave()
+    if (w >= 1 && !Files.exists(stagingDir(w).resolve(CommittedMarker))) w else w + 1
+  }
+
+  private def stagingDir(w: Int) = Paths.get(stateRoot, "staging", s"wave_$w")
+
+  /** Written once a wave's commit tail has joined: the wave is done. */
+  private val CommittedMarker = "_COMMITTED"
+
+  /** Execute (or finish) wave `w`: every commit step in fixed order,
+    * skipping those already done. Returns false when there was nothing
     * left to schedule now or in any future wave (crawl drained).
     */
   def runWave(w: Int): Boolean = {
     require(frontierT.exists(), "initSeeds must run before waves")
-    val staging = Paths.get(stateRoot, "staging", s"wave_$w")
-    if (frontierT.committedWave() >= w) {
-      // crash landed after the frontier flip: catch the sketches and
-      // metrics up (all idempotent; sketches are advisory only — a
-      // still-missing one just means exact-anti-join waves)
-      if (Files.exists(staging.resolve("_IDLE"))) {
-        bloom.advance(w, spark.emptyDataFrame, Some(0L))
-        popBloom.advance(w, spark.emptyDataFrame, Some(0L))
-      } else {
-        val c = readCounts(staging)
-        if (frontierT.committedWave() == w)
-          frontierT.readWaveSegment(w).foreach(seg =>
-            bloom.advance(w, seg.select("urlHash"), c.map(_.newUrls)))
-        if (processedT.committedWave() == w)
-          processedT.readWaveSegment(w).foreach(seg =>
-            popBloom.advance(w, seg.select("urlHash"), c.map(_.scheduled)))
-      }
-      commitMetrics(w, staging.toString, 0L)
-      return true
-    }
-
     val t0 = System.nanoTime()
+    val staging = stagingDir(w)
     val stagedMarker = staging.resolve("_STAGED")
     val idleMarker = staging.resolve("_IDLE")
 
-    if (!Files.exists(stagedMarker) && !Files.exists(idleMarker)) {
+    // stage: the only step that reads html, at most once per wave
+    if (frontierT.committedWave() < w && !Files.exists(stagedMarker) &&
+        !Files.exists(idleMarker))
       timed(s"w$w stage")(stageWave(w, staging.toString)) match {
         case StageResult.Drained => return false
         case StageResult.Idle => Files.write(idleMarker, Array.emptyByteArray)
         case StageResult.Staged => Files.write(stagedMarker, Array.emptyByteArray)
       }
-    }
+    failPoint("stage")
 
-    if (Files.exists(idleMarker)) {
-      // nothing schedulable THIS wave (all remaining work behind a
-      // retry backoff or the re-crawl frequency gate): manifest-only
-      // wave advance, zero data jobs
-      if (processedT.committedWave() < w) processedT.markCommit(w)
-      if (frontierT.committedWave() < w) frontierT.markCommit(w)
-      bloom.advance(w, spark.emptyDataFrame, Some(0L))
-      popBloom.advance(w, spark.emptyDataFrame, Some(0L))
-      commitMetrics(w, staging.toString, (System.nanoTime() - t0) / 1000000L)
-      return true
+    // flip processed, then frontier: adopt the staged artifact by
+    // atomic directory rename (zero jobs, zero data copy); an idle wave
+    // advances the committed wave with no segment
+    val idle = Files.exists(idleMarker)
+    def flip(t: SnapshotTable, artifact: String): Unit = {
+      if (t.committedWave() < w)
+        if (idle) t.markCommit(w)
+        else timed(s"w$w adopt-${t.name}")(t.adoptCommit(s"$staging/$artifact", w))
+      failPoint(t.name)
     }
-
-    // ---- commit phase: idempotent per table, fixed order ----
-    // staged artifacts are ADOPTED by atomic directory rename — zero
-    // jobs, zero data copy, O(delta) total commit I/O.
-    if (processedT.committedWave() < w)
-      timed(s"w$w adopt-processed")(
-        processedT.adoptCommit(s"$staging/processed", w))
-    if (failAfterPagesCommit)
-      throw new IllegalStateException("simulated kill between table flips")
-    if (frontierT.committedWave() < w)
-      timed(s"w$w adopt-frontier")(
-        frontierT.adoptCommit(s"$staging/new_frontier", w))
+    flip(processedT, "processed")
+    flip(frontierT, "new_frontier")
 
     // ---- commit tail: a small DAG of concurrent jobs ----
     // the wave's delta segments are resolved (file listing, no job)
     // before any compaction starts; merged-away files stay on disk
     // until the vacuum, which runs only after every chain has joined
-    val counts = readCounts(staging)
-    val newKeys = frontierT.readWaveSegment(w).map(_.select("urlHash"))
-    val poppedKeys = processedT.readWaveSegment(w).map(_.select("urlHash"))
+    val counts = readCounts(staging.toString)
+    // a delta is empty for an idle wave (no segment of its own) and
+    // unknown once the table has moved past w (an older wave re-run):
+    // that sketch then keeps its gap, which later waves bridge by a
+    // recount (sketches are advisory, a gap never changes a result)
+    def keys(t: SnapshotTable): Option[DataFrame] =
+      if (t.committedWave() != w) None
+      else Some(t.readWaveSegment(w).fold(spark.emptyDataFrame)(_.select("urlHash")))
+    val newKeys = keys(frontierT)
+    val poppedKeys = keys(processedT)
     val compacting = config.compactEveryWaves > 0 && w % config.compactEveryWaves == 0
+    def compact(t: SnapshotTable, merge: DataFrame => DataFrame = identity): Unit = {
+      t.compactTiered(config.compactMaxSegments, merge)
+      failPoint(s"compact-${t.name}")
+    }
     val tail0 = System.nanoTime()
     var sketched = tail0
     val chains = Seq.newBuilder[() => Unit]
     chains += { () =>
       joinAll(
-        () => newKeys.foreach(bloom.advance(w, _, counts.map(_.newUrls))),
-        () => poppedKeys.foreach(popBloom.advance(w, _, counts.map(_.scheduled))))
+        () => { newKeys.foreach(bloom.advance(w, _, counts.map(_.newUrls))); failPoint("bloom") },
+        () => { poppedKeys.foreach(popBloom.advance(w, _, counts.map(_.scheduled)))
+          failPoint("popbloom") })
       sketched = System.nanoTime()
       // after both sketches, so elapsedMs covers them
-      commitMetrics(w, staging.toString, (sketched - t0) / 1000000L)
-      if (compacting) compactTable(metricsT)
+      commitMetrics(w, counts, (sketched - t0) / 1000000L)
+      failPoint("metrics")
+      if (compacting) compact(metricsT)
     }
     if (compacting) {
-      chains += (() => compactTable(frontierT))
+      chains += (() => compact(frontierT))
       chains += { () =>
         // materialize the latest-try rollup for the window since the
         // last materialization (ONE latest-per-key segment per cycle,
@@ -357,24 +353,24 @@ final class WaveRunner(
             if (latestT.exists()) latestT.appendCommit(delta, w)
             else latestT.commit(delta, w)
           }
+        failPoint("rollup")
         // rollup: merged segments collapse to ONE row per key
-        joinAll(() => compactTable(processedT), () => compactTable(latestT, latestTry))
+        joinAll(() => compact(processedT), () => compact(latestT, latestTry))
       }
     }
     joinAll(chains.result(): _*)
     // a sketch's full rebuild may have scanned segments a compaction
     // just replaced: vacuum only once every chain has joined
-    if (compacting && config.vacuumOnCompact)
+    if (compacting && config.vacuumOnCompact) {
       Seq(frontierT, processedT, metricsT, latestT).foreach(_.vacuum())
+      failPoint("vacuum")
+    }
     record(s"w$w sketches", tail0, sketched)
     if (compacting) record(s"w$w compact", sketched, System.nanoTime())
+    Files.createDirectories(staging)
+    Files.write(staging.resolve(CommittedMarker), Array.emptyByteArray)
     true
   }
-
-  /** Bound `t`'s live segment count with the tiered merge. */
-  private def compactTable(t: SnapshotTable,
-                           merge: DataFrame => DataFrame = identity): Unit =
-    t.compactTiered(config.compactMaxSegments, merge)
 
   // ---- pending-state resolution (read-side; no frontier rewrite) ----
 
@@ -879,9 +875,6 @@ final class WaveRunner(
     Files.write(countsPath(staging), json.getBytes(UTF_8))
   }
 
-  private def readCounts(staging: java.nio.file.Path): Option[StageCounts] =
-    readCounts(staging.toString)
-
   private def readCounts(staging: String): Option[StageCounts] = {
     val p = countsPath(staging)
     if (!Files.exists(p)) return None
@@ -892,9 +885,9 @@ final class WaveRunner(
       f("bytes"), f("newUrls"), f("retries"), f("recrawls")))
   }
 
-  private def commitMetrics(w: Int, staging: String, elapsedMs: Long): Unit = {
+  private def commitMetrics(w: Int, counts: Option[StageCounts], elapsedMs: Long): Unit = {
     if (metricsT.committedWave() >= w) return
-    val m = readCounts(staging) match {
+    val m = counts match {
       case None =>
         // staged counts lost (staging wiped between crash and resume):
         // mark the gap with -1 counts instead of fabricating zeros; the

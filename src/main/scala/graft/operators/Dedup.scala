@@ -126,7 +126,9 @@ object Dedup {
     * over the materialization, with no driver-side graph state: two
     * eager checkpoints and a `limit(1).count()` convergence job, ~11
     * jobs under adaptive execution, where each shuffle stage is its own
-    * job. Both paths run the same rounds, so they give the same labels
+    * job. The directed edges are hash-partitioned by `id_b` once and
+    * persisted, so a round shuffles vertex-sized data, never the
+    * edges. Both paths run the same rounds, so they give the same labels
     * and fail on the same `maxIterations`.
     *
     * `reliableCheckpoints=true` swaps the eager `localCheckpoint`
@@ -181,7 +183,12 @@ object Dedup {
     */
   private def minLabelsDistributed(state: DataFrame, noEdges: Boolean, maxIterations: Int,
                                    ckpt: DataFrame => DataFrame): DataFrame = {
+    // persisted, not checkpointed: a checkpoint keeps no partitioning
+    // under adaptive execution, and every round joins on id_b
     val edges = state.filter(col("edge")).select(col("v").as("id_a"), col("nb").as("id_b"))
+      .repartition(state.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+        col("id_b"))
+      .persist()
     // EAGER checkpoint each round, not persist: a persisted DataFrame
     // keeps its full logical plan, and every round embeds the
     // previous round's plan ~3× (neighbor join + the halving self-join)
@@ -191,7 +198,7 @@ object Dedup {
     var labels = state.filter(!col("edge")).select(col("v"), col("v").as("label"))
     var iter = 0
     var converged = noEdges
-    while (!converged && iter < maxIterations) {
+    try while (!converged && iter < maxIterations) {
       val neighborMin = edges
         .join(labels, edges("id_b") === labels("v"))
         .groupBy(col("id_a").as("nv")).agg(min(col("label")).as("nmin"))
@@ -217,7 +224,7 @@ object Dedup {
       labels = next.select(col("v"), col("label"))
       converged = changed == 0L
       iter += 1
-    }
+    } finally edges.unpersist()
     if (!converged) throw nonConvergence(maxIterations)
     labels
   }

@@ -72,11 +72,6 @@ final class SnapshotTable(spark: SparkSession, root: String, val name: String) {
     */
   def read(): Option[DataFrame] = currentManifest().map(m => readSegments(m.segments))
 
-  /** Read a specific historical version's own rows (time travel for a
-    * replace-table; a single delta for an append-table).
-    */
-  def readVersion(version: Int): DataFrame = readSegments(Seq(version))
-
   /** Write `df` as the next snapshot and atomically flip the pointer,
     * REPLACING table contents. `wave` is the crawl wave this commit
     * belongs to (idempotence key for resume: a re-run of wave w sees
@@ -125,11 +120,13 @@ final class SnapshotTable(spark: SparkSession, root: String, val name: String) {
   def markCommit(wave: Int): Unit =
     currentManifest().foreach(m => writeManifest(m.copy(wave = wave)))
 
-  /** The rows of the segment committed for `wave` — valid only while
-    * committedWave == wave (the commit protocol's own use).
+  /** The rows of the segment committed for `wave`: the newest segment
+    * when its recorded wave is `wave`, else None (a later commit, or a
+    * wave advanced by [[markCommit]], which has no segment of its own).
     */
   def readWaveSegment(wave: Int): Option[DataFrame] =
-    currentManifest().filter(_.wave == wave).map(m => readSegments(Seq(m.segments.last)))
+    currentManifest().filter(_.segmentWaves.lastOption.contains(wave))
+      .map(m => readSegments(Seq(m.segments.last)))
 
   /** The live segments that may hold rows committed after `wave`, read
     * as one relation; None when no segment does. The selection is by
@@ -165,8 +162,8 @@ final class SnapshotTable(spark: SparkSession, root: String, val name: String) {
     * small deltas while the large merged segments stay put. A bound of
     * 2 rewrites every segment but the newest on each compaction: the
     * whole history, O(history) bytes per check. The newest segment is
-    * never merged, so `readWaveSegment(committedWave)` still returns
-    * the latest delta.
+    * never merged, so `readWaveSegment` still returns the latest
+    * delta.
     * Crash-safe like any commit (atomic manifest flip, wave marker
     * unchanged); old segments stay until `vacuum`. Returns the merged
     * segment's version, or None when under the bound.

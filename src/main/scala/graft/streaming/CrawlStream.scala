@@ -12,8 +12,9 @@ import graft.crawl.WaveRunner
   * `foreachBatch`, replacing the reference's 10-second crawlnode poll
   * loop (reference: crawler/crawlnode.py:113-130). State lives in the
   * runner's snapshot tables, so the stream is stateless from Spark's
-  * point of view and restart-safe from ours: a restarted query simply
-  * resumes at `frontier.committedWave + 1`.
+  * point of view and restart-safe from ours: a restarted query resumes
+  * at [[WaveRunner.nextWave]], so it first finishes a wave whose commit
+  * tail a kill cut off.
   */
 object CrawlStream {
 
@@ -29,7 +30,7 @@ object CrawlStream {
       .writeStream
       .trigger(Trigger.ProcessingTime(triggerMs))
       .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
-        val next = runner.frontierT.committedWave() + 1
+        val next = runner.nextWave()
         if (next > maxWaves || !runner.runWave(next)) drained.set(true)
         ()
       }
@@ -45,7 +46,7 @@ object CrawlStream {
     val q = start(spark, runner, drained, maxWaves, triggerMs = 100L)
     try {
       val deadline = System.nanoTime() + timeoutMs * 1000000L
-      while (!drained.get() && runner.frontierT.committedWave() < maxWaves &&
+      while (!drained.get() && runner.nextWave() <= maxWaves &&
              System.nanoTime() < deadline) {
         Thread.sleep(200)
       }

@@ -152,7 +152,8 @@ class CrawlEngineSpec extends AnyFunSuite {
     r1.initSeeds(seeds)
     assert(r1.runWave(1))
     // crash between the pages flip and the rest of wave 2's flips
-    r1.failAfterPagesCommit = true
+    r1.failPoint = step =>
+      if (step == "processed") throw new IllegalStateException("simulated kill between table flips")
     intercept[IllegalStateException](r1.runWave(2))
     assert(r1.processedT.committedWave() === 2)
     assert(r1.frontierT.committedWave() === 1)

@@ -345,6 +345,49 @@ class DedupSimilaritySpec extends AnyFunSuite {
     }
   }
 
+  test("connectedMinLabels: distributed rounds never move the edges") {
+    // the directed edges are hash-partitioned by id_b once and every
+    // round joins the labels to them: a round shuffles vertex-sized
+    // data (labels, partial minima), never the edges. A 64-chain needs
+    // more than 4 rounds, so maxIterations 1 and 4 both stop on the
+    // convergence check; the one-time partitioning cancels in the
+    // difference. With broadcasts off, a join that lost the
+    // partitioning would shuffle all 1,008 directed edge rows per round.
+    import org.apache.spark.scheduler.{ListenerBusDrain, SparkListener, SparkListenerTaskEnd}
+    val vertices = spark.range(0, 64).toDF("v")
+    val pairs = (0L until 63L).flatMap(i => Seq.fill(8)((i, i + 1))).toDF("id_a", "id_b")
+    val edgeRows = 2L * 63 * 8
+    val written = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          written.addAndGet(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
+    }
+    def shuffled(rounds: Int): Long = {
+      val sc = spark.sparkContext
+      ListenerBusDrain.drain(sc)
+      written.set(0L)
+      sc.addSparkListener(listener)
+      try {
+        val e = intercept[IllegalStateException](
+          Dedup.connectedMinLabels(vertices, pairs, rounds, false, 0L))
+        assert(e.getMessage.contains(s"within $rounds rounds"))
+        ListenerBusDrain.drain(sc)
+      } finally sc.removeSparkListener(listener)
+      written.get
+    }
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val perRound = (shuffled(4) - shuffled(1)) / 3
+      assert(perRound > 0L && perRound < edgeRows, s"a round shuffled $perRound rows")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    // labels unchanged: the distributed rounds still match the local finish
+    assert(labelMap(Dedup.connectedMinLabels(vertices, pairs, 50, false, 0L)) ===
+      labelMap(Dedup.connectedMinLabels(vertices, pairs)))
+    assert(labelMap(Dedup.connectedMinLabels(vertices, pairs)).values.toSet === Set(0L))
+  }
+
   test("reliableCheckpoints without a checkpoint dir fails loudly (all operators)") {
     // ONE dedicated, order-independent home for the loud-require
     // contract: the checkpoint dir is JVM-global (one SparkContext

@@ -1,0 +1,253 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.core.Model.CrawlConfig
+import graft.crawl.{SyntheticCorpus, WaveRunner}
+import graft.streaming.CrawlStream
+
+/** The resume contract at every commit step of a wave: a kill at any
+  * named step ([[WaveRunner.failPoint]]), then a restarted runner's
+  * `run()`, reproduces the uninterrupted crawl (order, seen set, page
+  * text, metrics rows, the sketch chain) with zero re-fetches and no
+  * segment directory outside the manifests.
+  */
+class ResumeAtEveryStepSpec extends AnyFunSuite {
+
+  private lazy val spark = SparkSession.builder()
+    .master("local[4]")
+    .appName("graft-resume-spec")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  private val spec = SyntheticCorpus.Spec(numUrls = 160, numHosts = 6)
+  private lazy val corpus = SyntheticCorpus.generate(spark, spec, partitions = 4).toDF()
+  private def tmp(p: String) = Files.createTempDirectory(p).toString
+
+  // every step runs every wave: both sketches (bloomMinFrontier 0), the
+  // metrics row, the rollup append, all four compactions and the
+  // vacuum; first-attempt deferrals add the misses job and retries
+  private val config = CrawlConfig(maxDepth = 2, defaultMaxPerWave = 8, maxWaves = 4,
+    bloomMinFrontier = 0L, broadcastSeenKeys = 0L, compactEveryWaves = 1,
+    compactMaxSegments = 2, vacuumOnCompact = true)
+  private val seeds = Seq(SyntheticCorpus.urlFor(0, spec) -> 1,
+    SyntheticCorpus.urlFor(5, spec) -> 2)
+
+  private def runner(root: String): WaveRunner = {
+    val r = new WaveRunner(spark, corpus, root, config)
+    r.deferInjector = Some(pmod(col("urlHash"), lit(4L)) === 0L && col("attempts") === 0)
+    r
+  }
+
+  /** Every fail point of a compacting wave: the three sequential steps,
+    * then the tail's, chain by chain.
+    */
+  private val Steps = Seq("stage", "processed", "frontier",
+    "bloom", "popbloom", "metrics", "compact-metrics",
+    "compact-frontier",
+    "rollup", "compact-processed", "compact-latest",
+    "vacuum")
+  private val TailSteps = Steps.drop(3)
+
+  /** What a crawl leaves: the parts the resume contract covers. */
+  private case class Outcome(order: Seq[Seq[Any]], seen: Set[Seq[Any]], text: Set[Seq[Any]],
+                             metrics: Seq[Seq[Any]], metas: Map[String, String])
+
+  private def outcome(r: WaveRunner, root: String): Outcome = {
+    val metas = Seq("bloom", "popbloom").flatMap { dir =>
+      val s = Files.list(Paths.get(root, dir))
+      try s.iterator().asScala.map(_.getFileName.toString).filter(_.endsWith(".meta"))
+        .map(f => s"$dir/$f" -> new String(Files.readAllBytes(Paths.get(root, dir, f)), "UTF-8"))
+        .toList
+      finally s.close()
+    }.toMap
+    Outcome(
+      r.crawlOrder().collect().map(_.toSeq).toSeq,
+      r.seen().collect().map(_.toSeq).toSet,
+      r.pages().select("urlHash", "wave", "title", "text").collect().map(_.toSeq).toSet,
+      r.metrics().drop("elapsedMs").orderBy("wave").collect().map(_.toSeq).toSeq,
+      metas)
+  }
+
+  /** Segment directories on disk that no manifest lists. */
+  private def orphans(r: WaveRunner, root: String): Seq[String] =
+    Seq(r.frontierT, r.processedT, r.metricsT, r.latestT).flatMap { t =>
+      t.currentManifest().toSeq.flatMap { m =>
+        val live = m.segments.map(v => f"v$v%05d").toSet
+        val s = Files.list(Paths.get(root, t.name, "snapshots"))
+        try s.iterator().asScala.map(_.getFileName.toString).filterNot(live).map(d => s"${t.name}/$d")
+          .toList
+        finally s.close()
+      }
+    }
+
+  private lazy val (baseline, baselineRoot, baselineSteps) = {
+    val root = tmp("graft-resume-base-")
+    val r = runner(root)
+    val steps = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    r.failPoint = steps.add(_)
+    r.initSeeds(seeds)
+    r.run()
+    (r, root, steps.asScala.toList)
+  }
+  private lazy val expected = outcome(baseline, baselineRoot)
+
+  /** Crawl wave 1, then wave 2 under `kill`, which sees each step's
+    * name and may throw. Returns the state root and the killed runner.
+    */
+  private def killedAtWave2(label: String, kill: String => Unit): (String, WaveRunner) = {
+    val root = tmp(s"graft-resume-$label-")
+    val r1 = runner(root)
+    r1.initSeeds(seeds)
+    assert(r1.runWave(1))
+    r1.failPoint = kill
+    intercept[IllegalStateException](r1.runWave(2))
+    (root, r1)
+  }
+
+  /** Throws at `step` only: every other chain of the tail runs on. */
+  private def failAt(step: String): String => Unit = s =>
+    if (s == step) throw new IllegalStateException(s"simulated kill at $step")
+
+  /** Throws at `step` and at every step reached after it: a process
+    * death, where no chain finishes another step.
+    */
+  private def dieAt(step: String): String => Unit = {
+    val dead = new java.util.concurrent.atomic.AtomicBoolean(false)
+    s => {
+      if (s == step) dead.set(true)
+      if (dead.get) throw new IllegalStateException(s"simulated kill at $step")
+    }
+  }
+
+  private def assertResumed(label: String, root: String, killed: WaveRunner,
+                            resumed: WaveRunner): Unit = {
+    assert(killed.extractCounter.value + resumed.extractCounter.value ===
+      baseline.extractCounter.value, s"$label: a resumed wave re-fetched pages")
+    val got = outcome(resumed, root)
+    assert(got.order === expected.order, s"$label: crawl order")
+    assert(got.seen === expected.seen, s"$label: seen set")
+    assert(got.text === expected.text, s"$label: page text")
+    assert(got.metrics === expected.metrics, s"$label: metrics rows")
+    assert(got.metas === expected.metas, s"$label: sketch metas")
+    assert(orphans(resumed, root).isEmpty, s"$label: segments outside the manifests")
+  }
+
+  test("every named step is reached by an uninterrupted compacting wave") {
+    val waves = baseline.frontierT.committedWave()
+    assert(waves === config.maxWaves, "probe setup broken: the crawl drained early")
+    assert(baselineSteps.toSet === Steps.toSet)
+    assert(baselineSteps.size === waves * Steps.size)
+    // per wave: the three sequential steps first, the vacuum last
+    baselineSteps.grouped(Steps.size).foreach { wave =>
+      assert(wave.take(3) === Steps.take(3))
+      assert(wave.last === "vacuum")
+    }
+    assert(expected.metrics.exists(_(4) != 0L), "probe setup broken: no deferrals")
+    assert(expected.metas.size === 2 * (waves + 1), s"sketch metas: ${expected.metas.keySet}")
+    assert(orphans(baseline, baselineRoot).isEmpty)
+  }
+
+  test("run() after a kill at any step reproduces the uninterrupted crawl") {
+    Steps.foreach { step =>
+      val (root, r1) = killedAtWave2(step, failAt(step))
+      val r2 = runner(root)
+      r2.run()
+      assertResumed(s"kill at $step", root, r1, r2)
+    }
+  }
+
+  test("run() after a process death inside the tail reproduces the uninterrupted crawl") {
+    // no chain finishes another step after the kill
+    TailSteps.foreach { step =>
+      val (root, r1) = killedAtWave2(s"die-$step", dieAt(step))
+      val r2 = runner(root)
+      r2.run()
+      assertResumed(s"death at $step", root, r1, r2)
+    }
+  }
+
+  test("a restart finishes the wave whose commit tail was cut before the next") {
+    val (root, r1) = killedAtWave2("next", dieAt("bloom"))
+    assert(r1.frontierT.committedWave() === 2)
+    val r2 = runner(root)
+    assert(r2.nextWave() === 2, "the flipped wave's tail is unfinished")
+    assert(r2.runWave(2))
+    assert(r2.extractCounter.value === 0L, "finishing the tail re-fetched pages")
+    assert(r2.nextWave() === 3)
+    assert(r2.metrics().filter(col("wave") === 2).count() === 1L)
+    assert(Files.exists(Paths.get(root, "bloom", "wave_2.meta")))
+  }
+
+  test("a CrawlStream restart after a tail kill reproduces the uninterrupted crawl") {
+    val (root, r1) = killedAtWave2("stream", dieAt("metrics"))
+    val r2 = runner(root)
+    assert(CrawlStream.runBatches(spark, r2, config.maxWaves) === config.maxWaves)
+    assertResumed("stream restart", root, r1, r2)
+  }
+
+  test("an idle wave takes the same commit steps as a staged one") {
+    // the seed is refused once and waits retryBackoffWaves = 2: wave 2
+    // has nothing schedulable but work left, so it commits idle
+    val seed = SyntheticCorpus.urlFor(0, spec)
+    val cfg = CrawlConfig(maxDepth = 1, defaultMaxPerWave = 10, maxWaves = 6,
+      retryBackoffWaves = 2, bloomMinFrontier = 0L, compactEveryWaves = 1,
+      compactMaxSegments = 2)
+    val root = tmp("graft-resume-idle-")
+    val r = new WaveRunner(spark, corpus, root, cfg)
+    r.deferInjector = Some(col("url") === seed && col("attempts") === 0)
+    r.initSeeds(Seq(seed -> 1))
+    val steps = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    r.failPoint = steps.add(_)
+    def wave(w: Int): (Boolean, Set[String]) = {
+      steps.clear()
+      val more = r.runWave(w)
+      (more, steps.asScala.toSet)
+    }
+    val (more1, staged) = wave(1)
+    val (more2, idle) = wave(2)
+    assert(more1 && more2)
+    assert(Files.exists(Paths.get(root, "staging", "wave_2", "_IDLE")),
+      "probe setup broken: wave 2 was not idle")
+    assert(idle === staged)
+    assert(staged === Steps.toSet)
+    assert(r.frontierT.readWaveSegment(2).isEmpty && r.processedT.readWaveSegment(2).isEmpty)
+    def meta(dir: String, w: Int) =
+      new String(Files.readAllBytes(Paths.get(root, dir, s"wave_$w.meta")), "UTF-8")
+    assert(meta("bloom", 2) === meta("bloom", 1))
+    assert(meta("popbloom", 2) === meta("popbloom", 1))
+    var w = 3
+    while (w <= cfg.maxWaves && r.runWave(w)) w += 1
+    // the same crawl as it ran while idle waves had a branch of their own
+    val order = r.crawlOrder().collect().map(x => (x.getInt(0), x.getString(3))).toSeq
+    assert(order === IdleOrder)
+    val metrics = r.metrics().drop("elapsedMs").orderBy("wave").collect()
+      .map(_.toSeq.map(_.toString.toLong)).toSeq
+    assert(metrics === IdleMetrics)
+  }
+
+  /** The idle-wave crawl's order (wave, url), as the engine crawled it
+    * while idle waves had a commit branch of their own.
+    */
+  private val IdleOrder = Seq((1, "http://host1.test/p/0"), (3, "http://host1.test/p/0"),
+    (4, "http://host1.test/"), (4, "http://host0.test/p/100"), (4, "http://host0.test/p/104"),
+    (4, "http://host1.test/p/1"), (4, "http://host3.test/p/98"), (4, "http://host0.test/p/122"),
+    (4, "http://host0.test/p/34"), (4, "http://host1.test/tags"))
+
+  /** Its metrics rows, same provenance: wave, scheduled, fetched,
+    * failed, deferred, bytes, newUrls, frontierPending.
+    */
+  private val IdleMetrics = Seq(
+    Seq(1L, 1L, 0L, 0L, 1L, 0L, 0L, 0L),
+    Seq(2L, 0L, 0L, 0L, 0L, 0L, 0L, 0L),
+    Seq(3L, 1L, 1L, 0L, 0L, 1671L, 8L, 8L),
+    Seq(4L, 8L, 5L, 3L, 0L, 9282L, 39L, 39L))
+}

@@ -80,6 +80,24 @@ class StateAndOperatorsSpec extends AnyFunSuite {
     assert(newer(5).isEmpty)
   }
 
+  test("snapshot table: a wave advanced by markCommit has no segment of its own") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-st-").toString
+    val t = SnapshotTable(spark, root, "log")
+    t.appendCommit(Seq(1, 2).toDF("x"), wave = 1)
+    t.appendCommit(Seq(3).toDF("x"), wave = 2)
+    assert(t.readWaveSegment(2).map(_.as[Int].collect().toSet) === Some(Set(3)))
+    assert(t.readWaveSegment(1).isEmpty, "wave 1's segment is no longer the newest")
+    t.markCommit(3) // an idle wave: the committed wave moves, no segment
+    assert(t.committedWave() === 3)
+    assert(t.readWaveSegment(3).isEmpty)
+    assert(t.readWaveSegment(2).map(_.as[Int].collect().toSet) === Some(Set(3)))
+    // the newest delta survives a compaction with its wave
+    t.appendCommit(Seq(4).toDF("x"), wave = 4)
+    t.compactTiered(2)
+    assert(t.readWaveSegment(4).map(_.as[Int].collect().toSet) === Some(Set(4)))
+  }
+
   test("snapshot table: rollback points at an old version") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft-st-").toString
