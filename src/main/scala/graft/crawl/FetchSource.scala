@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Model.CrawlConfig
+import graft.state.ParquetDir
 
 /** The fetch side of the wave loop: in our input shape the page bytes
   * already sit in the input table (BASELINE input_hint), so "fetch" is
@@ -90,41 +91,48 @@ final class FetchSource(
     * table CLUSTERED BY page_urlHash holding the latest capture per
     * url; the one-time shuffle is amortized over every subsequent wave,
     * which joins with zero exchange on the pages side. Idempotent and
-    * session-restart-safe: an existing directory is re-registered in
-    * the (in-memory) catalog via DDL instead of rewritten — after the
-    * input fingerprint check (schema always; row count unless
-    * `fetchIngestVerifyCount` is off).
+    * session-restart-safe: an existing directory is not rewritten —
+    * after the input fingerprint check (schema always; row count unless
+    * `fetchIngestVerifyCount` is off) — and either way the (in-memory)
+    * catalog registers the directory by DDL, so the table carries no
+    * write option into its reads.
     */
   lazy val source: DataFrame =
     if (!bucketed) plain
     else {
       val nb = config.fetchBuckets
       if (!spark.catalog.tableExists(tableName)) {
-        if (!Files.exists(Paths.get(bucketDir, "_SUCCESS"))) {
-          val obs = org.apache.spark.sql.Observation(
-            s"graft-ingest-${tableName.takeRight(8)}")
-          val w = Window.partitionBy("page_urlHash")
-            .orderBy(col("warc_ts").desc, xxhash64(col("html")).desc)
-          plain
-            .observe(obs, count(lit(1)).as("input_rows"))
-            .repartition(nb, col("page_urlHash"))
-            .withColumn("rn", row_number().over(w))
-            .filter(col("rn") === 1).drop("rn")
-            .write.bucketBy(nb, "page_urlHash").sortBy("page_urlHash")
-            .option("path", bucketDir).format("parquet")
-            .mode("overwrite").saveAsTable(tableName)
-          writeIngestMeta(obs.get("input_rows").asInstanceOf[Long])
-        } else {
-          verifyIngest()
-          val ddlSchema = plain.schema.toDDL
-          spark.sql(
-            s"""CREATE TABLE $tableName ($ddlSchema) USING parquet
-               |CLUSTERED BY (page_urlHash) SORTED BY (page_urlHash)
-               |INTO $nb BUCKETS LOCATION '$bucketDir'""".stripMargin)
-        }
+        if (Files.exists(Paths.get(bucketDir, "_SUCCESS"))) verifyIngest()
+        else ingest(nb)
+        val ddlSchema = plain.schema.toDDL
+        spark.sql(
+          s"""CREATE TABLE $tableName ($ddlSchema) USING parquet
+             |CLUSTERED BY (page_urlHash) SORTED BY (page_urlHash)
+             |INTO $nb BUCKETS LOCATION '$bucketDir'""".stripMargin)
       }
       spark.table(tableName)
     }
+
+  /** Write the bucketed latest-capture table and its input fingerprint.
+    * Only `saveAsTable` writes a bucketed layout; the table it registers
+    * is external (it has a path), so dropping it keeps the files.
+    */
+  private def ingest(nb: Int): Unit = {
+    val obs = org.apache.spark.sql.Observation(
+      s"graft-ingest-${tableName.takeRight(8)}")
+    val w = Window.partitionBy("page_urlHash")
+      .orderBy(col("warc_ts").desc, xxhash64(col("html")).desc)
+    ParquetDir.writer(plain
+        .observe(obs, count(lit(1)).as("input_rows"))
+        .repartition(nb, col("page_urlHash"))
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1).drop("rn"))
+      .bucketBy(nb, "page_urlHash").sortBy("page_urlHash")
+      .option("path", bucketDir).format("parquet")
+      .mode("overwrite").saveAsTable(tableName)
+    spark.sql(s"DROP TABLE $tableName")
+    writeIngestMeta(obs.get("input_rows").asInstanceOf[Long])
+  }
 
   /** Fetched rows for a popped set: popped columns + the page html,
     * exactly one row per popped urlHash present in the table (latest

@@ -64,7 +64,8 @@ import WaveRunner.joinAll
   *     `_STAGED`, or `_IDLE` when nothing is schedulable now but work
   *     remains); flip processed, then frontier (their committed waves:
   *     atomic directory renames, zero jobs; an idle wave flips with no
-  *     segment, so its deltas are empty); the commit TAIL, a small DAG
+  *     segment, so its deltas are empty); drop the previous wave's
+  *     staged artifacts, keeping its markers; the commit TAIL, a small DAG
   *     of concurrent Spark jobs ([[WaveRunner.joinAll]]): the two
   *     sketch advances side by side (their `.meta` files), then the
   *     metrics row (its committed wave; counts piggyback on the staging
@@ -271,6 +272,21 @@ final class WaveRunner(
   /** Written once a wave's commit tail has joined: the wave is done. */
   private val CommittedMarker = "_COMMITTED"
 
+  /** Delete a done wave's staged artifacts (its popped set and counts),
+    * keeping its markers, which [[nextWave]] and [[runWave]] read.
+    * Without this the state grows by one popped set per wave, outside
+    * every manifest. A wave whose marker is missing keeps everything.
+    */
+  private def dropStaged(w: Int): Unit = {
+    val staging = stagingDir(w)
+    if (Files.exists(staging.resolve(CommittedMarker))) {
+      val s = Files.list(staging)
+      val entries = try s.iterator().asScala.toList finally s.close()
+      entries.filterNot(p => Set(CommittedMarker, "_STAGED", "_IDLE")(p.getFileName.toString))
+        .foreach(SnapshotTable.deleteRecursively)
+    }
+  }
+
   /** Execute (or finish) wave `w`: every commit step in fixed order,
     * skipping those already done. Returns false when there was nothing
     * left to schedule now or in any future wave (crawl drained).
@@ -304,6 +320,10 @@ final class WaveRunner(
     }
     flip(processedT, "processed")
     flip(frontierT, "new_frontier")
+
+    // the previous wave is done: nothing reads its staged artifacts again
+    dropStaged(w - 1)
+    failPoint("drop-staging")
 
     // ---- commit tail: a small DAG of concurrent jobs ----
     // the wave's delta segments are resolved (file listing, no job)

@@ -32,6 +32,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * with table snapshots instead of a B-tree.
   */
 final class SnapshotTable(spark: SparkSession, root: String, val name: String) {
+  import SnapshotTable.deleteRecursively
 
   private val tableDir: Path = Paths.get(root, name)
   private val snapshotsDir: Path = tableDir.resolve("snapshots")
@@ -300,14 +301,20 @@ final class SnapshotTable(spark: SparkSession, root: String, val name: String) {
     }
     sb.toString
   }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) listing(Files.list(p))(_.toList).foreach(deleteRecursively)
-    Files.deleteIfExists(p)
-  }
 }
 
 object SnapshotTable {
+
+  /** Delete a file, or a directory tree children first. */
+  private[graft] def deleteRecursively(p: Path): Unit = {
+    if (Files.isDirectory(p)) {
+      val s = Files.list(p)
+      val children = try s.iterator().asScala.toList finally s.close()
+      children.foreach(deleteRecursively)
+    }
+    Files.deleteIfExists(p)
+  }
+
   def apply(spark: SparkSession, root: String, name: String): SnapshotTable =
     new SnapshotTable(spark, root, name)
 }

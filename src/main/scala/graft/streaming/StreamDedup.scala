@@ -87,7 +87,8 @@ object StreamDedup {
     } finally {
       q.stop()
       spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      deleteRecursively(ckptDir)
+      // best effort: what cannot be deleted stays behind
+      scala.util.Try(graft.state.SnapshotTable.deleteRecursively(ckptDir))
     }
     // pin the result: the memory-sink table is bound to the (stopped)
     // streaming query; downstream writes want a standalone frame
@@ -99,19 +100,6 @@ object StreamDedup {
   }
 
   private val replaySeq = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Best-effort delete of a directory tree, children first; a file
-    * that cannot be deleted is left behind.
-    */
-  private def deleteRecursively(dir: java.nio.file.Path): Unit = {
-    val paths = try java.nio.file.Files.walk(dir) catch {
-      case _: java.io.IOException => return
-    }
-    try paths.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(p => java.nio.file.Files.deleteIfExists(p): Unit)
-    catch { case _: java.io.IOException | _: java.io.UncheckedIOException => }
-    finally paths.close()
-  }
 
   /** Batch twin for parity checks: first arrival per key by (ts, then
     * tie-break on every remaining column via min(struct)) — what the

@@ -7,6 +7,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.Model.CrawlConfig
+import graft.crawl.{SyntheticCorpus, WaveRunner}
 import graft.state.SnapshotTable
 
 /** Long-crawl soak of the append-log compaction policy (VERDICT r2 #9):
@@ -92,5 +94,46 @@ class CompactionSoakSpec extends AnyFunSuite {
     val onDisk = Files.list(Paths.get(root, "log", "snapshots")).count()
     assert(onDisk <= maxSegments + checkEvery,
       s"vacuum must bound on-disk segment dirs: $onDisk")
+  }
+
+  test("a long crawl keeps the state outside every manifest bounded") {
+    // what a crawl leaves beside its live segments: the staging dirs,
+    // the sketch chains' metas, the manifests themselves. Per-wave
+    // leftovers (a popped set per wave) would grow it with the wave
+    // count; the live segments grow with the data and are not counted.
+    val spec = SyntheticCorpus.Spec(numUrls = 3000, numHosts = 30)
+    val corpus = SyntheticCorpus.generate(spark, spec, partitions = 4).toDF()
+    val root = Files.createTempDirectory("graft-soak-crawl-")
+    val waves = 16
+    val r = new WaveRunner(spark, corpus, root.toString,
+      CrawlConfig(maxDepth = 64, defaultMaxPerWave = 2, maxWaves = waves,
+        compactEveryWaves = 4, compactMaxSegments = 4))
+    r.initSeeds((0L until 3000L by 30).map(i => SyntheticCorpus.urlFor(i, spec) -> 1))
+    def bytes(p: Path): Seq[(Path, Long)] = {
+      val s = Files.walk(p)
+      try s.iterator().asScala.filter(Files.isRegularFile(_)).map(f => f -> Files.size(f)).toList
+      finally s.close()
+    }
+    def outside(): Long = {
+      val live = Seq(r.frontierT, r.processedT, r.metricsT, r.latestT).flatMap { t =>
+        t.currentManifest().toSeq.flatMap(_.segments)
+          .map(v => root.resolve(t.name).resolve("snapshots").resolve(f"v$v%05d"))
+      }
+      bytes(root).collect { case (f, n) if !live.exists(f.startsWith) => n }.sum
+    }
+    /** Bytes a wave staged: its popped set and counts. */
+    def staged(w: Int): Long = bytes(root.resolve("staging").resolve(s"wave_$w")).map(_._2).sum
+    val perWave = (1 to waves).map { w =>
+      assert(r.runWave(w), s"probe setup broken: the crawl drained at wave $w")
+      (outside(), staged(w))
+    }
+    // at most the newest wave's staged artifacts, plus what does not
+    // grow with the data: manifests, metas, markers
+    val fixed = 8 * 1024L
+    perWave.zipWithIndex.foreach { case ((out, newest), i) =>
+      assert(out <= newest + fixed,
+        s"wave ${i + 1}: $out bytes outside the manifests (newest staged: $newest)")
+    }
+    assert(perWave.map(_._2).min > fixed / 4, s"probe setup broken: ${perWave.map(_._2)}")
   }
 }

@@ -15,8 +15,9 @@ import graft.streaming.CrawlStream
 /** The resume contract at every commit step of a wave: a kill at any
   * named step ([[WaveRunner.failPoint]]), then a restarted runner's
   * `run()`, reproduces the uninterrupted crawl (order, seen set, page
-  * text, metrics rows, the sketch chain) with zero re-fetches and no
-  * segment directory outside the manifests.
+  * text, metrics rows, the sketch chain) with zero re-fetches, no
+  * segment directory outside the manifests and no staged artifacts of a
+  * done wave.
   */
 class ResumeAtEveryStepSpec extends AnyFunSuite {
 
@@ -47,15 +48,15 @@ class ResumeAtEveryStepSpec extends AnyFunSuite {
     r
   }
 
-  /** Every fail point of a compacting wave: the three sequential steps,
+  /** Every fail point of a compacting wave: the four sequential steps,
     * then the tail's, chain by chain.
     */
-  private val Steps = Seq("stage", "processed", "frontier",
+  private val Steps = Seq("stage", "processed", "frontier", "drop-staging",
     "bloom", "popbloom", "metrics", "compact-metrics",
     "compact-frontier",
     "rollup", "compact-processed", "compact-latest",
     "vacuum")
-  private val TailSteps = Steps.drop(3)
+  private val TailSteps = Steps.drop(4)
 
   /** What a crawl leaves: the parts the resume contract covers. */
   private case class Outcome(order: Seq[Seq[Any]], seen: Set[Seq[Any]], text: Set[Seq[Any]],
@@ -75,6 +76,17 @@ class ResumeAtEveryStepSpec extends AnyFunSuite {
       r.pages().select("urlHash", "wave", "title", "text").collect().map(_.toSeq).toSet,
       r.metrics().drop("elapsedMs").orderBy("wave").collect().map(_.toSeq).toSeq,
       metas)
+  }
+
+  /** The waves whose staging directory holds more than its markers. */
+  private def staged(root: String): Set[String] = {
+    val s = Files.list(Paths.get(root, "staging"))
+    try s.iterator().asScala.filter { wave =>
+      val entries = Files.list(wave)
+      try entries.iterator().asScala.exists(!_.getFileName.toString.startsWith("_"))
+      finally entries.close()
+    }.map(_.getFileName.toString).toSet
+    finally s.close()
   }
 
   /** Segment directories on disk that no manifest lists. */
@@ -139,6 +151,7 @@ class ResumeAtEveryStepSpec extends AnyFunSuite {
     assert(got.metrics === expected.metrics, s"$label: metrics rows")
     assert(got.metas === expected.metas, s"$label: sketch metas")
     assert(orphans(resumed, root).isEmpty, s"$label: segments outside the manifests")
+    assert(staged(root) === staged(baselineRoot), s"$label: staged artifacts kept")
   }
 
   test("every named step is reached by an uninterrupted compacting wave") {
@@ -146,14 +159,16 @@ class ResumeAtEveryStepSpec extends AnyFunSuite {
     assert(waves === config.maxWaves, "probe setup broken: the crawl drained early")
     assert(baselineSteps.toSet === Steps.toSet)
     assert(baselineSteps.size === waves * Steps.size)
-    // per wave: the three sequential steps first, the vacuum last
+    // per wave: the four sequential steps first, the vacuum last
     baselineSteps.grouped(Steps.size).foreach { wave =>
-      assert(wave.take(3) === Steps.take(3))
+      assert(wave.take(4) === Steps.take(4))
       assert(wave.last === "vacuum")
     }
     assert(expected.metrics.exists(_(4) != 0L), "probe setup broken: no deferrals")
     assert(expected.metas.size === 2 * (waves + 1), s"sketch metas: ${expected.metas.keySet}")
     assert(orphans(baseline, baselineRoot).isEmpty)
+    // only the last wave keeps its popped set and counts
+    assert(staged(baselineRoot) === Set(s"wave_$waves"))
   }
 
   test("run() after a kill at any step reproduces the uninterrupted crawl") {

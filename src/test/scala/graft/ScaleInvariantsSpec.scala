@@ -215,11 +215,16 @@ class ScaleInvariantsSpec extends AnyFunSuite {
     // reaches, and a steady wave that needs more classes than the cache
     // holds recompiles them anyway. Pin both: consecutive steady waves
     // generate the same sources, and a wave generates few of them.
+    // Their writes fork no process either (a chmod per file without
+    // the native Hadoop library).
     val runner = deepCrawl("wavecode", waves = 5)
     (1 to 2).foreach(w => assert(runner.runWave(w)))
-    val (more3, wave3) = CodegenProbe.sources(spark)(runner.runWave(3))
-    val (more4, wave4) = CodegenProbe.sources(spark)(runner.runWave(4))
+    val ((more3, wave3), procs3) =
+      ProcessProbe.started(CodegenProbe.sources(spark)(runner.runWave(3)))
+    val ((more4, wave4), procs4) =
+      ProcessProbe.started(CodegenProbe.sources(spark)(runner.runWave(4)))
     assert(more3 && more4)
+    assert(procs3.isEmpty && procs4.isEmpty, s"processes started: ${procs3 ++ procs4}")
     assert(wave3.nonEmpty, "probe setup broken: no whole-stage code captured")
     val (s3, s4) = (wave3.toSet, wave4.toSet)
     assert(s3 === s4, s"sources only in wave 3: ${(s3 -- s4).size}, only in wave 4: " +

@@ -923,4 +923,26 @@ class StreamingAndPlanSpec extends AnyFunSuite {
     }.toSet
     assert(readers === Set("graft/state/ParquetDir.scala", "graft/Bench.scala"))
   }
+
+  test("parquet outputs: only ParquetDir writes them (and the bench harness, the oracle outputs)") {
+    // a DataFrameWriter of its own forks a chmod per local file without
+    // the native Hadoop library; ParquetDir.writer's does not. Sinks
+    // that write no file (noop) are free to use one.
+    val writeChain = """\.write(\s*\.\w+\([^()]*\))+""".r
+    val writers = mainSources.collect {
+      case (f, text) if writeChain.findAllIn(text).exists(!_.contains("format(\"noop\")")) => f
+    }.toSet
+    // the frozen bench harness, and graft.Verify's query outputs for
+    // the oracle, which are no crawl state
+    assert(writers === Set("graft/state/ParquetDir.scala", "graft/Bench.scala",
+      "graft/Verify.scala"))
+    // a table write (FetchSource's bucketed ingest) starts from
+    // ParquetDir.writer too
+    val tableWriters = mainSources.filter(_._2.contains("saveAsTable("))
+    assert(tableWriters.map(_._1).toSet === Set("graft/crawl/FetchSource.scala"))
+    tableWriters.foreach { case (f, text) =>
+      assert(text.contains("ParquetDir.writer("), s"$f writes a table without ParquetDir.writer")
+    }
+  }
+
 }
