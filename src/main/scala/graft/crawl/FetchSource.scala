@@ -1,13 +1,14 @@
 package graft.crawl
 
-import java.nio.file.{Files, Paths}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Model.CrawlConfig
-import graft.state.ParquetDir
+import graft.state.{ParquetDir, StateFiles}
 
 /** The fetch side of the wave loop: in our input shape the page bytes
   * already sit in the input table (BASELINE input_hint), so "fetch" is
@@ -55,19 +56,19 @@ final class FetchSource(
   private def ingestMetaPath = Paths.get(bucketDir, "_graft_ingest.meta")
 
   /** Fingerprint of the INPUT the bucketed table was ingested from
-    * (pre-dedup row count + schema DDL). A resumed crawl whose
-    * pagesInput gained captures must not silently join a stale
+    * (pre-dedup row count, schema DDL), or None. [[ingest]] writes it
+    * last: it is the ingest's commit record, so a directory without a
+    * readable one (a cut ingest) is ingested again. A resumed crawl
+    * whose pagesInput gained captures must not silently join a stale
     * snapshot — [[verifyIngest]] fails loudly on mismatch.
     */
-  private def writeIngestMeta(inputRows: Long): Unit =
-    Files.write(ingestMetaPath,
-      s"$inputRows\n${pagesInput.schema.toDDL}\n".getBytes("UTF-8"))
+  private def ingestMeta(): Option[(Long, String)] =
+    StateFiles.read(ingestMetaPath).map(new String(_, UTF_8).split("\n", 2)).collect {
+      case Array(rows, schema) if rows.trim.toLongOption.isDefined =>
+        (rows.trim.toLong, schema.trim)
+    }
 
-  private def verifyIngest(): Unit = {
-    if (!Files.exists(ingestMetaPath)) return // pre-fingerprint ingest
-    val lines = new String(Files.readAllBytes(ingestMetaPath), "UTF-8")
-      .split("\n", 2)
-    val wantSchema = lines(1).trim
+  private def verifyIngest(wantRows: Long, wantSchema: String): Unit = {
     val gotSchema = pagesInput.schema.toDDL
     if (gotSchema != wantSchema)
       throw new IllegalStateException(
@@ -75,7 +76,6 @@ final class FetchSource(
           s"with schema [$wantSchema] but the current pagesInput has " +
           s"[$gotSchema]; delete the directory to re-ingest")
     if (config.fetchIngestVerifyCount) {
-      val wantRows = lines(0).trim.toLong
       val gotRows = pagesInput.count()
       if (gotRows != wantRows)
         throw new IllegalStateException(
@@ -91,8 +91,8 @@ final class FetchSource(
     * table CLUSTERED BY page_urlHash holding the latest capture per
     * url; the one-time shuffle is amortized over every subsequent wave,
     * which joins with zero exchange on the pages side. Idempotent and
-    * session-restart-safe: an existing directory is not rewritten —
-    * after the input fingerprint check (schema always; row count unless
+    * session-restart-safe: a recorded ingest is not rewritten — after
+    * the input fingerprint check (schema always; row count unless
     * `fetchIngestVerifyCount` is off) — and either way the (in-memory)
     * catalog registers the directory by DDL, so the table carries no
     * write option into its reads.
@@ -102,8 +102,7 @@ final class FetchSource(
     else {
       val nb = config.fetchBuckets
       if (!spark.catalog.tableExists(tableName)) {
-        if (Files.exists(Paths.get(bucketDir, "_SUCCESS"))) verifyIngest()
-        else ingest(nb)
+        ingestMeta().fold(ingest(nb)) { case (rows, schema) => verifyIngest(rows, schema) }
         val ddlSchema = plain.schema.toDDL
         spark.sql(
           s"""CREATE TABLE $tableName ($ddlSchema) USING parquet
@@ -131,7 +130,8 @@ final class FetchSource(
       .option("path", bucketDir).format("parquet")
       .mode("overwrite").saveAsTable(tableName)
     spark.sql(s"DROP TABLE $tableName")
-    writeIngestMeta(obs.get("input_rows").asInstanceOf[Long])
+    StateFiles.write(ingestMetaPath,
+      s"${obs.get("input_rows")}\n${pagesInput.schema.toDDL}\n".getBytes(UTF_8))
   }
 
   /** Fetched rows for a popped set: popped columns + the page html,

@@ -1,9 +1,9 @@
 package graft.crawl
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Path, Paths}
 
-import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
@@ -12,8 +12,8 @@ import graft.core.{BoilerplateExtractor, Hashing, UrlNormalizer}
 import graft.core.Model._
 import graft.operators.{Politeness, SeenSet}
 import graft.plans.Kernels
-import graft.state.{ParquetDir, SnapshotTable}
-import WaveRunner.joinAll
+import graft.state.{ParquetDir, SnapshotTable, StateFiles}
+import WaveRunner.{CountsFile, StageCounts, joinAll}
 
 /** The crawl engine: an iterative-batch frontier loop over snapshot
   * tables (the Spark-native re-expression of the reference's
@@ -41,11 +41,8 @@ import WaveRunner.joinAll
   *    processed row. The per-wave pending scan is read-only — an
   *    anti-join of discoveries against processed KEYS (8-byte column),
   *    Bloom-prefiltered so rows the sketch proves unprocessed skip the
-  *    shuffle. (Round 1 rewrote the whole frontier table every wave —
-  *    O(10^10) write amplification at the design point; this layout
-  *    replaces that with one rename + one keys-only read-side join,
-  *    mirroring the reference's O(delta) per-put bsddb persistence,
-  *    crawler/utils/priorityqueue.py:23-36.)
+  *    shuffle (the reference's O(delta) per-put bsddb persistence,
+  *    crawler/utils/priorityqueue.py:23-36).
   *
   * Per wave:
   *  1. plan: pending = fresh ∪ retry-eligible deferred ∪ recrawl-due
@@ -65,7 +62,8 @@ import WaveRunner.joinAll
   *     remains); flip processed, then frontier (their committed waves:
   *     atomic directory renames, zero jobs; an idle wave flips with no
   *     segment, so its deltas are empty); drop the previous wave's
-  *     staged artifacts, keeping its markers; the commit TAIL, a small DAG
+  *     staged artifacts, keeping its markers, and the sketch files
+  *     before it; the commit TAIL, a small DAG
   *     of concurrent Spark jobs ([[WaveRunner.joinAll]]): the two
   *     sketch advances side by side (their `.meta` files), then the
   *     metrics row (its committed wave; counts piggyback on the staging
@@ -76,7 +74,8 @@ import WaveRunner.joinAll
   *     compaction just merged away); and a `_COMMITTED` marker file. A
   *     restart ([[nextWave]]) re-enters the newest flipped wave until
   *     its marker exists and runs the same list: finished steps skip,
-  *     and nothing is re-extracted.
+  *     and nothing is re-extracted. Wave 0's list: the seed frontier
+  *     ([[initSeeds]]), both sketch chains' first `.meta`, `_COMMITTED`.
   *
   * Every staged artifact and state segment is a [[ParquetDir]]: it
   * carries its schema, so reading it back launches no job.
@@ -106,10 +105,9 @@ final class WaveRunner(
   val processedT = SnapshotTable(spark, stateRoot, "processed")
   val metricsT = SnapshotTable(spark, stateRoot, "metrics")
 
-  /** Incremental latest-try ROLLUP of the processed log (round-3
-    * verdict #3). The rollup MATERIALIZES only at compaction cadence —
-    * zero per-wave jobs (a measured 0.3-0.8 s/wave serial write in the
-    * first cut): between materializations, reads compose the rollup
+  /** Incremental latest-try ROLLUP of the processed log. The rollup
+    * MATERIALIZES only at compaction cadence — zero per-wave jobs:
+    * between materializations, reads compose the rollup
     * with the processed segments NEWER than its `committedWave`,
     * selected from the manifest, so the old segments are never opened.
     * Each compaction cycle appends ONE latest-per-key segment for the
@@ -219,34 +217,47 @@ final class WaveRunner(
         typedLit(hostPolicies.map { case (h, p) => h -> p.crawlDelayMs }), host),
       lit(config.defaultCrawlDelayMs))
 
-  /** Initialize the frontier from a seed list (url, priority). Two
-    * seeds canonicalizing to the same URL keep one deterministic
-    * representative (min priority — mirroring the min()-based
-    * first-discovery rule used for links). Commits frontier wave 0.
-    * No-op if the frontier already exists (resume).
+  /** Initialize the frontier from a seed list (url, priority), then
+    * finish wave 0. Two seeds canonicalizing to the same URL keep one
+    * deterministic representative (min priority — mirroring the
+    * min()-based first-discovery rule used for links). Commits frontier
+    * wave 0 unless the frontier already exists (resume: the seeds are
+    * then unused).
     */
   def initSeeds(seeds: Seq[(String, Int)]): Unit = {
-    if (frontierT.exists()) return
-    val entries = seeds.flatMap { case (url, priority) =>
-      UrlNormalizer.canonicalize(url).map { canonical =>
-        FrontierEntry(
-          urlHash = Hashing.xxhash64(canonical),
-          url = canonical,
-          host = UrlNormalizer.hostOf(canonical),
-          depth = 0,
-          priority = priority,
-          score = score(priority, 0),
-          discoveredWave = 0)
+    val seeded = if (frontierT.exists()) None else {
+      val entries = seeds.flatMap { case (url, priority) =>
+        UrlNormalizer.canonicalize(url).map { canonical =>
+          FrontierEntry(
+            urlHash = Hashing.xxhash64(canonical),
+            url = canonical,
+            host = UrlNormalizer.hostOf(canonical),
+            depth = 0,
+            priority = priority,
+            score = score(priority, 0),
+            discoveredWave = 0)
+        }
       }
+        .groupBy(_.urlHash).values
+        .map(_.minBy(e => (e.priority, e.url))).toSeq
+        .sortBy(_.urlHash)
+      frontierT.commit(entries.toDS().toDF(), wave = 0)
+      Some(entries.size.toLong)
     }
-      .groupBy(_.urlHash).values
-      .map(_.minBy(e => (e.priority, e.url))).toSeq
-      .sortBy(_.urlHash)
-    frontierT.commit(entries.toDS().toDF(), wave = 0)
-    bloom.advance(0, frontierT.read().get, Some(entries.size.toLong))
-    // nothing is processed at wave 0: both chains start here, so a
-    // missing wave_0 meta is a real gap, never the chain's start
+    failPoint("frontier")
+    if (nextWave() == 0) finishSeedWave(seeded)
+  }
+
+  /** Wave 0's steps after the frontier commit. Nothing is processed at
+    * wave 0: both sketch chains start here, so a missing wave_0 meta is
+    * a real gap. The key count is `seeded`, else the frontier's.
+    */
+  private def finishSeedWave(seeded: Option[Long]): Unit = {
+    bloom.advance(0, frontierT.read().get.select("urlHash"), seeded)
+    failPoint("bloom")
     popBloom.advance(0, spark.emptyDataFrame, Some(0L))
+    failPoint("popbloom")
+    mark(stagingDir(0).resolve(CommittedMarker))
   }
 
   /** Run waves until the frontier drains or maxWaves is hit; returns
@@ -264,13 +275,15 @@ final class WaveRunner(
     */
   def nextWave(): Int = {
     val w = frontierT.committedWave()
-    if (w >= 1 && !Files.exists(stagingDir(w).resolve(CommittedMarker))) w else w + 1
+    if (w >= 0 && !StateFiles.exists(stagingDir(w).resolve(CommittedMarker))) w else w + 1
   }
 
-  private def stagingDir(w: Int) = Paths.get(stateRoot, "staging", s"wave_$w")
+  private def stagingDir(w: Int): Path = Paths.get(stateRoot, "staging", s"wave_$w")
 
-  /** Written once a wave's commit tail has joined: the wave is done. */
+  /** Written once a wave's last step is done: the wave is done. */
   private val CommittedMarker = "_COMMITTED"
+
+  private def mark(marker: Path): Unit = StateFiles.write(marker, Array.emptyByteArray)
 
   /** Delete a done wave's staged artifacts (its popped set and counts),
     * keeping its markers, which [[nextWave]] and [[runWave]] read.
@@ -279,12 +292,10 @@ final class WaveRunner(
     */
   private def dropStaged(w: Int): Unit = {
     val staging = stagingDir(w)
-    if (Files.exists(staging.resolve(CommittedMarker))) {
-      val s = Files.list(staging)
-      val entries = try s.iterator().asScala.toList finally s.close()
-      entries.filterNot(p => Set(CommittedMarker, "_STAGED", "_IDLE")(p.getFileName.toString))
-        .foreach(SnapshotTable.deleteRecursively)
-    }
+    if (StateFiles.exists(staging.resolve(CommittedMarker)))
+      StateFiles.list(staging)
+        .filterNot(p => Set(CommittedMarker, "_STAGED", "_IDLE")(p.getFileName.toString))
+        .foreach(StateFiles.delete)
   }
 
   /** Execute (or finish) wave `w`: every commit step in fixed order,
@@ -293,25 +304,26 @@ final class WaveRunner(
     */
   def runWave(w: Int): Boolean = {
     require(frontierT.exists(), "initSeeds must run before waves")
+    if (w == 0) { finishSeedWave(None); return true }
     val t0 = System.nanoTime()
     val staging = stagingDir(w)
     val stagedMarker = staging.resolve("_STAGED")
     val idleMarker = staging.resolve("_IDLE")
 
     // stage: the only step that reads html, at most once per wave
-    if (frontierT.committedWave() < w && !Files.exists(stagedMarker) &&
-        !Files.exists(idleMarker))
+    if (frontierT.committedWave() < w && !StateFiles.exists(stagedMarker) &&
+        !StateFiles.exists(idleMarker))
       timed(s"w$w stage")(stageWave(w, staging.toString)) match {
         case StageResult.Drained => return false
-        case StageResult.Idle => Files.write(idleMarker, Array.emptyByteArray)
-        case StageResult.Staged => Files.write(stagedMarker, Array.emptyByteArray)
+        case StageResult.Idle => mark(idleMarker)
+        case StageResult.Staged => mark(stagedMarker)
       }
     failPoint("stage")
 
     // flip processed, then frontier: adopt the staged artifact by
     // atomic directory rename (zero jobs, zero data copy); an idle wave
     // advances the committed wave with no segment
-    val idle = Files.exists(idleMarker)
+    val idle = StateFiles.exists(idleMarker)
     def flip(t: SnapshotTable, artifact: String): Unit = {
       if (t.committedWave() < w)
         if (idle) t.markCommit(w)
@@ -321,15 +333,17 @@ final class WaveRunner(
     flip(processedT, "processed")
     flip(frontierT, "new_frontier")
 
-    // the previous wave is done: nothing reads its staged artifacts again
+    // the previous wave is done: nothing reads its staged artifacts, or
+    // a sketch file before it, again
     dropStaged(w - 1)
+    Seq(bloom, popBloom).foreach(_.dropSketchesBefore(w - 1))
     failPoint("drop-staging")
 
     // ---- commit tail: a small DAG of concurrent jobs ----
     // the wave's delta segments are resolved (file listing, no job)
     // before any compaction starts; merged-away files stay on disk
     // until the vacuum, which runs only after every chain has joined
-    val counts = readCounts(staging.toString)
+    val counts = WaveRunner.readCounts(staging)
     // a delta is empty for an idle wave (no segment of its own) and
     // unknown once the table has moved past w (an older wave re-run):
     // that sketch then keeps its gap, which later waves bridge by a
@@ -387,8 +401,7 @@ final class WaveRunner(
     }
     record(s"w$w sketches", tail0, sketched)
     if (compacting) record(s"w$w compact", sketched, System.nanoTime())
-    Files.createDirectories(staging)
-    Files.write(staging.resolve(CommittedMarker), Array.emptyByteArray)
+    mark(staging.resolve(CommittedMarker))
     true
   }
 
@@ -753,9 +766,8 @@ final class WaveRunner(
     // exist, their job runs on a SEPARATE THREAD overlapping the
     // expansion below (both read the immutable fetched artifact; tail
     // rows carry no links, so expansion over fetched-only is already
-    // exact) — the tail writes its own directory and its files are
-    // folded into the processed artifact after both jobs finish.
-    val tailDir = s"$staging/processed_tail"
+    // exact) — the tail is appended to the processed artifact, whose
+    // files both jobs listed before either started.
     val tailObs = Observation(s"graft-tail-$w")
     val misses: Option[() => Unit] =
       if (deferred.isEmpty && fetchedN == poppedN) None
@@ -768,13 +780,13 @@ final class WaveRunner(
         val tail = (failedRows +:
           deferred.map(d => emptyPage(d, FrontierState.Deferred)).toSeq)
           .reduce(_.unionByName(_))
-        Some(() => ParquetDir.write(
+        Some(() => ParquetDir.writer(
           tail.withColumn("wave", Kernels.bound_int(w))
             .withColumn("nOutlinks", size(col("links")))
             .select(processedCols.map(col): _*)
             .observe(tailObs, count(lit(1)).as("n"), deferred.map(_ =>
-              count(when(col("state") === FrontierState.Deferred, 1)).as("deferred")).toSeq: _*),
-          tailDir))
+              count(when(col("state") === FrontierState.Deferred, 1)).as("deferred")).toSeq: _*))
+          .mode("append").parquet(s"$staging/processed"))
       }
 
     // ---- frontier expansion (E2) from the staged artifact (resume
@@ -851,25 +863,12 @@ final class WaveRunner(
     } ++ misses: _*)
     val newUrls = newObs.get("n").asInstanceOf[Long]
 
-    // fold the overlapped tail job's part-files into the processed
-    // artifact (same-filesystem renames; UUID part names cannot
-    // collide). Crash-safe: a kill here re-runs the whole stage (no
-    // _STAGED marker yet), and both writes are Overwrite.
+    // crash-safe: a kill before the _STAGED marker re-runs the whole
+    // stage, whose processed write is an Overwrite
     val (scheduled, deferredN) =
       if (misses.isEmpty) (poppedN, 0L)
       else {
         record(s"w$w stage-misses-join", expanded, System.nanoTime())
-        val dst = Paths.get(s"$staging/processed")
-        val entries = {
-          val s = Files.list(Paths.get(tailDir))
-          try s.iterator().asScala.toList finally s.close()
-        }
-        entries.filter(_.getFileName.toString.endsWith(".parquet"))
-          .foreach(p => Files.move(p, dst.resolve(p.getFileName),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE))
-        entries.filterNot(_.getFileName.toString.endsWith(".parquet"))
-          .foreach(p => Files.delete(p))
-        Files.delete(Paths.get(tailDir))
         (fetchedN + tailObs.get("n").asInstanceOf[Long],
           if (deferred.isEmpty) 0L else tailObs.get("deferred").asInstanceOf[Long])
       }
@@ -882,28 +881,8 @@ final class WaveRunner(
 
   // ---- metrics (all inputs piggybacked from staging observations) ----
 
-  final case class StageCounts(scheduled: Long, fetched: Long, failed: Long,
-                               deferred: Long, bytes: Long, newUrls: Long,
-                               retries: Long, recrawls: Long)
-
-  private def countsPath(staging: String) = Paths.get(staging, "counts.json")
-
-  private def writeCounts(staging: String, c: StageCounts): Unit = {
-    val json = s"""{"scheduled":${c.scheduled},"fetched":${c.fetched},""" +
-      s""""failed":${c.failed},"deferred":${c.deferred},"bytes":${c.bytes},""" +
-      s""""newUrls":${c.newUrls},"retries":${c.retries},"recrawls":${c.recrawls}}"""
-    Files.write(countsPath(staging), json.getBytes(UTF_8))
-  }
-
-  private def readCounts(staging: String): Option[StageCounts] = {
-    val p = countsPath(staging)
-    if (!Files.exists(p)) return None
-    val json = new String(Files.readAllBytes(p), UTF_8)
-    def f(k: String): Long =
-      s""""$k"\\s*:\\s*(-?\\d+)""".r.findFirstMatchIn(json).map(_.group(1).toLong).getOrElse(0L)
-    Some(StageCounts(f("scheduled"), f("fetched"), f("failed"), f("deferred"),
-      f("bytes"), f("newUrls"), f("retries"), f("recrawls")))
-  }
+  private def writeCounts(staging: String, c: StageCounts): Unit =
+    StateFiles.writeJson(Paths.get(staging, CountsFile), c)
 
   private def commitMetrics(w: Int, counts: Option[StageCounts], elapsedMs: Long): Unit = {
     if (metricsT.committedWave() >= w) return
@@ -991,6 +970,19 @@ final class WaveRunner(
 }
 
 object WaveRunner {
+
+  /** A staged wave's counts, observed during its staging writes. */
+  final case class StageCounts(scheduled: Long, fetched: Long, failed: Long,
+                               deferred: Long, bytes: Long, newUrls: Long,
+                               retries: Long, recrawls: Long)
+
+  private[graft] val CountsFile = "counts.json"
+
+  /** The counts staged in `staging`, or None when they are lost: no
+    * file, or one without every count (a lost count is never a zero).
+    */
+  private[graft] def readCounts(staging: Path): Option[StageCounts] =
+    Try(StateFiles.readJson[StageCounts](staging.resolve(CountsFile))).toOption.flatten
 
   /** Run `tasks` concurrently and return once ALL have finished: the
     * first on the calling thread, every other one on a thread started

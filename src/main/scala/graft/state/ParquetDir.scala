@@ -1,7 +1,7 @@
 package graft.state
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.Paths
 
 import scala.util.Try
 
@@ -64,15 +64,12 @@ object ParquetDir {
   /** `df.write` whose local files are created without forking. */
   def writer(df: DataFrame): DataFrameWriter[Row] = df.write.options(LocalWrites)
 
-  /** Overwrite `dir` with `df`, then write its schema sidecar (tmp +
-    * atomic rename: a crash leaves no sidecar, never a torn one).
+  /** Overwrite `dir` with `df`, then write its schema sidecar (atomic:
+    * a crash leaves no sidecar, never a torn one).
     */
   def write(df: DataFrame, dir: String): Unit = {
     writer(df).mode(SaveMode.Overwrite).parquet(dir)
-    val tmp = Paths.get(dir, SchemaFile + ".tmp")
-    Files.write(tmp, df.schema.json.getBytes(UTF_8))
-    Files.move(tmp, Paths.get(dir, SchemaFile), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    StateFiles.write(Paths.get(dir, SchemaFile), df.schema.json.getBytes(UTF_8))
   }
 
   /** Scan `paths` (parquet files or directories) as one parquet
@@ -81,12 +78,9 @@ object ParquetDir {
     * directory's sidecar, else from that file's footer.
     */
   def read(spark: SparkSession, paths: String*): DataFrame = {
-    val sidecar = Paths.get(paths.min, SchemaFile)
-    val schema =
-      if (Files.exists(sidecar))
-        Some(DataType.fromJson(new String(Files.readAllBytes(sidecar), UTF_8))
-          .asInstanceOf[StructType])
-      else footerSchema(spark, paths)
+    val schema = StateFiles.read(Paths.get(paths.min, SchemaFile))
+      .map(b => DataType.fromJson(new String(b, UTF_8)).asInstanceOf[StructType])
+      .orElse(footerSchema(spark, paths))
     schema.fold(spark.read.parquet(paths: _*))(spark.read.schema(_).parquet(paths: _*))
   }
 

@@ -1,9 +1,6 @@
 package graft.state
 
-import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -20,7 +17,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * }}}
   *
   * Commit protocol: write the new snapshot directory fully, then
-  * atomically replace `manifest.json` (write tmp + ATOMIC_MOVE). A
+  * atomically replace `manifest.json` ([[StateFiles.writeJson]]). A
   * killed job never observes a half-written table: either the old
   * manifest (old snapshot) or the new one. Old snapshots are retained
   * for time travel / rollback until `vacuum`.
@@ -32,32 +29,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * with table snapshots instead of a B-tree.
   */
 final class SnapshotTable(spark: SparkSession, root: String, val name: String) {
-  import SnapshotTable.deleteRecursively
+  import SnapshotTable.{FileLineage, Manifest, ManifestJson}
 
   private val tableDir: Path = Paths.get(root, name)
   private val snapshotsDir: Path = tableDir.resolve("snapshots")
   private val manifestPath: Path = tableDir.resolve("manifest.json")
 
-  final case class FileLineage(file: String, bytes: Long)
-
-  /** `segments` are the live snapshot version dirs: a replace commit's
-    * manifest lists only the new version; an append commit's manifest
-    * lists all previous segments plus the new delta — so appends never
-    * rewrite history (the 100 TB-honest path for pages/order/metrics).
-    * `segmentWaves` pairs each segment with the newest wave committed
-    * into it (a merged segment takes the newest of its inputs), which
-    * is what [[readNewerThan]] selects on. A manifest written without
-    * them reads as if every segment held the manifest's wave: an upper
-    * bound, so a selection over it only ever keeps too much.
-    */
-  final case class Manifest(version: Int, wave: Int, segments: Seq[Int],
-                            files: Seq[FileLineage], segmentWaves: Seq[Int])
-
-  def currentManifest(): Option[Manifest] = {
-    if (!Files.exists(manifestPath)) return None
-    val text = new String(Files.readAllBytes(manifestPath), UTF_8)
-    Some(parseManifest(text))
-  }
+  def currentManifest(): Option[Manifest] =
+    StateFiles.readJson[ManifestJson](manifestPath).map(_.manifest)
 
   def currentVersion(): Option[Int] = currentManifest().map(_.version)
 
@@ -78,13 +57,15 @@ final class SnapshotTable(spark: SparkSession, root: String, val name: String) {
     * belongs to (idempotence key for resume: a re-run of wave w sees
     * committedWave >= w and skips). Returns the new version number.
     */
-  def commit(df: DataFrame, wave: Int): Int = commitInternal(df, wave, append = false)
+  def commit(df: DataFrame, wave: Int): Int =
+    commitSegment(wave, append = false)(dir => ParquetDir.write(df, dir.toString))
 
   /** Write `df` as a new delta segment and flip the pointer; previous
     * segments stay live. O(delta), not O(table) — appends to the
     * pages / order / metrics logs never rewrite history.
     */
-  def appendCommit(df: DataFrame, wave: Int): Int = commitInternal(df, wave, append = true)
+  def appendCommit(df: DataFrame, wave: Int): Int =
+    commitSegment(wave, append = true)(dir => ParquetDir.write(df, dir.toString))
 
   /** Adopt an existing parquet directory as the next append segment by
     * ATOMIC DIRECTORY RENAME — zero Spark jobs, zero data copy. The
@@ -92,26 +73,19 @@ final class SnapshotTable(spark: SparkSession, root: String, val name: String) {
     * Idempotent across crashes: if the rename already happened but the
     * manifest flip didn't, a retry just flips.
     */
-  def adoptCommit(srcDir: String, wave: Int): Int = {
-    val prev = currentManifest()
-    val next = prev.map(_.version).getOrElse(0) + 1
-    val dir = versionDir(next)
-    val src = Paths.get(srcDir)
-    Files.createDirectories(snapshotsDir)
-    if (Files.exists(src)) {
-      // the staged source still exists, so any directory already at the
-      // target version is an ORPHAN of a crashed unflipped commit (e.g.
-      // a compaction killed between its segment write and manifest flip)
-      // — never adopt it in place of the real delta
-      if (Files.exists(dir)) deleteRecursively(dir)
-      Files.move(src, dir, StandardCopyOption.ATOMIC_MOVE)
-    } else require(Files.exists(dir),
-      s"adoptCommit: neither source $srcDir nor target $dir exists")
-    val segments = prev.map(_.segments).getOrElse(Nil) :+ next
-    val waves = prev.map(_.segmentWaves).getOrElse(Nil) :+ wave
-    writeManifest(Manifest(next, wave, segments, listLineage(dir), waves))
-    next
-  }
+  def adoptCommit(srcDir: String, wave: Int): Int =
+    commitSegment(wave, append = true) { dir =>
+      val src = Paths.get(srcDir)
+      if (StateFiles.exists(src)) {
+        // the staged source still exists, so any directory already at the
+        // target version is an ORPHAN of a crashed unflipped commit (e.g.
+        // a compaction killed between its segment write and manifest flip)
+        // — never adopt it in place of the real delta
+        if (StateFiles.exists(dir)) StateFiles.delete(dir)
+        StateFiles.rename(src, dir)
+      } else require(StateFiles.exists(dir),
+        s"adoptCommit: neither source $srcDir nor target $dir exists")
+    }
 
   /** Advance the committed-wave marker WITHOUT new data (an idle wave:
     * nothing was schedulable this wave, e.g. all remaining work is
@@ -141,16 +115,16 @@ final class SnapshotTable(spark: SparkSession, root: String, val name: String) {
       if (newer.isEmpty) None else Some(readSegments(newer))
     }
 
-  private def commitInternal(df: DataFrame, wave: Int, append: Boolean): Int = {
+  /** Fill the next version's directory with `fill`, then flip the
+    * manifest to it: after the live segments when `append`, else alone.
+    */
+  private def commitSegment(wave: Int, append: Boolean)(fill: Path => Unit): Int = {
     val prev = currentManifest()
     val next = prev.map(_.version).getOrElse(0) + 1
-    val dir = versionDir(next)
-    ParquetDir.write(df, dir.toString)
-    val (segments, waves) =
-      if (append) (prev.map(_.segments).getOrElse(Nil) :+ next,
-        prev.map(_.segmentWaves).getOrElse(Nil) :+ wave)
-      else (Seq(next), Seq(wave))
-    writeManifest(Manifest(next, wave, segments, listLineage(dir), waves))
+    fill(versionDir(next))
+    val kept = prev.filter(_ => append).toSeq.flatMap(m => m.segments.zip(m.segmentWaves))
+    val (segments, waves) = (kept :+ (next -> wave)).unzip
+    writeManifest(Manifest(next, wave, segments, listLineage(versionDir(next)), waves))
     next
   }
 
@@ -197,13 +171,13 @@ final class SnapshotTable(spark: SparkSession, root: String, val name: String) {
     }
 
   private def segmentBytes(v: Int): Long =
-    listing(Files.walk(versionDir(v)))(_.filter(Files.isRegularFile(_)).map(Files.size).sum)
+    StateFiles.files(versionDir(v)).map(_.toFile.length).sum
 
   /** Point the manifest back at an older version (rollback; replace
     * tables only).
     */
   def rollback(version: Int): Unit = {
-    require(Files.exists(versionDir(version)), s"no snapshot v$version for $name")
+    require(StateFiles.exists(versionDir(version)), s"no snapshot v$version for $name")
     val wave = currentManifest().map(_.wave).getOrElse(-1)
     writeManifest(Manifest(version, wave, Seq(version), listLineage(versionDir(version)),
       Seq(wave)))
@@ -212,10 +186,9 @@ final class SnapshotTable(spark: SparkSession, root: String, val name: String) {
   /** Drop all snapshot dirs not referenced by the current manifest. */
   def vacuum(): Unit = {
     val live = currentManifest().map(_.segments.toSet).getOrElse(return)
-    if (Files.exists(snapshotsDir))
-      listing(Files.list(snapshotsDir))(_.toList)
-        .filter(p => versionOf(p).exists(v => !live.contains(v)))
-        .foreach(deleteRecursively)
+    StateFiles.list(snapshotsDir)
+      .filter(p => versionOf(p).exists(v => !live.contains(v)))
+      .foreach(StateFiles.delete)
   }
 
   // ---- internals ----
@@ -225,94 +198,50 @@ final class SnapshotTable(spark: SparkSession, root: String, val name: String) {
   private def readSegments(versions: Seq[Int]): DataFrame =
     ParquetDir.read(spark, versions.map(v => versionDir(v).toString): _*)
 
-  /** Consume a directory stream and close it: an unclosed
-    * `Files.list`/`Files.walk` stream holds its descriptors until the
-    * JVM exits.
-    */
-  private def listing[T](s: java.util.stream.Stream[Path])(f: Iterator[Path] => T): T =
-    try f(s.iterator().asScala) finally s.close()
-
   private def versionOf(p: Path): Option[Int] = {
     val n = p.getFileName.toString
     if (n.startsWith("v")) n.substring(1).toIntOption else None
   }
 
   private def listLineage(dir: Path): Seq[FileLineage] =
-    listing(Files.walk(dir))(_
-      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
-      .map(p => FileLineage(dir.relativize(p).toString, Files.size(p)))
-      .toList.sortBy(_.file))
+    StateFiles.files(dir).filter(_.toString.endsWith(".parquet"))
+      .map(p => FileLineage(dir.relativize(p).toString, p.toFile.length))
+      .sortBy(_.file)
 
-  private def writeManifest(m: Manifest): Unit = {
-    Files.createDirectories(tableDir)
-    val files = m.files.map(f =>
-      s"""{"file":${jsonStr(f.file)},"bytes":${f.bytes}}""").mkString("[", ",", "]")
-    val segs = m.segments.mkString("[", ",", "]")
-    val waves = m.segmentWaves.mkString("[", ",", "]")
-    val json =
-      s"""{"version":${m.version},"wave":${m.wave},"segments":$segs,""" +
-        s""""segmentWaves":$waves,"files":$files}"""
-    val tmp = tableDir.resolve(s"manifest.json.tmp-${m.version}")
-    Files.write(tmp, json.getBytes(UTF_8))
-    Files.move(tmp, manifestPath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
-  private def parseManifest(json: String): Manifest = {
-    // minimal hand parser for the fixed shape we write
-    def intField(k: String): Int = {
-      val m = s""""$k"\\s*:\\s*(-?\\d+)""".r.findFirstMatchIn(json)
-      m.map(_.group(1).toInt).getOrElse(
-        throw new IllegalStateException(s"manifest missing $k: $json"))
-    }
-    val files = """\{"file":"((?:[^"\\]|\\.)*)","bytes":(\d+)\}""".r
-      .findAllMatchIn(json)
-      .map(m => FileLineage(unescape(m.group(1)), m.group(2).toLong)).toSeq
-    def intList(k: String): Option[Seq[Int]] = s""""$k"\\s*:\\s*\\[([0-9,\\s-]*)\\]""".r
-      .findFirstMatchIn(json)
-      .map(_.group(1).split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt).toSeq)
-    val segments = intList("segments").getOrElse(Seq(intField("version")))
-    val wave = intField("wave")
-    val segmentWaves = intList("segmentWaves").filter(_.size == segments.size)
-      .getOrElse(segments.map(_ => wave))
-    Manifest(intField("version"), wave, segments, files, segmentWaves)
-  }
-
-  private def unescape(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 'u' if i + 5 < s.length =>
-            sb.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar); i += 6
-          case other => sb.append(other); i += 2
-        }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
+  private def writeManifest(m: Manifest): Unit =
+    StateFiles.writeJson(manifestPath, ManifestJson(m.version, m.wave, Some(m.segments),
+      Some(m.segmentWaves), m.files))
 }
 
 object SnapshotTable {
 
-  /** Delete a file, or a directory tree children first. */
-  private[graft] def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      val children = try s.iterator().asScala.toList finally s.close()
-      children.foreach(deleteRecursively)
+  final case class FileLineage(file: String, bytes: Long)
+
+  /** `segments` are the live snapshot version dirs: a replace commit's
+    * manifest lists only the new version; an append commit's manifest
+    * lists all previous segments plus the new delta — so appends never
+    * rewrite history (the 100 TB-honest path for pages/order/metrics).
+    * `segmentWaves` pairs each segment with the newest wave committed
+    * into it (a merged segment takes the newest of its inputs), which
+    * is what [[SnapshotTable.readNewerThan]] selects on. A manifest
+    * written without them reads as if every segment held the manifest's
+    * wave: an upper bound, so a selection over it only ever keeps too
+    * much.
+    */
+  final case class Manifest(version: Int, wave: Int, segments: Seq[Int],
+                            files: Seq[FileLineage], segmentWaves: Seq[Int])
+
+  /** `manifest.json` as it is stored. Manifests written before
+    * per-segment waves lack `segmentWaves`; older ones lack `segments`
+    * too (a one-segment table at `version`).
+    */
+  private final case class ManifestJson(version: Int, wave: Int, segments: Option[Seq[Int]],
+                                        segmentWaves: Option[Seq[Int]], files: Seq[FileLineage]) {
+    def manifest: Manifest = {
+      val segs = segments.getOrElse(Seq(version))
+      Manifest(version, wave, segs, files,
+        segmentWaves.filter(_.size == segs.size).getOrElse(segs.map(_ => wave)))
     }
-    Files.deleteIfExists(p)
   }
 
   def apply(spark: SparkSession, root: String, name: String): SnapshotTable =

@@ -88,7 +88,7 @@ object StreamDedup {
       q.stop()
       spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       // best effort: what cannot be deleted stays behind
-      scala.util.Try(graft.state.SnapshotTable.deleteRecursively(ckptDir))
+      scala.util.Try(graft.state.StateFiles.delete(ckptDir))
     }
     // pin the result: the memory-sink table is bound to the (stopped)
     // streaming query; downstream writes want a standalone frame

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Model.CrawlConfig
 import graft.crawl.{SyntheticCorpus, WaveRunner}
-import graft.state.SnapshotTable
+import graft.state.{SnapshotTable, StateFiles}
 
 /** Long-crawl soak of the append-log compaction policy (VERDICT r2 #9):
   * a 10^3-wave crawl appends 10^3 delta segments; under the default
@@ -48,11 +48,11 @@ class CompactionSoakSpec extends AnyFunSuite {
   }
 
   test("1000-wave append log: bounded segments, O(log n) write amplification") {
-    val root = Files.createTempDirectory("graft-soak-").toString
+    val root = TempDirs.make("graft-soak-").toString
     val t = SnapshotTable(spark, root, "log")
     // one 2-row delta written once, cloned per wave (adoptCommit renames
     // the clone into the snapshot dir exactly like wave staging)
-    val template = Files.createTempDirectory("graft-soak-seg-")
+    val template = TempDirs.make("graft-soak-seg-")
     spark.range(2).toDF("id").coalesce(1)
       .write.mode("overwrite").parquet(template.toString)
 
@@ -103,7 +103,7 @@ class CompactionSoakSpec extends AnyFunSuite {
     // count; the live segments grow with the data and are not counted.
     val spec = SyntheticCorpus.Spec(numUrls = 3000, numHosts = 30)
     val corpus = SyntheticCorpus.generate(spark, spec, partitions = 4).toDF()
-    val root = Files.createTempDirectory("graft-soak-crawl-")
+    val root = TempDirs.make("graft-soak-crawl-")
     val waves = 16
     val r = new WaveRunner(spark, corpus, root.toString,
       CrawlConfig(maxDepth = 64, defaultMaxPerWave = 2, maxWaves = waves,
@@ -135,5 +135,39 @@ class CompactionSoakSpec extends AnyFunSuite {
         s"wave ${i + 1}: $out bytes outside the manifests (newest staged: $newest)")
     }
     assert(perWave.map(_._2).min > fixed / 4, s"probe setup broken: ${perWave.map(_._2)}")
+  }
+
+  test("a long crawl keeps at most two sketch files per chain, every meta, and its order") {
+    // each wave's tail reads only the previous wave's sketch; older
+    // sketch files are dropped, so the state does not grow by two full
+    // filters per wave
+    val spec = SyntheticCorpus.Spec(numUrls = 600, numHosts = 12)
+    val corpus = SyntheticCorpus.generate(spark, spec, partitions = 4).toDF()
+    val waves = 8
+    val cfg = CrawlConfig(maxDepth = 64, defaultMaxPerWave = 2, maxWaves = waves,
+      compactEveryWaves = 4, compactMaxSegments = 4)
+    val seeds = (0L until 600L by 20).map(i => SyntheticCorpus.urlFor(i, spec) -> 1)
+    def crawl(c: CrawlConfig)(afterWave: (Path, Int) => Unit): Seq[Seq[Any]] = {
+      val root = TempDirs.make("graft-soak-sketch-")
+      val r = new WaveRunner(spark, corpus, root.toString, c)
+      r.initSeeds(seeds)
+      (1 to waves).foreach { w =>
+        assert(r.runWave(w), s"probe setup broken: the crawl drained at wave $w")
+        afterWave(root, w)
+      }
+      r.crawlOrder().collect().map(_.toSeq).toSeq
+    }
+    def named(root: Path, chain: String, suffix: String): Seq[String] =
+      StateFiles.list(root.resolve(chain)).map(_.getFileName.toString).filter(_.endsWith(suffix))
+    val sketched = crawl(cfg.copy(bloomMinFrontier = 0L, bloomCapacity = 10000L)) { (root, w) =>
+      Seq("bloom", "popbloom").foreach { chain =>
+        val files = named(root, chain, ".bloom")
+        assert(files.size <= 2, s"wave $w: $chain keeps $files")
+        assert(files.contains(s"wave_$w.bloom"), s"wave $w: $chain lost its newest sketch")
+        assert(named(root, chain, ".meta").size === w + 1, s"wave $w: $chain metas")
+      }
+    }
+    // sketches are advisory: the crawl without them is the same crawl
+    assert(sketched === crawl(cfg)((_, _) => ()))
   }
 }

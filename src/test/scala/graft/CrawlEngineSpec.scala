@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -25,7 +23,7 @@ class CrawlEngineSpec extends AnyFunSuite {
 
   private val spec = SyntheticCorpus.Spec(numUrls = 400, numHosts = 10)
   private lazy val corpusPath = {
-    val dir = Files.createTempDirectory("graft-corpus-").toString
+    val dir = TempDirs.make("graft-corpus-").toString
     SyntheticCorpus.generate(spark, spec, partitions = 4)
       .write.mode("overwrite").parquet(dir)
     dir
@@ -46,7 +44,7 @@ class CrawlEngineSpec extends AnyFunSuite {
       config, policies, robots)
 
   private def runFull(session: SparkSession): WaveRunner = {
-    val runner = newRunner(session, Files.createTempDirectory("graft-state-").toString)
+    val runner = newRunner(session, TempDirs.make("graft-state-").toString)
     runner.initSeeds(seeds)
     runner.run()
     runner
@@ -80,7 +78,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     // with the broadcast fetch join and with the bucketed one
     def crawl(cfg: CrawlConfig, label: String): Seq[(Int, Long, Long, String)] = {
       val r = new WaveRunner(spark, spark.read.parquet(corpusPath),
-        Files.createTempDirectory(s"graft-state-$label-").toString,
+        TempDirs.make(s"graft-state-$label-").toString,
         cfg, policies, robots)
       r.initSeeds(seeds)
       r.run()
@@ -147,7 +145,7 @@ class CrawlEngineSpec extends AnyFunSuite {
   }
 
   test("mid-wave kill resumes with zero re-fetches and identical state") {
-    val stateRoot = Files.createTempDirectory("graft-resume-").toString
+    val stateRoot = TempDirs.make("graft-resume-").toString
     val r1 = newRunner(spark, stateRoot)
     r1.initSeeds(seeds)
     assert(r1.runWave(1))
@@ -213,7 +211,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     ).toDF("url", "warc_ts", "html")
     def orderWith(boost: Boolean): Seq[String] = {
       val runner = new WaveRunner(spark, corpus,
-        Files.createTempDirectory("graft-boost-").toString,
+        TempDirs.make("graft-boost-").toString,
         CrawlConfig(maxDepth = 3, defaultMaxPerWave = 100, maxWaves = 4,
           inlinkBoost = boost))
       runner.initSeeds(Seq("http://boost.test/s" -> 1))

@@ -436,7 +436,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
   private def ensureCheckpointDir(): Unit =
     if (spark.sparkContext.getCheckpointDir.isEmpty)
       spark.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft-ckpt-").toString)
+        TempDirs.make("graft-ckpt-").toString)
 
   test("connectedMinLabels: reliable-checkpoint path matches localCheckpoint") {
     // the cluster seam (round-3 verdict #8): checkpoint() to the

@@ -32,7 +32,7 @@ class GoldenReplaySpec extends AnyFunSuite {
     val spec = SyntheticCorpus.Spec(numUrls = 250, numHosts = 9)
     val corpus = SyntheticCorpus.generate(spark, spec).toDF()
     val runner = new WaveRunner(spark, corpus,
-      Files.createTempDirectory("graft-golden-").toString,
+      TempDirs.make("graft-golden-").toString,
       CrawlConfig(maxDepth = 2, defaultMaxPerWave = 12, maxWaves = 4),
       Map("host0.test" -> HostPolicy("host0.test", 0L, 4)),
       Seq(RobotsRule("host2.test", allow = false, pathPrefix = "/p/1")))

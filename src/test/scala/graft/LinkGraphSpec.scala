@@ -121,7 +121,7 @@ class LinkGraphSpec extends AnyFunSuite {
     val edges = Seq((0L, 1L), (0L, 2L), (1L, 2L), (2L, 0L)).toDF("src", "dst")
     if (spark.sparkContext.getCheckpointDir.isEmpty)
       spark.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft-pr-ckpt-").toString)
+        TempDirs.make("graft-pr-ckpt-").toString)
     bounds.foreach { b =>
       val local = ranks(pageRank(vertices, edges, 2, b))
       val reliable = ranks(pageRank(vertices, edges, 2, b, reliableCheckpoints = true))

@@ -29,7 +29,7 @@ class LocalWritesSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private def tmp(p: String): Path = Files.createTempDirectory(p)
+  private def tmp(p: String): Path = TempDirs.make(p)
 
   /** Every file under `dir`: (path relative to it with part-file ids
     * masked, mode bits), directories included.

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
@@ -10,14 +11,16 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Model.CrawlConfig
 import graft.crawl.{SyntheticCorpus, WaveRunner}
+import graft.state.StateFiles
 import graft.streaming.CrawlStream
 
 /** The resume contract at every commit step of a wave: a kill at any
-  * named step ([[WaveRunner.failPoint]]), then a restarted runner's
-  * `run()`, reproduces the uninterrupted crawl (order, seen set, page
-  * text, metrics rows, the sketch chain) with zero re-fetches, no
-  * segment directory outside the manifests and no staged artifacts of a
-  * done wave.
+  * named step ([[WaveRunner.failPoint]]), or a process death before
+  * any state-file operation ([[StateFiles.beforeOp]]), then a restarted
+  * runner's `run()`, reproduces the uninterrupted crawl (order, seen
+  * set, page text, metrics rows, the sketch chain) with no page of a
+  * staged wave fetched again, no segment directory outside the
+  * manifests and no staged artifacts of a done wave.
   */
 class ResumeAtEveryStepSpec extends AnyFunSuite {
 
@@ -31,7 +34,7 @@ class ResumeAtEveryStepSpec extends AnyFunSuite {
 
   private val spec = SyntheticCorpus.Spec(numUrls = 160, numHosts = 6)
   private lazy val corpus = SyntheticCorpus.generate(spark, spec, partitions = 4).toDF()
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
+  private def tmp(p: String) = TempDirs.make(p).toString
 
   // every step runs every wave: both sketches (bloomMinFrontier 0), the
   // metrics row, the rollup append, all four compactions and the
@@ -57,6 +60,9 @@ class ResumeAtEveryStepSpec extends AnyFunSuite {
     "rollup", "compact-processed", "compact-latest",
     "vacuum")
   private val TailSteps = Steps.drop(4)
+
+  /** Wave 0's fail points: the seed commit, then both sketch chains. */
+  private val Wave0Steps = Seq("frontier", "bloom", "popbloom")
 
   /** What a crawl leaves: the parts the resume contract covers. */
   private case class Outcome(order: Seq[Seq[Any]], seen: Set[Seq[Any]], text: Set[Seq[Any]],
@@ -140,9 +146,13 @@ class ResumeAtEveryStepSpec extends AnyFunSuite {
     }
   }
 
-  private def assertResumed(label: String, root: String, killed: WaveRunner,
+  /** `fetchedBefore`: the pages fetched before the restart in waves
+    * whose stage is done; the resumed crawl fetches every other page of
+    * the uninterrupted crawl exactly once.
+    */
+  private def assertResumed(label: String, root: String, fetchedBefore: Long,
                             resumed: WaveRunner): Unit = {
-    assert(killed.extractCounter.value + resumed.extractCounter.value ===
+    assert(fetchedBefore + resumed.extractCounter.value ===
       baseline.extractCounter.value, s"$label: a resumed wave re-fetched pages")
     val got = outcome(resumed, root)
     assert(got.order === expected.order, s"$label: crawl order")
@@ -157,10 +167,12 @@ class ResumeAtEveryStepSpec extends AnyFunSuite {
   test("every named step is reached by an uninterrupted compacting wave") {
     val waves = baseline.frontierT.committedWave()
     assert(waves === config.maxWaves, "probe setup broken: the crawl drained early")
-    assert(baselineSteps.toSet === Steps.toSet)
-    assert(baselineSteps.size === waves * Steps.size)
+    assert(baselineSteps.take(Wave0Steps.size) === Wave0Steps)
+    val waveSteps = baselineSteps.drop(Wave0Steps.size)
+    assert(waveSteps.toSet === Steps.toSet)
+    assert(waveSteps.size === waves * Steps.size)
     // per wave: the four sequential steps first, the vacuum last
-    baselineSteps.grouped(Steps.size).foreach { wave =>
+    waveSteps.grouped(Steps.size).foreach { wave =>
       assert(wave.take(4) === Steps.take(4))
       assert(wave.last === "vacuum")
     }
@@ -176,7 +188,8 @@ class ResumeAtEveryStepSpec extends AnyFunSuite {
       val (root, r1) = killedAtWave2(step, failAt(step))
       val r2 = runner(root)
       r2.run()
-      assertResumed(s"kill at $step", root, r1, r2)
+      assertResumed(s"kill at $step", root, r1.extractCounter.value, r2)
+      StateFiles.delete(Paths.get(root))
     }
   }
 
@@ -186,7 +199,8 @@ class ResumeAtEveryStepSpec extends AnyFunSuite {
       val (root, r1) = killedAtWave2(s"die-$step", dieAt(step))
       val r2 = runner(root)
       r2.run()
-      assertResumed(s"death at $step", root, r1, r2)
+      assertResumed(s"death at $step", root, r1.extractCounter.value, r2)
+      StateFiles.delete(Paths.get(root))
     }
   }
 
@@ -206,7 +220,95 @@ class ResumeAtEveryStepSpec extends AnyFunSuite {
     val (root, r1) = killedAtWave2("stream", dieAt("metrics"))
     val r2 = runner(root)
     assert(CrawlStream.runBatches(spark, r2, config.maxWaves) === config.maxWaves)
-    assertResumed("stream restart", root, r1, r2)
+    assertResumed("stream restart", root, r1.extractCounter.value, r2)
+  }
+
+  /** Runs `f` with the mutating state-file operations under `root`
+    * counted, the `dieAt`-th and every later one throwing: a process
+    * death just before that operation (0: none throws). Returns the
+    * number of operations reached.
+    */
+  private def underOps(root: String, dieAt: Int)(f: => Unit): Int = {
+    val ops = new AtomicInteger
+    StateFiles.beforeOp = (_, p) =>
+      if (p.startsWith(root) && ops.incrementAndGet() >= dieAt && dieAt > 0)
+        throw new IllegalStateException(s"simulated death before state-file operation $dieAt")
+    try f finally StateFiles.beforeOp = (_, _) => ()
+    ops.get
+  }
+
+  test("a process death before any state-file operation of wave 0 resumes the crawl") {
+    val probe = tmp("graft-resume-ops0-")
+    val ops = underOps(probe, 0)(runner(probe).initSeeds(seeds))
+    StateFiles.delete(Paths.get(probe))
+    info(s"wave 0: $ops state-file operations")
+    assert(ops >= 5, "probe setup broken: the seed commit, two metas and the marker")
+    (1 to ops).foreach { n =>
+      val root = tmp(s"graft-resume-op0-$n-")
+      underOps(root, n)(intercept[IllegalStateException](runner(root).initSeeds(seeds)))
+      // once the seeds are committed, run() alone finishes wave 0
+      val r2 = runner(root)
+      if (!r2.frontierT.exists()) r2.initSeeds(seeds)
+      r2.run()
+      assertResumed(s"death before operation $n of wave 0", root, 0L, r2)
+      StateFiles.delete(Paths.get(root))
+    }
+  }
+
+  /** The state after waves 0 and 1, and the pages they fetched. */
+  private lazy val (waveOneRoot, waveOneFetched) = {
+    val root = tmp("graft-resume-wave1-")
+    val r = runner(root)
+    r.initSeeds(seeds)
+    assert(r.runWave(1))
+    (Paths.get(root), r.extractCounter.sum)
+  }
+
+  private def copyOfWaveOne(prefix: String): String = {
+    val root = TempDirs.make(prefix)
+    val s = Files.walk(waveOneRoot)
+    try s.iterator().asScala.foreach { p =>
+      val to = root.resolve(waveOneRoot.relativize(p))
+      if (Files.isDirectory(p)) Files.createDirectories(to) else Files.copy(p, to)
+    } finally s.close()
+    root.toString
+  }
+
+  test("a process death before any state-file operation of a compacting wave resumes the crawl") {
+    val probe = copyOfWaveOne("graft-resume-ops2-")
+    val ops = underOps(probe, 0)(assert(runner(probe).runWave(2)))
+    StateFiles.delete(Paths.get(probe))
+    info(s"wave 2: $ops state-file operations")
+    (1 to ops).foreach { n =>
+      val root = copyOfWaveOne(s"graft-resume-op2-$n-")
+      val r1 = runner(root)
+      underOps(root, n)(intercept[IllegalStateException](r1.runWave(2)))
+      // a death inside the stage, before its marker, stages the wave
+      // again: only then are its pages fetched a second time
+      val staged = Files.exists(Paths.get(root, "staging", "wave_2", "_STAGED"))
+      val r2 = runner(root)
+      r2.run()
+      assertResumed(s"death before operation $n of wave 2", root,
+        waveOneFetched + (if (staged) r1.extractCounter.sum else 0L), r2)
+      StateFiles.delete(Paths.get(root))
+    }
+  }
+
+  test("a state root without a wave-0 marker resumes with no extra job") {
+    // what a crawl seeded before wave 0 had a marker leaves: the
+    // frontier and both wave-0 metas
+    val root = tmp("graft-resume-nomarker-")
+    runner(root).initSeeds(seeds)
+    StateFiles.delete(Paths.get(root, "staging"))
+    val r = runner(root)
+    assert(r.nextWave() === 0)
+    val (_, jobs) = JobCount(spark)(r.initSeeds(Nil))
+    assert(jobs === 0)
+    assert(Files.exists(Paths.get(root, "staging", "wave_0", "_COMMITTED")))
+    assert(r.nextWave() === 1)
+    r.run()
+    assertResumed("no wave-0 marker", root, 0L, r)
+    StateFiles.delete(Paths.get(root))
   }
 
   test("an idle wave takes the same commit steps as a staged one") {

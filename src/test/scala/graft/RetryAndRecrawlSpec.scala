@@ -1,15 +1,16 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Model.{CrawlConfig, HostPolicy}
-import graft.crawl.{SyntheticCorpus, WaveRunner}
+import graft.core.Hashing
+import graft.crawl.{FetchSource, SyntheticCorpus, WaveRunner}
 
 /** Round-2 engine semantics: deferred-retry with bounded attempts
   * (reference requeue-self, baseconnector.py:158-181), the re-crawl
@@ -31,7 +32,7 @@ class RetryAndRecrawlSpec extends AnyFunSuite {
 
   private val spec = SyntheticCorpus.Spec(numUrls = 120, numHosts = 6)
   private lazy val corpus = SyntheticCorpus.generate(spark, spec).toDF()
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
+  private def tmp(p: String) = TempDirs.make(p).toString
   private val seedUrl = SyntheticCorpus.urlFor(0, spec)
 
   test("a deferred row is fetched in wave w+1 with attempt accounting") {
@@ -397,5 +398,40 @@ class RetryAndRecrawlSpec extends AnyFunSuite {
       .collect().map(x => (x.getLong(0), x.getString(1))).toSet
     assert(order(bucketed) === order(plain))
     assert(seen(bucketed) === seen(plain))
+  }
+
+  /** A bucketed fetch source over `input` in `root`, its catalog
+    * entry dropped first (a new session's view of the directory).
+    */
+  private def bucketedSource(input: DataFrame, root: String): FetchSource = {
+    val dir = s"$root/fetch_bucketed"
+    spark.sql(s"DROP TABLE IF EXISTS graft_fetch_${java.lang.Long.toHexString(Hashing.xxhash64(dir))}")
+    new FetchSource(spark, input, root, CrawlConfig(fetchBuckets = 4, broadcastPopRows = 0L))
+  }
+
+  test("a bucketed fetch table ingested from another input schema fails loudly") {
+    val root = tmp("graft-ingest-schema-")
+    val rows = bucketedSource(corpus, root).source.count()
+    assert(rows > 0L)
+    val e = intercept[IllegalStateException](
+      bucketedSource(corpus.withColumn("lang", lit("en")), root).source)
+    assert(e.getMessage.contains("was ingested from an input with schema ["), e.getMessage)
+    assert(e.getMessage.contains("delete the directory to re-ingest"), e.getMessage)
+  }
+
+  test("a bucketed fetch directory without its fingerprint is ingested again") {
+    // the fingerprint is the ingest's commit record: an ingest cut
+    // before it (its parquet and _SUCCESS written) counts as none
+    val root = tmp("graft-ingest-cut-")
+    val rows = bucketedSource(corpus, root).source.count()
+    val meta = Paths.get(root, "fetch_bucketed", "_graft_ingest.meta")
+    Files.delete(meta)
+    assert(Files.exists(Paths.get(root, "fetch_bucketed", "_SUCCESS")))
+    assert(bucketedSource(corpus, root).source.count() === rows)
+    assert(Files.exists(meta), "the directory was not ingested again")
+    // a torn or foreign fingerprint is no commit record either
+    Files.write(meta, "12".getBytes("UTF-8"))
+    assert(bucketedSource(corpus, root).source.count() === rows)
+    assert(new String(Files.readAllBytes(meta), "UTF-8").split("\n").length === 2)
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -37,7 +35,7 @@ class RobotsLoaderSpec extends AnyFunSuite {
     val corpus = SyntheticCorpus.generate(spark, spec).toDF()
     val (rules, _) = RobotsLoader.robotsRules(spark, corpus, "graft")
     val runner = new WaveRunner(spark, corpus,
-      Files.createTempDirectory("graft-robots-").toString,
+      TempDirs.make("graft-robots-").toString,
       CrawlConfig(maxDepth = 2, defaultMaxPerWave = 30, maxWaves = 3),
       robotsRules = rules)
     runner.initSeeds(Seq(

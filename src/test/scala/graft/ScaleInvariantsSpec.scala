@@ -34,7 +34,7 @@ class ScaleInvariantsSpec extends AnyFunSuite {
     val spec = SyntheticCorpus.Spec(numUrls = n, numHosts = 20)
     val corpus = SyntheticCorpus.generate(spark, spec, partitions = 4).toDF()
     val runner = new WaveRunner(spark, corpus,
-      Files.createTempDirectory(s"graft-scaleinv-$n-").toString,
+      TempDirs.make(s"graft-scaleinv-$n-").toString,
       CrawlConfig(maxDepth = 3, defaultMaxPerWave = 5, maxWaves = 2))
     runner.initSeeds((0L until n by 10).map(i => // n/10 seeds
       SyntheticCorpus.urlFor(i, spec) -> 1))
@@ -69,7 +69,7 @@ class ScaleInvariantsSpec extends AnyFunSuite {
     val spec = SyntheticCorpus.Spec(numUrls = n, numHosts = 6)
     val corpus = SyntheticCorpus.generate(spark, spec, partitions = 4).toDF()
     val runner = new WaveRunner(spark, corpus,
-      Files.createTempDirectory("graft-latestroll-").toString,
+      TempDirs.make("graft-latestroll-").toString,
       CrawlConfig(maxDepth = 0, defaultMaxPerWave = 1000, maxWaves = 16,
         recrawlEveryWaves = 1, recrawlSubtreeGate = false,
         compactEveryWaves = 2, compactMaxSegments = 4))
@@ -107,7 +107,7 @@ class ScaleInvariantsSpec extends AnyFunSuite {
     val cfg = CrawlConfig(maxDepth = 2, defaultMaxPerWave = 1000000, maxWaves = 3)
     def crawl(policies: Map[String, HostPolicy]) = {
       val r = new WaveRunner(spark, corpus,
-        Files.createTempDirectory("graft-budgetsc-").toString, cfg, policies)
+        TempDirs.make("graft-budgetsc-").toString, cfg, policies)
       r.initSeeds((0L until 400L by 4).map(i =>
         SyntheticCorpus.urlFor(i, spec) -> 1))
       r.run()
@@ -134,7 +134,7 @@ class ScaleInvariantsSpec extends AnyFunSuite {
     val robots = graft.operators.RobotsLoader.robotsDim(spark, corpus, cfg.userAgent)
       .localCheckpoint()
     val runner = new WaveRunner(spark, corpus,
-      Files.createTempDirectory(s"graft-$name-").toString, cfg, robotsDim = Some(robots))
+      TempDirs.make(s"graft-$name-").toString, cfg, robotsDim = Some(robots))
     runner.initSeeds((0L until 2000L by 10).map(i => SyntheticCorpus.urlFor(i, spec) -> 1))
     runner
   }
@@ -173,7 +173,7 @@ class ScaleInvariantsSpec extends AnyFunSuite {
     val spec = SyntheticCorpus.Spec(numUrls = 400, numHosts = 10)
     val corpus = SyntheticCorpus.generate(spark, spec, partitions = 4).toDF()
     val cfg = CrawlConfig(maxDepth = 3, defaultMaxPerWave = 5, maxWaves = 1)
-    val root = Files.createTempDirectory("graft-ledger-")
+    val root = TempDirs.make("graft-ledger-")
     def runner() = new WaveRunner(spark, corpus, root.toString, cfg)
     def pending(r: WaveRunner) = r.metrics().filter(col("wave") === 1)
       .select("frontierPending").collect().head.getLong(0)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -70,7 +68,7 @@ class SourcesAndSinksSpec extends AnyFunSuite {
   }
 
   test("post store: update-in-place, versioned SCD-2, insert-new") {
-    val root = Files.createTempDirectory("graft-poststore-").toString
+    val root = TempDirs.make("graft-poststore-").toString
     val table = SnapshotTable(spark, root, "posts")
     val v1 = Seq(("u1", "first"), ("u2", "second")).toDF("key", "data")
     PostStore.save(spark, table, v1, "key", PostStore.SaveMode.Versioned, wave = 1)

@@ -28,7 +28,7 @@ class StateAndOperatorsSpec extends AnyFunSuite {
 
   test("snapshot table: commit / read / version / wave") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-st-").toString
+    val root = TempDirs.make("graft-st-").toString
     val t = SnapshotTable(spark, root, "t1")
     assert(t.read().isEmpty)
     assert(t.committedWave() === -1)
@@ -43,7 +43,7 @@ class StateAndOperatorsSpec extends AnyFunSuite {
 
   test("snapshot table: append segments accumulate, vacuum keeps live") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-st-").toString
+    val root = TempDirs.make("graft-st-").toString
     val t = SnapshotTable(spark, root, "log")
     t.appendCommit(Seq(1, 2).toDF("x"), wave = 1)
     t.appendCommit(Seq(3).toDF("x"), wave = 2)
@@ -56,7 +56,7 @@ class StateAndOperatorsSpec extends AnyFunSuite {
 
   test("snapshot table: segments newer than a wave are selected from the manifest") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-st-").toString
+    val root = TempDirs.make("graft-st-").toString
     val t = SnapshotTable(spark, root, "log")
     assert(t.readNewerThan(0).isEmpty)
     (1 to 4).foreach(w => t.appendCommit(Seq(w).toDF("x"), wave = w))
@@ -82,7 +82,7 @@ class StateAndOperatorsSpec extends AnyFunSuite {
 
   test("snapshot table: a wave advanced by markCommit has no segment of its own") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-st-").toString
+    val root = TempDirs.make("graft-st-").toString
     val t = SnapshotTable(spark, root, "log")
     t.appendCommit(Seq(1, 2).toDF("x"), wave = 1)
     t.appendCommit(Seq(3).toDF("x"), wave = 2)
@@ -100,7 +100,7 @@ class StateAndOperatorsSpec extends AnyFunSuite {
 
   test("snapshot table: rollback points at an old version") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-st-").toString
+    val root = TempDirs.make("graft-st-").toString
     val t = SnapshotTable(spark, root, "t2")
     t.commit(Seq(1, 2, 3).toDF("x"), wave = 1)
     t.commit(Seq(4).toDF("x"), wave = 2)
@@ -110,7 +110,7 @@ class StateAndOperatorsSpec extends AnyFunSuite {
 
   test("snapshot table: lineage lists parquet files with sizes") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-st-").toString
+    val root = TempDirs.make("graft-st-").toString
     val t = SnapshotTable(spark, root, "t3")
     t.commit(Seq(1, 2, 3).toDF("x").repartition(3), wave = 1)
     val m = t.currentManifest().get
@@ -123,7 +123,7 @@ class StateAndOperatorsSpec extends AnyFunSuite {
     import java.lang.management.ManagementFactory
     import com.sun.management.UnixOperatingSystemMXBean
     val os = ManagementFactory.getOperatingSystemMXBean.asInstanceOf[UnixOperatingSystemMXBean]
-    val root = Files.createTempDirectory("graft-st-fd-").toString
+    val root = TempDirs.make("graft-st-fd-").toString
     val t = SnapshotTable(spark, root, "log")
     (1 to 4).foreach(w => t.appendCommit(Seq(w).toDF("x"), wave = w))
     t.compactTiered(2) // walks each segment for its size and lineage
@@ -172,7 +172,7 @@ class StateAndOperatorsSpec extends AnyFunSuite {
     assertLikeInference(paths.mkString(", "), graft.state.ParquetDir.read(spark, paths: _*), paths)
 
   test("schema sidecar: commit, appendCommit and adoptCommit read without a job") {
-    val root = Files.createTempDirectory("graft-st-schema-").toString
+    val root = TempDirs.make("graft-st-schema-").toString
     val replaced = SnapshotTable(spark, root, "replaced")
     replaced.commit(richRows(0, 5), wave = 1)
     replaced.commit(richRows(10, 3), wave = 2)
@@ -194,7 +194,7 @@ class StateAndOperatorsSpec extends AnyFunSuite {
 
   test("schema sidecar: compactTiered with a merge and rollback read without a job") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-st-schema-").toString
+    val root = TempDirs.make("graft-st-schema-").toString
     val t = SnapshotTable(spark, root, "rollup")
     (0 until 5).foreach(w => t.appendCommit(richRows(w * 3, 3), wave = w))
     // a rollup-style merge that reorders and retypes the columns
@@ -213,7 +213,7 @@ class StateAndOperatorsSpec extends AnyFunSuite {
   }
 
   test("schema sidecar: a segment without one is still read by inference") {
-    val root = Files.createTempDirectory("graft-st-schema-").toString
+    val root = TempDirs.make("graft-st-schema-").toString
     val t = SnapshotTable(spark, root, "log")
     t.appendCommit(richRows(0, 4), wave = 1)
     t.appendCommit(richRows(4, 4), wave = 2)
@@ -263,18 +263,18 @@ class StateAndOperatorsSpec extends AnyFunSuite {
 
   test("footer schema: a Spark-written directory without its sidecar reads like inference") {
     // Spark writers store the row-metadata schema (arrays, struct, map)
-    val dir = Files.createTempDirectory("graft-footer-").resolve("t").toString
+    val dir = TempDirs.make("graft-footer-").resolve("t").toString
     graft.state.ParquetDir.write(richRows(0, 6).repartition(3), dir)
     Files.delete(java.nio.file.Paths.get(dir, graft.state.ParquetDir.SchemaFile))
     assertFooterReadsLikeInference(dir)
-    val other = Files.createTempDirectory("graft-footer-").resolve("u").toString
+    val other = TempDirs.make("graft-footer-").resolve("u").toString
     richRows(6, 3).write.parquet(other)
     assertFooterReadsLikeInference(dir, other)
   }
 
   test("footer schema: partition subdirectories and no data file fall back to inference") {
     import spark.implicits._
-    val parted = Files.createTempDirectory("graft-footer-").resolve("p").toString
+    val parted = TempDirs.make("graft-footer-").resolve("p").toString
     Seq((1L, "a", 0), (2L, "b", 1)).toDF("id", "s", "part")
       .write.partitionBy("part").parquet(parted)
     val (df, jobs) = JobCount(spark)(graft.state.ParquetDir.read(spark, parted))
@@ -285,7 +285,7 @@ class StateAndOperatorsSpec extends AnyFunSuite {
     assert(df.collect().map(_.toString).sorted ===
       inferred.collect().map(_.toString).sorted)
 
-    val empty = Files.createTempDirectory("graft-footer-empty-").toString
+    val empty = TempDirs.make("graft-footer-empty-").toString
     Files.write(java.nio.file.Paths.get(empty, "_SUCCESS"), Array.emptyByteArray)
     val ours = intercept[org.apache.spark.sql.AnalysisException](
       graft.state.ParquetDir.read(spark, empty))
@@ -377,7 +377,7 @@ class StateAndOperatorsSpec extends AnyFunSuite {
 
   test("adoptCommit replaces an orphaned unflipped segment, never adopts it") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-orphan-").toString
+    val root = TempDirs.make("graft-orphan-").toString
     val t = SnapshotTable(spark, root, "t")
     t.commit(Seq(1, 2).toDF("x"), wave = 1)
     // simulate a compact() killed between its segment write and the
@@ -386,7 +386,7 @@ class StateAndOperatorsSpec extends AnyFunSuite {
     Seq(7, 8, 9).toDF("x").write.parquet(orphan.toString)
     assert(t.currentVersion() === Some(1)) // manifest never flipped
     // the next wave's adopt must land ITS delta at v2, not the orphan
-    val staged = Files.createTempDirectory("graft-orphan-staged-")
+    val staged = TempDirs.make("graft-orphan-staged-")
     Seq(3).toDF("x").write.parquet(staged.resolve("delta").toString)
     t.adoptCommit(staged.resolve("delta").toString, wave = 2)
     assert(t.read().get.collect().map(_.getInt(0)).sorted.toSeq === Seq(1, 2, 3))
@@ -451,7 +451,7 @@ class StateAndOperatorsSpec extends AnyFunSuite {
   test("poststore: append-mode versioned saves resolve to the eager SCD-2 content") {
     import graft.operators.PostStore
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-pvs-").toString
+    val root = TempDirs.make("graft-pvs-").toString
     val eagerT = SnapshotTable(spark, root, "eager")
     val appendT = SnapshotTable(spark, root, "append")
     val batches = Seq(

@@ -35,13 +35,13 @@ class StreamingAndPlanSpec extends AnyFunSuite {
   test("streaming facade produces the same crawl order as the batch loop") {
     val corpus = SyntheticCorpus.generate(spark, spec).toDF()
 
-    val batchRoot = Files.createTempDirectory("graft-batch-").toString
+    val batchRoot = TempDirs.make("graft-batch-").toString
     val batch = new WaveRunner(spark, corpus, batchRoot, config)
     batch.initSeeds(seeds)
     batch.run()
     val batchOrder = batch.crawlOrder().collect().map(_.toSeq).toSeq
 
-    val streamRoot = Files.createTempDirectory("graft-stream-").toString
+    val streamRoot = TempDirs.make("graft-stream-").toString
     val streaming = new WaveRunner(spark, corpus, streamRoot, config)
     streaming.initSeeds(seeds)
     CrawlStream.runBatches(spark, streaming, maxWaves = config.maxWaves)
@@ -108,7 +108,7 @@ class StreamingAndPlanSpec extends AnyFunSuite {
   private def fetchAudit(broadcastPopRows: Long, poppedRows: Long) = {
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
     val corpus = SyntheticCorpus.generate(spark, spec).toDF()
-    val root = Files.createTempDirectory("graft-fetchaudit-").toString
+    val root = TempDirs.make("graft-fetchaudit-").toString
     val fs = new graft.crawl.FetchSource(spark, corpus, root,
       CrawlConfig(fetchBuckets = 4, broadcastPopRows = broadcastPopRows))
     import spark.implicits._
@@ -182,7 +182,7 @@ class StreamingAndPlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
     import graft.operators.Politeness
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-popaudit-").resolve("pending").toString
+    val dir = TempDirs.make("graft-popaudit-").resolve("pending").toString
     ((0 until 400).map(i => (s"h${i % 4}.test", (i * 7 % 50).toLong, i.toLong)) ++
       (0 until 40).map(i => (s"big.test", i.toLong, 1000L + i)))
       .toDF("host", "score", "urlHash").repartition(4)
@@ -220,7 +220,7 @@ class StreamingAndPlanSpec extends AnyFunSuite {
   test("streaming window aggregation works via readStream") {
     import org.apache.spark.sql.streaming.Trigger
     // FileStreamSource wants a directory; the test table is one file
-    val streamDir = Files.createTempDirectory("graft-evstream-")
+    val streamDir = TempDirs.make("graft-evstream-")
     Files.copy(java.nio.file.Paths.get(s"$sfDir/events.parquet"),
       streamDir.resolve("events.parquet"))
     val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
@@ -243,7 +243,7 @@ class StreamingAndPlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.streaming.Trigger
     import graft.streaming.Sessionize
     val gapSeconds = 21600L
-    val streamDir = Files.createTempDirectory("graft-sessstream-")
+    val streamDir = TempDirs.make("graft-sessstream-")
     Files.copy(java.nio.file.Paths.get(s"$sfDir/events.parquet"),
       streamDir.resolve("events.parquet"))
     val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
@@ -942,6 +942,26 @@ class StreamingAndPlanSpec extends AnyFunSuite {
     assert(tableWriters.map(_._1).toSet === Set("graft/crawl/FetchSource.scala"))
     tableWriters.foreach { case (f, text) =>
       assert(text.contains("ParquetDir.writer("), s"$f writes a table without ParquetDir.writer")
+    }
+  }
+
+  test("crawl-state files: only StateFiles writes, renames, lists or deletes them") {
+    // the atomic-write protocol, closed listings and recursive deletes
+    // live in one module; everything else in the state, crawl and
+    // streaming packages goes through it
+    val direct =
+      """\bFiles\s*\.\s*(write\w*|move|copy|delete\w*|createDirector\w*|newOutputStream|list|walk)\b""".r
+    val stateSources = mainSources.filter { case (f, _) =>
+      Seq("graft/state/", "graft/crawl/", "graft/streaming/").exists(f.startsWith)
+    }
+    assert(stateSources.size >= 10, s"probe setup broken: ${stateSources.map(_._1)}")
+    val users = stateSources.collect { case (f, text) if direct.findFirstIn(text).isDefined => f }
+    assert(users.toSet === Set("graft/state/StateFiles.scala"))
+    // JSON state goes through the library codec: no hand-written
+    // parser, escaper or field regex is left
+    val handCodec = Seq("parseManifest", "jsonStr", "unescape", "findFirstMatchIn")
+    stateSources.foreach { case (f, text) =>
+      handCodec.foreach(t => assert(!text.contains(t), s"$f still has $t"))
     }
   }
 
