@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core.Model.CrawlConfig
 import graft.crawl.{SyntheticCorpus, WaveRunner}
 import graft.queries.QueryCatalog._
+import graft.state.StateFiles
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
@@ -14,19 +15,23 @@ object SparkEntry {
   /** Flagship: a full crawl (seeds → waves → order log) over a small
     * deterministic synthetic corpus, exercised end-to-end — the
     * engine's reason to exist. Returns the crawl-order log
-    * (wave, score, urlHash, url); driver smoke-checks rows > 0.
+    * (wave, score, urlHash, url), materialized, so that the crawl's
+    * state root is deleted before it returns; driver smoke-checks
+    * rows > 0.
     */
   def entry(spark: SparkSession): DataFrame = {
     val spec = SyntheticCorpus.Spec(numUrls = 300, numHosts = 12)
     val corpus = SyntheticCorpus.generate(spark, spec).toDF()
-    val stateRoot = Files.createTempDirectory("graft-entry-").toString
-    val runner = new WaveRunner(spark, corpus, stateRoot,
-      CrawlConfig(maxDepth = 1, defaultMaxPerWave = 20, maxWaves = 3))
-    runner.initSeeds(Seq(
-      SyntheticCorpus.urlFor(0, spec) -> 1,
-      SyntheticCorpus.urlFor(5, spec) -> 2))
-    runner.run()
-    runner.crawlOrder()
+    val stateRoot = Files.createTempDirectory("graft-entry-")
+    try {
+      val runner = new WaveRunner(spark, corpus, stateRoot.toString,
+        CrawlConfig(maxDepth = 1, defaultMaxPerWave = 20, maxWaves = 3))
+      runner.initSeeds(Seq(
+        SyntheticCorpus.urlFor(0, spec) -> 1,
+        SyntheticCorpus.urlFor(5, spec) -> 2))
+      runner.run()
+      runner.crawlOrder().localCheckpoint(true)
+    } finally StateFiles.delete(stateRoot)
   }
 
   /** One entry per implemented operator from SURVEY.md §2 (+ the

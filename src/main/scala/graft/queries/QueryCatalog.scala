@@ -437,9 +437,9 @@ object QueryCatalog {
 
   /** Streaming URL dedup, oracle-gated end to end
     * ([[graft.streaming.StreamDedup.replayBatches]] drives the REAL
-    * `dropDuplicatesWithinWatermark` state store over four staged
-    * micro-batches; the fixture is driver-staged because MemoryStream
-    * is — verification-scale by design):
+    * `dropDuplicatesWithinWatermark` state store over four batches,
+    * each replayed through parquet files only once the one before it
+    * is processed):
     *  batch 1: even doc_ids arrive (sec 1000+id%997) → all emitted;
     *  batch 2: EVERY doc_id arrives (sec 3000+id%997) → evens are
     *    in-horizon repeats (suppressed by cross-batch state), odds are
@@ -448,34 +448,27 @@ object QueryCatalog {
     *    past every key's expiry;
     *  batch 4: evens re-appear (sec 10^7+10+id%997) → legitimately
     *    re-schedulable (re-crawl frequency semantics) → re-emitted.
-    * The sec offsets are mod-997 so no row is ever watermark-late at
-    * ANY scale factor. The oracle states the expected emission set
-    * arithmetically.
+    * The oracle states the expected emission set arithmetically.
     *
-    * The replay stages its batches on the driver because MemoryStream
-    * does, so the doc ids are collected. The collect is bounded by
-    * [[graft.operators.LocalFinish.MaxValues]] (at most that many ids
-    * plus one are fetched): a larger documents table fails loudly
-    * instead of staging an input-sized batch in driver memory.
+    * The sec offsets are mod-997, so every batch spans under 2,000 s of
+    * event time, below the 5,000 s horizon, at ANY scale factor: no
+    * row is ever watermark-late, and a batch split over micro-batches
+    * emits the same rows. A part's watermark is below its own batch
+    * (negative in batches 1 and 2, at most 10^7−3,994 in batch 4) and
+    * expires nothing the unsplit batch would keep: the evens' batch-1
+    * state lives to sec ≥ 6,000, and batch 4's only older key, −1, to
+    * 10^7+5,000.
+    *
+    * The batches are relational filters of `documents`: nothing is
+    * collected to the driver, and the table may hold any number of ids.
     */
   def qStreamDedup(spark: SparkSession, dir: String): DataFrame = {
-    val bound = graft.operators.LocalFinish.MaxValues
-    val ids = t(spark, dir, "documents").select(col("doc_id"))
-      .limit(bound.toInt + 1).collect().map(_.getLong(0)).sorted
-    if (ids.length > bound)
-      throw new IllegalStateException(s"q_stream_dedup stages its replay on the driver " +
-        s"and takes at most $bound doc ids; the documents table has more")
-    val b1 = ids.filter(_ % 2 == 0).map(i => (i, 1000L + i % 997)).toSeq
-    val b2 = ids.map(i => (i, 3000L + i % 997)).toSeq
-    val b3 = Seq((-1L, 10000000L))
-    val b4 = ids.filter(_ % 2 == 0).map(i => (i, 10000010L + i % 997)).toSeq
-    // state shards scale with the replay's key volume (≥1 per 4k keys),
-    // bounded by the session's own parallelism — never a constant tuned
-    // to either the local box or the fixture size
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val stateParts = math.min(math.max(1, ids.length / 4000), sessionParts)
-    graft.streaming.StreamDedup.replayBatches(spark, Seq(b1, b2, b3, b4),
-      horizon = "5000 seconds", statePartitions = Some(stateParts))
+    val docs = t(spark, dir, "documents").select(col("doc_id").as("urlHash"))
+    val evens = docs.filter(col("urlHash") % 2 === 0)
+    def at(df: DataFrame, sec: Long) = df.withColumn("sec", col("urlHash") % 997 + sec)
+    graft.streaming.StreamDedup.replayBatches(spark, Seq(at(evens, 1000L), at(docs, 3000L),
+        spark.range(1).select(lit(-1L).as("urlHash"), lit(10000000L).as("sec")),
+        at(evens, 10000010L)), horizon = "5000 seconds")
   }
 
   /** Gap-timeout sessionization (6 h), batch twin of the

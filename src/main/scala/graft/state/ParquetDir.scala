@@ -55,9 +55,10 @@ object ParquetDir {
   /** Per-write options Spark merges into the write job's Hadoop conf
     * (driver job setup, tasks and committer alike). The cache is off
     * because it is keyed by scheme, not class: a cached `file:` system
-    * would be Hadoop's own.
+    * would be Hadoop's own. A session whose conf holds them writes its
+    * own local files (a streaming checkpoint's) the same way.
     */
-  private val LocalWrites = Map(
+  val LocalWrites = Map(
     "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
     "fs.file.impl.disable.cache" -> "true")
 

@@ -1,7 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.functions._
+
+import graft.state.{ParquetDir, StateFiles}
 
 /** Streaming URL dedup — the D1/D4 seen-set semantics as a genuine
   * Structured Streaming operator for pipelines that ingest a LIVE
@@ -21,8 +26,7 @@ import org.apache.spark.sql.functions._
   *
   * Output mode: append. The first arrival of each urlHash inside a
   * horizon survives; late rows older than the watermark are dropped
-  * by the engine (consistent with the batch twin run on the
-  * watermark-filtered input).
+  * by the engine.
   */
 object StreamDedup {
 
@@ -35,80 +39,83 @@ object StreamDedup {
       .withWatermark("ts", horizon)
       .dropDuplicatesWithinWatermark("urlHash")
 
-  /** Drive the REAL streaming operator over pre-staged micro-batches
-    * of (urlHash, sec) rows and return the emitted rows as a batch
-    * DataFrame — the verification seam that lets a SQL oracle gate the
-    * streaming twin end to end: in-horizon suppression across
-    * micro-batches, watermark advance, state expiry and post-horizon
-    * re-emission all happen through the genuine
-    * `dropDuplicatesWithinWatermark` state store. Batches are
-    * driver-side Seqs: VERIFICATION-scale only (the production entry
-    * is [[dedupStream]] on a live readStream source).
+  /** Drive the REAL streaming operator over ordered batches of
+    * (urlHash, sec) rows and return the emitted rows as a batch
+    * DataFrame (`url_hash`, `sec`) — the verification seam that lets a
+    * SQL oracle gate the streaming twin end to end: in-horizon
+    * suppression across micro-batches, watermark advance, state expiry
+    * and post-horizon re-emission all happen through the genuine
+    * `dropDuplicatesWithinWatermark` state store.
     *
-    * @param statePartitions number of state-store partitions for the
-    *   replay's streaming query (`spark.sql.shuffle.partitions` at
-    *   query start, restored afterwards). A replay of N driver-staged
-    *   rows wants state shards ∝ N, not the session's batch-join
-    *   parallelism: every micro-batch pays a fixed open/commit cost
-    *   PER STATE PARTITION, so 32 shards for a few thousand keys is
-    *   pure overhead (measured 2× the replay wall at sf0.1). None
-    *   leaves the session setting untouched.
+    * One write job stages every batch, a directory each. The driver
+    * then moves batch k into the parquet file stream's watched
+    * directory with one rename, and batch k+1 only once
+    * `processAllAvailable()` has returned: that call returns after a
+    * trigger that began after it found no new file, so no micro-batch
+    * holds rows of two batches. The order of batches is the driver's,
+    * not the files' timestamps, so no `maxFilesPerTrigger` is needed. A
+    * local rename moves a whole batch at once; where a rename is not
+    * atomic (an object store), a batch may split over micro-batches.
+    * That emits the same rows when the watermark a part sets (its
+    * latest `sec` minus the horizon) is below every row of the batch,
+    * so none turns late, and expires no key the batch repeats; the
+    * fixture of [[graft.queries.QueryCatalog.qStreamDedup]] meets both.
+    * Nothing is collected to the driver: the emitted rows go to an
+    * output directory through `foreachBatch`, and come back read from
+    * there and materialized by `localCheckpoint` before the replay's
+    * files are deleted.
+    *
+    * The query runs in its own session, so the caller's conf is never
+    * touched. Its conf holds the state-shard count: one per 4,000 rows
+    * of the largest batch (counted by the staging job as it writes), at
+    * least one and at most the caller's `spark.sql.shuffle.partitions`.
+    * Every micro-batch pays a fixed open/commit cost PER STATE
+    * PARTITION (32 shards for a few thousand keys measured 2× the
+    * replay wall at sf0.1). The conf also routes the checkpoint and
+    * state-store files through a Hadoop `FileSystem` with
+    * [[ParquetDir.LocalWrites]], so a local replay forks no process
+    * (Hadoop's `FileContext` manager forks `readlink` and `chmod`
+    * without the native library).
     */
-  def replayBatches(spark: SparkSession, batches: Seq[Seq[(Long, Long)]],
-                    horizon: String,
-                    statePartitions: Option[Int] = None): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val ms = MemoryStream[(Long, Long)]
-    val in = ms.toDF().toDF("urlHash", "sec")
-      .withColumn("ts", timestamp_seconds(col("sec")))
-    val name = s"graft_stream_dedup_replay_${replaySeq.incrementAndGet()}"
-    // state-store checkpoints on tmpfs when available: the default
-    // java.io.tmpdir sits on this sandbox's one throttled virtio disk,
-    // and every micro-batch fsyncs delta+commit files per state
-    // partition — placement, not semantics (the same policy as the
-    // engine's crawl-state dirs; a cluster writes these to its DFS)
-    val ckptBase =
+  def replayBatches(spark: SparkSession, batches: Seq[DataFrame], horizon: String): DataFrame = {
+    // on tmpfs when available: every micro-batch writes delta and
+    // commit files per state partition (placement, not semantics; a
+    // cluster writes these to its DFS)
+    val base =
       if (Files.isDirectory(Paths.get("/dev/shm"))) Paths.get("/dev/shm")
       else Paths.get(System.getProperty("java.io.tmpdir"))
-    val ckptDir = Files.createTempDirectory(ckptBase, "graft-stream-ckpt-")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    statePartitions.foreach(n =>
-      spark.conf.set("spark.sql.shuffle.partitions", n.toString))
-    val q = dedupStream(in, horizon)
-      .select(col("urlHash"), col("sec"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckptDir.toString)
-      .format("memory").queryName(name).start()
+    val root = Files.createTempDirectory(base, "graft-stream-replay-")
+    val in = Files.createTempDirectory(root, "in-") // watched from the start
+    val Seq(staged, out, ckpt) = Seq("staged", "out", "ckpt").map(root.resolve(_).toString)
     try {
-      batches.foreach { b => ms.addData(b); q.processAllAvailable() }
-    } finally {
-      q.stop()
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      // best effort: what cannot be deleted stays behind
-      scala.util.Try(graft.state.StateFiles.delete(ckptDir))
-    }
-    // pin the result: the memory-sink table is bound to the (stopped)
-    // streaming query; downstream writes want a standalone frame
-    val out = spark.table(name)
-      .select(col("urlHash").as("url_hash"), col("sec"))
-      .localCheckpoint(true)
-    spark.catalog.dropTempView(name)
-    out
-  }
-
-  private val replaySeq = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Batch twin for parity checks: first arrival per key by (ts, then
-    * tie-break on every remaining column via min(struct)) — what the
-    * stream converges to when every row fits one horizon.
-    */
-  def dedupBatch(discoveries: DataFrame): DataFrame = {
-    val cols = discoveries.columns.filterNot(_ == "urlHash")
-    discoveries.groupBy(col("urlHash"))
-      .agg(min(struct(cols.map(col): _*)).as("r"))
-      .select(col("urlHash") +: cols.map(c => col(s"r.$c")): _*)
+      val rows = batches.indices.map(i => count(when(col("batch") === i, 1)))
+      val sizes = Observation()
+      ParquetDir.writer(batches.zipWithIndex.map { case (b, i) => b.withColumn("batch", lit(i)) }
+        .reduce(_ union _).observe(sizes, rows.head, rows.tail: _*))
+        .partitionBy("batch").parquet(staged)
+      val keys = sizes.get.values.map(_.asInstanceOf[Long]).max
+      val shards = math.min(math.max(1L, keys / 4000),
+        spark.conf.get("spark.sql.shuffle.partitions").toLong)
+      val replay = spark.newSession()
+      (ParquetDir.LocalWrites ++ Map(
+        "spark.sql.shuffle.partitions" -> shards.toString,
+        "spark.sql.streaming.checkpointFileManagerClass" ->
+          classOf[FileSystemBasedCheckpointFileManager].getName))
+        .foreach { case (k, v) => replay.sessionState.conf.setConfString(k, v) }
+      val emit: (DataFrame, Long) => Unit =
+        (b, _) => ParquetDir.writer(b).mode(SaveMode.Append).parquet(out)
+      val q = dedupStream(replay.readStream.schema(batches.head.schema)
+          .option("recursiveFileLookup", "true") // a batch is a subdirectory
+          .parquet(in.toString)
+          .withColumn("ts", timestamp_seconds(col("sec"))), horizon)
+        .select(col("urlHash").as("url_hash"), col("sec"))
+        .writeStream.option("checkpointLocation", ckpt).foreachBatch(emit).start()
+      try batches.indices.foreach { i =>
+        val batch = Paths.get(staged, s"batch=$i") // none for an empty batch
+        if (StateFiles.exists(batch)) StateFiles.rename(batch, in.resolve(i.toString))
+        q.processAllAvailable()
+      } finally q.stop()
+      ParquetDir.read(spark, out).localCheckpoint(true)
+    } finally StateFiles.delete(root)
   }
 }

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -596,6 +596,18 @@ class StreamingAndPlanSpec extends AnyFunSuite {
     assert(nodes.exists { case _: BaseAggregateExec => true; case _ => false })
   }
 
+  /** Batch twin of [[graft.streaming.StreamDedup.dedupStream]] for
+    * parity checks: first arrival per key by (ts, then tie-break on
+    * every remaining column via min(struct)) — what the stream
+    * converges to when every row fits one horizon.
+    */
+  private def dedupBatch(discoveries: DataFrame): DataFrame = {
+    val cols = discoveries.columns.filterNot(_ == "urlHash")
+    discoveries.groupBy(col("urlHash"))
+      .agg(min(struct(cols.map(col): _*)).as("r"))
+      .select(col("urlHash") +: cols.map(c => col(s"r.$c")): _*)
+  }
+
   test("streaming URL dedup: first-in-horizon survives, state is watermark-bounded") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.streaming.StreamDedup
@@ -631,7 +643,7 @@ class StreamingAndPlanSpec extends AnyFunSuite {
       assert(emitted().count(_._1 == 1L) === 2,
         "post-horizon re-appearance must re-emit")
       // batch-twin parity on the first-horizon slice
-      val batch = StreamDedup.dedupBatch(
+      val batch = dedupBatch(
         Seq((1L, 1000L, "a"), (1L, 1010L, "a-dup"), (2L, 1020L, "b"),
           (1L, 1050L, "a-again"), (3L, 1100L, "c"))
           .toDF("urlHash", "sec", "url"))
@@ -641,6 +653,47 @@ class StreamingAndPlanSpec extends AnyFunSuite {
       assert(emitted().filter(_._2 <= 1100L).toSet === batch,
         "stream must agree with the batch twin inside one horizon")
     } finally q.stop()
+  }
+
+  /** q_stream_dedup's expected rows over `ids`, stated arithmetically
+    * as its oracle states them, sorted.
+    */
+  private def streamDedupExpected(ids: Seq[Long]): Seq[(Long, Long)] = {
+    val evens = ids.filter(_ % 2 == 0)
+    (evens.map(i => (i, 1000L + i % 997)) ++ ids.filter(_ % 2 != 0).map(i => (i, 3000L + i % 997)) ++
+      Seq((-1L, 10000000L)) ++ evens.map(i => (i, 10000010L + i % 997))).sorted
+  }
+
+  private def streamDedupRows(dir: String): Seq[(Long, Long)] = {
+    val df = SparkEntry.queries("q_stream_dedup")(spark, dir)
+    assert(df.columns.toSeq === Seq("url_hash", "sec"))
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+  }
+
+  test("q_stream_dedup replays a documents table above 2^16 ids without a driver bound") {
+    val dir = TempDirs.make("graft-stream-70k-")
+    spark.range(0, 70000, 1, 4).select(col("id").as("doc_id"))
+      .write.parquet(dir.resolve("documents.parquet").toString)
+    assert(streamDedupRows(dir.toString) === streamDedupExpected(0L until 70000L))
+  }
+
+  test("q_stream_dedup leaves the caller's session conf as it was") {
+    val before = spark.conf.getAll
+    val ids = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id")
+      .collect().map(_.getLong(0)).toSeq
+    assert(streamDedupRows(sfDir) === streamDedupExpected(ids))
+    assert(spark.conf.getAll === before)
+  }
+
+  test("q_stream_dedup forks no process over its own replay files") {
+    val query = SparkEntry.queries("q_stream_dedup")
+    query(spark, sfDir) // warm
+    val (_, started) = ProcessProbe.started(query(spark, sfDir))
+    // Spark's own asynchronous clean-up of earlier sessions' artifact
+    // directories may start an `rm` meanwhile; it names no replay file
+    info(s"processes started in one run: ${started.size}")
+    val replay = started.filter(_.contains("graft-stream-replay-"))
+    assert(replay.isEmpty, s"processes over the replay's files: $replay")
   }
 
   test("gopherRules and hashClassifier are pure maps: no exchange in the plan") {
@@ -942,6 +995,24 @@ class StreamingAndPlanSpec extends AnyFunSuite {
     assert(tableWriters.map(_._1).toSet === Set("graft/crawl/FetchSource.scala"))
     tableWriters.foreach { case (f, text) =>
       assert(text.contains("ParquetDir.writer("), s"$f writes a table without ParquetDir.writer")
+    }
+  }
+
+  test("session conf: src/main sets none but its own new session's, and stages no stream on the driver") {
+    // a caller's session keeps its conf; a replay that needs other
+    // settings makes a session of its own, and reads its input from files
+    Seq("MemoryStream", "format(\"memory\")", ".conf.set(", ".conf.unset(").foreach { token =>
+      val users = mainSources.collect { case (f, text) if text.contains(token) => f }
+      assert(users.isEmpty, s"$token in $users")
+    }
+    val confWrite = """(\w+)\.sessionState\.conf\.set\w*\(""".r
+    val writers = mainSources.flatMap { case (f, text) =>
+      confWrite.findAllMatchIn(text).map(m => (f, text, m.group(1)))
+    }
+    assert(writers.map(_._1).toSet === Set("graft/streaming/StreamDedup.scala"))
+    writers.foreach { case (f, text, session) =>
+      assert(text.contains(s"val $session = spark.newSession()"),
+        s"$f sets the conf of $session, which is no session of its own")
     }
   }
 
