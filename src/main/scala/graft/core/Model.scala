@@ -123,9 +123,7 @@ object Model {
   final case class CrawlConfig(
       maxDepth: Int = 1, // reference default max_recursion = 1 (crawler.cfg:197-198)
       defaultMaxPerWave: Int = 100,
-      defaultCrawlDelayMs: Long = 0L,
       maxWaves: Int = 16,
-      bloomFpp: Double = 0.01,
       /** below this many frontier keys no sketch is built: measured on
         * this hardware, one sketch build costs ~10-30 s while an exact
         * keys-only anti-join at 10^6-10^7 rows costs ~1-2 s — the

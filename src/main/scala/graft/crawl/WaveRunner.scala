@@ -3,6 +3,7 @@ package graft.crawl
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Path, Paths}
 
+import scala.reflect.ClassTag
 import scala.util.Try
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
@@ -13,7 +14,7 @@ import graft.core.Model._
 import graft.operators.{Politeness, SeenSet}
 import graft.plans.Kernels
 import graft.state.{ParquetDir, SnapshotTable, StateFiles}
-import WaveRunner.{CountsFile, StageCounts, joinAll}
+import WaveRunner.{CommittedMarker, StageCounts, StagedMarker, WaveRecord, joinAll, readRecord}
 
 /** The crawl engine: an iterative-batch frontier loop over snapshot
   * tables (the Spark-native re-expression of the reference's
@@ -57,25 +58,28 @@ import WaveRunner.{CountsFile, StageCounts, joinAll}
   *  3. expand: links → canonicalize → in-batch dedup → bloom-prefiltered
   *     anti-join against the discovery log (URL-seen, SURVEY.md §2.4);
   *  4. commit: ONE list of idempotent steps, each skipped when the
-  *     durable state it writes shows it done: stage (steps 1-3, marked
-  *     `_STAGED`, or `_IDLE` when nothing is schedulable now but work
-  *     remains); flip processed, then frontier (their committed waves:
-  *     atomic directory renames, zero jobs; an idle wave flips with no
-  *     segment, so its deltas are empty); drop the previous wave's
-  *     staged artifacts, keeping its markers, and the sketch files
-  *     before it; the commit TAIL, a small DAG
-  *     of concurrent Spark jobs ([[WaveRunner.joinAll]]): the two
-  *     sketch advances side by side (their `.meta` files), then the
-  *     metrics row (its committed wave; counts piggyback on the staging
-  *     writes via Observations), alongside, on a compaction wave, the
+  *     durable state it writes shows it done: stage (steps 1-3; its
+  *     `_STAGED` record holds the counts the staging writes observed,
+  *     and an idle wave, nothing schedulable now but work left, is one
+  *     that scheduled nothing); flip processed, then frontier (their
+  *     committed waves: atomic directory renames, zero jobs; an idle
+  *     wave flips with no segment, so its deltas are empty); drop the
+  *     previous wave's staging directory but its `_COMMITTED` record,
+  *     and the sketch files before it; the commit TAIL, a small DAG of
+  *     concurrent Spark jobs ([[WaveRunner.joinAll]]): the two sketch
+  *     advances side by side, alongside, on a compaction wave, the
   *     frontier compaction and the rollup append (its committed wave),
   *     then the processed and rollup compactions; the VACUUM, once every
   *     chain has joined (a sketch's full rebuild may scan segments a
-  *     compaction just merged away); and a `_COMMITTED` marker file. A
-  *     restart ([[nextWave]]) re-enters the newest flipped wave until
-  *     its marker exists and runs the same list: finished steps skip,
-  *     and nothing is re-extracted. Wave 0's list: the seed frontier
-  *     ([[initSeeds]]), both sketch chains' first `.meta`, `_COMMITTED`.
+  *     compaction just merged away); and the `_COMMITTED` record: the
+  *     wave's metrics row and its running key totals
+  *     ([[WaveRunner.WaveRecord]]), the one place every per-wave count
+  *     is kept. A restart ([[nextWave]]) re-enters the newest flipped
+  *     wave until its record exists and runs the same list: finished
+  *     steps skip, and nothing is re-extracted. Wave 0's list: the
+  *     seed frontier ([[initSeeds]], its `_STAGED` record holding the
+  *     distinct seed count), both sketch chains' first file,
+  *     `_COMMITTED`.
   *
   * Every staged artifact and state segment is a [[ParquetDir]]: it
   * carries its schema, so reading it back launches no job.
@@ -103,7 +107,6 @@ final class WaveRunner(
 
   val frontierT = SnapshotTable(spark, stateRoot, "frontier")
   val processedT = SnapshotTable(spark, stateRoot, "processed")
-  val metricsT = SnapshotTable(spark, stateRoot, "metrics")
 
   /** Incremental latest-try ROLLUP of the processed log. The rollup
     * MATERIALIZES only at compaction cadence — zero per-wave jobs:
@@ -153,9 +156,9 @@ final class WaveRunner(
     * "sketches" and "compact" are WALL intervals of the concurrent
     * commit tail, never summed thread time: "sketches" runs from the
     * tail's start until both sketches have advanced, "compact" from
-    * there to the tail's end (the metrics row, the compactions and the
-    * vacuum; recorded on compaction waves only), so the two still add
-    * up to the tail's wall time.
+    * there to the tail's end (the compactions and the vacuum; recorded
+    * on compaction waves only), so the two still add up to the tail's
+    * wall time.
     */
   private[graft] val phaseSeconds =
     scala.collection.mutable.Map.empty[String, Double].withDefaultValue(0.0)
@@ -210,22 +213,23 @@ final class WaveRunner(
         typedLit(hostPolicies.map { case (h, p) => h -> p.maxPerWave }), host),
       lit(config.defaultMaxPerWave))
 
+  // a host without a policy has no crawl delay of its own
   private def policyDelayFor(host: Column): Column =
-    if (hostPolicies.isEmpty) lit(config.defaultCrawlDelayMs)
+    if (hostPolicies.isEmpty) lit(0L)
     else coalesce(
       element_at(
         typedLit(hostPolicies.map { case (h, p) => h -> p.crawlDelayMs }), host),
-      lit(config.defaultCrawlDelayMs))
+      lit(0L))
 
   /** Initialize the frontier from a seed list (url, priority), then
     * finish wave 0. Two seeds canonicalizing to the same URL keep one
     * deterministic representative (min priority — mirroring the
-    * min()-based first-discovery rule used for links). Commits frontier
-    * wave 0 unless the frontier already exists (resume: the seeds are
-    * then unused).
+    * min()-based first-discovery rule used for links). Stages the
+    * distinct seed count, then commits frontier wave 0, unless the
+    * frontier already exists (resume: the seeds are then unused).
     */
   def initSeeds(seeds: Seq[(String, Int)]): Unit = {
-    val seeded = if (frontierT.exists()) None else {
+    if (!frontierT.exists()) {
       val entries = seeds.flatMap { case (url, priority) =>
         UrlNormalizer.canonicalize(url).map { canonical =>
           FrontierEntry(
@@ -241,23 +245,24 @@ final class WaveRunner(
         .groupBy(_.urlHash).values
         .map(_.minBy(e => (e.priority, e.url))).toSeq
         .sortBy(_.urlHash)
+      StateFiles.writeJson(stagingDir(0).resolve(StagedMarker),
+        StageCounts(0, 0, 0, 0, 0, entries.size.toLong, 0, 0))
       frontierT.commit(entries.toDS().toDF(), wave = 0)
-      Some(entries.size.toLong)
     }
     failPoint("frontier")
-    if (nextWave() == 0) finishSeedWave(seeded)
+    runWave(0)
   }
 
-  /** Wave 0's steps after the frontier commit. Nothing is processed at
-    * wave 0: both sketch chains start here, so a missing wave_0 meta is
-    * a real gap. The key count is `seeded`, else the frontier's.
+  /** Wave 0's steps after the frontier commit: nothing is processed at
+    * wave 0, and both sketch chains start here.
     */
-  private def finishSeedWave(seeded: Option[Long]): Unit = {
-    bloom.advance(0, frontierT.read().get.select("urlHash"), seeded)
+  private def finishSeedWave(): Unit = {
+    val totals = totalsAfter(0)
+    bloom.advance(0, frontierT.read().map(_.select("urlHash")), totals.discovered)
     failPoint("bloom")
-    popBloom.advance(0, spark.emptyDataFrame, Some(0L))
+    popBloom.advance(0, None, totals.processed)
     failPoint("popbloom")
-    mark(stagingDir(0).resolve(CommittedMarker))
+    StateFiles.writeJson(stagingDir(0).resolve(CommittedMarker), totals)
   }
 
   /** Run waves until the frontier drains or maxWaves is hit; returns
@@ -269,9 +274,10 @@ final class WaveRunner(
     frontierT.committedWave()
   }
 
-  /** The wave to run next: the newest flipped wave while its commit
-    * tail is unfinished (a kill cut it), else the one after it. [[run]]
-    * and [[graft.streaming.CrawlStream]] both start here.
+  /** The wave to run next: the newest flipped wave while its
+    * `_COMMITTED` record is missing (a kill cut its commit tail), else
+    * the one after it. [[run]] and [[graft.streaming.CrawlStream]] both
+    * start here.
     */
   def nextWave(): Int = {
     val w = frontierT.committedWave()
@@ -280,50 +286,72 @@ final class WaveRunner(
 
   private def stagingDir(w: Int): Path = Paths.get(stateRoot, "staging", s"wave_$w")
 
-  /** Written once a wave's last step is done: the wave is done. */
-  private val CommittedMarker = "_COMMITTED"
+  private def staged(w: Int): Option[StageCounts] =
+    readRecord[StageCounts](stagingDir(w).resolve(StagedMarker))
 
-  private def mark(marker: Path): Unit = StateFiles.write(marker, Array.emptyByteArray)
+  private def committed(w: Int): Option[WaveRecord] =
+    readRecord[WaveRecord](stagingDir(w).resolve(CommittedMarker))
 
-  /** Delete a done wave's staged artifacts (its popped set and counts),
-    * keeping its markers, which [[nextWave]] and [[runWave]] read.
-    * Without this the state grows by one popped set per wave, outside
-    * every manifest. A wave whose marker is missing keeps everything.
+  /** The running totals the tables hold now, recounted (one count per
+    * table) when a record that would carry them is lost: a root written
+    * before records held counts, or a wiped staging directory.
+    * Deferrals are assumed seen once anything is processed.
+    */
+  private def recount(): WaveRecord = {
+    val processed = processedT.exists()
+    WaveRecord(None, frontierT.read().fold(0L)(_.count()),
+      if (processed) processedKeys().distinct().count() else 0L, deferrals = processed)
+  }
+
+  /** Flipped wave `w`'s running totals: the previous wave's plus `w`'s
+    * staged counts, or, when either record is lost, a [[recount]] of
+    * the tables, which are at wave `w` once it has flipped.
+    */
+  private def totalsAfter(w: Int): WaveRecord = {
+    val before = if (w == 0) Some(WaveRecord(None, 0, 0, deferrals = false)) else committed(w - 1)
+    staged(w).flatMap(c => before.map(_ + c)).getOrElse(recount())
+  }
+
+  /** Delete everything a done wave staged but its `_COMMITTED` record,
+    * which [[nextWave]] and [[metrics]] read. Without this the state
+    * grows by one popped set per wave, outside every manifest. A wave
+    * whose record is missing keeps everything.
     */
   private def dropStaged(w: Int): Unit = {
     val staging = stagingDir(w)
     if (StateFiles.exists(staging.resolve(CommittedMarker)))
-      StateFiles.list(staging)
-        .filterNot(p => Set(CommittedMarker, "_STAGED", "_IDLE")(p.getFileName.toString))
+      StateFiles.list(staging).filterNot(_.getFileName.toString == CommittedMarker)
         .foreach(StateFiles.delete)
   }
 
   /** Execute (or finish) wave `w`: every commit step in fixed order,
     * skipping those already done. Returns false when there was nothing
-    * left to schedule now or in any future wave (crawl drained).
+    * left to schedule now or in any future wave (crawl drained), true
+    * at once for a done wave: its record is never written again.
     */
   def runWave(w: Int): Boolean = {
     require(frontierT.exists(), "initSeeds must run before waves")
-    if (w == 0) { finishSeedWave(None); return true }
+    val next = nextWave()
+    require(w <= next, s"wave $w cannot run before wave $next is committed")
+    if (w < next) return true
+    if (w == 0) { finishSeedWave(); return true }
     val t0 = System.nanoTime()
     val staging = stagingDir(w)
-    val stagedMarker = staging.resolve("_STAGED")
-    val idleMarker = staging.resolve("_IDLE")
+    val stagedMarker = staging.resolve(StagedMarker)
 
     // stage: the only step that reads html, at most once per wave
-    if (frontierT.committedWave() < w && !StateFiles.exists(stagedMarker) &&
-        !StateFiles.exists(idleMarker))
+    if (frontierT.committedWave() < w && !StateFiles.exists(stagedMarker))
       timed(s"w$w stage")(stageWave(w, staging.toString)) match {
-        case StageResult.Drained => return false
-        case StageResult.Idle => mark(idleMarker)
-        case StageResult.Staged => mark(stagedMarker)
+        case None => return false
+        case Some(c) => StateFiles.writeJson(stagedMarker, c)
       }
     failPoint("stage")
 
     // flip processed, then frontier: adopt the staged artifact by
     // atomic directory rename (zero jobs, zero data copy); an idle wave
     // advances the committed wave with no segment
-    val idle = StateFiles.exists(idleMarker)
+    val counts = staged(w)
+    val idle = counts.exists(_.scheduled == 0L)
     def flip(t: SnapshotTable, artifact: String): Unit = {
       if (t.committedWave() < w)
         if (idle) t.markCommit(w)
@@ -343,16 +371,14 @@ final class WaveRunner(
     // the wave's delta segments are resolved (file listing, no job)
     // before any compaction starts; merged-away files stay on disk
     // until the vacuum, which runs only after every chain has joined
-    val counts = WaveRunner.readCounts(staging)
-    // a delta is empty for an idle wave (no segment of its own) and
-    // unknown once the table has moved past w (an older wave re-run):
-    // that sketch then keeps its gap, which later waves bridge by a
-    // recount (sketches are advisory, a gap never changes a result)
-    def keys(t: SnapshotTable): Option[DataFrame] =
-      if (t.committedWave() != w) None
-      else Some(t.readWaveSegment(w).fold(spark.emptyDataFrame)(_.select("urlHash")))
-    val newKeys = keys(frontierT)
-    val poppedKeys = keys(processedT)
+    val totals = totalsAfter(w)
+    // a wave that added no key to a chain (an idle wave, a wave of
+    // retries only) merges nothing into its sketch
+    def keys(t: SnapshotTable, added: StageCounts => Long): Option[DataFrame] =
+      if (counts.exists(added(_) == 0L)) None
+      else t.readWaveSegment(w).map(_.select("urlHash"))
+    val newKeys = keys(frontierT, _.newUrls)
+    val poppedKeys = keys(processedT, _.freshPops)
     val compacting = config.compactEveryWaves > 0 && w % config.compactEveryWaves == 0
     def compact(t: SnapshotTable, merge: DataFrame => DataFrame = identity): Unit = {
       t.compactTiered(config.compactMaxSegments, merge)
@@ -363,14 +389,9 @@ final class WaveRunner(
     val chains = Seq.newBuilder[() => Unit]
     chains += { () =>
       joinAll(
-        () => { newKeys.foreach(bloom.advance(w, _, counts.map(_.newUrls))); failPoint("bloom") },
-        () => { poppedKeys.foreach(popBloom.advance(w, _, counts.map(_.scheduled)))
-          failPoint("popbloom") })
+        () => { bloom.advance(w, newKeys, totals.discovered); failPoint("bloom") },
+        () => { popBloom.advance(w, poppedKeys, totals.processed); failPoint("popbloom") })
       sketched = System.nanoTime()
-      // after both sketches, so elapsedMs covers them
-      commitMetrics(w, counts, (sketched - t0) / 1000000L)
-      failPoint("metrics")
-      if (compacting) compact(metricsT)
     }
     if (compacting) {
       chains += (() => compact(frontierT))
@@ -396,12 +417,19 @@ final class WaveRunner(
     // a sketch's full rebuild may have scanned segments a compaction
     // just replaced: vacuum only once every chain has joined
     if (compacting && config.vacuumOnCompact) {
-      Seq(frontierT, processedT, metricsT, latestT).foreach(_.vacuum())
+      Seq(frontierT, processedT, latestT).foreach(_.vacuum())
       failPoint("vacuum")
     }
     record(s"w$w sketches", tail0, sketched)
     if (compacting) record(s"w$w compact", sketched, System.nanoTime())
-    mark(staging.resolve(CommittedMarker))
+    // elapsedMs runs through both sketches; a wave whose staged counts
+    // are lost is marked with -1 counts, never fabricated zeros
+    val elapsedMs = (sketched - t0) / 1000000L
+    val row = counts.fold(WaveMetrics(w, -1, -1, -1, -1, -1, -1, -1, elapsedMs)) { c =>
+      WaveMetrics(w, c.scheduled, c.fetched, c.failed, c.deferred, c.bytes, c.newUrls,
+        totals.discovered - totals.processed, elapsedMs)
+    }
+    StateFiles.writeJson(staging.resolve(CommittedMarker), totals.copy(metrics = Some(row)))
     true
   }
 
@@ -485,9 +513,10 @@ final class WaveRunner(
     * `priorHash` rides along for recrawl pops (the stored content hash
     * the probe compares against — null for fresh/retry rows). The
     * retry and recrawl branches are built only for the `reentries`
-    * origins ([[reentryOrigins]]).
+    * origins ([[reentryOrigins]]); `prev` holds the totals wave w-1
+    * committed.
     */
-  private def pendingSet(w: Int, reentries: Seq[String]): DataFrame = {
+  private def pendingSet(w: Int, prev: WaveRecord, reentries: Seq[String]): DataFrame = {
     val discoveries = frontierT.read().get
       .select("urlHash", "url", "host", "depth", "priority", "score")
     if (!processedT.exists()) {
@@ -497,7 +526,7 @@ final class WaveRunner(
     } else {
       val fresh = SeenSet.notSeen(discoveries,
           Some(processedKeys()), popBloom.get(w - 1),
-          popBloom.count(w - 1), config.broadcastSeenKeys)
+          Some(prev.processed), config.broadcastSeenKeys)
         .withColumn("attempts", lit(0))
         .withColumn("origin", lit("fresh"))
         .withColumn("priorHash", lit(null).cast("string"))
@@ -524,36 +553,18 @@ final class WaveRunner(
   }
 
   /** The origins besides "fresh" the pending set can hold this wave:
-    * "retry" when a deferred row may exist and retries are on,
-    * "recrawl" when re-crawling is on; none before anything is
-    * processed.
+    * "retry" when a committed wave may have deferred a row and retries
+    * are on (only deferred rows can be retried, so otherwise the retry
+    * branch is provably empty and stays out of the plan: the crawl's
+    * common case, whose latest-try aggregate over every processed key
+    * then never runs), "recrawl" when re-crawling is on; none before
+    * anything is processed.
     */
-  private def reentryOrigins(): Seq[String] =
-    if (!processedT.exists()) {
-      deferralsSeen = Some(false) // nothing processed, nothing deferred
-      Nil
-    } else
-      (if (config.maxFetchAttempts > 1 && mayHaveDeferred()) Seq("retry") else Nil) ++
+  private def reentryOrigins(prev: WaveRecord): Seq[String] =
+    if (!processedT.exists()) Nil
+    else
+      (if (config.maxFetchAttempts > 1 && prev.deferrals) Seq("retry") else Nil) ++
         (if (config.recrawlEveryWaves > 0) Seq("recrawl") else Nil)
-
-  /** Whether any committed wave may have deferred a row. Only deferred
-    * rows can be retried, so when none exists the retry branch is
-    * provably empty and stays out of the plan (the crawl's common case:
-    * its latest-try aggregate over every processed key then never
-    * runs). Known without a job from the counts this runner commits
-    * ([[commitMetrics]]); a runner resuming a crawl reads it once from
-    * the metrics table, where a lost-counts row (-1) counts as a
-    * deferral, and metrics that lag the processed log count as one too.
-    */
-  private var deferralsSeen: Option[Boolean] = None
-
-  private def mayHaveDeferred(): Boolean =
-    metricsT.committedWave() < processedT.committedWave() ||
-      deferralsSeen.getOrElse {
-        val seen = metricsT.read().exists(m => !m.filter(col("deferred") =!= 0L).isEmpty)
-        deferralsSeen = Some(seen)
-        seen
-      }
 
   /** Recrawl-eligible rows for wave `w` — the wave-model form of the
     * reference's hierarchical session-info check
@@ -612,20 +623,13 @@ final class WaveRunner(
       .drop("p_state")
   }
 
-  private sealed trait StageResult
-  private object StageResult {
-    case object Staged extends StageResult
-    case object Idle extends StageResult
-    case object Drained extends StageResult
-  }
-
   /** Anything left for a future wave when nothing popped now? (Open
     * deferrals behind their backoff, or recrawl-eligible history.)
     * Only evaluated at end-of-crawl, so the extra jobs are rare.
     */
-  private def hasFutureWork: Boolean =
+  private def hasFutureWork(prev: WaveRecord): Boolean =
     processedT.read().exists { p =>
-      val openDeferred = config.maxFetchAttempts > 1 && mayHaveDeferred() &&
+      val openDeferred = config.maxFetchAttempts > 1 && prev.deferrals &&
         !latestResolved()
           .filter(col("state") === FrontierState.Deferred &&
             col("attempts") < config.maxFetchAttempts)
@@ -634,18 +638,22 @@ final class WaveRunner(
         !p.filter(col("state") === FrontierState.Fetched).isEmpty)
     }
 
-  /** Compute a wave's artifacts into the staging dir. This is the only
-    * phase that touches html; it runs at most once per wave across
-    * kills/resumes.
+  /** Compute a wave's artifacts into the staging dir and return the
+    * counts its writes observed (all zero for an idle wave), or None
+    * when the crawl is drained. This is the only phase that touches
+    * html; it runs at most once per wave across kills/resumes.
     */
-  private def stageWave(w: Int, staging: String): StageResult = {
-    val reentries = reentryOrigins()
-    val pending = pendingSet(w, reentries)
+  private def stageWave(w: Int, staging: String): Option[StageCounts] = {
+    // the totals wave w-1 committed; the tables are at wave w-1 for a
+    // recount, since a wave stages only after the previous one's record
+    val prev = committed(w - 1).getOrElse(recount())
+    val reentries = reentryOrigins(prev)
+    val pending = pendingSet(w, prev, reentries)
       .filter(col("depth") <= config.maxDepth)
     val allowed = Politeness.applyRobots(pending, robots)
 
     // budget short-circuit: |pending| ≤ |discoveries ever| = the
-    // discovery sketch chain's running count (zero jobs — the three
+    // previous record's discovered total (zero jobs — the three
     // pending branches are key-disjoint subsets of the discovery log).
     // When that bound fits inside the uniform per-host budget and no
     // per-host policy or delay clock can lower it, every host's budget
@@ -655,7 +663,7 @@ final class WaveRunner(
     // identical, and downstream order is fixed by the total-order
     // contract, never by staged row order).
     val unbudgeted = hostPolicies.isEmpty && config.waveDurationMs <= 0L &&
-      bloom.count(w - 1).exists(_ <= config.defaultMaxPerWave)
+      prev.discovered <= config.defaultMaxPerWave
 
     // the largest budget any host can get (a delay cap only lowers
     // it): the literal bound that lets the pop's top-k run map-side
@@ -689,10 +697,8 @@ final class WaveRunner(
     val retryN = reentered("retry")
     val recrawlN = reentered("recrawl")
 
-    if (poppedN == 0L) {
-      writeCounts(staging, StageCounts(0, 0, 0, 0, 0, 0, 0, 0))
-      return if (hasFutureWork) StageResult.Idle else StageResult.Drained
-    }
+    if (poppedN == 0L)
+      return if (hasFutureWork(prev)) Some(StageCounts(0, 0, 0, 0, 0, 0, 0, 0)) else None
 
     val popped = ParquetDir.read(spark, s"$staging/popped").drop("origin")
     val (toFetch, deferred) = deferInjector match {
@@ -793,8 +799,7 @@ final class WaveRunner(
     // never re-extracts): explode links, dedup, anti-join ----
     val sp = ParquetDir.read(spark, s"$staging/processed")
     val frontierKeys = frontierT.read().get.select("urlHash")
-    val seenCount = bloom.count(w - 1)
-    val preBroadcast = seenCount.exists(_ <= config.broadcastSeenKeys)
+    val preBroadcast = prev.discovered <= config.broadcastSeenKeys
     // the key leads, as in every other urlHash aggregate of the wave,
     // so the dedup's sorts and projections share their generated classes
     val links = sp
@@ -830,7 +835,7 @@ final class WaveRunner(
     val unseen =
       if (preBroadcast) candidates // already filtered before the groupBy
       else SeenSet.notSeen(candidates, Some(frontierKeys),
-        bloom.get(w - 1), seenCount, config.broadcastSeenKeys)
+        bloom.get(w - 1), Some(prev.discovered), config.broadcastSeenKeys)
     val newEntries = unseen
       .select(
         col("urlHash"), col("url"),
@@ -873,66 +878,8 @@ final class WaveRunner(
           if (deferred.isEmpty) 0L else tailObs.get("deferred").asInstanceOf[Long])
       }
 
-    writeCounts(staging,
-      StageCounts(scheduled, fetchedN, scheduled - fetchedN - deferredN,
-        deferredN, bytes, newUrls, retryN, recrawlN))
-    StageResult.Staged
-  }
-
-  // ---- metrics (all inputs piggybacked from staging observations) ----
-
-  private def writeCounts(staging: String, c: StageCounts): Unit =
-    StateFiles.writeJson(Paths.get(staging, CountsFile), c)
-
-  private def commitMetrics(w: Int, counts: Option[StageCounts], elapsedMs: Long): Unit = {
-    if (metricsT.committedWave() >= w) return
-    val m = counts match {
-      case None =>
-        // staged counts lost (staging wiped between crash and resume):
-        // mark the gap with -1 counts instead of fabricating zeros; the
-        // pending ledger falls back to the exact anti-join next wave
-        WaveMetrics(w, -1, -1, -1, -1, -1, -1, -1, elapsedMs)
-      case Some(c) =>
-        val freshScheduled = c.scheduled - c.retries - c.recrawls
-        val pendingLeft = pendingLeftAfter(w, freshScheduled, c.newUrls)
-        pendingCache = Some(w -> pendingLeft)
-        WaveMetrics(w, c.scheduled, c.fetched, c.failed, c.deferred,
-          c.bytes, c.newUrls, pendingLeft, elapsedMs)
-    }
-    metricsT.appendCommit(Seq(m).toDS().toDF(), w)
-    deferralsSeen = deferralsSeen.map(_ || m.deferred != 0L)
-  }
-
-  /** Pending count after wave w: previous pending − freshly-scheduled +
-    * newly-discovered (retry/recrawl pops re-enter from the processed
-    * log, not the pending pool, so they don't decrement it). Falls
-    * back to the exact anti-join count when no history exists (a
-    * metrics gap, or no wave-0 sketch meta before wave 1).
-    */
-  private var pendingCache: Option[(Int, Long)] = None
-  private def pendingLeftAfter(w: Int, freshScheduled: Long, newUrls: Long): Long = {
-    val before: Option[Long] = pendingCache match {
-      case Some((wave, n)) if wave == w - 1 => Some(n)
-      case _ if w >= 2 =>
-        metricsT.read().flatMap { m =>
-          m.filter(col("wave") === w - 1).select("frontierPending")
-            .collect().headOption.map(_.getLong(0))
-        }.filter(_ >= 0L) // a -1 gap marker is not a usable ledger value
-      // wave 1: before = the distinct seed count, which initSeeds
-      // records as the wave-0 key count
-      case _ if w == 1 => bloom.count(0)
-      case _ => None
-    }
-    before match {
-      case Some(n) => n - freshScheduled + newUrls
-      case None =>
-        val discoveries = frontierT.read().get.select("urlHash")
-        processedT.read() match {
-          case None => discoveries.count()
-          case Some(p) =>
-            discoveries.join(p.select("urlHash"), Seq("urlHash"), "left_anti").count()
-        }
-    }
+    Some(StageCounts(scheduled, fetchedN, scheduled - fetchedN - deferredN,
+      deferredN, bytes, newUrls, retryN, recrawlN))
   }
 
   // ---- projections of the processed log ----
@@ -965,24 +912,50 @@ final class WaveRunner(
           col("text"), col("contentHash"), col("htmlBytes"), col("nOutlinks")))
       .getOrElse(spark.emptyDataFrame)
 
+  /** One row per committed wave from 1 on, read from its record; a
+    * wave whose record is lost shows -1 in every column but `wave`.
+    */
   def metrics(): DataFrame =
-    metricsT.read().getOrElse(spark.emptyDataset[WaveMetrics].toDF())
+    (1 until nextWave()).map { w =>
+      committed(w).flatMap(_.metrics).getOrElse(WaveMetrics(w, -1, -1, -1, -1, -1, -1, -1, -1))
+    }.toDS().toDF()
 }
 
 object WaveRunner {
 
-  /** A staged wave's counts, observed during its staging writes. */
+  /** A staged wave's `_STAGED` record: the counts its staging writes
+    * observed (wave 0's holds only the distinct seed count, as
+    * `newUrls`).
+    */
   final case class StageCounts(scheduled: Long, fetched: Long, failed: Long,
                                deferred: Long, bytes: Long, newUrls: Long,
-                               retries: Long, recrawls: Long)
+                               retries: Long, recrawls: Long) {
+    /** Pops of keys never processed before: each adds one processed key. */
+    def freshPops: Long = scheduled - retries - recrawls
+  }
 
-  private[graft] val CountsFile = "counts.json"
-
-  /** The counts staged in `staging`, or None when they are lost: no
-    * file, or one without every count (a lost count is never a zero).
+  /** A committed wave's `_COMMITTED` record: its metrics row (none for
+    * wave 0) and the running key totals as of the wave: distinct
+    * discovered keys, distinct processed keys and whether any wave has
+    * deferred a row. The pending frontier is `discovered - processed`.
+    * A marker that exists but holds no readable record is a wave whose
+    * counts are lost.
     */
-  private[graft] def readCounts(staging: Path): Option[StageCounts] =
-    Try(StateFiles.readJson[StageCounts](staging.resolve(CountsFile))).toOption.flatten
+  final case class WaveRecord(metrics: Option[WaveMetrics], discovered: Long,
+                              processed: Long, deferrals: Boolean) {
+    /** The next wave's totals, with no metrics row yet. */
+    def +(c: StageCounts): WaveRecord = WaveRecord(None, discovered + c.newUrls,
+      processed + c.freshPops, deferrals || c.deferred != 0L)
+  }
+
+  private[graft] val StagedMarker = "_STAGED"
+  private[graft] val CommittedMarker = "_COMMITTED"
+
+  /** The record in `marker`, or None when the file is missing or holds
+    * no whole `T` (a lost count is never a zero).
+    */
+  private[graft] def readRecord[T: ClassTag](marker: Path): Option[T] =
+    Try(StateFiles.readJson[T](marker)).toOption.flatten.flatMap(Option(_))
 
   /** Run `tasks` concurrently and return once ALL have finished: the
     * first on the calling thread, every other one on a thread started

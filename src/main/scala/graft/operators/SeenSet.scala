@@ -36,7 +36,7 @@ object SeenSet {
     *
     * Plan shape, smallest-cost-first:
     *  - seen side provably ≤ `broadcastSeenMax` keys (`seenCount` hint,
-    *    from the sketch chain's running count — no counting job) → one
+    *    the previous wave record's running total — no counting job) → one
     *    BROADCAST left-anti hash join: the candidate side never
     *    shuffles at all. 8-byte keys make the relation ~80 MB even at
     *    10^7 seen keys; a 17M-link expand stays entirely map-side.
@@ -55,9 +55,9 @@ object SeenSet {
       case Some(seenDf) if seenCount.exists(_ <= broadcastSeenMax) =>
         // distinct BEFORE the broadcast build: callers may pass a log
         // with duplicate rows per key (retries/recrawls), and the gate
-        // sized the relation from the sketch chain's DISTINCT-key
-        // count — the built relation must match that estimate, not be
-        // a multiple of it
+        // sized the relation from the wave record's DISTINCT-key total
+        // — the built relation must match that count, not be a
+        // multiple of it
         candidates.join(broadcast(seenDf.select("urlHash").distinct()),
           Seq("urlHash"), "left_anti")
       case Some(seenDf) =>

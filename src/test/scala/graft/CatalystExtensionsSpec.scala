@@ -40,11 +40,11 @@ class CatalystExtensionsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       SparkSession.setDefaultSession(p)
       SparkSession.setActiveSession(p)
     }
-    s
+    CatalystExtensionsSpec.keep(s)
   }
   // a sibling session no Column API has registered into: only the
   // extensions can have put the kernels in its function registry
-  private lazy val sqlOnly = spark.newSession()
+  private lazy val sqlOnly = CatalystExtensionsSpec.keep(spark.newSession())
 
   /** Columns of every kernel input type over a real parquet scan (a
     * local Seq would be folded into a LocalTableScan before codegen),
@@ -246,4 +246,15 @@ class CatalystExtensionsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .count(k => !keys.contains(k) && bf.mightContainLong(k))
     assert(falsePos < 500) // ~1% fpp with margin
   }
+}
+
+object CatalystExtensionsSpec {
+  // Spark deletes a collected session's artifact directory with an
+  // `rm -rf` from a cleaner thread, whenever the session happens to be
+  // collected: the two sessions this spec builds stay reachable for the
+  // JVM's life, so that process never starts inside a later spec's
+  // process probe (ScaleInvariantsSpec's steady waves)
+  private val sessions = java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
+
+  private def keep(s: SparkSession): SparkSession = { sessions.add(s); s }
 }

@@ -98,7 +98,7 @@ class CompactionSoakSpec extends AnyFunSuite {
 
   test("a long crawl keeps the state outside every manifest bounded") {
     // what a crawl leaves beside its live segments: the staging dirs,
-    // the sketch chains' metas, the manifests themselves. Per-wave
+    // the wave records, the manifests themselves. Per-wave
     // leftovers (a popped set per wave) would grow it with the wave
     // count; the live segments grow with the data and are not counted.
     val spec = SyntheticCorpus.Spec(numUrls = 3000, numHosts = 30)
@@ -115,20 +115,20 @@ class CompactionSoakSpec extends AnyFunSuite {
       finally s.close()
     }
     def outside(): Long = {
-      val live = Seq(r.frontierT, r.processedT, r.metricsT, r.latestT).flatMap { t =>
+      val live = Seq(r.frontierT, r.processedT, r.latestT).flatMap { t =>
         t.currentManifest().toSeq.flatMap(_.segments)
           .map(v => root.resolve(t.name).resolve("snapshots").resolve(f"v$v%05d"))
       }
       bytes(root).collect { case (f, n) if !live.exists(f.startsWith) => n }.sum
     }
-    /** Bytes a wave staged: its popped set and counts. */
+    /** Bytes a wave staged: its popped set, artifacts and records. */
     def staged(w: Int): Long = bytes(root.resolve("staging").resolve(s"wave_$w")).map(_._2).sum
     val perWave = (1 to waves).map { w =>
       assert(r.runWave(w), s"probe setup broken: the crawl drained at wave $w")
       (outside(), staged(w))
     }
     // at most the newest wave's staged artifacts, plus what does not
-    // grow with the data: manifests, metas, markers
+    // grow with the data: manifests and wave records
     val fixed = 8 * 1024L
     perWave.zipWithIndex.foreach { case ((out, newest), i) =>
       assert(out <= newest + fixed,
@@ -164,8 +164,11 @@ class CompactionSoakSpec extends AnyFunSuite {
         val files = named(root, chain, ".bloom")
         assert(files.size <= 2, s"wave $w: $chain keeps $files")
         assert(files.contains(s"wave_$w.bloom"), s"wave $w: $chain lost its newest sketch")
-        assert(named(root, chain, ".meta").size === w + 1, s"wave $w: $chain metas")
       }
+      // one record per wave, each readable
+      val records = (0 to w).flatMap(v => WaveRunner.readRecord[WaveRunner.WaveRecord](
+        root.resolve("staging").resolve(s"wave_$v").resolve("_COMMITTED")))
+      assert(records.size === w + 1, s"wave $w: records of waves ${records.map(_.metrics)}")
     }
     // sketches are advisory: the crawl without them is the same crawl
     assert(sketched === crawl(cfg)((_, _) => ()))

@@ -11,6 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Model.CrawlConfig
 import graft.crawl.{SyntheticCorpus, WaveRunner}
+import graft.crawl.WaveRunner.WaveRecord
 import graft.state.StateFiles
 import graft.streaming.CrawlStream
 
@@ -18,7 +19,7 @@ import graft.streaming.CrawlStream
   * named step ([[WaveRunner.failPoint]]), or a process death before
   * any state-file operation ([[StateFiles.beforeOp]]), then a restarted
   * runner's `run()`, reproduces the uninterrupted crawl (order, seen
-  * set, page text, metrics rows, the sketch chain) with no page of a
+  * set, page text, metrics rows, the wave records) with no page of a
   * staged wave fetched again, no segment directory outside the
   * manifests and no staged artifacts of a done wave.
   */
@@ -37,16 +38,16 @@ class ResumeAtEveryStepSpec extends AnyFunSuite {
   private def tmp(p: String) = TempDirs.make(p).toString
 
   // every step runs every wave: both sketches (bloomMinFrontier 0), the
-  // metrics row, the rollup append, all four compactions and the
-  // vacuum; first-attempt deferrals add the misses job and retries
+  // rollup append, all three compactions and the vacuum; first-attempt
+  // deferrals add the misses job and retries
   private val config = CrawlConfig(maxDepth = 2, defaultMaxPerWave = 8, maxWaves = 4,
     bloomMinFrontier = 0L, broadcastSeenKeys = 0L, compactEveryWaves = 1,
     compactMaxSegments = 2, vacuumOnCompact = true)
   private val seeds = Seq(SyntheticCorpus.urlFor(0, spec) -> 1,
     SyntheticCorpus.urlFor(5, spec) -> 2)
 
-  private def runner(root: String): WaveRunner = {
-    val r = new WaveRunner(spark, corpus, root, config)
+  private def runner(root: String, cfg: CrawlConfig = config): WaveRunner = {
+    val r = new WaveRunner(spark, corpus, root, cfg)
     r.deferInjector = Some(pmod(col("urlHash"), lit(4L)) === 0L && col("attempts") === 0)
     r
   }
@@ -55,7 +56,7 @@ class ResumeAtEveryStepSpec extends AnyFunSuite {
     * then the tail's, chain by chain.
     */
   private val Steps = Seq("stage", "processed", "frontier", "drop-staging",
-    "bloom", "popbloom", "metrics", "compact-metrics",
+    "bloom", "popbloom",
     "compact-frontier",
     "rollup", "compact-processed", "compact-latest",
     "vacuum")
@@ -66,22 +67,25 @@ class ResumeAtEveryStepSpec extends AnyFunSuite {
 
   /** What a crawl leaves: the parts the resume contract covers. */
   private case class Outcome(order: Seq[Seq[Any]], seen: Set[Seq[Any]], text: Set[Seq[Any]],
-                             metrics: Seq[Seq[Any]], metas: Map[String, String])
+                             metrics: Seq[Seq[Any]], records: Map[String, Option[WaveRecord]])
+
+  /** Wave `w`'s `_COMMITTED` record, if readable. */
+  private def record(root: String, w: Int): Option[WaveRecord] =
+    WaveRunner.readRecord[WaveRecord](Paths.get(root, "staging", s"wave_$w", "_COMMITTED"))
 
   private def outcome(r: WaveRunner, root: String): Outcome = {
-    val metas = Seq("bloom", "popbloom").flatMap { dir =>
-      val s = Files.list(Paths.get(root, dir))
-      try s.iterator().asScala.map(_.getFileName.toString).filter(_.endsWith(".meta"))
-        .map(f => s"$dir/$f" -> new String(Files.readAllBytes(Paths.get(root, dir, f)), "UTF-8"))
-        .toList
-      finally s.close()
+    // every wave's record: its counts and running totals (elapsed time aside)
+    val records = StateFiles.list(Paths.get(root, "staging")).map { dir =>
+      dir.getFileName.toString ->
+        WaveRunner.readRecord[WaveRecord](dir.resolve("_COMMITTED"))
+          .map(c => c.copy(metrics = c.metrics.map(_.copy(elapsedMs = 0L))))
     }.toMap
     Outcome(
       r.crawlOrder().collect().map(_.toSeq).toSeq,
       r.seen().collect().map(_.toSeq).toSet,
       r.pages().select("urlHash", "wave", "title", "text").collect().map(_.toSeq).toSet,
       r.metrics().drop("elapsedMs").orderBy("wave").collect().map(_.toSeq).toSeq,
-      metas)
+      records)
   }
 
   /** The waves whose staging directory holds more than its markers. */
@@ -97,7 +101,7 @@ class ResumeAtEveryStepSpec extends AnyFunSuite {
 
   /** Segment directories on disk that no manifest lists. */
   private def orphans(r: WaveRunner, root: String): Seq[String] =
-    Seq(r.frontierT, r.processedT, r.metricsT, r.latestT).flatMap { t =>
+    Seq(r.frontierT, r.processedT, r.latestT).flatMap { t =>
       t.currentManifest().toSeq.flatMap { m =>
         val live = m.segments.map(v => f"v$v%05d").toSet
         val s = Files.list(Paths.get(root, t.name, "snapshots"))
@@ -159,7 +163,7 @@ class ResumeAtEveryStepSpec extends AnyFunSuite {
     assert(got.seen === expected.seen, s"$label: seen set")
     assert(got.text === expected.text, s"$label: page text")
     assert(got.metrics === expected.metrics, s"$label: metrics rows")
-    assert(got.metas === expected.metas, s"$label: sketch metas")
+    assert(got.records === expected.records, s"$label: wave records")
     assert(orphans(resumed, root).isEmpty, s"$label: segments outside the manifests")
     assert(staged(root) === staged(baselineRoot), s"$label: staged artifacts kept")
   }
@@ -177,7 +181,8 @@ class ResumeAtEveryStepSpec extends AnyFunSuite {
       assert(wave.last === "vacuum")
     }
     assert(expected.metrics.exists(_(4) != 0L), "probe setup broken: no deferrals")
-    assert(expected.metas.size === 2 * (waves + 1), s"sketch metas: ${expected.metas.keySet}")
+    assert(expected.records.size === waves + 1 && expected.records.values.forall(_.isDefined),
+      s"wave records: ${expected.records}")
     assert(orphans(baseline, baselineRoot).isEmpty)
     // only the last wave keeps its popped set and counts
     assert(staged(baselineRoot) === Set(s"wave_$waves"))
@@ -213,11 +218,11 @@ class ResumeAtEveryStepSpec extends AnyFunSuite {
     assert(r2.extractCounter.value === 0L, "finishing the tail re-fetched pages")
     assert(r2.nextWave() === 3)
     assert(r2.metrics().filter(col("wave") === 2).count() === 1L)
-    assert(Files.exists(Paths.get(root, "bloom", "wave_2.meta")))
+    assert(record(root, 2).exists(_.metrics.exists(_.wave == 2)), "wave 2's record")
   }
 
   test("a CrawlStream restart after a tail kill reproduces the uninterrupted crawl") {
-    val (root, r1) = killedAtWave2("stream", dieAt("metrics"))
+    val (root, r1) = killedAtWave2("stream", dieAt("compact-frontier"))
     val r2 = runner(root)
     assert(CrawlStream.runBatches(spark, r2, config.maxWaves) === config.maxWaves)
     assertResumed("stream restart", root, r1.extractCounter.value, r2)
@@ -242,7 +247,8 @@ class ResumeAtEveryStepSpec extends AnyFunSuite {
     val ops = underOps(probe, 0)(runner(probe).initSeeds(seeds))
     StateFiles.delete(Paths.get(probe))
     info(s"wave 0: $ops state-file operations")
-    assert(ops >= 5, "probe setup broken: the seed commit, two metas and the marker")
+    assert(ops >= 5, "probe setup broken: the staged seed count, the seed commit, a sketch " +
+      "and the marker")
     (1 to ops).foreach { n =>
       val root = tmp(s"graft-resume-op0-$n-")
       underOps(root, n)(intercept[IllegalStateException](runner(root).initSeeds(seeds)))
@@ -295,12 +301,17 @@ class ResumeAtEveryStepSpec extends AnyFunSuite {
   }
 
   test("a state root without a wave-0 marker resumes with no extra job") {
-    // what a crawl seeded before wave 0 had a marker leaves: the
-    // frontier and both wave-0 metas
+    // the sketches are gated off here, so every job a resume of wave 0
+    // runs is a count
+    val gated = CrawlConfig().bloomMinFrontier
+    def gatedRunner(root: String) = runner(root, config.copy(bloomMinFrontier = gated))
+    // a kill right after the seed commit: the staged seed count is all
+    // wave 0's record needs
     val root = tmp("graft-resume-nomarker-")
-    runner(root).initSeeds(seeds)
-    StateFiles.delete(Paths.get(root, "staging"))
-    val r = runner(root)
+    val r0 = gatedRunner(root)
+    r0.failPoint = dieAt("frontier")
+    intercept[IllegalStateException](r0.initSeeds(seeds))
+    val r = gatedRunner(root)
     assert(r.nextWave() === 0)
     val (_, jobs) = JobCount(spark)(r.initSeeds(Nil))
     assert(jobs === 0)
@@ -309,6 +320,22 @@ class ResumeAtEveryStepSpec extends AnyFunSuite {
     r.run()
     assertResumed("no wave-0 marker", root, 0L, r)
     StateFiles.delete(Paths.get(root))
+    // a wiped staging directory: the seed count is lost, and one count
+    // of the frontier stands in for it
+    val wiped = tmp("graft-resume-wiped-")
+    gatedRunner(wiped).initSeeds(seeds)
+    StateFiles.delete(Paths.get(wiped, "staging"))
+    val rw = gatedRunner(wiped)
+    assert(rw.nextWave() === 0)
+    val (_, countJobs) = JobCount(spark)(rw.initSeeds(Nil))
+    // one count: as many jobs as counting the frontier takes (an
+    // adaptive plan runs its shuffle stage as a job of its own)
+    val (_, oneCount) = JobCount(spark)(rw.frontierT.read().get.count())
+    assert(countJobs === oneCount)
+    assert(rw.nextWave() === 1)
+    rw.run()
+    assertResumed("wiped staging", wiped, 0L, rw)
+    StateFiles.delete(Paths.get(wiped))
   }
 
   test("an idle wave takes the same commit steps as a staged one") {
@@ -332,15 +359,14 @@ class ResumeAtEveryStepSpec extends AnyFunSuite {
     val (more1, staged) = wave(1)
     val (more2, idle) = wave(2)
     assert(more1 && more2)
-    assert(Files.exists(Paths.get(root, "staging", "wave_2", "_IDLE")),
+    assert(WaveRunner.readRecord[WaveRunner.StageCounts](
+        Paths.get(root, "staging", "wave_2", "_STAGED")).exists(_.scheduled == 0L),
       "probe setup broken: wave 2 was not idle")
     assert(idle === staged)
     assert(staged === Steps.toSet)
     assert(r.frontierT.readWaveSegment(2).isEmpty && r.processedT.readWaveSegment(2).isEmpty)
-    def meta(dir: String, w: Int) =
-      new String(Files.readAllBytes(Paths.get(root, dir, s"wave_$w.meta")), "UTF-8")
-    assert(meta("bloom", 2) === meta("bloom", 1))
-    assert(meta("popbloom", 2) === meta("popbloom", 1))
+    def totals(w: Int) = record(root, w).map(_.copy(metrics = None))
+    assert(totals(2).isDefined && totals(2) === totals(1))
     var w = 3
     while (w <= cfg.maxWaves && r.runWave(w)) w += 1
     // the same crawl as it ran while idle waves had a branch of their own

@@ -265,9 +265,8 @@ class RetryAndRecrawlSpec extends AnyFunSuite {
     r1.initSeeds(Seq(seedUrl -> 1))
     assert(r1.runWave(1))
     // simulate a crash that landed between the frontier flip and the
-    // metrics commit: wipe the metrics table
-    import scala.reflect.io.Directory
-    new Directory(new java.io.File(s"$root/metrics")).deleteRecursively()
+    // wave's record: delete the record
+    Files.delete(java.nio.file.Paths.get(root, "staging", "wave_1", "_COMMITTED"))
     // a restarted job re-enters wave 1, sees it committed, and
     // backfills the metrics row from the staged counts
     val r2 = new WaveRunner(spark, corpus, root,
@@ -310,7 +309,7 @@ class RetryAndRecrawlSpec extends AnyFunSuite {
 
   test("concurrent commit tail: identical crawl state, bounded live segments, no orphans") {
     // every tail chain runs every wave: both sketches (bloomMinFrontier
-    // 0), the metrics row, the rollup append and all four compactions,
+    // 0), the rollup append and all three compactions,
     // then the vacuum; deferrals add the overlapped misses job and retries
     val cfg = CrawlConfig(maxDepth = 2, defaultMaxPerWave = 15, maxWaves = 5,
       bloomMinFrontier = 0L, broadcastSeenKeys = 0L, compactEveryWaves = 0)
@@ -328,8 +327,7 @@ class RetryAndRecrawlSpec extends AnyFunSuite {
     val root = tmp("graft-tail-compact-")
     val compacted = runner(cfg.copy(compactEveryWaves = 1, compactMaxSegments = 2,
       vacuumOnCompact = true), root)
-    val tables = Seq(compacted.frontierT, compacted.processedT, compacted.metricsT,
-      compacted.latestT)
+    val tables = Seq(compacted.frontierT, compacted.processedT, compacted.latestT)
     var w = 1
     var more = true
     while (more && w <= cfg.maxWaves) {
@@ -361,8 +359,9 @@ class RetryAndRecrawlSpec extends AnyFunSuite {
 
   test("sketch-chain gap re-seeds the running count: the per-host budget still binds") {
     // 40 seeds on one host, no outlinks: only the budget (5) limits a
-    // wave. A missing wave_1.meta must not restart the count at 0: the
-    // budget short-circuit would then pop the whole host at once.
+    // wave. A wave-1 record whose counts are lost must not restart the
+    // count at 0: the budget short-circuit would then pop the whole
+    // host at once.
     val oneHost = SyntheticCorpus.Spec(numUrls = 40, numHosts = 1,
       minOutlinks = 0, maxOutlinks = 0)
     val root = tmp("graft-bloomgap-")
@@ -370,14 +369,15 @@ class RetryAndRecrawlSpec extends AnyFunSuite {
       CrawlConfig(maxDepth = 1, defaultMaxPerWave = 5, maxWaves = 3))
     r.initSeeds((0L until 40L).map(i => SyntheticCorpus.urlFor(i, oneHost) -> 1))
     assert(r.runWave(1))
-    Files.delete(java.nio.file.Paths.get(root, "bloom", "wave_1.meta"))
+    Files.write(java.nio.file.Paths.get(root, "staging", "wave_1", "_COMMITTED"),
+      Array.emptyByteArray)
     assert(r.runWave(2))
     assert(r.runWave(3))
     val perWave = r.crawlOrder().groupBy("wave").count().collect()
       .map(x => x.getInt(0) -> x.getLong(1)).toMap
     assert(perWave === Map(1 -> 5L, 2 -> 5L, 3 -> 5L))
-    def meta(w: Int) = new String(Files.readAllBytes(
-      java.nio.file.Paths.get(root, "bloom", s"wave_$w.meta")), "UTF-8").trim.toLong
+    def meta(w: Int) = WaveRunner.readRecord[WaveRunner.WaveRecord](
+      java.nio.file.Paths.get(root, "staging", s"wave_$w", "_COMMITTED")).get.discovered
     assert(meta(2) >= 40L && meta(3) >= 40L, s"count after the gap: ${meta(2)}, ${meta(3)}")
   }
 

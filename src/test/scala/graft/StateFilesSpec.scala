@@ -7,13 +7,14 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.crawl.WaveRunner
-import graft.crawl.WaveRunner.StageCounts
+import graft.core.Model.WaveMetrics
+import graft.crawl.WaveRunner.{StageCounts, WaveRecord}
 import graft.state.{SnapshotTable, StateFiles}
 import graft.state.SnapshotTable.{FileLineage, Manifest}
 
 /** The crawl-state file seam: atomic writes, listings, renames and
-  * deletes, and the JSON files read through it (table manifests, staged
-  * wave counts).
+  * deletes, and the JSON files read through it (table manifests, wave
+  * records).
   */
 class StateFilesSpec extends AnyFunSuite {
 
@@ -108,18 +109,42 @@ class StateFilesSpec extends AnyFunSuite {
 
   test("staged counts: a missing or malformed field is a lost count, never a zero") {
     val dir = TempDirs.make("graft-sf-counts-")
-    def counts(json: String): Option[StageCounts] = {
-      Files.write(dir.resolve(WaveRunner.CountsFile), json.getBytes(UTF_8))
-      WaveRunner.readCounts(dir)
+    def read[T: scala.reflect.ClassTag](marker: String, json: String): Option[T] = {
+      Files.write(dir.resolve(marker), json.getBytes(UTF_8))
+      WaveRunner.readRecord[T](dir.resolve(marker))
     }
-    val full = """{"scheduled":8,"fetched":5,"failed":1,"deferred":2,"bytes":900,""" +
+    def lost[T: scala.reflect.ClassTag](marker: String, full: String, field: String): Unit = {
+      assert(read[T](marker, full.replace(s""""$field":900,""", "")) === None, "a missing field")
+      assert(read[T](marker, full.replace("900", "null")) === None, "a null field")
+      assert(read[T](marker, full.replace("900", "\"x\"")) === None, "a mistyped field")
+      assert(read[T](marker, full.take(40)) === None, "a torn record")
+      assert(read[T](marker, "null") === None, "a null record")
+      assert(read[T](marker, "") === None, "an empty marker")
+      Files.delete(dir.resolve(marker))
+      assert(WaveRunner.readRecord[T](dir.resolve(marker)) === None, "no file")
+    }
+    // the _STAGED record
+    val staged = """{"scheduled":8,"fetched":5,"failed":1,"deferred":2,"bytes":900,""" +
       """"newUrls":12,"retries":1,"recrawls":0}"""
-    assert(counts(full) === Some(StageCounts(8, 5, 1, 2, 900, 12, 1, 0)))
-    assert(counts(full.replace(""""bytes":900,""", "")) === None, "a missing field")
-    assert(counts(full.replace("900", "null")) === None, "a null field")
-    assert(counts(full.replace("900", "\"x\"")) === None, "a mistyped field")
-    assert(counts(full.take(40)) === None, "a torn file")
-    Files.delete(dir.resolve(WaveRunner.CountsFile))
-    assert(WaveRunner.readCounts(dir) === None, "no file")
+    assert(read[StageCounts](WaveRunner.StagedMarker, staged) ===
+      Some(StageCounts(8, 5, 1, 2, 900, 12, 1, 0)))
+    lost[StageCounts](WaveRunner.StagedMarker, staged, "bytes")
+    // the _COMMITTED record: what it writes reads back unchanged
+    val record = WaveRecord(Some(WaveMetrics(3, 8, 5, 1, 2, 900, 12, 40, 77)), 60, 20,
+      deferrals = true)
+    StateFiles.writeJson(dir.resolve(WaveRunner.CommittedMarker), record)
+    assert(WaveRunner.readRecord[WaveRecord](dir.resolve(WaveRunner.CommittedMarker)) ===
+      Some(record))
+    val committed = text(dir.resolve(WaveRunner.CommittedMarker))
+    assert(committed.contains("\"contentBytes\":900,"), committed)
+    lost[WaveRecord](WaveRunner.CommittedMarker, committed, "contentBytes")
+    assert(committed.contains("\"processed\":20,"), committed)
+    assert(read[WaveRecord](WaveRunner.CommittedMarker,
+      committed.replace("\"processed\":20,", "")) === None, "a missing total")
+    // wave 0's record has no metrics row
+    val seeds = WaveRecord(None, 2, 0, deferrals = false)
+    StateFiles.writeJson(dir.resolve(WaveRunner.CommittedMarker), seeds)
+    assert(WaveRunner.readRecord[WaveRecord](dir.resolve(WaveRunner.CommittedMarker)) ===
+      Some(seeds))
   }
 }

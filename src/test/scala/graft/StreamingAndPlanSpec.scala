@@ -1016,6 +1016,24 @@ class StreamingAndPlanSpec extends AnyFunSuite {
     }
   }
 
+  test("wave counts: only the wave records hold them, no metrics table, sketch meta or counts file") {
+    // a wave's counts, metrics row and running key totals live in its
+    // _STAGED and _COMMITTED records and nowhere else
+    val crawl = mainSources.filter(_._1.startsWith("graft/crawl/"))
+    assert(crawl.size >= 4, s"probe setup broken: ${crawl.map(_._1)}")
+    val metricsTable = """SnapshotTable\([^)]*"metrics"""".r
+    crawl.foreach { case (f, text) =>
+      assert(metricsTable.findFirstIn(text).isEmpty, s"$f keeps a metrics table")
+      Seq("counts.json", "_IDLE", "metricsT", "pendingCache").foreach { token =>
+        assert(!text.contains(token), s"$f still has $token")
+      }
+      // the one .meta file the package names is the bucketed fetch
+      // table's ingest fingerprint, no sketch chain's
+      val metas = """[\w$]*\.meta"""".r.findAllIn(text).toSet
+      assert(metas.subsetOf(Set("_graft_ingest.meta\"")), s"$f names $metas")
+    }
+  }
+
   test("crawl-state files: only StateFiles writes, renames, lists or deletes them") {
     // the atomic-write protocol, closed listings and recursive deletes
     // live in one module; everything else in the state, crawl and
