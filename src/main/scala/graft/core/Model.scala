@@ -104,7 +104,11 @@ object Model {
     * counts terminal misses only; transient will-retry rows are
     * `deferred` (scheduled = fetched + failed + deferred). A wave whose
     * staged counts were lost across a crash/resume is MARKED with -1
-    * counts rather than fabricated zeros.
+    * counts rather than fabricated zeros. `elapsedMs` is the wall time
+    * from the wave's start through its joined commit tail (the
+    * compactions and the vacuum, on compaction waves), as the run that
+    * wrote the record measured it: a resumed wave counts only its
+    * resumed part. It is a timing, outside every parity comparison.
     */
   final case class WaveMetrics(
       wave: Int,
@@ -124,13 +128,12 @@ object Model {
       maxDepth: Int = 1, // reference default max_recursion = 1 (crawler.cfg:197-198)
       defaultMaxPerWave: Int = 100,
       maxWaves: Int = 16,
-      /** below this many frontier keys no sketch is built: measured on
-        * this hardware, one sketch build costs ~10-30 s while an exact
-        * keys-only anti-join at 10^6-10^7 rows costs ~1-2 s — the
-        * sketch only pays past tens of millions of keys (where the
-        * anti-join's shuffled probe side starts to dominate) */
+      /** no longer read: the seen set is the exact anti-join alone
+        * ([[graft.operators.SeenSet]]), with no Bloom sketch to gate.
+        * Kept because the benchmark harness sets it. */
       bloomMinFrontier: Long = 20000000L,
-      /** minimum capacity when the sketch is first built */
+      /** no longer read, like `bloomMinFrontier`. Kept because the
+        * benchmark harness sets it. */
       bloomCapacity: Long = 10000000L,
       /** no longer read: the per-host pop's skew control is a map-side
         * partial top-k ([[graft.operators.Politeness.popPerHost]]), not
@@ -216,12 +219,12 @@ object Model {
         * stays O(live table). Costs the time-travel/rollback window. */
       vacuumOnCompact: Boolean = true,
       /** seen-side broadcast gate for the URL-seen anti-joins (pending
-        * resolution and frontier expansion): when the sketch chain's
-        * running count proves the seen keys number at most this, the
-        * anti-join broadcasts the 8-byte keys and the candidate side
-        * (17M exploded links in a busy wave) never shuffles. Above the
-        * gate — the 10^10 regime — the bloom-prefiltered shuffled
-        * anti-join runs as before. 10M keys ≈ 80 MB relation. */
+        * resolution and frontier expansion): when the previous wave
+        * record's running key total proves the seen keys number at most
+        * this, the anti-join broadcasts the 8-byte keys and the
+        * candidate side (17M exploded links in a busy wave) never
+        * shuffles. Above the gate — the 10^10 regime — the shuffled
+        * anti-join runs. 10M keys ≈ 80 MB relation. */
       broadcastSeenKeys: Long = 10000000L,
       /** politeness wave clock: with a per-host crawl delay d (robots
         * Crawl-delay or HostPolicy), at most waveDurationMs/d URLs of

@@ -40,9 +40,9 @@ import WaveRunner.{CommittedMarker, StageCounts, StagedMarker, WaveRecord, joinA
   *  - a row's EFFECTIVE state is resolved at read: pending = discovered
   *    with no processed row; fetched/failed/deferred = its latest
   *    processed row. The per-wave pending scan is read-only — an
-  *    anti-join of discoveries against processed KEYS (8-byte column),
-  *    Bloom-prefiltered so rows the sketch proves unprocessed skip the
-  *    shuffle (the reference's O(delta) per-put bsddb persistence,
+  *    exact anti-join of discoveries against processed KEYS (8-byte
+  *    column, [[graft.operators.SeenSet.notSeen]]; the reference's
+  *    O(delta) per-put bsddb persistence,
   *    crawler/utils/priorityqueue.py:23-36).
   *
   * Per wave:
@@ -55,8 +55,8 @@ import WaveRunner.{CommittedMarker, StageCounts, StagedMarker, WaveRecord, joinA
   *  2. fetch+extract: popped ⋈ pages input on urlHash via the
   *     size-gated [[FetchSource]] (broadcast below threshold, bucketed
   *     co-partitioned join above — html is never force-broadcast);
-  *  3. expand: links → canonicalize → in-batch dedup → bloom-prefiltered
-  *     anti-join against the discovery log (URL-seen, SURVEY.md §2.4);
+  *  3. expand: links → canonicalize → in-batch dedup → exact anti-join
+  *     against the discovery log's keys (URL-seen, SURVEY.md §2.4);
   *  4. commit: ONE list of idempotent steps, each skipped when the
   *     durable state it writes shows it done: stage (steps 1-3; its
   *     `_STAGED` record holds the counts the staging writes observed,
@@ -64,21 +64,21 @@ import WaveRunner.{CommittedMarker, StageCounts, StagedMarker, WaveRecord, joinA
   *     that scheduled nothing); flip processed, then frontier (their
   *     committed waves: atomic directory renames, zero jobs; an idle
   *     wave flips with no segment, so its deltas are empty); drop the
-  *     previous wave's staging directory but its `_COMMITTED` record,
-  *     and the sketch files before it; the commit TAIL, a small DAG of
-  *     concurrent Spark jobs ([[WaveRunner.joinAll]]): the two sketch
-  *     advances side by side, alongside, on a compaction wave, the
-  *     frontier compaction and the rollup append (its committed wave),
-  *     then the processed and rollup compactions; the VACUUM, once every
-  *     chain has joined (a sketch's full rebuild may scan segments a
-  *     compaction just merged away); and the `_COMMITTED` record: the
-  *     wave's metrics row and its running key totals
-  *     ([[WaveRunner.WaveRecord]]), the one place every per-wave count
-  *     is kept. A restart ([[nextWave]]) re-enters the newest flipped
-  *     wave until its record exists and runs the same list: finished
-  *     steps skip, and nothing is re-extracted. Wave 0's list: the
-  *     seed frontier ([[initSeeds]], its `_STAGED` record holding the
-  *     distinct seed count), both sketch chains' first file,
+  *     previous wave's staging directory but its `_COMMITTED` record;
+  *     on a compaction wave the commit TAIL, two chains of Spark jobs
+  *     run side by side ([[WaveRunner.joinAll]]): the frontier
+  *     compaction, and the rollup append (its committed wave) then the
+  *     processed and rollup compactions; the VACUUM, once both chains
+  *     have joined; and the `_COMMITTED` record: the wave's metrics row
+  *     and its running key totals ([[WaveRunner.WaveRecord]]), the one
+  *     place every per-wave count is kept. The nine step names, in
+  *     order: `stage`, `processed`, `frontier`, `drop-staging`,
+  *     `compact-frontier`, `rollup`, `compact-processed`,
+  *     `compact-latest`, `vacuum`. A restart ([[nextWave]]) re-enters
+  *     the newest flipped wave until its record exists and runs the
+  *     same list: finished steps skip, and nothing is re-extracted.
+  *     Wave 0's list: the seed frontier ([[initSeeds]], its `_STAGED`
+  *     record holding the distinct seed count; step `frontier`), then
   *     `_COMMITTED`.
   *
   * Every staged artifact and state segment is a [[ParquetDir]]: it
@@ -153,12 +153,9 @@ final class WaveRunner(
     * ratio alone cannot separate engine serialism from memory-bus
     * saturation). Note "stage" is the parent of the pop/fetch/expand
     * phases — consumers must not sum it with its children.
-    * "sketches" and "compact" are WALL intervals of the concurrent
-    * commit tail, never summed thread time: "sketches" runs from the
-    * tail's start until both sketches have advanced, "compact" from
-    * there to the tail's end (the compactions and the vacuum; recorded
-    * on compaction waves only), so the two still add up to the tail's
-    * wall time.
+    * "compact" is the WALL interval of the whole concurrent commit
+    * tail (both chains and the vacuum), never summed thread time; it is
+    * recorded on compaction waves only, the only waves with a tail.
     */
   private[graft] val phaseSeconds =
     scala.collection.mutable.Map.empty[String, Double].withDefaultValue(0.0)
@@ -193,14 +190,6 @@ final class WaveRunner(
     */
   private val robots: Option[DataFrame] =
     robotsDim.orElse(Politeness.rulesDim(spark, robotsRules))
-
-  /** Sketch over the DISCOVERY log keys (D1 in-queue dedup). */
-  private val bloom = new FrontierBloom(stateRoot, config,
-    () => frontierT.read().map(_.select("urlHash")))
-
-  /** Sketch over the PROCESSED keys (pending-state resolution). */
-  private val popBloom = new FrontierBloom(stateRoot, config,
-    () => processedT.read().map(_.select("urlHash")), subdir = "popbloom")
 
   // host-policy lookups stay inside whole-stage codegen: a literal when
   // no policies exist (the common case — the previous Scala UDF broke
@@ -251,18 +240,6 @@ final class WaveRunner(
     }
     failPoint("frontier")
     runWave(0)
-  }
-
-  /** Wave 0's steps after the frontier commit: nothing is processed at
-    * wave 0, and both sketch chains start here.
-    */
-  private def finishSeedWave(): Unit = {
-    val totals = totalsAfter(0)
-    bloom.advance(0, frontierT.read().map(_.select("urlHash")), totals.discovered)
-    failPoint("bloom")
-    popBloom.advance(0, None, totals.processed)
-    failPoint("popbloom")
-    StateFiles.writeJson(stagingDir(0).resolve(CommittedMarker), totals)
   }
 
   /** Run waves until the frontier drains or maxWaves is hit; returns
@@ -334,7 +311,11 @@ final class WaveRunner(
     val next = nextWave()
     require(w <= next, s"wave $w cannot run before wave $next is committed")
     if (w < next) return true
-    if (w == 0) { finishSeedWave(); return true }
+    if (w == 0) {
+      // wave 0's last step: nothing is processed at wave 0
+      StateFiles.writeJson(stagingDir(0).resolve(CommittedMarker), totalsAfter(0))
+      return true
+    }
     val t0 = System.nanoTime()
     val staging = stagingDir(w)
     val stagedMarker = staging.resolve(StagedMarker)
@@ -361,70 +342,51 @@ final class WaveRunner(
     flip(processedT, "processed")
     flip(frontierT, "new_frontier")
 
-    // the previous wave is done: nothing reads its staged artifacts, or
-    // a sketch file before it, again
+    // the previous wave is done: nothing reads its staged artifacts again
     dropStaged(w - 1)
-    Seq(bloom, popBloom).foreach(_.dropSketchesBefore(w - 1))
     failPoint("drop-staging")
 
-    // ---- commit tail: a small DAG of concurrent jobs ----
-    // the wave's delta segments are resolved (file listing, no job)
-    // before any compaction starts; merged-away files stay on disk
-    // until the vacuum, which runs only after every chain has joined
     val totals = totalsAfter(w)
-    // a wave that added no key to a chain (an idle wave, a wave of
-    // retries only) merges nothing into its sketch
-    def keys(t: SnapshotTable, added: StageCounts => Long): Option[DataFrame] =
-      if (counts.exists(added(_) == 0L)) None
-      else t.readWaveSegment(w).map(_.select("urlHash"))
-    val newKeys = keys(frontierT, _.newUrls)
-    val poppedKeys = keys(processedT, _.freshPops)
+
+    // ---- commit tail, on compaction waves: two concurrent chains ----
     val compacting = config.compactEveryWaves > 0 && w % config.compactEveryWaves == 0
     def compact(t: SnapshotTable, merge: DataFrame => DataFrame = identity): Unit = {
       t.compactTiered(config.compactMaxSegments, merge)
       failPoint(s"compact-${t.name}")
     }
-    val tail0 = System.nanoTime()
-    var sketched = tail0
-    val chains = Seq.newBuilder[() => Unit]
-    chains += { () =>
-      joinAll(
-        () => { bloom.advance(w, newKeys, totals.discovered); failPoint("bloom") },
-        () => { popBloom.advance(w, poppedKeys, totals.processed); failPoint("popbloom") })
-      sketched = System.nanoTime()
-    }
     if (compacting) {
-      chains += (() => compact(frontierT))
-      chains += { () =>
-        // materialize the latest-try rollup for the window since the
-        // last materialization (ONE latest-per-key segment per cycle,
-        // idempotent via the committed-wave marker), then bound its
-        // segment count with the merging tiered compaction. Runs
-        // BEFORE the processed log's own compaction, so the newer
-        // segments it reads are still the single-wave deltas.
-        if (latestT.committedWave() < w)
-          recentTries().foreach { recent =>
-            val delta = latestTry(recent)
-            if (latestT.exists()) latestT.appendCommit(delta, w)
-            else latestT.commit(delta, w)
-          }
-        failPoint("rollup")
-        // rollup: merged segments collapse to ONE row per key
-        joinAll(() => compact(processedT), () => compact(latestT, latestTry))
+      val tail0 = System.nanoTime()
+      joinAll(
+        () => compact(frontierT),
+        () => {
+          // materialize the latest-try rollup for the window since the
+          // last materialization (ONE latest-per-key segment per cycle,
+          // idempotent via the committed-wave marker), then bound its
+          // segment count with the merging tiered compaction. Runs
+          // BEFORE the processed log's own compaction, so the newer
+          // segments it reads are still the single-wave deltas.
+          if (latestT.committedWave() < w)
+            recentTries().foreach { recent =>
+              val delta = latestTry(recent)
+              if (latestT.exists()) latestT.appendCommit(delta, w)
+              else latestT.commit(delta, w)
+            }
+          failPoint("rollup")
+          // rollup: merged segments collapse to ONE row per key
+          joinAll(() => compact(processedT), () => compact(latestT, latestTry))
+        })
+      // the vacuum deletes every table's merged-away segments: it runs
+      // only once no chain reads or merges them
+      if (config.vacuumOnCompact) {
+        Seq(frontierT, processedT, latestT).foreach(_.vacuum())
+        failPoint("vacuum")
       }
+      record(s"w$w compact", tail0, System.nanoTime())
     }
-    joinAll(chains.result(): _*)
-    // a sketch's full rebuild may have scanned segments a compaction
-    // just replaced: vacuum only once every chain has joined
-    if (compacting && config.vacuumOnCompact) {
-      Seq(frontierT, processedT, latestT).foreach(_.vacuum())
-      failPoint("vacuum")
-    }
-    record(s"w$w sketches", tail0, sketched)
-    if (compacting) record(s"w$w compact", sketched, System.nanoTime())
-    // elapsedMs runs through both sketches; a wave whose staged counts
-    // are lost is marked with -1 counts, never fabricated zeros
-    val elapsedMs = (sketched - t0) / 1000000L
+    // elapsedMs runs from the wave's start through the joined commit
+    // tail; a wave whose staged counts are lost is marked with -1
+    // counts, never fabricated zeros
+    val elapsedMs = (System.nanoTime() - t0) / 1000000L
     val row = counts.fold(WaveMetrics(w, -1, -1, -1, -1, -1, -1, -1, elapsedMs)) { c =>
       WaveMetrics(w, c.scheduled, c.fetched, c.failed, c.deferred, c.bytes, c.newUrls,
         totals.discovered - totals.processed, elapsedMs)
@@ -503,8 +465,8 @@ final class WaveRunner(
       "origin", "priorHash")
 
   /** The schedulable set for wave `w`:
-    *  - fresh: discovered, never popped (anti-join against processed
-    *    keys, sketch-prefiltered);
+    *  - fresh: discovered, never popped (exact anti-join against
+    *    processed keys);
     *  - retry: latest try Deferred, attempts < maxFetchAttempts, and
     *    the backoff has elapsed (reference requeue-self);
     *  - recrawl: latest try Fetched and `recrawlEveryWaves` elapsed
@@ -525,8 +487,7 @@ final class WaveRunner(
         .withColumn("priorHash", lit(null).cast("string"))
     } else {
       val fresh = SeenSet.notSeen(discoveries,
-          Some(processedKeys()), popBloom.get(w - 1),
-          Some(prev.processed), config.broadcastSeenKeys)
+          Some(processedKeys()), Some(prev.processed), config.broadcastSeenKeys)
         .withColumn("attempts", lit(0))
         .withColumn("origin", lit("fresh"))
         .withColumn("priorHash", lit(null).cast("string"))
@@ -835,7 +796,7 @@ final class WaveRunner(
     val unseen =
       if (preBroadcast) candidates // already filtered before the groupBy
       else SeenSet.notSeen(candidates, Some(frontierKeys),
-        bloom.get(w - 1), Some(prev.discovered), config.broadcastSeenKeys)
+        Some(prev.discovered), config.broadcastSeenKeys)
     val newEntries = unseen
       .select(
         col("urlHash"), col("url"),

@@ -12,8 +12,8 @@ import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 
 /** The one way the driver writes, renames, lists and deletes crawl
-  * state files (manifests, schema sidecars, sketch files, wave markers
-  * and counts, the fetch-ingest fingerprint); Spark's part files are
+  * state files (manifests, schema sidecars, wave records, the
+  * fetch-ingest fingerprint); Spark's part files are
   * written by [[ParquetDir.writer]].
   *
   * A write is atomic: a `.tmp` sibling renamed over the target

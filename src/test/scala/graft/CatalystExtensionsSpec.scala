@@ -1,7 +1,5 @@
 package graft
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
-
 import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -9,16 +7,14 @@ import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.sketch.BloomFilter
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.UrlNormalizer
-import graft.operators.SeenSet
 import graft.plans.{GraftExtensions, Kernels}
 
 /** The custom Catalyst surface: an audit of every [[Kernels]] row
-  * (whole-stage codegen, SQL by name, null input, mistyped calls) and
-  * the Bloom sketch chain step.
+  * (whole-stage codegen, SQL by name, null input, mistyped calls), and
+  * a crawl wave's plans hold no Scala UDF.
   */
 class CatalystExtensionsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
@@ -40,11 +36,11 @@ class CatalystExtensionsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       SparkSession.setDefaultSession(p)
       SparkSession.setActiveSession(p)
     }
-    CatalystExtensionsSpec.keep(s)
+    KeptSessions.keep(s)
   }
   // a sibling session no Column API has registered into: only the
   // extensions can have put the kernels in its function registry
-  private lazy val sqlOnly = CatalystExtensionsSpec.keep(spark.newSession())
+  private lazy val sqlOnly = KeptSessions.keep(spark.newSession())
 
   /** Columns of every kernel input type over a real parquet scan (a
     * local Seq would be folded into a LocalTableScan before codegen),
@@ -228,33 +224,43 @@ class CatalystExtensionsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("BloomSketchAgg builds a mergeable sketch with no false negatives") {
-    // the chain step of FrontierBloom: the wave's delta sketch, built
-    // at the running sketch's capacity, merges in place, and the result
-    // round-trips through the on-disk format
-    val s = spark
-    import s.implicits._
-    val keys = (0L until 5000L).map(i => i * 2654435761L)
-    val (lo, hi) = keys.splitAt(keys.size / 2)
-    def sketch(ks: Seq[Long]) =
-      SeenSet.buildBloom(ks.toDF("k").repartition(4), "k", expectedItems = 5000, fpp = 0.01)
-    val merged = sketch(lo).mergeInPlace(sketch(hi))
-    val out = new ByteArrayOutputStream()
-    merged.writeTo(out)
-    val bf = BloomFilter.readFrom(new ByteArrayInputStream(out.toByteArray))
-    keys.foreach(k => assert(bf.mightContainLong(k)))
-    val falsePos = (0L until 10000L).map(i => i * 7919L + 3L)
-      .count(k => !keys.contains(k) && bf.mightContainLong(k))
-    assert(falsePos < 500) // ~1% fpp with margin
+    // no sketch is left: a steady wave of the 10^10-scale seen path
+    // (shuffled anti-joins, bloomMinFrontier = 0 as the benchmark sets
+    // it) runs every plan, the pop and the expand included, with no
+    // Scala UDF and no nondeterministic filter. Plans are captured from
+    // every query execution the wave makes.
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.ListenerBusDrain
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.{FilterExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val runner = DeepCrawl(spark, "planaudit", waves = 3)
+    assert(runner.runWave(1))
+    val plans = new ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = plans.add(qe.executedPlan)
+    }
+    val sc = spark.sparkContext
+    ListenerBusDrain.drain(sc)
+    spark.listenerManager.register(listener)
+    try assert(runner.runWave(2))
+    finally {
+      ListenerBusDrain.drain(sc)
+      spark.listenerManager.unregister(listener)
+    }
+    val executed = plans.asScala.toSeq
+    val antiJoins = executed.flatMap(collectWithSubqueries(_) {
+      case j: BaseJoinExec if j.joinType == LeftAnti => j })
+    assert(antiJoins.size >= 2, "probe setup broken: the pop and expand anti-joins did not run")
+    val found = executed.flatMap(p => collectWithSubqueries(p) {
+      case f: FilterExec if !f.condition.deterministic => s"nondeterministic filter ${f.condition}"
+      case n if n.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF])) => s"ScalaUDF in ${n.nodeName}"
+    })
+    assert(found.isEmpty, found.distinct.mkString("\n"))
   }
 }
 
-object CatalystExtensionsSpec {
-  // Spark deletes a collected session's artifact directory with an
-  // `rm -rf` from a cleaner thread, whenever the session happens to be
-  // collected: the two sessions this spec builds stay reachable for the
-  // JVM's life, so that process never starts inside a later spec's
-  // process probe (ScaleInvariantsSpec's steady waves)
-  private val sessions = java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
-
-  private def keep(s: SparkSession): SparkSession = { sessions.add(s); s }
-}

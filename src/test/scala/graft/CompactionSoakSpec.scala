@@ -138,9 +138,8 @@ class CompactionSoakSpec extends AnyFunSuite {
   }
 
   test("a long crawl keeps at most two sketch files per chain, every meta, and its order") {
-    // each wave's tail reads only the previous wave's sketch; older
-    // sketch files are dropped, so the state does not grow by two full
-    // filters per wave
+    // no sketch file is ever written, whatever the retired sketch
+    // settings say, and the state keeps one readable record per wave
     val spec = SyntheticCorpus.Spec(numUrls = 600, numHosts = 12)
     val corpus = SyntheticCorpus.generate(spark, spec, partitions = 4).toDF()
     val waves = 8
@@ -157,20 +156,18 @@ class CompactionSoakSpec extends AnyFunSuite {
       }
       r.crawlOrder().collect().map(_.toSeq).toSeq
     }
-    def named(root: Path, chain: String, suffix: String): Seq[String] =
-      StateFiles.list(root.resolve(chain)).map(_.getFileName.toString).filter(_.endsWith(suffix))
     val sketched = crawl(cfg.copy(bloomMinFrontier = 0L, bloomCapacity = 10000L)) { (root, w) =>
+      val top = StateFiles.list(root).map(_.getFileName.toString)
+      assert(top.nonEmpty, s"probe setup broken: wave $w left no state")
       Seq("bloom", "popbloom").foreach { chain =>
-        val files = named(root, chain, ".bloom")
-        assert(files.size <= 2, s"wave $w: $chain keeps $files")
-        assert(files.contains(s"wave_$w.bloom"), s"wave $w: $chain lost its newest sketch")
+        assert(!top.contains(chain), s"wave $w: a $chain directory appeared")
       }
       // one record per wave, each readable
       val records = (0 to w).flatMap(v => WaveRunner.readRecord[WaveRunner.WaveRecord](
         root.resolve("staging").resolve(s"wave_$v").resolve("_COMMITTED")))
       assert(records.size === w + 1, s"wave $w: records of waves ${records.map(_.metrics)}")
     }
-    // sketches are advisory: the crawl without them is the same crawl
+    // the retired sketch settings change nothing: the same crawl
     assert(sketched === crawl(cfg)((_, _) => ()))
   }
 }

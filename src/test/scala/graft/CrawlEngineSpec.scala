@@ -65,7 +65,7 @@ class CrawlEngineSpec extends AnyFunSuite {
   }
 
   test("crawl order is identical at a different parallelism (scaling invariance)") {
-    val other = spark.newSession()
+    val other = KeptSessions.keep(spark.newSession())
     other.conf.set("spark.sql.shuffle.partitions", "13")
     val runner2 = runFull(other)
     assert(orderRows(runner2) === baselineOrder)
@@ -92,7 +92,7 @@ class CrawlEngineSpec extends AnyFunSuite {
   }
 
   test("URL-seen set and page text are identical across runs") {
-    val other = spark.newSession()
+    val other = KeptSessions.keep(spark.newSession())
     other.conf.set("spark.sql.shuffle.partitions", "9")
     val runner2 = runFull(other)
     val seen1 = baseline.seen().select("urlHash", "contentHash")

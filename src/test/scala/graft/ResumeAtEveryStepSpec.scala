@@ -37,11 +37,11 @@ class ResumeAtEveryStepSpec extends AnyFunSuite {
   private lazy val corpus = SyntheticCorpus.generate(spark, spec, partitions = 4).toDF()
   private def tmp(p: String) = TempDirs.make(p).toString
 
-  // every step runs every wave: both sketches (bloomMinFrontier 0), the
-  // rollup append, all three compactions and the vacuum; first-attempt
-  // deferrals add the misses job and retries
+  // every step runs every wave: the rollup append, all three
+  // compactions and the vacuum; first-attempt deferrals add the misses
+  // job and retries
   private val config = CrawlConfig(maxDepth = 2, defaultMaxPerWave = 8, maxWaves = 4,
-    bloomMinFrontier = 0L, broadcastSeenKeys = 0L, compactEveryWaves = 1,
+    broadcastSeenKeys = 0L, compactEveryWaves = 1,
     compactMaxSegments = 2, vacuumOnCompact = true)
   private val seeds = Seq(SyntheticCorpus.urlFor(0, spec) -> 1,
     SyntheticCorpus.urlFor(5, spec) -> 2)
@@ -56,14 +56,13 @@ class ResumeAtEveryStepSpec extends AnyFunSuite {
     * then the tail's, chain by chain.
     */
   private val Steps = Seq("stage", "processed", "frontier", "drop-staging",
-    "bloom", "popbloom",
     "compact-frontier",
     "rollup", "compact-processed", "compact-latest",
     "vacuum")
   private val TailSteps = Steps.drop(4)
 
-  /** Wave 0's fail points: the seed commit, then both sketch chains. */
-  private val Wave0Steps = Seq("frontier", "bloom", "popbloom")
+  /** Wave 0's fail points: the seed commit. */
+  private val Wave0Steps = Seq("frontier")
 
   /** What a crawl leaves: the parts the resume contract covers. */
   private case class Outcome(order: Seq[Seq[Any]], seen: Set[Seq[Any]], text: Set[Seq[Any]],
@@ -210,7 +209,7 @@ class ResumeAtEveryStepSpec extends AnyFunSuite {
   }
 
   test("a restart finishes the wave whose commit tail was cut before the next") {
-    val (root, r1) = killedAtWave2("next", dieAt("bloom"))
+    val (root, r1) = killedAtWave2("next", dieAt(TailSteps.head))
     assert(r1.frontierT.committedWave() === 2)
     val r2 = runner(root)
     assert(r2.nextWave() === 2, "the flipped wave's tail is unfinished")
@@ -242,13 +241,18 @@ class ResumeAtEveryStepSpec extends AnyFunSuite {
     ops.get
   }
 
+  /** State-file operations of wave 0, as measured: the staged seed
+    * count, the seed commit and the `_COMMITTED` record.
+    */
+  private val Wave0Ops = 4
+
   test("a process death before any state-file operation of wave 0 resumes the crawl") {
     val probe = tmp("graft-resume-ops0-")
     val ops = underOps(probe, 0)(runner(probe).initSeeds(seeds))
     StateFiles.delete(Paths.get(probe))
     info(s"wave 0: $ops state-file operations")
-    assert(ops >= 5, "probe setup broken: the staged seed count, the seed commit, a sketch " +
-      "and the marker")
+    assert(ops === Wave0Ops, "wave 0's state-file operations: the staged seed count, " +
+      "the seed commit and the marker")
     (1 to ops).foreach { n =>
       val root = tmp(s"graft-resume-op0-$n-")
       underOps(root, n)(intercept[IllegalStateException](runner(root).initSeeds(seeds)))
@@ -301,17 +305,14 @@ class ResumeAtEveryStepSpec extends AnyFunSuite {
   }
 
   test("a state root without a wave-0 marker resumes with no extra job") {
-    // the sketches are gated off here, so every job a resume of wave 0
-    // runs is a count
-    val gated = CrawlConfig().bloomMinFrontier
-    def gatedRunner(root: String) = runner(root, config.copy(bloomMinFrontier = gated))
-    // a kill right after the seed commit: the staged seed count is all
-    // wave 0's record needs
+    // the only job a resume of wave 0 can run is a count of the
+    // frontier. A kill right after the seed commit: the staged seed
+    // count is all wave 0's record needs
     val root = tmp("graft-resume-nomarker-")
-    val r0 = gatedRunner(root)
+    val r0 = runner(root)
     r0.failPoint = dieAt("frontier")
     intercept[IllegalStateException](r0.initSeeds(seeds))
-    val r = gatedRunner(root)
+    val r = runner(root)
     assert(r.nextWave() === 0)
     val (_, jobs) = JobCount(spark)(r.initSeeds(Nil))
     assert(jobs === 0)
@@ -323,9 +324,9 @@ class ResumeAtEveryStepSpec extends AnyFunSuite {
     // a wiped staging directory: the seed count is lost, and one count
     // of the frontier stands in for it
     val wiped = tmp("graft-resume-wiped-")
-    gatedRunner(wiped).initSeeds(seeds)
+    runner(wiped).initSeeds(seeds)
     StateFiles.delete(Paths.get(wiped, "staging"))
-    val rw = gatedRunner(wiped)
+    val rw = runner(wiped)
     assert(rw.nextWave() === 0)
     val (_, countJobs) = JobCount(spark)(rw.initSeeds(Nil))
     // one count: as many jobs as counting the frontier takes (an
@@ -343,7 +344,7 @@ class ResumeAtEveryStepSpec extends AnyFunSuite {
     // has nothing schedulable but work left, so it commits idle
     val seed = SyntheticCorpus.urlFor(0, spec)
     val cfg = CrawlConfig(maxDepth = 1, defaultMaxPerWave = 10, maxWaves = 6,
-      retryBackoffWaves = 2, bloomMinFrontier = 0L, compactEveryWaves = 1,
+      retryBackoffWaves = 2, compactEveryWaves = 1,
       compactMaxSegments = 2)
     val root = tmp("graft-resume-idle-")
     val r = new WaveRunner(spark, corpus, root, cfg)

@@ -308,11 +308,11 @@ class RetryAndRecrawlSpec extends AnyFunSuite {
   }
 
   test("concurrent commit tail: identical crawl state, bounded live segments, no orphans") {
-    // every tail chain runs every wave: both sketches (bloomMinFrontier
-    // 0), the rollup append and all three compactions,
-    // then the vacuum; deferrals add the overlapped misses job and retries
+    // every tail chain runs every wave: the rollup append and all three
+    // compactions, then the vacuum; deferrals add the overlapped misses
+    // job and retries
     val cfg = CrawlConfig(maxDepth = 2, defaultMaxPerWave = 15, maxWaves = 5,
-      bloomMinFrontier = 0L, broadcastSeenKeys = 0L, compactEveryWaves = 0)
+      broadcastSeenKeys = 0L, compactEveryWaves = 0)
     val seeds = Seq(seedUrl -> 1, SyntheticCorpus.urlFor(3, spec) -> 2,
       SyntheticCorpus.urlFor(7, spec) -> 3)
     def runner(c: CrawlConfig, root: String) = {

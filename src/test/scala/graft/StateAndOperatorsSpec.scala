@@ -350,19 +350,28 @@ class StateAndOperatorsSpec extends AnyFunSuite {
   }
 
   test("bloom seen-set: no false negatives; notSeen is exact") {
+    // no sketch is left in front of the join: both plans notSeen picks
+    // between, broadcast below the gate and shuffled above it, give the
+    // exact set difference, also when the seen side repeats a key on
+    // several rows (a log with retries and recrawls)
     import spark.implicits._
-    val seen = (0L until 2000L).map(i => i * 31 % 100000).distinct.toDF("urlHash")
-    val candidates = (0L until 3000L).map(i => i * 17 % 120000).distinct.toDF("urlHash")
-    val bloom = SeenSet.buildBloom(seen, "urlHash", 2000, 0.03)
-    // property: every seen element is maybe-contained (no false negatives)
-    seen.collect().map(_.getLong(0)).foreach { h =>
-      assert(bloom.mightContainLong(h), s"false negative for $h")
+    val seenKeys = (0L until 2000L).map(i => i * 31 % 100000)
+    val seen = (seenKeys ++ seenKeys.take(500) ++ seenKeys.take(50)).toDF("urlHash")
+    val candidateKeys = (0L until 3000L).map(i => i * 17 % 120000).distinct
+    val candidates = candidateKeys.toDF("urlHash")
+    val expected = candidateKeys.toSet -- seenKeys.toSet
+    assert(expected.size < candidateKeys.size && expected.nonEmpty,
+      "probe setup broken: candidates and seen keys do not overlap")
+    val distinctSeen = seenKeys.distinct.size.toLong
+    // at the gate (broadcast) and one key above it (shuffled)
+    Seq(distinctSeen, distinctSeen - 1).foreach { max =>
+      val got = SeenSet.notSeen(candidates, Some(seen), Some(distinctSeen), max)
+        .collect().map(_.getLong(0)).toSeq
+      assert(got.size === got.distinct.size, s"broadcastSeenMax $max: a candidate repeats")
+      assert(got.toSet === expected, s"broadcastSeenMax $max")
     }
-    val withBloom = SeenSet.notSeen(candidates, Some(seen), Some(bloom))
-      .collect().map(_.getLong(0)).toSet
-    val exact = SeenSet.notSeen(candidates, Some(seen), None)
-      .collect().map(_.getLong(0)).toSet
-    assert(withBloom === exact)
+    assert(SeenSet.notSeen(candidates, None).collect().map(_.getLong(0)).toSet ===
+      candidateKeys.toSet)
   }
 
   test("changedOrNew: unchanged content is skipped, changed re-enters") {

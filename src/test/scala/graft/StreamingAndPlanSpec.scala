@@ -1020,7 +1020,7 @@ class StreamingAndPlanSpec extends AnyFunSuite {
     // a wave's counts, metrics row and running key totals live in its
     // _STAGED and _COMMITTED records and nowhere else
     val crawl = mainSources.filter(_._1.startsWith("graft/crawl/"))
-    assert(crawl.size >= 4, s"probe setup broken: ${crawl.map(_._1)}")
+    assert(crawl.size >= 3, s"probe setup broken: ${crawl.map(_._1)}")
     val metricsTable = """SnapshotTable\([^)]*"metrics"""".r
     crawl.foreach { case (f, text) =>
       assert(metricsTable.findFirstIn(text).isEmpty, s"$f keeps a metrics table")
@@ -1031,6 +1031,17 @@ class StreamingAndPlanSpec extends AnyFunSuite {
       // table's ingest fingerprint, no sketch chain's
       val metas = """[\w$]*\.meta"""".r.findAllIn(text).toSet
       assert(metas.subsetOf(Set("_graft_ingest.meta\"")), s"$f names $metas")
+    }
+    // and no seen-set sketch: the exact anti-joins are the only
+    // seen-set mechanism, in the crawl and in its operators
+    val seenSide = mainSources.filter { case (f, _) =>
+      f.startsWith("graft/crawl/") || f.startsWith("graft/operators/") }
+    assert(seenSide.exists(_._1 == "graft/operators/SeenSet.scala"),
+      s"probe setup broken: ${seenSide.map(_._1)}")
+    seenSide.foreach { case (f, text) =>
+      Seq("BloomFilter", "mightContain", "\"bloom\"", "\"popbloom\"").foreach { token =>
+        assert(!text.contains(token), s"$f still names $token")
+      }
     }
   }
 
